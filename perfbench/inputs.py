@@ -70,47 +70,59 @@ def seed_offset(seed: int) -> int:
 
 # -- expected counts from the generator's anomaly draws ----------------------
 
-def clip_expected(start: int, n: int) -> Dict[str, int]:
-    """Violation rows and duplicated ids the full audio job must report
-    over §1 rows [start, start+n), read off the generator's own salted
-    draws (synth.make_row) without synthesizing any payload:
+def clip_row_defects(i: int) -> Tuple[str, int, int]:
+    """(clip_id, rule violations, decode violations) of §1 row ``i``,
+    read off the generator's own salted draws (synth.make_row) without
+    synthesizing the payload:
 
     * rules: an empty transcript fails ``min``; a declared duration
       pushed past 30000 ms fails ``max``; an unknown codec fails the
       referential lookup.
     * decode: a truncated payload is one ``decode`` violation and
-      un-asserts every payload-derived check; otherwise an unknown codec
+      un-asserts every payload-derived check. Otherwise an unknown codec
       mismatches its container, a wrong declared rate or duration fails
-      its consistency check, a row carrying another row's id is compared
-      against that row's reference (a different tone: ``snr`` fails), and
-      a transcript unequal to the reference's fails.
+      its consistency check, a transcript unequal to the reference's
+      fails, and a row carrying another row's id is compared against
+      that row's reference tone: ``snr`` fails unless the two tones have
+      the same frequency per sample (495 Hz at 8 kHz and 990 Hz at
+      16 kHz give identical samples).
     """
     from jio_spark.audio.synth import (_VOCAB, _mix, _row_params, _u,
                                        expected_transcript)
+    clip_id, freq, sr, dur, codec, transcript = _row_params(i, clean=False)
+    ref = int(clip_id.rsplit("_", 1)[1])
+    tu = _u(i, 15)
+    if tu < 0.005:
+        words = transcript.split(" ")
+        words[_mix(i, 16) % len(words)] = _VOCAB[_mix(i, 17) % 64]
+        transcript = " ".join(words)
+    elif tu < 0.015:
+        transcript = ""
+    elif tu < 0.020:
+        transcript = None
+    opus = codec == "opus"
+    dur_bad = _u(i, 13) < 0.005
+    rules = (transcript == "") + (dur_bad and dur + 500 > 30000) + opus
+    if _u(i, 11) < 0.005:                           # truncated payload
+        return clip_id, int(rules), 1
+    _, ref_freq, ref_sr, _, _, _ = _row_params(ref, clean=True)
+    decode = (opus + (_u(i, 12) < 0.005) + dur_bad
+              + (freq * ref_sr != ref_freq * sr)
+              + (transcript is None
+                 or transcript != expected_transcript(ref)))
+    return clip_id, int(rules), int(decode)
+
+
+def clip_expected(start: int, n: int) -> Dict[str, int]:
+    """Violation rows and duplicated ids the full audio job must report
+    over §1 rows [start, start+n) (see :func:`clip_row_defects`)."""
     ids: Counter = Counter()
     viol = 0
     for i in range(start, start + n):
-        clip_id, _, _, dur, codec, transcript = _row_params(i, clean=False)
+        clip_id, rules, decode = clip_row_defects(i)
         ids[clip_id] += 1
-        ref = int(clip_id.rsplit("_", 1)[1])
-        tu = _u(i, 15)
-        if tu < 0.005:
-            words = transcript.split(" ")
-            words[_mix(i, 16) % len(words)] = _VOCAB[_mix(i, 17) % 64]
-            transcript = " ".join(words)
-        elif tu < 0.015:
-            transcript = ""
-        elif tu < 0.020:
-            transcript = None
-        opus = codec == "opus"
-        dur_bad = _u(i, 13) < 0.005
-        viol += (transcript == "") + (dur_bad and dur + 500 > 30000) + opus
-        if _u(i, 11) < 0.005:                       # truncated payload
-            viol += 1
-            continue
-        viol += opus + (_u(i, 12) < 0.005) + dur_bad + (ref != i)
-        viol += transcript is None or transcript != expected_transcript(ref)
-    return {"rows": n, "violations": int(viol),
+        viol += rules + decode
+    return {"rows": n, "violations": viol,
             "uniqueness_violations": sum(1 for c in ids.values() if c > 1)}
 
 

@@ -29,6 +29,17 @@ def summarize(values):
             "values": values}
 
 
+def context(r: dict) -> dict:
+    """The per-run facts that explain an outlier."""
+    ctx = json.loads(r["context"].split(" ", 1)[1])
+    return {"seed": r["seed"], "wall_s": round(r["wall_s"], 1),
+            "failed": r["result"]["failed"],
+            "pass_walls_s": ctx["pass_walls_s"],
+            "setup_parts_s": [ctx["session_s"], ctx["open_s"]]
+            + ctx["warmup_walls_s"],
+            "steal_s_in_window": ctx["steal_s_in_window"]}
+
+
 def run_once(workload: str, seed: int, seconds: int, trace: int = 0
              ) -> dict:
     t0 = time.perf_counter()
@@ -81,6 +92,7 @@ def main(argv=None) -> int:
                 "failed": sum(r["failed"] for r in res),
                 "seeds": [r["seed"] for r in runs[w]],
                 "run_wall_s": summarize([r["wall_s"] for r in runs[w]]),
+                "runs": [context(r) for r in runs[w]],
                 "metrics": {n: summarize([r["metrics"][n]["value"]
                                           for r in res]) for n in names},
             }

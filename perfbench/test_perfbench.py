@@ -115,3 +115,25 @@ def test_meta_generator_follows_synth_draws():
     assert expected["rows"] == n
     assert expected["uniqueness_violations"] == \
         n - len(set(cols["clip_id"]))
+
+
+def test_clip_decode_defects_match_the_decode_check():
+    """The per-row decode defects the expected counts assume equal what
+    the decode check reports, on a block holding a duplicated id whose
+    tone matches its reference's per sample (row 113000565)."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import pandas as pd
+    from inputs import CLIP_COLUMNS, clip_row_defects
+    from jio_spark.audio.decode import _decode_batches
+    from jio_spark.audio.synth import make_row
+    rows = range(113_000_400, 113_000_700)
+    pdf = pd.DataFrame([make_row(i)[:6] for i in rows],
+                       columns=CLIP_COLUMNS)
+    out = next(_decode_batches(True, 30.0, 2)(iter([pdf])))
+    flags = ["decode_ok", "codec_match", "sr_match", "dur_match", "snr_ok",
+             "transcript_match"]
+    got = (~out[flags]).sum(axis=1).tolist()
+    want = [clip_row_defects(i)[2] for i in rows]
+    assert got == want
+    assert out["snr_db"][165] == float("inf")   # the matching-tone copy
