@@ -28,7 +28,7 @@ import sys
 import time
 from collections import Counter
 from dataclasses import dataclass
-from typing import Dict, List, Tuple
+from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
@@ -68,29 +68,35 @@ def seed_offset(seed: int) -> int:
     return seed * SEED_STRIDE
 
 
-# -- expected counts from the generator's anomaly draws ----------------------
+# -- declared fields and expected counts, from the generator's draws --------
 
-def clip_row_defects(i: int) -> Tuple[str, int, int]:
-    """(clip_id, rule violations, decode violations) of §1 row ``i``,
-    read off the generator's own salted draws (synth.make_row) without
-    synthesizing the payload:
+@dataclass(frozen=True)
+class DeclaredRow:
+    """The metadata columns §1 row ``i`` declares, and the anomaly draws
+    behind them, as synth.make_row makes them (payload left out)."""
 
-    * rules: an empty transcript fails ``min``; a declared duration
-      pushed past 30000 ms fails ``max``; an unknown codec fails the
-      referential lookup.
-    * decode: a truncated payload is one ``decode`` violation and
-      un-asserts every payload-derived check. Otherwise an unknown codec
-      mismatches its container, a wrong declared rate or duration fails
-      its consistency check, a transcript unequal to the reference's
-      fails, and a row carrying another row's id is compared against
-      that row's reference tone: ``snr`` fails unless the two tones have
-      the same frequency per sample (495 Hz at 8 kHz and 990 Hz at
-      16 kHz give identical samples).
-    """
-    from jio_spark.audio.synth import (_VOCAB, _mix, _row_params, _u,
-                                       expected_transcript)
+    clip_id: str
+    sr_hz: int                   # declared rate
+    dur_ms: int                  # declared duration
+    codec: str
+    transcript: Optional[str]
+    freq: float                  # tone frequency of the payload
+    true_sr: int                 # rate the payload is encoded at
+    truncated: bool              # payload cut to a third
+    sr_bad: bool                 # declared rate is not the true one
+    dur_bad: bool                # declared duration is 500 ms long
+
+
+def declared_row(i: int) -> DeclaredRow:
+    """§1 row ``i``'s declared fields: synth._row_params plus the salted
+    draws make_row applies to the declared columns."""
+    from jio_spark.audio.synth import (_SR_CHOICES, _SR_CUM, _VOCAB, _mix,
+                                       _row_params, _u)
     clip_id, freq, sr, dur, codec, transcript = _row_params(i, clean=False)
-    ref = int(clip_id.rsplit("_", 1)[1])
+    sr_bad = _u(i, 12) < 0.005
+    dur_bad = _u(i, 13) < 0.005
+    decl_sr = int(_SR_CHOICES[(int(np.searchsorted(_SR_CUM, _u(i, 1)))
+                               + 1) % 4]) if sr_bad else sr
     tu = _u(i, 15)
     if tu < 0.005:
         words = transcript.split(" ")
@@ -100,17 +106,47 @@ def clip_row_defects(i: int) -> Tuple[str, int, int]:
         transcript = ""
     elif tu < 0.020:
         transcript = None
-    opus = codec == "opus"
-    dur_bad = _u(i, 13) < 0.005
-    rules = (transcript == "") + (dur_bad and dur + 500 > 30000) + opus
-    if _u(i, 11) < 0.005:                           # truncated payload
-        return clip_id, int(rules), 1
+    return DeclaredRow(clip_id, decl_sr, dur + 500 if dur_bad else dur,
+                       codec, transcript, freq, sr, _u(i, 11) < 0.005,
+                       sr_bad, dur_bad)
+
+
+def rule_violations(d: DeclaredRow) -> int:
+    """Rule violations of a declared row: an empty transcript fails
+    ``min``, a declared duration past 30000 ms fails ``max``, an unknown
+    codec fails the referential lookup."""
+    return int((d.transcript == "") + (d.dur_ms > 30000)
+               + (d.codec == "opus"))
+
+
+def clip_row_defects(i: int) -> Tuple[str, int, int]:
+    """(clip_id, rule violations, decode violations) of §1 row ``i``.
+
+    A truncated payload is one ``decode`` violation and un-asserts every
+    payload-derived check. Otherwise an unknown codec mismatches its
+    container, a wrong declared rate or duration fails its consistency
+    check, a transcript unequal to the reference's fails, and a row
+    carrying another row's id is compared against that row's reference
+    tone: ``snr`` fails unless the two tones have the same frequency per
+    sample (495 Hz at 8 kHz and 990 Hz at 16 kHz give identical
+    samples).
+    """
+    from jio_spark.audio.synth import _row_params, expected_transcript
+    d = declared_row(i)
+    if d.truncated:
+        return d.clip_id, rule_violations(d), 1
+    ref = int(d.clip_id.rsplit("_", 1)[1])
     _, ref_freq, ref_sr, _, _, _ = _row_params(ref, clean=True)
-    decode = (opus + (_u(i, 12) < 0.005) + dur_bad
-              + (freq * ref_sr != ref_freq * sr)
-              + (transcript is None
-                 or transcript != expected_transcript(ref)))
-    return clip_id, int(rules), int(decode)
+    decode = ((d.codec == "opus") + d.sr_bad + d.dur_bad
+              + (d.freq * ref_sr != ref_freq * d.true_sr)
+              + (d.transcript is None
+                 or d.transcript != expected_transcript(ref)))
+    return d.clip_id, rule_violations(d), int(decode)
+
+
+def _expected(ids: Counter, violations: int, n: int) -> Dict[str, int]:
+    return {"rows": n, "violations": violations,
+            "uniqueness_violations": sum(1 for c in ids.values() if c > 1)}
 
 
 def clip_expected(start: int, n: int) -> Dict[str, int]:
@@ -122,78 +158,7 @@ def clip_expected(start: int, n: int) -> Dict[str, int]:
         clip_id, rules, decode = clip_row_defects(i)
         ids[clip_id] += 1
         viol += rules + decode
-    return {"rows": n, "violations": viol,
-            "uniqueness_violations": sum(1 for c in ids.values() if c > 1)}
-
-
-# -- vectorized metadata generator (meta workload) ----------------------------
-
-_M64 = (1 << 64) - 1
-
-
-def _mix_np(idx: np.ndarray, salt: int) -> np.ndarray:
-    """synth._mix over a uint64 index array (wrapping arithmetic)."""
-    with np.errstate(over="ignore"):
-        z = (idx * np.uint64(0x9E3779B97F4A7C15)
-             + np.uint64((salt * 0xBF58476D1CE4E5B9) & _M64))
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
-
-
-def _u_np(idx: np.ndarray, salt: int) -> np.ndarray:
-    return (_mix_np(idx, salt) >> np.uint64(11)).astype(np.float64) \
-        / float(1 << 53)
-
-
-def meta_arrays(start: int, n: int, buckets: int):
-    """§1 metadata columns (no payload) for rows [start, start+n) at §1
-    anomaly rates, as numpy/pyarrow-ready arrays, plus the expected
-    counts of the audio-off job."""
-    from jio_spark.audio.synth import (_CODEC_CUM, _CODECS, _SR_CHOICES,
-                                       _SR_CUM, _VOCAB)
-    i = np.arange(start, start + n, dtype=np.uint64)
-    sr = _SR_CHOICES[np.searchsorted(_SR_CUM, _u_np(i, 1))].astype(np.int32)
-    u1 = np.maximum(_u_np(i, 2), 1e-12)
-    gauss = np.sqrt(-2.0 * np.log(u1)) * np.cos(2 * np.pi * _u_np(i, 3))
-    dur = np.clip(np.exp(math.log(3000.0) + 0.6 * gauss), 200, 30000) \
-        .astype(np.int32)
-    codec = _CODECS[np.searchsorted(_CODEC_CUM, _u_np(i, 4))].astype(object)
-    ref = i.astype(np.int64)
-    dup = (_u_np(i, 10) < 0.001) & (ref >= 7)
-    ref = np.where(dup, ref - 7, ref)
-    opus = _u_np(i, 14) < 0.002
-    codec[opus] = "opus"
-    sr_bad = _u_np(i, 12) < 0.005
-    sr = np.where(sr_bad, _SR_CHOICES[(np.searchsorted(
-        _SR_CUM, _u_np(i, 1)) + 1) % 4], sr).astype(np.int32)
-    dur_bad = _u_np(i, 13) < 0.005
-    dur_over = dur_bad & (dur.astype(np.int64) + 500 > 30000)
-    dur = np.where(dur_bad, dur + 500, dur).astype(np.int32)
-    # transcripts: 2-12 vocabulary words, as in expected_transcript
-    n_words = 2 + (_mix_np(i, 100) % np.uint64(11)).astype(np.int64)
-    vocab = np.array(_VOCAB, dtype=object)
-    word_idx = np.stack([(_mix_np(i, 101 + w) % np.uint64(64))
-                         .astype(np.int64) for w in range(12)], axis=1)
-    words = vocab[word_idx]
-    transcript = np.array([" ".join(row[:k]) for row, k
-                           in zip(words.tolist(), n_words.tolist())],
-                          dtype=object)
-    tu = _u_np(i, 15)
-    empty = (tu >= 0.005) & (tu < 0.015)
-    transcript[empty] = ""
-    transcript[(tu >= 0.015) & (tu < 0.020)] = None
-    clip_id = np.char.add("clip_", np.char.zfill(ref.astype(str), 12))
-    keys, counts = np.unique(clip_id, return_counts=True)
-    expected = {
-        "rows": n,
-        "violations": int(empty.sum() + opus.sum() + dur_over.sum()),
-        "uniqueness_violations": int((counts > 1).sum()),
-    }
-    cols = {"clip_id": clip_id.astype(object), "sr_hz": sr, "dur_ms": dur,
-            "codec": codec, "transcript": transcript,
-            "bucket": (i % np.uint64(buckets)).astype(np.int64)}
-    return cols, expected
+    return _expected(ids, viol, n)
 
 
 # -- writers -------------------------------------------------------------------
@@ -253,21 +218,27 @@ def _write_clips(spec: TableSpec, root: str, start: int, workers: int
 
 
 def _write_meta(spec: TableSpec, root: str, start: int) -> Dict[str, int]:
+    """§1 metadata rows (no payload) at §1 anomaly rates, one file per
+    bucket ``i % buckets``; returns the audio-off job's expected
+    counts."""
     import pyarrow as pa
-    cols, expected = meta_arrays(start, spec.rows, spec.buckets)
     schema = pa.schema([("clip_id", pa.string()), ("sr_hz", pa.int32()),
                         ("dur_ms", pa.int32()), ("codec", pa.string()),
                         ("transcript", pa.string())])
-    bucket = cols.pop("bucket")
-    order = np.argsort(bucket, kind="stable")
-    bounds = np.searchsorted(bucket[order], np.arange(spec.buckets + 1))
+    cols = [{c: [] for c in META_COLUMNS} for _ in range(spec.buckets)]
+    ids: Counter = Counter()
+    viol = 0
+    for i in range(start, start + spec.rows):
+        d = declared_row(i)
+        for c, col in cols[i % spec.buckets].items():
+            col.append(getattr(d, c))
+        ids[d.clip_id] += 1
+        viol += rule_violations(d)
     for b in range(spec.buckets):
-        sel = order[bounds[b]:bounds[b + 1]]
         _write_bucket(os.path.join(root, f"bucket_id={b}",
                                    "part-00000.parquet"),
-                      {c: cols[c][sel] for c in META_COLUMNS}, schema,
-                      spec.row_groups)
-    return expected
+                      cols[b], schema, spec.row_groups)
+    return _expected(ids, viol, spec.rows)
 
 
 # -- cache -------------------------------------------------------------------

@@ -54,12 +54,16 @@ WORK = os.path.join(ROOT, ".perfbench")
 if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
-#: full passes run before timing. Pass walls fall ~2x from the first to
-#: the second pass (JIT, class loading, Python worker start) and by only a
-#: few percent per pass after that, so one warm-up pass suffices.
+#: full passes run before timing. Pass walls fall ~1.6-2x from the first
+#: to the second pass (JIT, class loading, Python worker start) and more
+#: slowly after that (meta_groups on 4 cores: 27.5, 15.0, 15.1, 13.3 s);
+#: a second warm-up pass would not fit a run into the time the
+#: benchmark's runs share.
 WARMUP_PASSES = 1
-#: driver JVM heap (local mode: the executors live in it). The inputs are
-#: tens of MB; 2g leaves the rest of a 15 GB host to the Python workers.
+#: driver JVM heap (local mode: the executors live in it). The largest
+#: input, clips_files, holds ~330 MB of payload, which the Python workers
+#: read from the files themselves; 2g leaves the rest of a 15 GB host to
+#: those workers.
 DRIVER_MEMORY = "2g"
 
 

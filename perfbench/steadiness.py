@@ -104,19 +104,23 @@ def main(argv=None) -> int:
              / first[w]["metrics"][n]["median"] - 1 for n in names}
          for w in workloads} for s in record["sets"][1:]]
     record["bounds"] = bounds
-    # tracing overhead across invocations: one traced run per workload,
-    # its runner.job_s against the untraced median pass wall
+    # one traced run per workload: tracing overhead across invocations
+    # (its runner.job_s against the untraced median pass wall), and the
+    # share of a pass the isolated payload-local decode accounts for
     record["traced"] = {}
     for w in workloads:
         r = run_once(w, seed, bench["run_seconds"], trace=1)
+        r["seed"] = seed
         seed += 1
-        job_s = r["result"]["metrics"]["runner.job_s"]["value"]
+        layer = {k: v["value"] for k, v in r["result"]["metrics"].items()}
+        job_s = layer["runner.job_s"]
         rows = json.loads(r["context"].split(" ", 1)[1])["rows"]
         untraced = rows / first[w]["metrics"]["rows_per_s"]["median"]
         record["traced"][w] = {
-            "seed": seed - 1, "job_s": job_s, "untraced_median_s": untraced,
-            "overhead_s": job_s - untraced, "wall_s": r["wall_s"],
-            "failed": r["result"]["failed"]}
+            **context(r), "job_s": job_s, "untraced_median_s": untraced,
+            "overhead_s": job_s - untraced,
+            "files_decode_share": layer["audio.files_decode_s"] / job_s,
+            "metrics": layer}
     with open(args.out, "w") as f:
         json.dump(record, f, indent=1)
     for k, s in enumerate(record["sets"]):

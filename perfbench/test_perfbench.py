@@ -1,11 +1,13 @@
-"""Tests of the benchmark's own arithmetic: span self times and the
-per-pass output check. No Spark; a fake clock and fake metrics.
+"""Tests of the benchmark's own arithmetic: span self times, the
+per-pass output check (a fake clock and fake metrics) and the input
+generator against the synth rows it follows. No Spark.
 
     python3 -m pytest perfbench -q
 """
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -99,22 +101,46 @@ def test_check_pass_without_integrity_report():
                       EXPECTED) == []
 
 
-def test_meta_generator_follows_synth_draws():
-    """The vectorized metadata generator draws ids, rates and codecs
-    exactly as the §1 synth does for the same row index."""
+def test_declared_fields_follow_make_row():
+    """The metadata the meta table and the expected counts are built from
+    equals the declared columns synth.make_row writes, on a block holding
+    every declared-field anomaly."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    from inputs import meta_arrays
-    from jio_spark.audio.synth import _row_params
-    start, n = 7_000_000, 3000
-    cols, expected = meta_arrays(start, n, 32)
-    for j in range(n):
-        clip_id, _, sr, _, codec, _ = _row_params(start + j, clean=False)
-        assert cols["clip_id"][j] == clip_id
-        assert cols["codec"][j] == codec
-    assert expected["rows"] == n
-    assert expected["uniqueness_violations"] == \
-        n - len(set(cols["clip_id"]))
+    from inputs import declared_row
+    from jio_spark.audio.synth import _u, make_row
+    rows = range(113_000_000, 113_001_500)
+    got = [declared_row(i) for i in rows]
+    for i, d in zip(rows, got):
+        assert (d.clip_id, d.sr_hz, d.dur_ms, d.codec, d.transcript) == \
+            tuple(make_row(i)[k] for k in (0, 2, 3, 4, 5))
+    assert all(any(flag(i, d) for i, d in zip(rows, got)) for flag in (
+        lambda i, d: d.sr_bad, lambda i, d: d.dur_bad,
+        lambda i, d: d.truncated, lambda i, d: d.codec == "opus",
+        lambda i, d: _u(i, 15) < 0.005,                  # mutated
+        lambda i, d: d.clip_id != f"clip_{i:012d}"))     # duplicated
+
+
+def test_meta_table_counts(tmp_path):
+    """The meta table holds one row per index, bucketed by ``i % 16``,
+    and its expected counts are the rule violations and duplicated ids
+    of its rows."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import pyarrow.parquet as pq
+    from inputs import TableSpec, declared_row, ensure_table, \
+        rule_violations
+    table = ensure_table(TableSpec("meta", 2000, 16, 1), 113,
+                         str(tmp_path), workers=1)
+    rows = range(113_000_000, 113_002_000)
+    bucket3 = pq.read_table(os.path.join(table.root, "bucket_id=3"))
+    assert bucket3.column("clip_id").to_pylist() == \
+        [declared_row(i).clip_id for i in rows if i % 16 == 3]
+    ids = Counter(declared_row(i).clip_id for i in rows)
+    assert table.expected == {
+        "rows": 2000,
+        "violations": sum(rule_violations(declared_row(i)) for i in rows),
+        "uniqueness_violations": sum(1 for c in ids.values() if c > 1)}
 
 
 def test_clip_decode_defects_match_the_decode_check():
