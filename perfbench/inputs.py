@@ -32,11 +32,11 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
-#: rows per seed block: seed s validates indices [s*STRIDE, s*STRIDE+n);
-#: the stride exceeds every workload size, and the 12-digit id field
-#: holds any seed below 10**6
+#: rows per seed block: seed s validates indices [b*STRIDE, b*STRIDE+n)
+#: of block b = s mod SEED_BLOCKS; the stride exceeds every workload
+#: size, and the 12-digit id field holds every block
 SEED_STRIDE = 1_000_000
-MAX_SEED = 999_999
+SEED_BLOCKS = 1_000_000
 #: newest tables kept in the cache (one per workload and seed)
 CACHE_KEEP = 6
 
@@ -63,9 +63,8 @@ class Table:
 
 
 def seed_offset(seed: int) -> int:
-    if not 0 <= seed <= MAX_SEED:
-        raise ValueError(f"--seed must be in [0, {MAX_SEED}], got {seed}")
-    return seed * SEED_STRIDE
+    """First row index of the seed's block; any integer is a seed."""
+    return (seed % SEED_BLOCKS) * SEED_STRIDE
 
 
 # -- declared fields and expected counts, from the generator's draws --------
@@ -312,6 +311,9 @@ def clean_metadata(seed: int, n: int) -> Tuple[List[int], List[int]]:
 
 
 if __name__ == "__main__":
+    # run as a script: import jio_spark from the checkout this file is in
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     root, start, n, buckets, row_groups, *todo = sys.argv[1:]
     for b in todo:
         write_clip_bucket(root, int(start), int(n), int(buckets), int(b),

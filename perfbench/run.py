@@ -120,6 +120,9 @@ def build_session(cores: int):
              .config("spark.sql.warehouse.dir",
                      os.path.join(WORK, "warehouse"))
              .config("spark.ui.enabled", "false")
+             # loopback only, whatever the host name resolves to
+             .config("spark.driver.bindAddress", "127.0.0.1")
+             .config("spark.driver.host", "127.0.0.1")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
@@ -300,12 +303,19 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     os.environ["JIO_PIN_ARROW_CPU"] = "1"
+    # workers run the interpreter this driver runs in, whatever
+    # PYSPARK_PYTHON the caller's environment names
+    os.environ["PYSPARK_PYTHON"] = sys.executable
+    os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
     tmp = os.path.join(WORK, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
-    # every JVM (the launcher's too): temp files in WORK, no hsperfdata
-    os.environ["JAVA_TOOL_OPTIONS"] = \
-        f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    # every JVM (the launcher's too): temp files in WORK, no hsperfdata;
+    # the JVMs start in ROOT, and a relative path survives the option
+    # string being split on spaces
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        "-XX:-UsePerfData -Djava.io.tmpdir="
+        + os.path.relpath(tmp, ROOT))
     from inputs import TableSpec, ensure_table
     from spans import Tracer
 

@@ -121,6 +121,17 @@ def test_declared_fields_follow_make_row():
         lambda i, d: d.clip_id != f"clip_{i:012d}"))     # duplicated
 
 
+def test_any_integer_seed_selects_a_block():
+    """Negative and large seeds map into the 12-digit id space, and
+    seeds one block count apart give the same input."""
+    from inputs import SEED_BLOCKS, SEED_STRIDE, seed_offset
+    for seed in (0, 1, 999_999, 10**6, 2**63, -1, -(2**40)):
+        start = seed_offset(seed)
+        assert start % SEED_STRIDE == 0
+        assert 0 <= start and start + SEED_STRIDE <= 10**12
+    assert seed_offset(7) == seed_offset(7 + SEED_BLOCKS)
+
+
 def test_meta_table_counts(tmp_path):
     """The meta table holds one row per index, bucketed by ``i % 16``,
     and its expected counts are the rule violations and duplicated ids
