@@ -48,6 +48,17 @@ def _strip_scheme(p: str) -> str:
     return p.split("://", 1)[1] if "://" in p else p
 
 
+def _uri_under(root: str, inner: str, fs_path: str) -> str:
+    """The URI of ``fs_path`` — a path the filesystem of ``root`` listed
+    under ``inner``, the path ``from_uri(root)`` resolved to. The root's
+    own prefix is kept, so its ``scheme://authority``
+    (``hdfs://nn:8020``) survives; ``scheme://`` + the bare filesystem
+    path would drop it. A query string (filesystem options) is not
+    carried into the file URIs."""
+    return (root.split("?", 1)[0].rstrip("/")
+            + fs_path[len(inner.rstrip("/")):])
+
+
 def _open_parquet(path: str):
     """pq.ParquetFile for a plain path OR a filesystem URI: URI paths
     resolve through ``pyarrow.fs.FileSystem.from_uri`` (LocalFileSystem
@@ -139,17 +150,19 @@ def _tagged_files(root: str, partition_filter: Optional[Sequence],
         # the workers re-resolve the same filesystem per read
         # (_open_parquet). An empty listing still refuses loudly below —
         # a typo'd bucket must not "validate" zero rows silently.
+        import pyarrow as pa
         import pyarrow.fs as pafs
-        scheme = root.split("://", 1)[0]
-        fs, inner = pafs.FileSystem.from_uri(root)
         try:
+            fs, inner = pafs.FileSystem.from_uri(root)
             infos = fs.get_file_info(
                 pafs.FileSelector(inner, recursive=True))
-        except (OSError, FileNotFoundError) as e:
+        except (OSError, pa.ArrowException) as e:
+            # ArrowException: a malformed URI (ArrowInvalid) or a
+            # filesystem-level listing error that is not an OSError
             raise FileNotFoundError(
                 f"cannot list {root!r}: {e}") from e
         paths = sorted(
-            f"{scheme}://{i.path}" for i in infos
+            _uri_under(root, inner, i.path) for i in infos
             if i.type == pafs.FileType.File
             and i.path.endswith(".parquet"))
     else:

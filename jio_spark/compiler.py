@@ -46,7 +46,8 @@ from __future__ import annotations
 
 import itertools
 import math
-from dataclasses import dataclass
+import re
+from dataclasses import dataclass, field
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -144,6 +145,8 @@ class ColState:
     #: dynamic value and changes under Convert/Set) — the write-back
     #: target type for retagged Any chains
     orig_spark_type: Optional[T.DataType] = None
+    #: (value-state key, rendering) of the last display() call
+    _shown: Optional[tuple] = field(default=None, repr=False, compare=False)
 
     def cur_null(self) -> Column:
         """Is the current dynamic value nil (any.go:48 / 60 / 70)."""
@@ -153,17 +156,34 @@ class ColState:
                 .otherwise(self.untyped.isNull())
 
     def display(self) -> Column:
-        """Go-%v rendering of the current dynamic value, for messages."""
-        t = fmt_col(self.typed, self.vtype, self.spark_type)
-        if self.untyped is None:
-            return t
-        u = fmt_col(self.untyped, self.utype, self.orig_spark_type)
-        return F.when(self.is_typed, t).otherwise(u)
+        """Go-%v rendering of the current dynamic value, for messages.
+
+        Built once per value state: a rule's ``actual``, its type-fail
+        message and its value message all render the same value, and
+        the double rendering alone is a seven-branch CASE tree costing
+        hundreds of JVM calls to build. The memo is keyed on the
+        IDENTITY of every attribute the rendering reads, so a handler
+        that replaces any of them (a coercion, Set, the SSA
+        materialization) starts a fresh entry. One Column object reused
+        at several places in the tree yields the same Catalyst
+        expression as building it again."""
+        key = (self.typed, self.is_typed, self.untyped, self.vtype,
+               self.utype, self.spark_type, self.orig_spark_type)
+        if self._shown is not None and all(
+                a is b for a, b in zip(self._shown[0], key)):
+            return self._shown[1]
+        out = fmt_col(self.typed, self.vtype, self.spark_type)
+        if self.untyped is not None:
+            u = fmt_col(self.untyped, self.utype, self.orig_spark_type)
+            out = F.when(self.is_typed, out).otherwise(u)
+        self._shown = (key, out)
+        return out
 
 
-# thread-safe: the runner compiles validate() inside ThreadPoolExecutor
-# workers (group_concurrency > 1); a bare `+= 1` on a module int could
-# hand two compilations the same SSA prefix
+# thread-safe: the runner compiles once per run on the driver thread,
+# but callers may still run validate() from several threads at once; a
+# bare `+= 1` on a module int could hand two compilations the same SSA
+# prefix
 _CTX_SEQ = itertools.count(1)
 
 
@@ -799,11 +819,33 @@ def _h_slength(cc, st, path, spec, schema):
                  f"length not equal to {n}")
 
 
+#: the tokens of a pattern that can hold a ``$`` which is NOT the end
+#: anchor (a \Q..\E span, an escape pair, a character class), or the
+#: anchor itself
+_RE_DOLLAR = re.compile(
+    r"\\Q.*?(?:\\E|\Z)|\\.|\[\^?\]?(?:\[:\^?\w+:\]|\\.|[^\]\\])*\]|\$",
+    re.S)
+
+
+def _go_regex(pattern: str) -> str:
+    r"""A Go RE2 pattern as the Java pattern ``rlike`` needs for the same
+    verdicts on line terminators. Without flags RE2's ``.`` excludes only
+    ``\n`` and ``$`` matches only at the end of the text; Java's ``.``
+    also excludes ``\r \x85 \u2028 \u2029`` and its ``$`` also matches
+    before a final line terminator. ``(?d)`` (UNIX_LINES) narrows Java's
+    terminators to ``\n``, and each end anchor outside a character class
+    becomes ``\z``. Patterns that turn on ``(?m)`` are outside this
+    rewrite's contract (their ``$`` is an end-of-line anchor)."""
+    return "(?d)" + _RE_DOLLAR.sub(
+        lambda m: r"\z" if m.group() == "$" else m.group(), pattern)
+
+
 def _h_regex(cc, st, path, spec, schema):
     pattern = spec.params["pattern"]
     name = spec.params.get("display", "regex")
+    java = _go_regex(pattern)
     _gated_check(cc, st, path, name, pattern,
-                 lambda c: c.rlike(pattern), f"not match with {pattern}")
+                 lambda c: c.rlike(java), f"not match with {pattern}")
 
 
 def _h_lowercase(cc, st, path, spec, schema):

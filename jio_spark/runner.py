@@ -2,6 +2,10 @@
 audio decode + uniqueness + referential + stats + drift, with per-partition
 checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
+The rule set is compiled once per run, on the driver, before any group
+(compiling reads only ``df.schema``, which every group frame shares); each
+group applies that one compiled plan to its own ``df.where(...)`` slice.
+
 Execution shape per partition group (a group = a batch of bucket_id
 partitions, the resume granularity):
 
@@ -25,9 +29,9 @@ from typing import Dict, List, Mapping, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .compiler import compile_ruleset
+from .compiler import CompiledRuleSet, compile_ruleset
 from .dsl import K, ObjectSchema
-from .engine import rule_count_exprs, validate
+from .engine import rule_count_exprs
 from .audio.decode import decode_check, decode_violations
 from .audio.files import decode_check_files
 from .operators.drift import HistSpec, drift_check, snapshot
@@ -317,9 +321,15 @@ class ClipsValidationJob:
     def group_violations(self, df: DataFrame, group=None,
                          table_root: Optional[str] = None,
                          observation=None,
-                         footer_cache: Optional[dict] = None) -> DataFrame:
+                         footer_cache: Optional[dict] = None,
+                         compiled: Optional[CompiledRuleSet] = None
+                         ) -> DataFrame:
         """All per-row violations for a slice of the table, in the standard
         shape + partition column.
+
+        ``compiled`` is the rule set compiled against a frame with
+        ``df``'s schema; :meth:`run` compiles once and passes it to every
+        group. Without it the rules are compiled here.
 
         Scan economy (SURVEY.md §4.2 "single-pass multi-metric"): the rule
         chain AND the referential check share ONE scan — the broadcast dim
@@ -328,9 +338,10 @@ class ClipsValidationJob:
         (column pruning). The audio decode is the only second scan, reading
         exactly (id, bytes, metadata)."""
         ids = ["clip_id", self.cfg.partition_col]
-        res = validate(df, self.cfg.rules.clone(), id_cols=ids)
-        ann = res.prepared.withColumn(
-            "_violations", res.compiled.violations_array)
+        if compiled is None:
+            compiled = compile_ruleset(df, self.cfg.rules.clone())
+        ann = compiled.prepare(df).withColumn(
+            "_violations", compiled.violations_array)
         if observation is not None:
             # stats piggyback on the SAME scan (before the violation
             # filter drops passing rows) — no extra source read
@@ -342,7 +353,7 @@ class ClipsValidationJob:
                 # per-rule verdict tallies on the same pass (the shared
                 # recipe from engine.rule_count_exprs — summary() and
                 # this path can never diverge)
-                exprs += rule_count_exprs(res.compiled.entries)
+                exprs += rule_count_exprs(compiled.entries)
             ann = ann.observe(observation, *exprs)
 
         if self.codec_dim is not None:
@@ -466,6 +477,10 @@ class ClipsValidationJob:
                 df, cfg.schema_contract)
             if schema_viols and cfg.schema_contract_mode == "fail":
                 raise_schema_violations(schema_viols)
+        # ONE compile per run, before any output is touched: a rule on a
+        # missing column fails here, and every group (and the rule_counts
+        # metadata) reuses the plan instead of rebuilding its Column trees
+        compiled = compile_ruleset(df, cfg.rules.clone())
         sink = RunSink(output_root) if output_root else None
         manifest = Manifest(output_root) if output_root else None
         if manifest and not resume:
@@ -633,7 +648,8 @@ class ClipsValidationJob:
             viols = self.group_violations(gdf, group=group,
                                           table_root=table_root,
                                           observation=obs,
-                                          footer_cache=fcache)
+                                          footer_cache=fcache,
+                                          compiled=compiled)
             if sink:
                 out_v = viols
                 if cfg.violations_sink == "exemplars":
@@ -790,19 +806,18 @@ class ClipsValidationJob:
             group_secs.append(g_sec)
         rule_counts = None
         if cfg.observe_stats and cfg.observe_rule_counts and group_stats:
-            # metadata from ONE driver-side compile (deterministic for
-            # the same ruleset — the per-group clones compile to the
-            # same entry order); counts are plain sums across groups
-            meta = [(e.rule_id, e.path, e.rule_name)
-                    for e in compile_ruleset(df, cfg.rules.clone()).entries]
+            # metadata from the run's one compile, whose entries every
+            # group's tallies were built from; counts are plain sums
+            # across groups
             rule_counts = []
-            for i, (rid, path, name) in enumerate(meta):
+            for i, e in enumerate(compiled.entries):
                 ev = sum(int(g.get(f"__rule{i}__ev") or 0)
                          for g in group_stats)
                 ps = sum(int(g.get(f"__rule{i}__ps") or 0)
                          for g in group_stats)
                 rule_counts.append(
-                    {"rule_id": rid, "rule_path": path, "rule_name": name,
+                    {"rule_id": e.rule_id, "rule_path": e.path,
+                     "rule_name": e.rule_name,
                      "evaluated": ev, "passed": ps, "failed": ev - ps})
         col_stats = (_merge_observed_stats(group_stats,
                                            list(cfg.stat_cols),

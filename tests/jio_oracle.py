@@ -37,6 +37,18 @@ _GO_NUM = re.compile(
     re.ASCII)
 _GO_INF = re.compile(r"^[+-]?inf(inity)?$", re.IGNORECASE | re.ASCII)
 
+# Go RE2 without flags: `$` matches only at the end of the text, while
+# Python's `$` also matches before a final '\n' -- so every end anchor
+# outside a character class becomes Python's end-of-text `\Z`. `.`
+# already agrees (both exclude only '\n').
+_END_ANCHOR = re.compile(r"\\.|\[\^?\]?(?:\\.|[^\]\\])*\]|\$", re.S)
+
+
+def _go_re(pattern: str) -> str:
+    return _END_ANCHOR.sub(
+        lambda m: r"\Z" if m.group() == "$" else m.group(), pattern)
+
+
 # the Unicode White_Space=yes set (what Go strings.TrimSpace trims)
 _GO_WHITESPACE = (
     "\t\n\x0b\x0c\r \x85\xa0 "
@@ -278,7 +290,7 @@ def _validate(schema: BaseSchema, value: Any, path: str,
             rname = p.get("display", "regex")
             if not isinstance(v, str):
                 return (path, rname), True, v
-            if not re.search(p["pattern"], v):
+            if not re.search(_go_re(p["pattern"]), v):
                 return (path, rname), True, v
         elif name == "lowercase":
             if not isinstance(v, str):

@@ -64,3 +64,61 @@ def test_uri_empty_listing_refuses_loudly(tmp_path):
         list_row_group_splits(f"file://{empty}")
     with pytest.raises(FileNotFoundError):
         list_row_group_splits(f"file://{empty}/missing")
+
+
+def test_uri_malformed_refuses_with_designed_error():
+    """A URI pyarrow cannot parse raises ArrowInvalid (an ArrowException,
+    not an OSError); the listing must rewrap it in the same
+    FileNotFoundError every other listing failure raises."""
+    with pytest.raises(FileNotFoundError, match="cannot list"):
+        list_row_group_splits("file://[bad")
+
+
+def test_uri_listing_keeps_authority(monkeypatch):
+    """Split paths are rebuilt under the root URI's own
+    scheme://authority prefix: ``hdfs://nn:8020/t`` lists as
+    ``hdfs://nn:8020/t/...``, not ``hdfs:///t/...`` (which names another
+    cluster's default namenode). The filesystem is stubbed, so no HDFS
+    client is needed."""
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+
+    from jio_spark.audio import files
+
+    F_, D_ = pafs.FileType.File, pafs.FileType.Directory
+    listed = [pafs.FileInfo("/t/bucket_id=0", D_),
+              pafs.FileInfo("/t/bucket_id=0/part-0.parquet", F_),
+              pafs.FileInfo("/t/bucket_id=1/part-1.parquet", F_),
+              pafs.FileInfo("/t/_SUCCESS", F_)]
+
+    class StubFS:
+        def __init__(self, fail=None):
+            self.fail = fail
+
+        def get_file_info(self, selector):
+            assert selector.base_dir == "/t" and selector.recursive
+            if self.fail is not None:
+                raise self.fail
+            return listed
+
+    stub = StubFS()
+
+    class StubFileSystem:
+        @staticmethod
+        def from_uri(uri):
+            assert uri == "hdfs://nn:8020/t"
+            return stub, "/t"
+
+    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+    tagged, hive = files._tagged_files("hdfs://nn:8020/t", None,
+                                       "bucket_id")
+    assert hive
+    assert tagged == [("hdfs://nn:8020/t/bucket_id=0/part-0.parquet", 0),
+                      ("hdfs://nn:8020/t/bucket_id=1/part-1.parquet", 1)]
+    # partition pruning reads the relpath under the authority-bearing root
+    tagged, _ = files._tagged_files("hdfs://nn:8020/t", [1], "bucket_id")
+    assert tagged == [("hdfs://nn:8020/t/bucket_id=1/part-1.parquet", 1)]
+    # a listing error that is an ArrowException, not an OSError
+    stub.fail = pa.ArrowInvalid("bad listing")
+    with pytest.raises(FileNotFoundError, match="cannot list"):
+        files._tagged_files("hdfs://nn:8020/t", None, "bucket_id")

@@ -14,7 +14,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from tools.derive_rows_only_oracles import (N_CLIPS, N_MIXED,
                                             derive_audio_checks,
                                             derive_audio_decode,
-                                            derive_multimodal)
+                                            derive_multimodal,
+                                            parse_wav_independent)
+from jio_spark.audio.codecs import decode_coded, parse_wav
 from jio_spark.audio.synth import make_row, make_row_mixed
 
 
@@ -85,3 +87,31 @@ def test_stats_profile_approx_bounds(spark):
         ("l_extendedprice", True, True),
         ("l_quantity", True, True),
         ("l_returnflag", True, True)]
+
+
+@pytest.mark.parametrize("channels", [1, 2])
+def test_float64_wav_matches_independent_derivation(channels):
+    """IEEE float64 (tag 3, bits=64) through the independent parser and
+    the engine's decode: same codec, rate and int16 samples, including
+    the rails, NaN/inf and ties-to-even rounding."""
+    import struct
+
+    import numpy as np
+    x = np.array([0.0, 0.5, -1.0, 1.5, -2.0, np.nan, np.inf, -np.inf,
+                  1 / 65536, 3 / 65536, -0.25, 32767 / 32768], "<f8")
+    body = x.tobytes()
+    block = 8 * channels
+    raw = struct.pack("<4sI4s4sIHHIIHH4sI", b"RIFF", 36 + len(body),
+                      b"WAVE", b"fmt ", 16, 3, channels, 16000,
+                      16000 * block, block, 64, b"data", len(body)) + body
+    pcm, sr, codec = parse_wav_independent(raw)
+    coded, e_sr, e_codec = parse_wav(raw)
+    assert (sr, codec) == (e_sr, e_codec) == (16000, "pcm_f64le")
+    assert pcm.tolist() == decode_coded(coded, e_codec).tolist()
+    mono = [0, 16384, -32768, 32767, -32768, 0, 32767, -32768, 0, 2,
+            -8192, 32767]
+    if channels == 1:
+        assert pcm.tolist() == mono
+    else:
+        assert pcm.tolist() == [(a + b + 1) // 2
+                                for a, b in zip(mono[0::2], mono[1::2])]

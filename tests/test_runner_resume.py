@@ -643,6 +643,31 @@ def test_concurrent_groups_match_serial(spark, clips_path, tmp_path):
             assert e1["min"] <= vals[0] and vals[-1] <= e1["max"], (c, q)
 
 
+@pytest.mark.parametrize("rule_counts", [False, True])
+def test_run_compiles_the_rules_once(spark, clips_path, monkeypatch,
+                                     rule_counts):
+    """One compile per run, however many groups: every group and the
+    rule_counts metadata share it. Counts every compile the run can
+    reach — the runner's own and validate()'s."""
+    from jio_spark import engine, runner
+    calls = []
+    for mod in (runner, engine):
+        real = mod.compile_ruleset
+
+        def counting(*args, _real=real, **kw):
+            calls.append(args)
+            return _real(*args, **kw)
+        monkeypatch.setattr(mod, "compile_ruleset", counting)
+    df = spark.read.parquet(clips_path)
+    cfg = ClipsJobConfig(group_size=8, audio_check=False, drift=False,
+                         observe_rule_counts=rule_counts)
+    m = ClipsValidationJob(spark, cfg).run(df)
+    assert m["groups_run"] == 2 and m["rows"] == 1200
+    assert len(calls) == 1
+    if rule_counts:
+        assert len(m["rule_counts"]) == 19
+
+
 def test_hll_merged_distinct_across_groups(spark):
     """Cross-group distinct (round 4): the per-group HLL sketches carried
     by the observe metrics union into a TRUE whole-table estimate —

@@ -214,6 +214,13 @@ def parse_wav_independent(raw: bytes):
         x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
         pcm, codec = np.clip(x, -32768, 32767).astype(np.int16), \
             "pcm_f32le"
+    elif tag == 3 and bits == 64:
+        if dlen % 8:
+            raise ValueError("bad float64")
+        x = np.round(np.frombuffer(body, "<f8") * 32768.0)
+        x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
+        pcm, codec = np.clip(x, -32768, 32767).astype(np.int16), \
+            "pcm_f64le"
     elif tag == 7 and bits == 8:
         pcm, codec = _ULAW[np.frombuffer(body, np.uint8)], "ulaw"
     elif tag == 6 and bits == 8:
