@@ -180,10 +180,10 @@ class ColState:
         return out
 
 
-# thread-safe: the runner compiles once per run on the driver thread,
-# but callers may still run validate() from several threads at once; a
-# bare `+= 1` on a module int could hand two compilations the same SSA
-# prefix
+# thread-safe: the runner compiles once per run, before its group
+# threads start, but callers may still run validate() from several
+# threads at once; a bare `+= 1` on a module int could hand two
+# compilations the same SSA prefix
 _CTX_SEQ = itertools.count(1)
 
 
@@ -825,6 +825,7 @@ def _h_slength(cc, st, path, spec, schema):
 _RE_DOLLAR = re.compile(
     r"\\Q.*?(?:\\E|\Z)|\\.|\[\^?\]?(?:\[:\^?\w+:\]|\\.|[^\]\\])*\]|\$",
     re.S)
+_RE_MULTILINE = re.compile(r"\(\?[a-zA-Z]*m")
 
 
 def _go_regex(pattern: str) -> str:
@@ -834,8 +835,11 @@ def _go_regex(pattern: str) -> str:
     also excludes ``\r \x85 \u2028 \u2029`` and its ``$`` also matches
     before a final line terminator. ``(?d)`` (UNIX_LINES) narrows Java's
     terminators to ``\n``, and each end anchor outside a character class
-    becomes ``\z``. Patterns that turn on ``(?m)`` are outside this
-    rewrite's contract (their ``$`` is an end-of-line anchor)."""
+    becomes ``\z`` -- unless the pattern turns on ``(?m)``, where ``$``
+    ends a line, and under ``(?d)`` Java's lines end only at ``\n``, as
+    RE2's do."""
+    if _RE_MULTILINE.search(pattern):
+        return "(?d)" + pattern
     return "(?d)" + _RE_DOLLAR.sub(
         lambda m: r"\z" if m.group() == "$" else m.group(), pattern)
 

@@ -2,9 +2,9 @@
 audio decode + uniqueness + referential + stats + drift, with per-partition
 checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
-The rule set is compiled once per run, on the driver, before any group
-(compiling reads only ``df.schema``, which every group frame shares); each
-group applies that one compiled plan to its own ``df.where(...)`` slice.
+The rule set is compiled once per run, before any group (compiling reads
+only ``df.schema``, which every group frame shares); each group applies
+that one compiled plan to its own ``df.where(...)`` slice.
 
 Execution shape per partition group (a group = a batch of bucket_id
 partitions, the resume granularity):

@@ -39,12 +39,15 @@ _GO_INF = re.compile(r"^[+-]?inf(inity)?$", re.IGNORECASE | re.ASCII)
 
 # Go RE2 without flags: `$` matches only at the end of the text, while
 # Python's `$` also matches before a final '\n' -- so every end anchor
-# outside a character class becomes Python's end-of-text `\Z`. `.`
-# already agrees (both exclude only '\n').
+# outside a character class becomes Python's end-of-text `\Z`. Under
+# (?m) both end a line only at '\n'. `.` already agrees (both exclude
+# only '\n').
 _END_ANCHOR = re.compile(r"\\.|\[\^?\]?(?:\\.|[^\]\\])*\]|\$", re.S)
 
 
 def _go_re(pattern: str) -> str:
+    if re.search(r"\(\?[a-zA-Z]*m", pattern):
+        return pattern
     return _END_ANCHOR.sub(
         lambda m: r"\Z" if m.group() == "$" else m.group(), pattern)
 

@@ -26,6 +26,9 @@ def _go_cases():
     # a `$` inside a class or escaped is a literal, not the anchor
     yield r"[$]", "a$b", True
     yield r"\$\d$", "$5", True
+    # under (?m) `$` ends a line, and lines end only at '\n'
+    for t in TERMINATORS:
+        yield r"(?m)c$", "c" + t + "x", t == "\n"
 
 
 @pytest.mark.parametrize("pattern", sorted({p for p, _, _ in _go_cases()}))
