@@ -20,14 +20,19 @@ Supported WAVE format tags:
   encoders emit EXTENSIBLE even for plain mono PCM)
 
 Channels: 1 or 2. Stereo is supported for every codec. The per-SAMPLE
-codecs (PCM widths, G.711, float) decode the interleaved payload in one
-pass (their decodes commute with interleaving; :class:`StereoCoded`);
-stereo IMA ADPCM (per-channel 4-byte block headers + data interleaved
-in 4-byte groups) de-interleaves each block into two virtual MONO
-sub-blocks so one run of the mono recurrence decodes both channels
-(:func:`adpcm_stereo_decode_stacked`). Decode policy for both is
-downmix-to-mono ``(L+R+1)>>1`` before the SNR check — the reference
-signal is mono, and the downmix is exact on dual-mono content.
+codecs (PCM widths, G.711, float) are one table, :data:`SAMPLE_CODECS`:
+(format tag, container bits) → (codec, numpy sample dtype, int16
+transform). :func:`parse_wav` views the data chunk as that dtype — 1-D
+for mono, reshaped ``(frames, 2)`` for stereo, so ``len()`` counts
+frames either way — and one elementwise transform covers both channels
+(it commutes with interleaving); stereo IMA ADPCM (per-channel 4-byte
+block headers + data interleaved in 4-byte groups) de-interleaves each
+block into two virtual MONO sub-blocks so one run of the mono
+recurrence decodes both channels (:func:`adpcm_stereo_decode_stacked`).
+Decode policy for both is downmix-to-mono ``(L+R+1)>>1`` before the SNR
+check — the reference signal is mono, and the downmix is exact on
+dual-mono content. Per-channel SNR is deliberately not computed
+(FIXTURES.md §1b).
 
 G.711 companding is implemented as vectorized numpy over int16 arrays
 (standard bias-133/segment encoding for μ-law, 13-bit segment encoding for
@@ -386,7 +391,8 @@ class AdpcmCoded:
     invariant; ``nbytes`` is the raw payload size, keeping the fuzz
     contract's no-amplification bound. ``channels == 2`` selects the
     stereo block layout (per-channel headers + interleaved 4-byte data
-    groups) whose decode downmixes ``(L+R+1)>>1`` like StereoCoded."""
+    groups) whose decode downmixes ``(L+R+1)>>1`` like the per-sample
+    codecs' stereo views."""
 
     __slots__ = ("payload", "block_align", "n_samples", "channels")
 
@@ -417,39 +423,23 @@ class AdpcmCoded:
 # ---------------------------------------------------------------------------
 # signed 24-bit PCM (bits=24 under format tag 1 — studio mastering width)
 
-class Pcm24Coded:
-    """Zero-copy view of a 24-bit PCM data chunk. Like AdpcmCoded it
-    cannot be a one-element-per-sample numpy view (3 bytes per sample
-    have no native dtype), so ``len()``/``nbytes`` carry the invariants
-    and :meth:`decode` materializes int16 on demand — the comparison
+def _s24_to_int16(v: np.ndarray) -> np.ndarray:
+    """'V3' view of little-endian 3-byte samples → int16 (3 bytes per
+    sample have no native numeric dtype). int16 is the comparison
     precision of the whole check pipeline (references are int16 synth;
     a 24-bit payload written from a 16-bit source round-trips exactly,
     so SNR reads ∞ on clean clips)."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload
-
-    def __len__(self) -> int:
-        return self.payload.nbytes // 3
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        b = np.ascontiguousarray(self.payload).reshape(-1, 3)
-        x = (b[:, 0].astype(np.int32)
-             | (b[:, 1].astype(np.int32) << 8)
-             | (b[:, 2].astype(np.int32) << 16))
-        x = (x ^ 0x800000) - 0x800000          # sign-extend int24
-        return (x >> 8).astype(np.int16)
+    b = np.ascontiguousarray(v).view(np.uint8).reshape(v.shape + (3,))
+    x = (b[..., 0].astype(np.int32)
+         | (b[..., 1].astype(np.int32) << 8)
+         | (b[..., 2].astype(np.int32) << 16))
+    x = (x ^ 0x800000) - 0x800000          # sign-extend int24
+    return (x >> 8).astype(np.int16)
 
 
 def pcm_s24_encode(pcm: np.ndarray) -> np.ndarray:
     """int16 PCM → little-endian 3-byte samples (value << 8): the exact
-    inverse of Pcm24Coded.decode for 16-bit sources."""
+    inverse of the s24 decode for 16-bit sources."""
     x = pcm.astype(np.int32) << 8
     out = np.empty((len(pcm), 3), dtype=np.uint8)
     out[:, 0] = x & 0xFF
@@ -459,120 +449,33 @@ def pcm_s24_encode(pcm: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# IEEE float32 PCM (WAVE format tag 3)
+# IEEE float PCM (WAVE format tag 3)
 
-class Float32Coded:
-    """Zero-copy view of an IEEE-float data chunk (format tag 3, incl.
-    the KSDATAFORMAT float GUID under WAVE_FORMAT_EXTENSIBLE). float32
-    has no int16 identity view, so like :class:`Pcm24Coded` the class
-    carries ``len()``/``nbytes`` and materializes int16 on demand.
-    :meth:`decode` scales by 32768 and rounds ties-to-even (np.rint) —
-    the exact inverse of :func:`pcm_f32_encode` for int16 sources
-    (int16/32768 is exact in float32's 24-bit mantissa), so clean clips
-    measure SNR ∞. Non-finite payload floats (a corrupt file can carry
-    NaN/±inf bit patterns) decode deterministically: NaN → 0, ±inf →
-    the int16 rails — never an undefined float→int cast."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload          # '<f4' view of the data chunk
-
-    def __len__(self) -> int:
-        return len(self.payload)
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        x = np.rint(self.payload * np.float32(32768.0))
-        x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
-        return np.clip(x, -32768.0, 32767.0).astype(np.int16)
+def _float_to_int16(v: np.ndarray) -> np.ndarray:
+    """float32 or float64 samples (format tag 3, incl. the KSDATAFORMAT
+    float GUID under WAVE_FORMAT_EXTENSIBLE) → int16: ×32768 in the
+    payload's own precision, rounded ties-to-even (np.rint) — the exact
+    inverse of :func:`pcm_f32_encode` / :func:`pcm_f64_encode` for int16
+    sources (int16/32768 is exact in float32's 24-bit mantissa), so
+    clean clips measure SNR ∞. Non-finite payload floats (a corrupt file
+    can carry NaN/±inf bit patterns) decode deterministically: NaN → 0,
+    ±inf → the int16 rails — never an undefined float→int cast."""
+    x = np.rint(v * v.dtype.type(32768.0))
+    x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
+    return np.clip(x, -32768.0, 32767.0).astype(np.int16)
 
 
 def pcm_f32_encode(pcm: np.ndarray) -> np.ndarray:
     """int16 PCM → little-endian float32 samples in [-1, 1) at the
-    conventional /32768 scaling — the exact inverse of
-    Float32Coded.decode for 16-bit sources."""
+    conventional /32768 scaling — the exact inverse of the float decode
+    for 16-bit sources."""
     return (pcm.astype(np.float32) / np.float32(32768.0)).astype("<f4")
-
-
-class Float64Coded:
-    """Zero-copy view of an IEEE double data chunk (tag 3, bits=64 —
-    the rare but legal scientific/DAW export width). Same decode
-    contract as :class:`Float32Coded`: ×32768, ties-to-even, NaN → 0,
-    ±inf → the int16 rails."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload          # '<f8' view of the data chunk
-
-    def __len__(self) -> int:
-        return len(self.payload)
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        x = np.rint(self.payload * 32768.0)
-        x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
-        return np.clip(x, -32768.0, 32767.0).astype(np.int16)
 
 
 def pcm_f64_encode(pcm: np.ndarray) -> np.ndarray:
     """int16 PCM → little-endian float64 samples (/32768) — exact
-    inverse of Float64Coded.decode for 16-bit sources."""
+    inverse of the float decode for 16-bit sources."""
     return (pcm.astype(np.float64) / 32768.0).astype("<f8")
-
-
-# ---------------------------------------------------------------------------
-# stereo (nChannels == 2) for the per-sample codec family
-
-class StereoCoded:
-    """Two-channel interleaved coded view + the downmix decode policy.
-
-    parse_wav wraps the full interleaved payload's MONO coded view (the
-    per-sample codecs — PCM widths, G.711, float — commute with
-    interleaving, so one elementwise decode covers both channels).
-    ``len()`` is the FRAME count (samples per channel): the unit the
-    dur/n_samples checks are defined in, keeping 1000·len/sr == dur_ms
-    for stereo exactly as for mono. :meth:`decode` de-interleaves and
-    downmixes ``(L + R + 1) >> 1`` (round-half-up mean — exact identity
-    for dual-mono content, so a stereo file carrying the reference
-    signal on both channels measures the same SNR as its mono
-    counterpart). Per-channel SNR is deliberately NOT computed: the
-    reference signal is mono, and the documented policy is
-    downmix-then-compare (FIXTURES.md §1b). IMA ADPCM is NOT wrapped
-    here — its stereo layout is block-structured (per-channel headers +
-    interleaved 4-byte groups), handled by AdpcmCoded(channels=2)."""
-
-    __slots__ = ("inner", "codec")
-
-    def __init__(self, inner, codec: str):
-        self.inner = inner
-        self.codec = codec
-
-    def __len__(self) -> int:
-        return len(self.inner) // 2
-
-    @property
-    def nbytes(self) -> int:
-        return self.inner.nbytes
-
-    def decode(self) -> np.ndarray:
-        pcm = decode_coded(self.inner, self.codec)
-        n = (len(pcm) // 2) * 2
-        s = pcm[:n].astype(np.int32).reshape(-1, 2)
-        return ((s[:, 0] + s[:, 1] + 1) >> 1).astype(np.int16)
-
-
-#: every coded-view class parse_wav can return instead of a bare ndarray;
-#: decode_coded and the fused SNR kernel materialize these via .decode()
-CODED_CLASSES = (AdpcmCoded, Pcm24Coded, Float32Coded, Float64Coded,
-                 StereoCoded)
 
 
 # ---------------------------------------------------------------------------
@@ -610,9 +513,44 @@ _FMT_EXTENSIBLE = 0xFFFE
 #: remaining 14 are this fixed media-type suffix
 _EXT_GUID_SUFFIX = bytes.fromhex("000000001000800000AA00389B71")
 
-_CODEC_FMT = {"pcm_s16le": _FMT_PCM16, "alaw": _FMT_ALAW, "ulaw": _FMT_ULAW,
-              "adpcm_ima": _FMT_ADPCM_IMA, "pcm_f32le": _FMT_FLOAT}
-_FMT_CODEC = {v: k for k, v in _CODEC_FMT.items()}
+#: every per-SAMPLE codec: (format tag, container bits) → (codec, numpy
+#: dtype of one sample, transform of an array of those samples to int16;
+#: None where they already are int16). parse_wav views the data chunk as
+#: that dtype, and decode_coded and the fused SNR kernel apply the
+#: transform. IMA ADPCM is block-structured and stays outside
+#: (:class:`AdpcmCoded`).
+SAMPLE_CODECS = {
+    (_FMT_PCM16, 16): ("pcm_s16le", np.dtype("<i2"), None),
+    # WAV spec: 8-bit PCM is unsigned excess-128
+    (_FMT_PCM16, 8): ("pcm_u8", np.dtype("u1"), pcm_u8_decode),
+    (_FMT_PCM16, 24): ("pcm_s24le", np.dtype("V3"), _s24_to_int16),
+    (_FMT_FLOAT, 32): ("pcm_f32le", np.dtype("<f4"), _float_to_int16),
+    (_FMT_FLOAT, 64): ("pcm_f64le", np.dtype("<f8"), _float_to_int16),
+    # G.711 is 8-bit by definition: a fmt chunk declaring 16-bit
+    # A-law/mu-law is malformed and must surface as ONE decode
+    # violation, not be read one-sample-per-byte (doubling n_samples and
+    # misattributing the defect to dur/snr)
+    (_FMT_ALAW, 8): ("alaw", np.dtype("u1"), alaw_decode),
+    (_FMT_ULAW, 8): ("ulaw", np.dtype("u1"), ulaw_decode),
+}
+_CODEC_KEY = {codec: key for key, (codec, _, _) in SAMPLE_CODECS.items()}
+_TO_INT16 = {codec: fn for codec, _, fn in SAMPLE_CODECS.values()}
+
+#: the payload name in parse_wav's "malformed ... payload" errors: per
+#: format tag for an unlisted container width, per (tag, bits) where a
+#: data chunk that is not whole samples has its own name
+_MALFORMED = {_FMT_PCM16: "pcm16", _FMT_FLOAT: "ieee-float",
+              _FMT_ALAW: "g711", _FMT_ULAW: "g711",
+              (_FMT_PCM16, 24): "pcm24", (_FMT_FLOAT, 64): "ieee-double"}
+
+#: codec → (int16 samples → payload samples) for every SAMPLE_CODECS
+#: codec — behind the mono encoders and the stereo writer, which take the
+#: format tag and container bits from the table (ADPCM keeps its own
+#: encoders)
+_PAYLOAD_ENC = {"pcm_s16le": lambda p: p.astype("<i2"), "ulaw": ulaw_encode,
+                "alaw": alaw_encode, "pcm_u8": pcm_u8_encode,
+                "pcm_s24le": pcm_s24_encode, "pcm_f32le": pcm_f32_encode,
+                "pcm_f64le": pcm_f64_encode}
 
 
 def _wav_bytes(payload: bytes, fmt: int, sr: int, bits: int,
@@ -626,19 +564,26 @@ def _wav_bytes(payload: bytes, fmt: int, sr: int, bits: int,
     return header + payload
 
 
+def _sample_wav(pcm: np.ndarray, sr: int, codec: str,
+                channels: int = 1) -> bytes:
+    fmt, bits = _CODEC_KEY[codec]
+    return _wav_bytes(_PAYLOAD_ENC[codec](pcm).tobytes(), fmt, sr, bits,
+                      channels)
+
+
 def encode_pcm16_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → WAV (format tag 1)."""
-    return _wav_bytes(pcm.astype("<i2").tobytes(), _FMT_PCM16, sr, 16)
+    return _sample_wav(pcm, sr, "pcm_s16le")
 
 
 def encode_ulaw_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → μ-law WAV (format tag 7)."""
-    return _wav_bytes(ulaw_encode(pcm).tobytes(), _FMT_ULAW, sr, 8)
+    return _sample_wav(pcm, sr, "ulaw")
 
 
 def encode_alaw_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → A-law WAV (format tag 6)."""
-    return _wav_bytes(alaw_encode(pcm).tobytes(), _FMT_ALAW, sr, 8)
+    return _sample_wav(pcm, sr, "alaw")
 
 
 def encode_adpcm_wav(pcm: np.ndarray, sr: int,
@@ -670,10 +615,11 @@ def encode_adpcm_wav(pcm: np.ndarray, sr: int,
 
 def parse_wav(raw: bytes) -> Tuple[object, int, str]:
     """WAV bytes → (coded samples as a ZERO-COPY view, sample rate, codec
-    name) without decoding: int16 view for pcm_s16le, uint8 view of the
-    companded bytes for G.711, an :class:`AdpcmCoded` block view for IMA
-    ADPCM. ``len()`` is the decoded sample count in every case (for
-    ADPCM via the fact chunk, since blocks are padded).
+    name) without decoding: a numpy view of the data chunk in the
+    codec's :data:`SAMPLE_CODECS` dtype (1-D for mono, ``(frames, 2)``
+    for stereo), or an :class:`AdpcmCoded` block view for IMA ADPCM.
+    ``len()`` is the decoded frame count in every case (for ADPCM via
+    the fact chunk, since blocks are padded).
 
     Raises ValueError on malformed/truncated input (drives the corrupt-
     payload violations in FIXTURES.md §1).
@@ -771,71 +717,43 @@ def parse_wav(raw: bytes) -> Tuple[object, int, str]:
             n_samples = fact_samples
         coded = AdpcmCoded(np.frombuffer(payload, dtype=np.uint8),
                            block_align, n_samples, channels)
-        return coded, sr, _FMT_CODEC[fmt]
-    # the remaining tags are all per-SAMPLE codecs: build the mono coded
-    # view over the whole interleaved payload, then wrap stereo — the
-    # elementwise decodes commute with channel interleaving
-    if fmt == _FMT_PCM16:
-        if bits == 8:
-            # WAV spec: 8-bit PCM is unsigned excess-128
-            coded, codec = np.frombuffer(payload, dtype=np.uint8), "pcm_u8"
-        elif bits == 24:
-            if dlen % 3:
-                raise ValueError("malformed pcm24 payload")
-            coded = Pcm24Coded(np.frombuffer(payload, dtype=np.uint8))
-            codec = "pcm_s24le"
-        elif bits != 16 or dlen % 2:
-            raise ValueError("malformed pcm16 payload")
-        else:
-            coded, codec = np.frombuffer(payload, dtype="<i2"), "pcm_s16le"
-    elif fmt in (_FMT_ULAW, _FMT_ALAW):
-        # G.711 is 8-bit by definition: a fmt chunk declaring 16-bit
-        # A-law/mu-law is malformed and must surface as ONE decode
-        # violation, not be read one-sample-per-byte (doubling
-        # n_samples and misattributing the defect to dur/snr)
-        if bits != 8:
-            raise ValueError("malformed g711 payload")
-        coded, codec = np.frombuffer(payload, dtype=np.uint8), \
-            _FMT_CODEC[fmt]
-    elif fmt == _FMT_FLOAT:
-        # WAVE_FORMAT_IEEE_FLOAT: float32 (the mastering convention) or
-        # float64 (rare but legal scientific/DAW export width)
-        if bits == 32:
-            if dlen % 4:
-                raise ValueError("malformed ieee-float payload")
-            coded = Float32Coded(np.frombuffer(payload, dtype="<f4"))
-            codec = "pcm_f32le"
-        elif bits == 64:
-            if dlen % 8:
-                raise ValueError("malformed ieee-double payload")
-            coded = Float64Coded(np.frombuffer(payload, dtype="<f8"))
-            codec = "pcm_f64le"
-        else:
-            raise ValueError("malformed ieee-float payload")
-    else:
-        raise ValueError(f"unsupported format tag {fmt}")
+        return coded, sr, "adpcm_ima"
+    entry = SAMPLE_CODECS.get((fmt, bits))
+    if entry is None:
+        if fmt not in _MALFORMED:
+            raise ValueError(f"unsupported format tag {fmt}")
+        raise ValueError(f"malformed {_MALFORMED[fmt]} payload")
+    codec, dtype, _ = entry
+    if dlen % dtype.itemsize:
+        name = _MALFORMED.get((fmt, bits), _MALFORMED[fmt])
+        raise ValueError(f"malformed {name} payload")
+    coded = np.frombuffer(payload, dtype=dtype)
     if channels == 2:
         if len(coded) % 2:
             raise ValueError("stereo payload with odd sample count")
-        coded = StereoCoded(coded, codec)
+        coded = coded.reshape(-1, 2)
     return coded, sr, codec
 
 
+def _int16_mono(samples: np.ndarray, to_int16) -> np.ndarray:
+    """A per-sample coded view, or a run of its frames → int16 mono PCM:
+    the codec's transform, then, for a ``(frames, 2)`` stereo view, the
+    documented ``(L + R + 1) >> 1`` downmix (round-half-up mean — the
+    exact identity on dual-mono content, so a stereo file carrying the
+    reference signal on both channels measures the same SNR as its mono
+    counterpart)."""
+    pcm = samples if to_int16 is None else to_int16(samples)
+    if pcm.ndim == 2:
+        s = pcm.astype(np.int32)
+        pcm = ((s[:, 0] + s[:, 1] + 1) >> 1).astype(np.int16)
+    return pcm
+
+
 def decode_coded(samples, codec: str) -> np.ndarray:
-    """Coded-sample view from :func:`parse_wav` → int16 PCM (mono; a
-    stereo container arrives as a StereoCoded whose decode applies the
-    documented downmix). Class dispatch first: a StereoCoded wrapping
-    G.711 must materialize through its own decode, not have the LUT
-    applied to the wrapper."""
-    if isinstance(samples, CODED_CLASSES):
+    """Coded-sample view from :func:`parse_wav` → int16 mono PCM."""
+    if isinstance(samples, AdpcmCoded):
         return samples.decode()
-    if codec == "ulaw":
-        return ulaw_decode(samples)
-    if codec == "alaw":
-        return alaw_decode(samples)
-    if codec == "pcm_u8":
-        return pcm_u8_decode(samples)
-    return samples
+    return _int16_mono(samples, _TO_INT16.get(codec))
 
 
 def decode_wav(raw: bytes) -> Tuple[np.ndarray, int, str]:
@@ -849,37 +767,23 @@ def decode_wav(raw: bytes) -> Tuple[np.ndarray, int, str]:
 
 def encode_pcm8_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → unsigned 8-bit PCM WAV (format tag 1, bits=8)."""
-    return _wav_bytes(pcm_u8_encode(pcm).tobytes(), _FMT_PCM16, sr, 8)
+    return _sample_wav(pcm, sr, "pcm_u8")
 
 
 def encode_pcm24_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → signed 24-bit PCM WAV (format tag 1, bits=24)."""
-    return _wav_bytes(pcm_s24_encode(pcm).tobytes(), _FMT_PCM16, sr, 24)
+    return _sample_wav(pcm, sr, "pcm_s24le")
 
 
 def encode_pcm32f_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → IEEE float32 WAV (format tag 3, bits=32)."""
-    return _wav_bytes(pcm_f32_encode(pcm).tobytes(), _FMT_FLOAT, sr, 32)
+    return _sample_wav(pcm, sr, "pcm_f32le")
 
 
 def encode_pcm64f_wav(pcm: np.ndarray, sr: int) -> bytes:
     """int16 samples → IEEE float64 WAV (format tag 3, bits=64)."""
-    return _wav_bytes(pcm_f64_encode(pcm).tobytes(), _FMT_FLOAT, sr, 64)
+    return _sample_wav(pcm, sr, "pcm_f64le")
 
-
-#: codec → (int16 samples → payload bytes, format tag, container bits) for
-#: the per-SAMPLE codec family — the shared table behind the mono encoders
-#: above and the stereo writer below (ADPCM is block-structured and mono-
-#: only; it keeps its dedicated encoder)
-_PAYLOAD_ENC = {
-    "pcm_s16le": (lambda p: p.astype("<i2").tobytes(), _FMT_PCM16, 16),
-    "ulaw": (lambda p: ulaw_encode(p).tobytes(), _FMT_ULAW, 8),
-    "alaw": (lambda p: alaw_encode(p).tobytes(), _FMT_ALAW, 8),
-    "pcm_u8": (lambda p: pcm_u8_encode(p).tobytes(), _FMT_PCM16, 8),
-    "pcm_s24le": (lambda p: pcm_s24_encode(p).tobytes(), _FMT_PCM16, 24),
-    "pcm_f32le": (lambda p: pcm_f32_encode(p).tobytes(), _FMT_FLOAT, 32),
-    "pcm_f64le": (lambda p: pcm_f64_encode(p).tobytes(), _FMT_FLOAT, 64),
-}
 
 
 def encode_adpcm_stereo_wav(left: np.ndarray, right: np.ndarray,
@@ -914,11 +818,10 @@ def encode_stereo_wav(pcm: np.ndarray, sr: int, codec: str) -> bytes:
         return encode_adpcm_stereo_wav(pcm, pcm, sr)
     if codec not in _PAYLOAD_ENC:
         raise ValueError(f"no stereo encoder for codec {codec!r}")
-    enc, fmt, bits = _PAYLOAD_ENC[codec]
     inter = np.empty(2 * len(pcm), dtype=np.int16)
     inter[0::2] = pcm
     inter[1::2] = pcm
-    return _wav_bytes(enc(inter), fmt, sr, bits, channels=2)
+    return _sample_wav(inter, sr, codec, channels=2)
 
 
 def wrap_extensible(raw: bytes) -> bytes:
@@ -1029,21 +932,12 @@ def snr_db_vs_period(coded: np.ndarray, codec: str,
     n = min(n_ref, len(coded))
     if n == 0:
         return float("-inf")
-    if isinstance(coded, CODED_CLASSES):
-        # none of these has a per-sample LUT (ADPCM needs whole blocks,
-        # s24 has no 3-byte dtype, f32/stereo materialize via their own
-        # vectorized decode) — materialize the int16 PCM per clip (clips
-        # are ~KBs). The Arrow decode UDF still routes ADPCM through the
-        # batch-stacked path (decode.py); the others decode in a single
-        # vectorized pass, so per-clip is already the efficient form.
-        # lut must be None afterwards: a StereoCoded wrapping G.711
-        # already decoded — applying the companding LUT again would
-        # corrupt the samples.
+    if isinstance(coded, AdpcmCoded):
+        # block-structured: no per-sample transform, so materialize the
+        # clip (~KBs); the Arrow decode UDF batches ADPCM through the
+        # stacked path instead (decode.py)
         coded = coded.decode()
-        lut = None
-    else:
-        lut = {"ulaw": _ULAW_LUT, "alaw": _ALAW_LUT,
-               "pcm_u8": _PCMU8_LUT}.get(codec)
+    to_int16 = _TO_INT16.get(codec)
     plen = len(period)
     blk = min(_SNR_BLOCK, n)
     reps = (blk + plen) // plen + 1
@@ -1052,8 +946,7 @@ def snr_db_vs_period(coded: np.ndarray, codec: str,
     off = 0
     while off < n:
         m = min(blk, n - off)
-        d = coded[off:off + m]
-        d = (d if lut is None else lut[d]).astype(np.float32)
+        d = _int16_mono(coded[off:off + m], to_int16).astype(np.float32)
         r = buf[off % plen:off % plen + m]
         nz = r - d
         p_sig += float(np.dot(r, r))

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .codecs import (AdpcmCoded, adpcm_ima_decode_stacked,
+from .codecs import (SAMPLE_CODECS, AdpcmCoded, adpcm_ima_decode_stacked,
                      adpcm_stereo_decode_stacked, parse_wav,
                      snr_db_vs_period)
 from .synth import expected_period, expected_transcript
@@ -124,8 +124,7 @@ def _snr_one_stack(items, ba: int, ch: int, out,
 #: closed, so an unknown key is always a typo that would silently fall
 #: to the default gate
 KNOWN_CODECS = frozenset(
-    {"pcm_s16le", "pcm_u8", "pcm_s24le", "pcm_f32le", "pcm_f64le",
-     "ulaw", "alaw", "adpcm_ima"})
+    [codec for codec, _, _ in SAMPLE_CODECS.values()] + ["adpcm_ima"])
 
 
 def validate_gates(snr_threshold) -> None:

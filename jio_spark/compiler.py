@@ -766,8 +766,11 @@ def _h_convert(cc, st, path, spec, schema):
 # (explicit NaN handling in those handlers — Spark's native NaN
 # ordering/equality differs from Go's on all three).
 _D = r"\d+(?:_\d+)*"
-_GO_FLOAT_NUM = rf"^[+-]?({_D}(\.(?:{_D})?)?|\.{_D})([eE][+-]?{_D})?$"
-_GO_FLOAT_INF = r"^[+-]?[iI][nN][fF]([iI][nN][iI][tT][yY])?$"
+# Both end in `\z`: Java's `$` also matches before a final line
+# terminator, which the cast then trims, so '1\n' would parse where Go
+# rejects it.
+_GO_FLOAT_NUM = rf"^[+-]?({_D}(\.(?:{_D})?)?|\.{_D})([eE][+-]?{_D})?\z"
+_GO_FLOAT_INF = r"^[+-]?[iI][nN][fF]([iI][nN][iI][tT][yY])?\z"
 
 
 def _h_parse_string(cc, st, path, spec, schema):

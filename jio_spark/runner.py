@@ -720,12 +720,19 @@ class ClipsValidationJob:
                 on_unclustered=cfg.uniqueness_on_unclustered,
                 certificate=uniq_cert)
             if sink:
+                # the write's own observed row count: a count() after it
+                # would re-plan the whole-table groupBy
+                from pyspark.sql import Observation
+                seen = Observation()
+                uv = uv.observe(seen, F.count(F.lit(1)).alias("rows"))
                 # overwrite, not append: a crash between this write and
                 # the step's manifest mark must not duplicate rows when
                 # the resumed run re-executes the step
                 with sink_lock:
                     sink.overwrite(uv, "uniqueness_violations")
-            n = uv.count()
+                n = int(seen.get["rows"])
+            else:
+                n = uv.count()
             if manifest:
                 details = {"violations": n}
                 if uniq_cert:

@@ -30,12 +30,15 @@ from jio_spark.dsl import BaseSchema, K, ObjectSchema
 # re.ASCII: Python's default \d matches non-ASCII decimal digits (e.g.
 # '١٢') that float() happily parses, while both Go strconv and the Spark
 # side's Java rlike \d are ASCII-only — without the flag the oracle would
-# accept strings the engine (correctly) rejects.
+# accept strings the engine (correctly) rejects. `\Z`, not `$`: Python's
+# `$` also matches before a final '\n', and float() strips surrounding
+# whitespace, where Go's ParseFloat rejects any whitespace — so nothing
+# but the literal itself may match.
 _GO_D = r"\d+(?:_\d+)*"
 _GO_NUM = re.compile(
-    rf"^[+-]?({_GO_D}(\.(?:{_GO_D})?)?|\.{_GO_D})([eE][+-]?{_GO_D})?$",
+    rf"^[+-]?({_GO_D}(\.(?:{_GO_D})?)?|\.{_GO_D})([eE][+-]?{_GO_D})?\Z",
     re.ASCII)
-_GO_INF = re.compile(r"^[+-]?inf(inity)?$", re.IGNORECASE | re.ASCII)
+_GO_INF = re.compile(r"^[+-]?inf(inity)?\Z", re.IGNORECASE | re.ASCII)
 
 # Go RE2 without flags: `$` matches only at the end of the text, while
 # Python's `$` also matches before a final '\n' -- so every end anchor

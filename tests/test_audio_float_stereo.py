@@ -14,13 +14,13 @@ import struct
 import numpy as np
 import pytest
 
-from jio_spark.audio.codecs import (CODED_CLASSES, DEFAULT_AMPLITUDE,
-                                    ENCODERS, Float32Coded, StereoCoded,
-                                    _one_period, _wav_bytes, decode_wav,
+from jio_spark.audio.codecs import (DEFAULT_AMPLITUDE, ENCODERS,
+                                    SAMPLE_CODECS, _one_period, _wav_bytes,
+                                    decode_coded, decode_wav,
                                     encode_stereo_wav, parse_wav,
                                     snr_db_vs_period, synth_wave,
                                     wrap_extensible)
-from jio_spark.audio.decode import validate_gates
+from jio_spark.audio.decode import KNOWN_CODECS, validate_gates
 
 PER_SAMPLE_CODECS = ["pcm_s16le", "ulaw", "alaw", "pcm_u8", "pcm_s24le",
                      "pcm_f32le"]
@@ -42,7 +42,7 @@ def test_f32_roundtrip_is_exact(pcm):
     assert (codec, sr) == ("pcm_f32le", 16000)
     assert np.array_equal(dec, pcm)
     coded, _, _ = parse_wav(raw)
-    assert isinstance(coded, Float32Coded)
+    assert coded.dtype == np.dtype("<f4") and coded.ndim == 1
     assert len(coded) == len(pcm)
     assert coded.nbytes == 4 * len(pcm)
     period = _one_period(440.0, 16000, DEFAULT_AMPLITUDE)
@@ -101,11 +101,11 @@ def test_stereo_dual_mono_matches_mono(pcm, codec):
     verdict equals the mono counterpart's."""
     sraw = encode_stereo_wav(pcm, 16000, codec)
     coded, sr, got = parse_wav(sraw)
-    assert got == codec and isinstance(coded, StereoCoded)
+    assert got == codec and coded.ndim == 2
     assert len(coded) == len(pcm)          # frames, not samples
     assert coded.nbytes == len(sraw) - 44  # payload only
     mono_dec, _, _ = decode_wav(ENCODERS[codec](pcm, 16000))
-    assert np.array_equal(coded.decode(), mono_dec)
+    assert np.array_equal(decode_coded(coded, got), mono_dec)
     dec, _, _ = decode_wav(sraw)
     assert np.array_equal(dec, mono_dec)
     period = _one_period(440.0, 16000, DEFAULT_AMPLITUDE)
@@ -119,9 +119,9 @@ def test_stereo_dual_mono_matches_mono(pcm, codec):
 def test_stereo_under_extensible(pcm, codec):
     raw = wrap_extensible(encode_stereo_wav(pcm, 16000, codec))
     coded, _, got = parse_wav(raw)
-    assert got == codec and isinstance(coded, StereoCoded)
+    assert got == codec and coded.ndim == 2
     mono_dec, _, _ = decode_wav(ENCODERS[codec](pcm, 16000))
-    assert np.array_equal(coded.decode(), mono_dec)
+    assert np.array_equal(decode_coded(coded, got), mono_dec)
 
 
 def test_true_stereo_downmix_formula():
@@ -277,12 +277,23 @@ def test_decode_check_over_mixed_layouts(spark):
         assert r["n_samples"] == len(sig), r   # frames, all layouts
 
 
-def test_parse_contract_classes_closed():
-    """Every coded view parse_wav can return is in CODED_CLASSES (the
-    fuzz contract's isinstance set) — adding a codec without extending
-    the set would break the SNR kernel's materialize branch silently."""
-    assert Float32Coded in CODED_CLASSES
-    assert StereoCoded in CODED_CLASSES
+def test_codec_table_closed():
+    """Every encodable codec, in its mono, stereo and EXTENSIBLE forms,
+    parses back to its own name with len() == frames, and the gate
+    mapping's closed key space is exactly the table's codecs plus ADPCM
+    — a codec added to one side without the other fails here."""
+    x = synth_wave(440.0, 60, 8000)
+    for codec, enc in ENCODERS.items():
+        mono = enc(x, 8000)
+        forms = [mono, encode_stereo_wav(x, 8000, codec)]
+        if codec != "adpcm_ima":   # 20-byte WAVEFORMATEX: not rewrapped
+            forms += [wrap_extensible(mono), wrap_extensible(forms[1])]
+        for raw in forms:
+            coded, sr, got = parse_wav(raw)
+            assert (got, sr, len(coded)) == (codec, 8000, len(x)), codec
+    table = {codec for codec, _, _ in SAMPLE_CODECS.values()}
+    assert KNOWN_CODECS == table | {"adpcm_ima"}
+    assert set(ENCODERS) == KNOWN_CODECS
 
 
 # -- IEEE float64 (round-5 late addition) -----------------------------------
@@ -291,10 +302,9 @@ def test_f64_roundtrip_extensible_and_stereo(pcm):
     """bits=64 under tag 3 (the rare scientific/DAW export width):
     /32768 float64 round-trips int16 exactly, unwraps from EXTENSIBLE,
     and carries stereo like every other per-sample codec."""
-    from jio_spark.audio.codecs import Float64Coded
     raw = ENCODERS["pcm_f64le"](pcm, 16000)
     coded, sr, codec = parse_wav(raw)
-    assert codec == "pcm_f64le" and isinstance(coded, Float64Coded)
+    assert codec == "pcm_f64le" and coded.dtype == np.dtype("<f8")
     assert len(coded) == len(pcm) and coded.nbytes == 8 * len(pcm)
     dec, _, _ = decode_wav(raw)
     assert np.array_equal(dec, pcm)

@@ -16,10 +16,10 @@ import struct
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from jio_spark.audio.codecs import (CODED_CLASSES, ENCODERS, parse_wav,
+from jio_spark.audio.codecs import (ENCODERS, AdpcmCoded, parse_wav,
                                     snr_db_vs_period, synth_wave)
 
-FUZZ = dict(deadline=None, max_examples=300)
+FUZZ = dict(deadline=None, max_examples=300, derandomize=True)
 CODECS = sorted(ENCODERS)
 
 
@@ -29,8 +29,8 @@ def _assert_parse_contract(raw):
         coded, sr, codec = parse_wav(bytes(raw))
     except (ValueError, TypeError):
         return None
-    assert (isinstance(coded, CODED_CLASSES)
-            or (isinstance(coded, np.ndarray) and coded.ndim == 1))
+    assert (isinstance(coded, AdpcmCoded)
+            or (isinstance(coded, np.ndarray) and coded.ndim in (1, 2)))
     assert codec in {"pcm_s16le", "pcm_u8", "pcm_s24le", "pcm_f32le",
                      "pcm_f64le", "ulaw", "alaw", "adpcm_ima"}
     assert isinstance(sr, int) and sr >= 0
@@ -52,7 +52,7 @@ def test_parse_wav_total_on_riff_prefixed_garbage(raw):
     _assert_parse_contract(b"RIFF" + raw[4:8] + b"WAVE" + raw[12:])
 
 
-@settings(deadline=None, max_examples=150)
+@settings(deadline=None, max_examples=150, derandomize=True)
 @given(
     codec=st.sampled_from(CODECS),
     sr=st.sampled_from([8000, 16000]),
@@ -90,7 +90,7 @@ def test_mutated_wav_parses_or_rejects_and_snr_is_total(codec, sr, dur, ops):
     assert isinstance(s, float)
 
 
-@settings(deadline=None, max_examples=120)
+@settings(deadline=None, max_examples=120, derandomize=True)
 @given(st.integers(0, 2**31 - 1), st.integers(1, 900),
        st.sampled_from([12, 64, 256, 512]))
 def test_adpcm_roundtrip_matches_scalar_oracle(seed, n, block_align):
@@ -117,7 +117,7 @@ def test_adpcm_roundtrip_matches_scalar_oracle(seed, n, block_align):
     assert codec == "adpcm_ima" and len(coded) == n
 
 
-@settings(deadline=None, max_examples=120)
+@settings(deadline=None, max_examples=120, derandomize=True)
 @given(st.integers(0, 2**31 - 1), st.integers(1, 2000))
 def test_pcm_u8_decode_is_exact_lut(seed, n):
     """pcm_u8 round trip: every decoded sample equals the excess-128
@@ -154,7 +154,7 @@ def _rebuild(chunks) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-@settings(deadline=None, max_examples=250)
+@settings(deadline=None, max_examples=250, derandomize=True)
 @given(
     codec=st.sampled_from(CODECS + ["stereo:pcm_s16le", "stereo:ulaw",
                                     "stereo:adpcm_ima",
@@ -215,7 +215,7 @@ def test_riff_walk_adversarial_containers(codec, inserts, swap,
         assert np.array_equal(got_pcm, want)
 
 
-@settings(deadline=None, max_examples=200)
+@settings(deadline=None, max_examples=200, derandomize=True)
 @given(data=st.data())
 def test_riff_walk_random_chunk_soup(data):
     """Fully random chunk soup behind a valid RIFF/WAVE magic: the walk
@@ -235,7 +235,7 @@ def test_riff_walk_random_chunk_soup(data):
     _assert_parse_contract(raw)
 
 
-@settings(deadline=None, max_examples=100)
+@settings(deadline=None, max_examples=100, derandomize=True)
 @given(st.integers(0, 2**31 - 1), st.integers(1, 700),
        st.sampled_from([16, 64, 256, 512]))
 def test_stereo_adpcm_roundtrip_matches_scalar_oracle(seed, n, ba):

@@ -9,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 
 from jio_spark.operators.drift import ks_from_quantiles, psi_from_histograms
 
-FUZZ = dict(deadline=None, max_examples=200)
+FUZZ = dict(deadline=None, max_examples=200, derandomize=True)
 
 finite = st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False)
 

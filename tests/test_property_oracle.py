@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 from jio_spark import K, validate
 from jio_oracle import jio_validate
 
-SETTINGS = dict(max_examples=6, deadline=None,
+SETTINGS = dict(max_examples=6, deadline=None, derandomize=True,
                 suppress_health_check=[HealthCheck.too_slow,
                                        HealthCheck.function_scoped_fixture])
 
@@ -534,7 +534,7 @@ def _eq_val(got, want):
 _FUZZ_EXAMPLES = int(os.environ.get("JIO_FUZZ_EXAMPLES", "25"))
 
 
-@settings(max_examples=_FUZZ_EXAMPLES, deadline=None,
+@settings(max_examples=_FUZZ_EXAMPLES, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture,
                                  HealthCheck.data_too_large])
@@ -664,7 +664,7 @@ def _items_to_row(i, d):
     return (i, d["a"], arr)
 
 
-@settings(max_examples=_FUZZ_EXAMPLES, deadline=None,
+@settings(max_examples=_FUZZ_EXAMPLES, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture,
                                  HealthCheck.data_too_large])

@@ -44,3 +44,30 @@ def test_regex_line_terminators_match_go(spark, pattern):
         assert got[i] is want, f"engine: {pattern!r} on {v!r}"
         err, _ = jio_validate(K.string().regex(pattern), v)
         assert (err is None) is want, f"oracle: {pattern!r} on {v!r}"
+
+
+def _parse_string_cases():
+    """(value, Go's strconv.ParseFloat accepts it)."""
+    for t in TERMINATORS:
+        for lit in ("1", "-2.5e3", "inf", "-Infinity"):
+            yield lit + t, False
+            yield t + lit, False
+    for lit in ("1", "-2.5e3", "inf", "-Infinity"):
+        yield lit, True
+
+
+def test_parse_string_rejects_line_terminators(spark):
+    """A number or inf followed by a line terminator is not a Go float
+    literal: the engine's patterns must end at the end of the text, and
+    so must the oracle's."""
+    cases = list(_parse_string_cases())
+    df = spark.createDataFrame(
+        [(i, v) for i, (v, _) in enumerate(cases)], "id int, v string")
+    schema = K.number().parse_string()
+    res = validate(df, K.object({"v": schema.clone()}), id_cols=["id"])
+    got = {r["id"]: r["p"] for r in res.prepared.select(
+        "id", res.compiled.row_pass.alias("p")).collect()}
+    for i, (v, want) in enumerate(cases):
+        assert got[i] is want, f"engine: {v!r}"
+        err, _ = jio_validate(schema.clone(), v)
+        assert (err is None) is want, f"oracle: {v!r}"

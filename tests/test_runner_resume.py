@@ -213,6 +213,47 @@ def test_partition_discovery_is_metadata_only(spark, clips_path):
     assert m["partitions"] == len(vals)
 
 
+def test_uniqueness_step_counts_from_its_write(spark, clips_path, tmp_path,
+                                               monkeypatch):
+    """With a sink, the uniqueness step takes its violation count from
+    the write itself: the step runs exactly the Spark jobs of one write
+    of its frame, not a second whole-table groupBy for a count()."""
+    import jio_spark.runner as runner
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return set(tracker.getJobIdsForGroup(None) or [])
+
+    seen = {}
+    orig_check, orig_mark = runner.uniqueness_check, Manifest.mark
+
+    def check(*a, **k):
+        seen["call"], seen["start"] = (a, k), jobs()
+        return orig_check(*a, **k)
+
+    def mark(self, key, *a, **k):
+        if key == "_global_uniqueness":
+            seen["end"] = jobs()
+        return orig_mark(self, key, *a, **k)
+
+    monkeypatch.setattr(runner, "uniqueness_check", check)
+    monkeypatch.setattr(Manifest, "mark", mark)
+    out = str(tmp_path / "out")
+    cfg = ClipsJobConfig(group_size=16, audio_check=False, drift=False)
+    m = ClipsValidationJob(spark, cfg).run(spark.read.parquet(clips_path),
+                                           output_root=out)
+    step_jobs = len(seen["end"] - seen["start"])
+
+    a, k = seen["call"]
+    before = jobs()
+    orig_check(*a, **dict(k, certificate={})).write.parquet(
+        str(tmp_path / "alone"))
+    assert step_jobs == len(jobs() - before)
+    written = spark.read.parquet(
+        os.path.join(out, "uniqueness_violations")).count()
+    assert m["uniqueness_violations"] == written > 0
+
+
 def test_merge_observed_stats_math():
     from jio_spark.runner import _merge_observed_stats
     g1 = {"rows": 10, "v__nulls": 2, "v__min": 1.0, "v__max": 5.0,
