@@ -223,7 +223,6 @@ def main():
         spark,
         ClipsJobConfig(group_size=16, drift=True,
                        decode_source="files",
-                       decode_partitions=CPUS * 3,
                        group_concurrency=4),
         codec_dim=default_codec_dim(spark))
 
@@ -254,7 +253,6 @@ def main():
         spark,
         ClipsJobConfig(group_size=16, drift=True,
                        decode_source="files",
-                       decode_partitions=CPUS * 3,
                        group_concurrency=4,
                        uniqueness_layout="clustered",
                        # the clustered table is range-WRITTEN: every

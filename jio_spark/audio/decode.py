@@ -283,7 +283,6 @@ def _decode_batches(check_reference: bool, snr_threshold,
 def decode_check(df: DataFrame, check_reference: bool = True,
                  snr_threshold=30.0, dur_tolerance_ms: int = 2,
                  salt: bool = True,
-                 num_partitions: Optional[int] = None,
                  passthrough: Optional[Sequence[str]] = None) -> DataFrame:
     """Decode every clip and verify the declared metadata against the
     decoded payload; with ``check_reference`` also re-synthesize the
@@ -316,12 +315,7 @@ def decode_check(df: DataFrame, check_reference: bool = True,
              if c in df.columns and c != "clip_id"]
     slim = df.select(*cols, *[c for c in extra if c not in cols])
     if salt:
-        slim = salted_repartition(slim, num_partitions=num_partitions)
-    elif num_partitions:
-        # the caller's explicit parallelism knob must not silently drop
-        # with the salt — same loud-knob rule as salted_repartition's
-        # mode check
-        slim = slim.repartition(num_partitions)
+        slim = salted_repartition(slim)
     schema = DECODE_RESULT_SCHEMA
     for c in extra:
         schema += f", {c} {df.schema[c].dataType.simpleString()}"

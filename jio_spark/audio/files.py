@@ -223,6 +223,15 @@ def _tagged_files(root: str, partition_filter: Optional[Sequence],
     return tagged, any_hive
 
 
+def is_hive_layout(root: str, partition_col: str = "bucket_id") -> bool:
+    """Does any parquet file under ``root`` sit in a ``<col>=<value>``
+    directory — i.e. can the decode and the footer audit prune it per
+    partition group? Answered by the same listing the decode uses, so a
+    ``file://`` / ``hdfs://`` / ``s3://`` root counts like a plain path.
+    Raises ``FileNotFoundError`` when ``root`` holds no parquet file."""
+    return _tagged_files(root, None, partition_col)[1]
+
+
 def footer_row_counts(root: str,
                       partition_filter: Optional[Sequence] = None,
                       partition_col: str = "bucket_id",

@@ -162,15 +162,6 @@ class ValidationResult:
             data, "rule_id string, rule_path string, rule_name string, "
                   "expected string, evaluated long, passed long, failed long")
 
-    def row_counts(self) -> Dict[str, int]:
-        row = self._prepared.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(self.compiled.row_pass.cast("long")).alias("passed"),
-        ).collect()[0]
-        return {"rows": int(row["rows"]),
-                "passed": int(row["passed"] or 0),
-                "failed": int(row["rows"]) - int(row["passed"] or 0)}
-
 
 def validate(df: DataFrame,
              schema: Union[ObjectSchema, Dict[str, BaseSchema]],

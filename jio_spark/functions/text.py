@@ -154,10 +154,3 @@ def doc_fingerprint(col: Column) -> Column:
     Unicode spaces such as NBSP, Spark's never does)."""
     from ..functions.casing import go_lower
     return F.md5(F.trim(F.regexp_replace(go_lower(col), r"\s+", " ")))
-
-
-def rolling_fingerprints(col: Column, n: int = 5) -> Column:
-    """Winnowing-style shingle fingerprints: xxhash64 of each word n-gram;
-    the minimum is a 1-permutation MinHash usable as a cheap near-dup
-    bucket (Spark-only — no xxhash64 in the oracle)."""
-    return F.transform(word_ngrams(col, n), lambda s: F.xxhash64(s))

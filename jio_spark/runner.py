@@ -26,14 +26,14 @@ import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler import CompiledRuleSet, compile_ruleset
 from .dsl import K, ObjectSchema
 from .engine import rule_count_exprs
 from .audio.decode import decode_check, decode_violations
-from .audio.files import decode_check_files
+from .audio.files import decode_check_files, is_hive_layout
 from .operators.drift import HistSpec, drift_check, snapshot
 from .operators.referential import referential_check
 from .operators.schema import (raise_schema_violations,
@@ -174,16 +174,6 @@ def _group_key(group: Sequence) -> str:
     return key
 
 
-def _has_hive_dirs(table_root: str, partition_col: str) -> bool:
-    """Does the table carry <col>=<value> hive directories (dir-prunable
-    by decode_check_files) — distinct from whether the METADATA listing
-    succeeded."""
-    import glob as _glob
-    import os as _os
-    return bool(_glob.glob(_os.path.join(table_root,
-                                         f"{partition_col}=*")))
-
-
 def default_clip_rules() -> ObjectSchema:
     """The jio-style rule set for the north-star clips shape
     (BASELINE.json input_hint)."""
@@ -211,13 +201,29 @@ DRIFT_SPECS = {"dur_ms": HistSpec(200.0, 30000.0, 32),
                "sr_hz": HistSpec(0.0, 48000.0, 48)}
 
 
+#: allowed values of every mode knob: a typo must fail at construction,
+#: not silently take another branch or raise after the group scans
+_CHOICES = {
+    "uniqueness_layout": ("any", "clustered"),
+    "uniqueness_on_unclustered": ("warn", "error", "trust", "fallback"),
+    "table_format": ("parquet", "iceberg"),
+    "decode_source": ("dataframe", "files"),
+    "decode_on_corrupt": ("fail", "violation"),
+    "schema_contract_mode": ("fail", "warn"),
+    "violations_sink": ("full", "exemplars"),
+}
+
+
 @dataclass
 class ClipsJobConfig:
+    """Job configuration. Values are checked at construction: a mode
+    knob outside its allowed values (``_CHOICES``) or
+    ``violations_exemplars < 1`` in exemplars mode raises ``ValueError``
+    naming the field."""
     rules: ObjectSchema = field(default_factory=default_clip_rules)
     partition_col: str = "bucket_id"
     group_size: int = 8               # bucket partitions per resume group
     audio_check: bool = True
-    audio_salt: bool = True           # salted repartition before decode
     check_reference: bool = True      # SNR + transcript vs synth oracle
     #: scalar dB gate, or a per-codec mapping like
     #: {"adpcm_ima": 26.0, "default": 30.0} (audio/decode.threshold_for)
@@ -270,15 +276,7 @@ class ClipsJobConfig:
     violations_sink: str = "full"
     #: exemplar rows kept per (partition, rule_path, rule_name) group
     violations_exemplars: int = 20
-    #: compare each group's observed scan row count against the parquet
-    #: footer totals (metadata-only, same dir pruning as the decode) —
-    #: catches `ignoreCorruptFiles` silently dropping files and
-    #: mid-run table mutation. Files-mode + parquet + table_root only.
-    row_integrity: bool = True
     drift: bool = True
-    ks_threshold: float = 0.1
-    psi_threshold: float = 0.25
-    decode_partitions: Optional[int] = None
     #: submit this many partition groups as concurrent Spark jobs — the
     #: tail tasks of one group overlap the next group's scan instead of
     #: idling the cluster at each group barrier (resume granularity is
@@ -287,7 +285,6 @@ class ClipsJobConfig:
     #: per-column stats riding the rule scan via ``df.observe`` (north
     #: star: "one pass computes per-column stats") — zero extra source
     #: reads; merged across groups driver-side into metrics
-    observe_stats: bool = True
     stat_cols: Sequence[str] = ("sr_hz", "dur_ms", "codec", "transcript")
     #: per-RULE evaluated/passed/failed counts riding the SAME observe
     #: (2 long sums per rule — map-side combinable, no extra scan):
@@ -295,11 +292,23 @@ class ClipsJobConfig:
     #: re-reading the written violations. jio analog: the per-rule
     #: verdicts its test suite asserts, aggregated. Covers the compiled
     #: rule chain; referential/decode/uniqueness counts live in their
-    #: own violation streams. Requires ``observe_stats``. OFF by
+    #: own violation streams. OFF by
     #: default: a 5-rep interleaved A/B at sf0.1 measured the ~2×19
     #: extra observe aggregates at +0.6 s (+9%) on the full job
     #: (7.80 vs 7.17 s medians) — worth paying only when asked for.
     observe_rule_counts: bool = False
+
+    def __post_init__(self):
+        for name, allowed in _CHOICES.items():
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(
+                    f"{name} must be one of {', '.join(map(repr, allowed))}"
+                    f", got {value!r}")
+        if self.violations_sink == "exemplars" \
+                and self.violations_exemplars < 1:
+            raise ValueError("violations_exemplars must be >= 1, got "
+                             f"{self.violations_exemplars!r}")
 
 
 class ClipsValidationJob:
@@ -315,6 +324,14 @@ class ClipsValidationJob:
         self.cfg = config or ClipsJobConfig()
         self.codec_dim = codec_dim
         self.baseline = baseline_snapshot
+
+    def _files_decode(self, table_root: Optional[str]) -> bool:
+        """Does the payload-local 'files' decode apply? It reads parquet
+        row groups straight off the filesystem — an Iceberg table_root
+        is a catalog name, not a listable directory, so it stays on the
+        Arrow path."""
+        return bool(table_root) and self.cfg.decode_source == "files" \
+            and self.cfg.table_format == "parquet"
 
     # -- one partition group ------------------------------------------------
 
@@ -386,11 +403,7 @@ class ClipsValidationJob:
                          self.cfg.partition_col))
 
         if self.cfg.audio_check:
-            # payload-local decode reads parquet row groups straight off
-            # the filesystem — an Iceberg table_root is a catalog name,
-            # not a listable directory, so it stays on the Arrow path
-            if self.cfg.decode_source == "files" and table_root \
-                    and self.cfg.table_format == "parquet":
+            if self._files_decode(table_root):
                 dec = decode_check_files(
                     self.spark, table_root,
                     check_reference=self.cfg.check_reference,
@@ -410,8 +423,6 @@ class ClipsValidationJob:
                 dec = decode_check(
                     df, check_reference=self.cfg.check_reference,
                     snr_threshold=self.cfg.snr_threshold,
-                    salt=self.cfg.audio_salt,
-                    num_partitions=self.cfg.decode_partitions,
                     passthrough=extra_pass)
             viols = viols.unionByName(
                 decode_violations(dec, extra_cols=[self.cfg.partition_col],
@@ -436,33 +447,6 @@ class ClipsValidationJob:
         table_root so discovery derives from df."""
         cfg = self.cfg
         t0 = time.time()
-        # misconfiguration must fail loudly: a typo'd mode silently
-        # downgrading 'fail' to 'warn' would defeat the very guarantee
-        # the knob exists for
-        if cfg.schema_contract_mode not in ("fail", "warn"):
-            raise ValueError("schema_contract_mode must be 'fail' or "
-                             f"'warn', got {cfg.schema_contract_mode!r}")
-        if cfg.decode_on_corrupt not in ("fail", "violation"):
-            raise ValueError("decode_on_corrupt must be 'fail' or "
-                             f"'violation', got {cfg.decode_on_corrupt!r}")
-        if cfg.uniqueness_on_unclustered not in ("warn", "error", "trust",
-                                                 "fallback"):
-            raise ValueError(
-                "uniqueness_on_unclustered must be 'warn', 'error', "
-                "'trust' or 'fallback', got "
-                f"{cfg.uniqueness_on_unclustered!r}")
-        if cfg.violations_sink not in ("full", "exemplars"):
-            raise ValueError("violations_sink must be 'full' or "
-                             f"'exemplars', got {cfg.violations_sink!r}")
-        if cfg.violations_sink == "exemplars" \
-                and cfg.violations_exemplars < 1:
-            raise ValueError("violations_exemplars must be >= 1, got "
-                             f"{cfg.violations_exemplars!r}")
-        if cfg.observe_rule_counts and not cfg.observe_stats:
-            raise ValueError(
-                "observe_rule_counts requires observe_stats: the "
-                "tallies ride the stats observe — enabling one without "
-                "the other would silently produce no rule_counts")
         if cfg.drift and self.baseline is not None:
             # preflight the baseline's bin specs against the current
             # DRIFT_SPECS NOW (both sides are tiny): a stale baseline
@@ -526,7 +510,8 @@ class ClipsValidationJob:
             **({"violations_exemplars": cfg.violations_exemplars}
                if cfg.violations_sink == "exemplars" else {}),
         }
-        resumed_from = None
+        # run.json lineage: the semantics plus the run this one resumes
+        lineage = dict(semantics)
         if sink:
             prev = sink.read_run_metadata()
             if resume and prev:
@@ -546,12 +531,9 @@ class ClipsValidationJob:
                         f"configurations: {diffs} — rerun without "
                         "resume (full rewrite) or restore the original "
                         "config")
-                resumed_from = prev.get("run_id")
-            sink.write_run_metadata({
-                **semantics,
-                **({"resumed_from": resumed_from} if resumed_from
-                   else {}),
-            })
+                if prev.get("run_id"):
+                    lineage["resumed_from"] = prev["run_id"]
+            sink.write_run_metadata(lineage)
 
         # partition discovery is metadata-only when the table location is
         # known (filesystem listing of hive dirs / Iceberg .partitions);
@@ -583,10 +565,13 @@ class ClipsValidationJob:
         done = manifest.completed_partitions() if (manifest and resume) \
             else set()
         todo = [p for p in parts if p not in done]
-        if table_root and not hive_listed and cfg.audio_check \
-                and cfg.decode_source == "files" \
-                and cfg.table_format == "parquet" \
-                and not _has_hive_dirs(table_root, cfg.partition_col):
+        # can the files decode and its footer audit dir-prune per group?
+        # Asked of the decode's own listing (plain paths and URIs alike),
+        # once per run; a listed hive partition set already answers it
+        files_decode = self._files_decode(table_root)
+        hive = files_decode and (hive_listed or is_hive_layout(
+            table_root, cfg.partition_col))
+        if files_decode and cfg.audio_check and not hive:
             # non-hive layout (e.g. a clip_id-sorted clustered table: the
             # partition value is a DATA column, no directories to prune):
             # run ONE full-table group. Splitting by column values would
@@ -611,20 +596,13 @@ class ClipsValidationJob:
         # partition (a resumed subset has no whole-table truth either).
         # iceberg: the .partitions read is group-independent — one
         # manifest read per run, indexed per group.
-        parquet_group_audit = False
-        parquet_table_audit = False
+        parquet_table_audit = (files_decode and not hive
+                               and len(todo) == len(parts))
         iceberg_counts = None
-        if cfg.row_integrity and table_root:
-            if (cfg.table_format == "parquet"
-                    and cfg.decode_source == "files"):
-                if _has_hive_dirs(table_root, cfg.partition_col):
-                    parquet_group_audit = True
-                elif len(todo) == len(parts):
-                    parquet_table_audit = True
-            elif cfg.table_format == "iceberg":
-                from .sources.tables import iceberg_partition_row_counts
-                iceberg_counts = iceberg_partition_row_counts(
-                    self.spark, table_root, cfg.partition_col)
+        if table_root and cfg.table_format == "iceberg":
+            from .sources.tables import iceberg_partition_row_counts
+            iceberg_counts = iceberg_partition_row_counts(
+                self.spark, table_root, cfg.partition_col)
 
         total_viols = 0
         rows_processed = 0
@@ -638,10 +616,7 @@ class ClipsValidationJob:
         def run_group(group):
             g_t0 = time.time()
             gdf = df.where(_part_filter(cfg.partition_col, group))
-            obs = None
-            if cfg.observe_stats:
-                from pyspark.sql import Observation
-                obs = Observation(f"stats_{_group_key(group)}")
+            obs = Observation(f"stats_{_group_key(group)}")
             # one footer read per file per group: the decode's split
             # listing and the row-integrity audit below share it
             fcache: Dict = {}
@@ -662,15 +637,10 @@ class ClipsValidationJob:
                 g_viols = None  # counted lazily from written data if needed
             else:
                 g_viols = viols.count()
-            if obs is not None:
-                g_stats = obs.get  # available once the action above ran
-                g_rows = int(g_stats["rows"])
-            else:
-                g_stats = None
-                agg = gdf.agg(F.count(F.lit(1)).alias("rows")).collect()[0]
-                g_rows = int(agg["rows"])
+            g_stats = obs.get  # available once the action above ran
+            g_rows = int(g_stats["rows"])
             g_integrity = None
-            if parquet_group_audit:
+            if hive:
                 # scan-vs-footer audit: metadata-only, prunes the same
                 # directories the decode does. Catches the JVM scan
                 # silently dropping corrupt files (ignoreCorruptFiles)
@@ -698,8 +668,18 @@ class ClipsValidationJob:
                 if g_integrity is not None:
                     details["row_integrity"] = g_integrity
                 manifest.mark(f"group_{_group_key(group)}", group, details)
-            return (group, g_rows, g_viols, g_stats, g_integrity,
+            return (g_rows, g_viols, g_stats, g_integrity,
                     time.time() - g_t0)
+
+        def recorded(step_key: str) -> Optional[Dict]:
+            """A global step's recorded results when a resumed run finds
+            it complete, else None: the step is skipped, but its RESULTS
+            must survive into this run's metrics/run.json — a 0 would
+            contradict the written outputs."""
+            if not (manifest and resume):
+                return None
+            rec = manifest.completed().get(step_key)
+            return None if rec is None else rec.get("metrics", {})
 
         # global step 1: uniqueness (duplicate ids cross partition groups)
         uniq_cert: Dict = {}
@@ -707,12 +687,8 @@ class ClipsValidationJob:
         def run_uniqueness():
             u_t0 = time.time()
             uniq_key = "_global_uniqueness"
-            if manifest and resume and uniq_key in manifest.completed():
-                # the step is skipped but its RESULTS must survive into
-                # this run's metrics/run.json — returning 0 here would
-                # make the final wholesale run.json rewrite claim zero
-                # duplicates while the written violations say otherwise
-                rec = manifest.completed()[uniq_key].get("metrics", {})
+            rec = recorded(uniq_key)
+            if rec is not None:
                 uniq_cert.update(rec.get("certificate") or {})
                 return int(rec.get("violations", 0)), time.time() - u_t0
             uv = uniqueness_check(
@@ -722,7 +698,6 @@ class ClipsValidationJob:
             if sink:
                 # the write's own observed row count: a count() after it
                 # would re-plan the whole-table groupBy
-                from pyspark.sql import Observation
                 seen = Observation()
                 uv = uv.observe(seen, F.count(F.lit(1)).alias("rows"))
                 # overwrite, not append: a crash between this write and
@@ -746,14 +721,8 @@ class ClipsValidationJob:
             if not cfg.drift:
                 return [], time.time() - d_t0
             drift_key = "_global_drift"
-            if manifest and resume and drift_key in manifest.completed():
-                # same contract as uniqueness: the step is skipped on
-                # resume (its snapshot/drift outputs already landed —
-                # marked LAST, below) but its RESULT rows must survive
-                # into this run's metrics. Without this record a resumed
-                # run repeated BOTH whole-table snapshot scans — the
-                # exact cost the checkpoint machinery exists to avoid.
-                rec = manifest.completed()[drift_key].get("metrics", {})
+            rec = recorded(drift_key)
+            if rec is not None:
                 return list(rec.get("drift") or []), time.time() - d_t0
             snap = snapshot(df, DRIFT_SPECS)
             if sink:
@@ -768,9 +737,7 @@ class ClipsValidationJob:
                     # record the (empty) result so resume skips it too
                     manifest.mark(drift_key, [], {"drift": []})
                 return [], time.time() - d_t0
-            dc = drift_check(snap, self.baseline,
-                             ks_threshold=cfg.ks_threshold,
-                             psi_threshold=cfg.psi_threshold)
+            dc = drift_check(snap, self.baseline)
             rows = [r.asDict() for r in dc.collect()]
             if sink:
                 with sink_lock:
@@ -802,17 +769,16 @@ class ClipsValidationJob:
         group_stats = []
         integrity = []
         group_secs = []
-        for group, g_rows, g_viols, g_stats, g_integrity, g_sec in results:
+        for g_rows, g_viols, g_stats, g_integrity, g_sec in results:
             if g_viols is not None:
                 total_viols += g_viols
             rows_processed += g_rows
-            if g_stats is not None:
-                group_stats.append(g_stats)
+            group_stats.append(g_stats)
             if g_integrity is not None:
                 integrity.append(g_integrity)
             group_secs.append(g_sec)
         rule_counts = None
-        if cfg.observe_stats and cfg.observe_rule_counts and group_stats:
+        if cfg.observe_rule_counts and group_stats:
             # metadata from the run's one compile, whose entries every
             # group's tallies were built from; counts are plain sums
             # across groups
@@ -883,9 +849,7 @@ class ClipsValidationJob:
             # keep the run-start lineage keys — the final write replaces
             # run.json wholesale
             sink.write_run_metadata({
-                **semantics,
-                **({"resumed_from": resumed_from} if resumed_from
-                   else {}),
+                **lineage,
                 "metrics": {k: v for k, v in metrics.items()
                             if k != "drift"},
             })

@@ -175,11 +175,8 @@ def exemplar_order_key(viols: DataFrame,
     ``to_json`` because a window ORDER BY can't sort all of them
     directly.
 
-    ONE derivation, shared by :func:`exemplar_cap` (both its salt hash
-    and both window orderings) and tools/exemplar_skew_bench.py (the
-    max-subgroup-rows bound it records) — the bench measures the
-    guard's ACTUAL phase-1 groups, not an approximation that drifts
-    when this key changes."""
+    ONE derivation, shared by :func:`exemplar_cap`'s salt hash and both
+    of its window orderings."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
     keys = [partition_col, "rule_path", "rule_name"]

@@ -301,15 +301,11 @@ def test_g711_bits_must_be_8():
 def test_decode_passthrough_overlap_and_unsalted_partitions(spark):
     """A passthrough naming a base decode column must not select it
     twice (2-D pdf['codec'] + duplicate schema field = mid-job Arrow
-    failure), and salt=False must still honor the caller's explicit
-    num_partitions knob instead of silently dropping it."""
+    failure)."""
     df = clips_frame(spark, 24, clean=True, partitions=2)
     res = decode_check(df, check_reference=False, passthrough=["codec"])
     assert res.columns.count("codec") == 1
     assert res.count() == 24
-    res2 = decode_check(df, check_reference=False, salt=False,
-                        num_partitions=5)
-    assert res2.rdd.getNumPartitions() == 5
 
 
 def test_decode_violations_expected_names_real_threshold(spark):

@@ -262,16 +262,16 @@ def test_resume_refuses_sink_mode_mix(spark, clips_path, tmp_path):
 
 def test_bad_sink_mode_fails_loudly(spark, clips_path):
     df = spark.read.parquet(clips_path)
-    job = ClipsValidationJob(
-        spark, ClipsJobConfig(violations_sink="exemplar",  # typo
-                              audio_check=False, drift=False))
     with pytest.raises(ValueError, match="violations_sink"):
+        job = ClipsValidationJob(
+            spark, ClipsJobConfig(violations_sink="exemplar",  # typo
+                                  audio_check=False, drift=False))
         job.run(df)
-    job = ClipsValidationJob(
-        spark, ClipsJobConfig(violations_sink="exemplars",
-                              violations_exemplars=0,
-                              audio_check=False, drift=False))
     with pytest.raises(ValueError, match="violations_exemplars"):
+        job = ClipsValidationJob(
+            spark, ClipsJobConfig(violations_sink="exemplars",
+                                  violations_exemplars=0,
+                                  audio_check=False, drift=False))
         job.run(df)
 
 

@@ -13,8 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from jio_spark.audio.files import (decode_check_files, footer_row_counts,
-                                   list_row_group_splits)
+                                   is_hive_layout, list_row_group_splits)
 from jio_spark.audio.synth import write_clips
+from jio_spark.runner import ClipsJobConfig, ClipsValidationJob
+from jio_spark.sinks.writers import Manifest
 
 
 @pytest.fixture(scope="module")
@@ -122,3 +124,31 @@ def test_uri_listing_keeps_authority(monkeypatch):
     stub.fail = pa.ArrowInvalid("bad listing")
     with pytest.raises(FileNotFoundError, match="cannot list"):
         files._tagged_files("hdfs://nn:8020/t", None, "bucket_id")
+
+
+def test_uri_root_resume_audits_rerun_group(spark, table, tmp_path):
+    """A files-mode run on a ``file://`` root audits its rows like the
+    same table by plain path. Resumed after one group's mark is removed,
+    it reports ``row_integrity`` for the re-run group: the table is a
+    hive layout whichever way it is named, so the footer audit prunes
+    per group (a resumed subset has no whole-table truth)."""
+    assert is_hive_layout(table) and is_hive_layout(f"file://{table}")
+
+    def resumed(root, out):
+        job = ClipsValidationJob(spark, ClipsJobConfig(
+            group_size=8, decode_source="files", drift=False))
+        df = spark.read.parquet(root)
+        job.run(df, output_root=out, table_root=root)
+        manifest = Manifest(out)
+        first = sorted(n for n in os.listdir(manifest.dir)
+                       if n.startswith("group_"))[0]
+        os.remove(os.path.join(manifest.dir, first))
+        return job.run(df, output_root=out, resume=True, table_root=root)
+
+    plain = resumed(table, str(tmp_path / "plain"))
+    uri = resumed(f"file://{table}", str(tmp_path / "uri"))
+    assert plain["groups_run"] == uri["groups_run"] == 1
+    assert plain["row_integrity"]["ok"]
+    assert plain["row_integrity"]["rows_expected"] == plain["rows"] > 0
+    assert uri["row_integrity"] == plain["row_integrity"]
+    assert uri["rows"] == plain["rows"]

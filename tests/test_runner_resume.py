@@ -468,7 +468,7 @@ def test_files_decode_random_partition_layout_fuzz(spark, tmp_path):
     counter = [0]
 
     n_examples = int(os.environ.get("JIO_LAYOUT_FUZZ_EXAMPLES", "10"))
-    @settings(max_examples=n_examples, deadline=None,
+    @settings(max_examples=n_examples, deadline=None, derandomize=True,
               suppress_health_check=[HealthCheck.too_slow,
                                      HealthCheck.function_scoped_fixture,
                                      HealthCheck.data_too_large])
@@ -562,7 +562,7 @@ def test_resume_random_killpoint_fuzz(spark, clips_path, tmp_path):
     counter = [0]
     n_examples = int(os.environ.get("JIO_KILL_FUZZ_EXAMPLES", "8"))
 
-    @settings(max_examples=n_examples, deadline=None,
+    @settings(max_examples=n_examples, deadline=None, derandomize=True,
               suppress_health_check=[HealthCheck.too_slow,
                                      HealthCheck.function_scoped_fixture,
                                      HealthCheck.data_too_large])

@@ -82,28 +82,31 @@ def test_mode_typos_fail_loudly(spark):
     'fail' to 'warn' (review finding); decode_on_corrupt likewise."""
     df = clips_frame(spark, 5, clean=True, partitions=1)
     dim = default_codec_dim(spark)
-    bad_mode = ClipsValidationJob(
-        spark, ClipsJobConfig(schema_contract=CLIPS_SCHEMA_CONTRACT,
-                              schema_contract_mode="FAIL",
-                              drift=False, audio_check=False),
-        codec_dim=dim)
     with pytest.raises(ValueError, match="schema_contract_mode"):
+        bad_mode = ClipsValidationJob(
+            spark, ClipsJobConfig(schema_contract=CLIPS_SCHEMA_CONTRACT,
+                                  schema_contract_mode="FAIL",
+                                  drift=False, audio_check=False),
+            codec_dim=dim)
         bad_mode.run(df)
-    bad_corrupt = ClipsValidationJob(
-        spark, ClipsJobConfig(decode_on_corrupt="violations",
-                              drift=False, audio_check=False),
-        codec_dim=dim)
     with pytest.raises(ValueError, match="decode_on_corrupt"):
+        bad_corrupt = ClipsValidationJob(
+            spark, ClipsJobConfig(decode_on_corrupt="violations",
+                                  drift=False, audio_check=False),
+            codec_dim=dim)
         bad_corrupt.run(df)
-    # rule counts ride the stats observe: asking for one without the
-    # carrier must refuse, not silently omit rule_counts from metrics
-    bad_observe = ClipsValidationJob(
-        spark, ClipsJobConfig(observe_stats=False,
-                              observe_rule_counts=True,
-                              drift=False, audio_check=False),
-        codec_dim=dim)
-    with pytest.raises(ValueError, match="observe_rule_counts"):
-        bad_observe.run(df)
+
+
+@pytest.mark.parametrize("name, typo", [("decode_source", "File"),
+                                        ("table_format", "Parquet"),
+                                        ("uniqueness_layout", "Clustered")])
+def test_config_typo_fails_at_construction(name, typo):
+    """A typo'd mode refuses when the config is built: 'File' or
+    'Parquet' must not silently run the Arrow decode and skip the row
+    audit, and a bad uniqueness layout must not raise only after every
+    group has been scanned and committed."""
+    with pytest.raises(ValueError, match=name):
+        ClipsJobConfig(**{name: typo})
 
 
 def test_contract_satisfied_records_empty_list(spark):
