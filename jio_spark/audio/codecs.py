@@ -28,7 +28,8 @@ frames either way — and one elementwise transform covers both channels
 (it commutes with interleaving); stereo IMA ADPCM (per-channel 4-byte
 block headers + data interleaved in 4-byte groups) de-interleaves each
 block into two virtual MONO sub-blocks so one run of the mono
-recurrence decodes both channels (:func:`adpcm_stereo_decode_stacked`).
+recurrence decodes both channels (:func:`adpcm_ima_decode_stacked`,
+``channels=2``).
 Decode policy for both is downmix-to-mono ``(L+R+1)>>1`` before the SNR
 check — the reference signal is mono, and the downmix is exact on
 dual-mono content. Per-channel SNR is deliberately not computed
@@ -209,31 +210,9 @@ def adpcm_stereo_decode_channels(payload: np.ndarray,
 
 
 def adpcm_stereo_decode_stacked(payloads, block_align: int):
-    """Stereo analog of :func:`adpcm_ima_decode_stacked`: every block of
-    every stereo clip in the batch decodes in ONE mono-recurrence run
-    (left+right channels stacked as virtual mono blocks), then each
-    clip's channels downmix ``(L+R+1)>>1`` to the comparison-domain
-    mono signal. Returns one int16 array of FRAMES per payload."""
-    for p in payloads:
-        if p.nbytes % block_align:
-            raise ValueError(
-                f"adpcm payload of {p.nbytes} bytes is not a multiple "
-                f"of block_align {block_align}")
-    counts = [p.nbytes // block_align for p in payloads]
-    if not counts or sum(counts) == 0:
-        return [np.empty(0, dtype=np.int16) for _ in payloads]
-    blocks = np.concatenate(
-        [np.ascontiguousarray(p).reshape(-1) for p in payloads]
-    ).reshape(-1, block_align)
-    nb = blocks.shape[0]
-    dec = _adpcm_decode_blocks(_stereo_virtual_mono_blocks(blocks))
-    left, right = dec[:nb].astype(np.int32), dec[nb:].astype(np.int32)
-    mixed = ((left + right + 1) >> 1).astype(np.int16)
-    out, off = [], 0
-    for c in counts:
-        out.append(mixed[off:off + c].reshape(-1))
-        off += c
-    return out
+    """Stereo form of :func:`adpcm_ima_decode_stacked` (``channels=2``):
+    one int16 array of downmixed FRAMES per payload."""
+    return adpcm_ima_decode_stacked(payloads, block_align, channels=2)
 
 
 def adpcm_ima_encode_stereo(left: np.ndarray, right: np.ndarray,
@@ -298,7 +277,8 @@ def _adpcm_decode_blocks(blocks: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(out_t.T)
 
 
-def adpcm_ima_decode_stacked(payloads, block_align: int):
+def adpcm_ima_decode_stacked(payloads, block_align: int,
+                             channels: int = 1):
     """Decode MANY clips' payloads in one pass: every block of every clip
     is stacked into a single (total_blocks, block_align) matrix so the
     sequential-per-sample loop in :func:`_adpcm_decode_blocks` runs once
@@ -307,7 +287,12 @@ def adpcm_ima_decode_stacked(payloads, block_align: int):
     sample count). This is what keeps ADPCM viable in the Arrow decode
     UDF — per-clip decode pays ~500 numpy-dispatch round-trips on
     ~30-element vectors, the stacked form pays the same 500 on
-    thousands-of-elements vectors."""
+    thousands-of-elements vectors.
+
+    ``channels=2``: stereo blocks — left and right channels of every
+    block stack as virtual mono blocks into the same one run, then each
+    clip's channels downmix ``(L+R+1)>>1`` to the comparison-domain mono
+    signal, so each array holds FRAMES."""
     for p in payloads:
         if p.nbytes % block_align:
             # the concatenate+reshape below only needs the TOTAL to be a
@@ -323,7 +308,13 @@ def adpcm_ima_decode_stacked(payloads, block_align: int):
     blocks = np.concatenate(
         [np.ascontiguousarray(p).reshape(-1) for p in payloads]
     ).reshape(-1, block_align)
-    dec = _adpcm_decode_blocks(blocks)
+    if channels == 2:
+        nb = blocks.shape[0]
+        dec = _adpcm_decode_blocks(_stereo_virtual_mono_blocks(blocks))
+        left, right = dec[:nb].astype(np.int32), dec[nb:].astype(np.int32)
+        dec = ((left + right + 1) >> 1).astype(np.int16)
+    else:
+        dec = _adpcm_decode_blocks(blocks)
     out, off = [], 0
     for c in counts:
         out.append(dec[off:off + c].reshape(-1))
@@ -412,11 +403,9 @@ class AdpcmCoded:
 
     def decode(self) -> np.ndarray:
         """Per-clip decode (tests / snr_db_vs_period fallback); the hot
-        Arrow path batches clips through adpcm_ima_decode_stacked /
-        adpcm_stereo_decode_stacked."""
-        fn = (adpcm_stereo_decode_stacked if self.channels == 2
-              else adpcm_ima_decode_stacked)
-        (pcm,) = fn([self.payload], self.block_align)
+        Arrow path batches clips through adpcm_ima_decode_stacked."""
+        (pcm,) = adpcm_ima_decode_stacked([self.payload], self.block_align,
+                                          self.channels)
         return pcm[:self.n_samples]
 
 
@@ -600,15 +589,23 @@ def encode_adpcm_wav(pcm: np.ndarray, sr: int,
         # unrelated low-level struct.error from the header pack.
         raise ValueError(f"block_align {block_align} out of range "
                          f"[5, 32771]")
-    spb = adpcm_ima_samples_per_block(block_align)
-    payload = adpcm_ima_encode(pcm, block_align)
+    return _adpcm_wav(adpcm_ima_encode(pcm, block_align), 1, sr,
+                      block_align, adpcm_ima_samples_per_block(block_align),
+                      len(pcm))
+
+
+def _adpcm_wav(payload: bytes, channels: int, sr: int, block_align: int,
+               spb: int, frames: int) -> bytes:
+    """IMA ADPCM WAV around an encoded payload: WAVEFORMATEX fmt chunk
+    (cbSize=2 + wSamplesPerBlock ``spb``) and the fact chunk carrying
+    the true FRAME count."""
     byte_rate = (sr * block_align + spb - 1) // spb
     header = struct.pack(
         "<4sI4s4sIHHIIHHHH4sII4sI",
         b"RIFF", 52 + len(payload), b"WAVE",
-        b"fmt ", 20, _FMT_ADPCM_IMA, 1, sr, byte_rate, block_align, 4,
-        2, spb,
-        b"fact", 4, len(pcm),
+        b"fmt ", 20, _FMT_ADPCM_IMA, channels, sr, byte_rate, block_align,
+        4, 2, spb,
+        b"fact", 4, frames,
         b"data", len(payload))
     return header + payload
 
@@ -791,19 +788,9 @@ def encode_adpcm_stereo_wav(left: np.ndarray, right: np.ndarray,
     """Two int16 channels → stereo IMA ADPCM WAV (tag 0x11, channels=2):
     WAVEFORMATEX fmt chunk with the stereo wSamplesPerBlock + fact chunk
     carrying the true FRAME count (block padding is per channel)."""
-    if len(left) != len(right):
-        raise ValueError("stereo adpcm channels must be equal length")
-    spb = adpcm_stereo_frames_per_block(block_align)
-    payload = adpcm_ima_encode_stereo(left, right, block_align)
-    byte_rate = (sr * block_align + spb - 1) // spb
-    header = struct.pack(
-        "<4sI4s4sIHHIIHHHH4sII4sI",
-        b"RIFF", 52 + len(payload), b"WAVE",
-        b"fmt ", 20, _FMT_ADPCM_IMA, 2, sr, byte_rate, block_align, 4,
-        2, spb,
-        b"fact", 4, len(left),
-        b"data", len(payload))
-    return header + payload
+    return _adpcm_wav(adpcm_ima_encode_stereo(left, right, block_align), 2,
+                      sr, block_align,
+                      adpcm_stereo_frames_per_block(block_align), len(left))
 
 
 def encode_stereo_wav(pcm: np.ndarray, sr: int, codec: str) -> bytes:

@@ -28,8 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .codecs import (SAMPLE_CODECS, AdpcmCoded, adpcm_ima_decode_stacked,
-                     adpcm_stereo_decode_stacked, parse_wav,
-                     snr_db_vs_period)
+                     parse_wav, snr_db_vs_period)
 from .synth import expected_period, expected_transcript
 
 DECODE_RESULT_SCHEMA = (
@@ -85,8 +84,8 @@ def _fill_adpcm_snr(pending, out, adpcm_thr: float) -> None:
     """Stacked-decode every deferred ADPCM row of a batch and write its
     snr_db/snr_ok verdicts against the pre-resolved adpcm gate.
     Grouped by (block_align, channels) — blocks of different geometry
-    cannot share a matrix, and stereo blocks route through the
-    channel-de-interleaving stacked decoder — and chunked to
+    cannot share a matrix, and stereo blocks decode with the stacked
+    decoder's ``channels=2`` de-interleaving — and chunked to
     ≤_ADPCM_STACK_SAMPLES decoded samples per stacked call, so
     temporaries stay ~MBs however large the Arrow batch; within a chunk
     ONE call runs the sequential recurrence for all clips (both stereo
@@ -111,9 +110,8 @@ def _fill_adpcm_snr(pending, out, adpcm_thr: float) -> None:
 
 def _snr_one_stack(items, ba: int, ch: int, out,
                    adpcm_thr: float) -> None:
-    fn = adpcm_stereo_decode_stacked if ch == 2 \
-        else adpcm_ima_decode_stacked
-    decoded = fn([c.payload for _, c, _, _ in items], ba)
+    decoded = adpcm_ima_decode_stacked([c.payload for _, c, _, _ in items],
+                                       ba, ch)
     for (j, coded, period, n_ref), pcm in zip(items, decoded):
         s = snr_db_vs_period(pcm[:len(coded)], "pcm_s16le", period, n_ref)
         out["snr_db"][j] = s
@@ -176,6 +174,27 @@ def threshold_for(snr_threshold, codec: str) -> float:
     return float(snr_threshold)
 
 
+def _unasserted_results(n: int) -> dict:
+    """Decode-result columns (all but ``clip_id``) for ``n`` rows before
+    any verdict: ``decode_ok`` False, every other flag at its
+    NOT-ASSERTED value (True), ``snr_db`` NaN, ``n_samples`` 0, no
+    error. A row that never decodes — a corrupt payload, an unreadable
+    file or row group (files.py) — is ONE defect and emits exactly the
+    decode violation; zeros would fabricate codec/sr/dur/snr/transcript
+    violations on top."""
+    return {
+        "decode_ok": np.zeros(n, dtype=bool),
+        "codec_match": np.ones(n, dtype=bool),
+        "sr_match": np.ones(n, dtype=bool),
+        "dur_match": np.ones(n, dtype=bool),
+        "snr_db": np.full(n, np.nan),
+        "snr_ok": np.ones(n, dtype=bool),
+        "transcript_match": np.ones(n, dtype=bool),
+        "n_samples": np.zeros(n, dtype=np.int64),
+        "error": np.array([None] * n, dtype=object),
+    }
+
+
 def _decode_batches(check_reference: bool, snr_threshold,
                     dur_tolerance_ms: int,
                     passthrough: Sequence[str] = ()):
@@ -201,26 +220,10 @@ def _decode_batches(check_reference: bool, snr_threshold,
             durs = pdf["dur_ms"].tolist()
             transcripts = (pdf["transcript"].tolist()
                            if check_reference else None)
-            # every flag EXCEPT decode_ok defaults to the NOT-ASSERTED
-            # value (True): a corrupt payload is ONE defect and must
-            # emit exactly the decode violation — zeros would fabricate
-            # codec/sr/dur/snr/transcript violations on top (the
-            # one-violation-per-defect rule files.py's _corrupt_frame
-            # already follows), and with check_reference off the
-            # snr/transcript checks never run at all. On a successful
-            # decode each flag is overwritten by its real verdict.
-            out = {
-                "clip_id": ids,
-                "decode_ok": np.zeros(n, dtype=bool),
-                "codec_match": np.ones(n, dtype=bool),
-                "sr_match": np.ones(n, dtype=bool),
-                "dur_match": np.ones(n, dtype=bool),
-                "snr_db": np.full(n, np.nan),
-                "snr_ok": np.ones(n, dtype=bool),
-                "transcript_match": np.ones(n, dtype=bool),
-                "n_samples": np.zeros(n, dtype=np.int64),
-                "error": np.array([None] * n, dtype=object),
-            }
+            # on a successful decode each flag is overwritten by its
+            # real verdict; with check_reference off the snr/transcript
+            # flags keep their not-asserted defaults
+            out = {"clip_id": ids, **_unasserted_results(n)}
             for c in passthrough:
                 out[c] = pdf[c].values
             # ADPCM rows defer their SNR to one stacked decode after the

@@ -31,7 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .decode import DECODE_RESULT_SCHEMA, _decode_batches, validate_gates
+from .decode import (DECODE_RESULT_SCHEMA, _decode_batches,
+                     _unasserted_results, validate_gates)
 from ..sources.tables import _unescape_hive, parse_hive_values
 
 _COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
@@ -205,9 +206,8 @@ def _tagged_files(root: str, partition_filter: Optional[Sequence],
         if partition_filter is not None and any_hive else None
     if wanted is not None:
         # match the PARSED dir value first, then the raw string form:
-        # a wanted-set built from the DataFrame column (the runner's
-        # distinct() fallback — e.g. a __HIVE_DEFAULT_PARTITION__ dir
-        # degraded the listing — with partition type inference disabled,
+        # a wanted-set built from the DataFrame column (a distinct()
+        # over a table read with partition type inference disabled,
         # so the column is string-typed) carries '10' while the dirs
         # parse integral; parsed-only matching silently decoded zero
         # files for every non-NULL partition while the runner marked the
@@ -319,23 +319,13 @@ def _partition_dtype(splits: Sequence[Tuple[str, int, Optional[int]]],
 def _corrupt_frame(clip_marker: str, msg: str, pval,
                    partition_col: str,
                    codec_passthrough: bool = False) -> pd.DataFrame:
-    """One decode-result row attributing an unreadable file/row group.
-    Only ``decode_ok`` is failed — the metadata/SNR/transcript flags stay
-    True ("not asserted") so ``decode_violations`` emits exactly ONE
-    violation per corrupt unit, not six."""
-    out = {
-        "clip_id": [clip_marker],
-        "decode_ok": np.array([False]),
-        "codec_match": np.array([True]),
-        "sr_match": np.array([True]),
-        "dur_match": np.array([True]),
-        "snr_db": np.array([np.nan]),
-        "snr_ok": np.array([True]),
-        "transcript_match": np.array([True]),
-        "n_samples": np.array([0], dtype="int64"),
-        "error": np.array([msg], dtype=object),
-        partition_col: [pval],
-    }
+    """One decode-result row attributing an unreadable file/row group:
+    the decode's not-asserted row (only ``decode_ok`` failed), so
+    ``decode_violations`` emits exactly ONE violation per corrupt unit,
+    not six."""
+    out = {"clip_id": [clip_marker], **_unasserted_results(1),
+           partition_col: [pval]}
+    out["error"][0] = msg
     if codec_passthrough:
         # per-codec-gate runs carry codec through the results schema;
         # an unreadable unit has no codec to report

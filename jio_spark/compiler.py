@@ -193,13 +193,11 @@ class CompileCtx:
     jio mutates the root document as the walk progresses, object.go:163-165),
     the SSA stages, and the root schema for raw ref lookups."""
 
-    def __init__(self, root_schema: T.StructType, collect: bool = True,
-                 pure: bool = False):
+    def __init__(self, root_schema: T.StructType, pure: bool = False):
         self.root_schema = root_schema
-        self.collect = collect
-        #: pure mode: no column materialization — required inside
-        #: higher-order-function lambdas (Items elements) and condition
-        #: predicates. Only safe for short chains.
+        #: pure mode: no column materialization and no verdict entries —
+        #: required inside higher-order-function lambdas (Items
+        #: elements) and condition predicates. Only safe for short chains.
         self.pure = pure
         self.entries: List[VerdictEntry] = []
         # path -> (normalized expr, tag): visible to later `when` refs
@@ -220,7 +218,7 @@ class CompileCtx:
 
     def add(self, path: str, name: str, expected: str, evaluated: Column,
             passed: Column, actual: Column, message: Column) -> None:
-        if not self.collect:
+        if self.pure:
             return
         rid = f"{path}#{self._n:03d}:{name}" if path else f"#{self._n:03d}:{name}"
         self._n += 1
@@ -1409,7 +1407,7 @@ def compile_pass_predicate(schema: BaseSchema, col: Column,
             "not supported: the reference roots its refs at the element/"
             "ref value (schema.go:26-33, array.go:100-103), which this "
             "compiler cannot rebase — lift the when() to the field chain")
-    cc = CompileCtx(root_schema, collect=False, pure=True)
+    cc = CompileCtx(root_schema, pure=True)
     sub = compile_chain(schema, col, dtype, "<cond>", cc,
                         init_ev=F.lit(True))
     return ~sub.err
@@ -1501,7 +1499,7 @@ def compile_ruleset(df: DataFrame, schema: BaseSchema) -> CompiledRuleSet:
             f"dot-delimited rule paths: {dotted}; rename the column(s) "
             f"(e.g. withColumnRenamed) before validating")
 
-    cc = CompileCtx(df.schema, collect=True)
+    cc = CompileCtx(df.schema)
     # the root document is the row itself: a synthetic struct of all columns
     root_col = F.struct(*[F.col(f.name).alias(f.name)
                           for f in df.schema.fields])

@@ -14,18 +14,27 @@ partitions, the resume granularity):
                   └─ referential left_anti (broadcast dim)    ─┘   + metrics
     manifest.mark(group)        # written LAST → resume-safe
 
-Global steps after all groups (recorded under their own manifest keys):
+Global steps after the groups (recorded under their own manifest keys):
 uniqueness on clip_id (duplicates span partition groups by construction)
 and the drift snapshot/check.
+
+``run`` plans, executes, reports. The plan only reads (compile, resume
+check, partition discovery, group split), so bad input fails before
+anything under the output root changes. Every step then runs through one
+pool of ``group_concurrency`` workers and one protocol: skip it if a
+resumed run finds it complete, else run it, then mark it.
 """
 
 from __future__ import annotations
 
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Dict, List, Mapping, Optional, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +44,6 @@ from .engine import rule_count_exprs
 from .audio.decode import decode_check, decode_violations
 from .audio.files import decode_check_files, is_hive_layout
 from .operators.drift import HistSpec, drift_check, snapshot
-from .operators.referential import referential_check
 from .operators.schema import (raise_schema_violations,
                                schema_contract_violations)
 from .operators.stats import stats_exprs
@@ -217,9 +225,10 @@ _CHOICES = {
 @dataclass
 class ClipsJobConfig:
     """Job configuration. Values are checked at construction: a mode
-    knob outside its allowed values (``_CHOICES``) or
-    ``violations_exemplars < 1`` in exemplars mode raises ``ValueError``
-    naming the field."""
+    knob outside its allowed values (``_CHOICES``),
+    ``violations_exemplars < 1`` in exemplars mode, or ``group_size`` /
+    ``group_concurrency`` below 1 raises ``ValueError`` naming the
+    field."""
     rules: ObjectSchema = field(default_factory=default_clip_rules)
     partition_col: str = "bucket_id"
     group_size: int = 8               # bucket partitions per resume group
@@ -277,10 +286,11 @@ class ClipsJobConfig:
     #: exemplar rows kept per (partition, rule_path, rule_name) group
     violations_exemplars: int = 20
     drift: bool = True
-    #: submit this many partition groups as concurrent Spark jobs — the
-    #: tail tasks of one group overlap the next group's scan instead of
-    #: idling the cluster at each group barrier (resume granularity is
-    #: unchanged: a group is still marked only when fully written)
+    #: run at most this many steps (partition groups, then uniqueness,
+    #: then drift) as concurrent Spark jobs — the tail tasks of one group
+    #: overlap the next group's scan instead of idling the cluster at
+    #: each group barrier (resume granularity is unchanged: a group is
+    #: still marked only when fully written)
     group_concurrency: int = 1
     #: per-column stats riding the rule scan via ``df.observe`` (north
     #: star: "one pass computes per-column stats") — zero extra source
@@ -309,6 +319,10 @@ class ClipsJobConfig:
                 and self.violations_exemplars < 1:
             raise ValueError("violations_exemplars must be >= 1, got "
                              f"{self.violations_exemplars!r}")
+        for name in ("group_size", "group_concurrency"):
+            if getattr(self, name) < 1:
+                raise ValueError(
+                    f"{name} must be >= 1, got {getattr(self, name)!r}")
 
 
 class ClipsValidationJob:
@@ -447,6 +461,11 @@ class ClipsValidationJob:
         table_root so discovery derives from df."""
         cfg = self.cfg
         t0 = time.time()
+
+        # -- plan: reads only. Nothing under output_root changes until
+        # the groups are split, so bad input (a typo'd table_root, a
+        # partition column of the wrong type) leaves a finished root as
+        # it was
         if cfg.drift and self.baseline is not None:
             # preflight the baseline's bin specs against the current
             # DRIFT_SPECS NOW (both sides are tiny): a stale baseline
@@ -461,25 +480,12 @@ class ClipsValidationJob:
                 df, cfg.schema_contract)
             if schema_viols and cfg.schema_contract_mode == "fail":
                 raise_schema_violations(schema_viols)
-        # ONE compile per run, before any output is touched: a rule on a
-        # missing column fails here, and every group (and the rule_counts
-        # metadata) reuses the plan instead of rebuilding its Column trees
+        # ONE compile per run: a rule on a missing column fails here, and
+        # every group (and the rule_counts metadata) reuses the plan
+        # instead of rebuilding its Column trees
         compiled = compile_ruleset(df, cfg.rules.clone())
         sink = RunSink(output_root) if output_root else None
         manifest = Manifest(output_root) if output_root else None
-        if manifest and not resume:
-            # a FRESH run into an existing root invalidates every old
-            # completion record: if this run crashes, a later resume
-            # must re-run only what THIS run didn't finish — stale
-            # records from a previous (possibly differently-configured)
-            # run would otherwise be trusted and their groups skipped
-            manifest.clear()
-            # ... and every old step output: the violations writer is a
-            # DYNAMIC partition overwrite, which never deletes a
-            # partition absent from the new data — a partition dirty
-            # last run but clean now would keep its stale violation
-            # rows under this run's run.json
-            sink.clear_outputs(STEP_OUTPUTS)
 
         # the semantic fingerprint: every knob that changes WHICH rows
         # come out. A resumed run must match the run it resumes — the
@@ -512,28 +518,25 @@ class ClipsValidationJob:
         }
         # run.json lineage: the semantics plus the run this one resumes
         lineage = dict(semantics)
-        if sink:
-            prev = sink.read_run_metadata()
-            if resume and prev:
-                # fingerprint keys added AFTER a root was written are
-                # absent from its run.json; absent means "was at the
-                # old default", NOT "unknown, skip" — otherwise resuming
-                # a pre-upgrade (implicitly full-mode) root in exemplars
-                # mode would silently mix unbounded and capped groups,
-                # the exact thing the violations_sink key refuses
-                prev = {"violations_sink": "full", **prev}
-                diffs = {k: {"completed_groups_used": prev[k], "now": v}
-                         for k, v in semantics.items()
-                         if k in prev and prev[k] != v}
-                if diffs:
-                    raise ValueError(
-                        "resume would mix outputs from two different "
-                        f"configurations: {diffs} — rerun without "
-                        "resume (full rewrite) or restore the original "
-                        "config")
-                if prev.get("run_id"):
-                    lineage["resumed_from"] = prev["run_id"]
-            sink.write_run_metadata(lineage)
+        prev = sink.read_run_metadata() if sink and resume else None
+        if prev:
+            # fingerprint keys added AFTER a root was written are absent
+            # from its run.json; absent means "was at the old default",
+            # NOT "unknown, skip" — otherwise resuming a pre-upgrade
+            # (implicitly full-mode) root in exemplars mode would
+            # silently mix unbounded and capped groups, the exact thing
+            # the violations_sink key refuses
+            prev = {"violations_sink": "full", **prev}
+            diffs = {k: {"completed_groups_used": prev[k], "now": v}
+                     for k, v in semantics.items()
+                     if k in prev and prev[k] != v}
+            if diffs:
+                raise ValueError(
+                    "resume would mix outputs from two different "
+                    f"configurations: {diffs} — rerun without resume "
+                    "(full rewrite) or restore the original config")
+            if prev.get("run_id"):
+                lineage["resumed_from"] = prev["run_id"]
 
         # partition discovery is metadata-only when the table location is
         # known (filesystem listing of hive dirs / Iceberg .partitions);
@@ -558,12 +561,11 @@ class ClipsValidationJob:
             from .sources.tables import none_last_sorted
             raw = [r[0] for r in
                    df.select(cfg.partition_col).distinct().collect()]
-            # NULL partition values (the very case the hive listing
-            # degrades to this fallback for) ride as an explicit last
-            # member whose row filter is isNull()
+            # NULL partition values ride as an explicit last member whose
+            # row filter is isNull()
             parts = none_last_sorted(raw)
-        done = manifest.completed_partitions() if (manifest and resume) \
-            else set()
+        completed = manifest.completed() if (manifest and resume) else {}
+        done = manifest.completed_partitions() if completed else set()
         todo = [p for p in parts if p not in done]
         # can the files decode and its footer audit dir-prune per group?
         # Asked of the decode's own listing (plain paths and URIs alike),
@@ -579,9 +581,8 @@ class ClipsValidationJob:
             # layout — decode the ENTIRE table once per group, count the
             # same decode violations per group, and overwrite every
             # sink partition from each group. A hive-laid-out table whose
-            # METADATA listing merely degraded (null-partition dir,
-            # unreadable catalog) keeps its normal per-group batches:
-            # decode_check_files dir-prunes it fine.
+            # METADATA listing came back empty keeps its normal per-group
+            # batches: decode_check_files dir-prunes it fine.
             groups = [todo] if todo else []
         else:
             groups = [todo[i:i + cfg.group_size]
@@ -604,19 +605,32 @@ class ClipsValidationJob:
             iceberg_counts = iceberg_partition_row_counts(
                 self.spark, table_root, cfg.partition_col)
 
-        total_viols = 0
-        rows_processed = 0
-        # Spark job SUBMISSION stays concurrent across groups; only the
-        # sink COMMITS queue. Concurrent committers sharing one output
-        # root (directory listing, _SUCCESS markers, object-store rename)
-        # are not a guaranteed-safe pattern even with disjoint dynamic
-        # partitions.
+        # -- the plan holds: the first writes
+        if manifest and not resume:
+            # a FRESH run into an existing root invalidates every old
+            # completion record: if this run crashes, a later resume
+            # must re-run only what THIS run didn't finish — stale
+            # records from a previous (possibly differently-configured)
+            # run would otherwise be trusted and their groups skipped
+            manifest.clear()
+            # ... and every old step output: the violations writer is a
+            # DYNAMIC partition overwrite, which never deletes a
+            # partition absent from the new data — a partition dirty
+            # last run but clean now would keep its stale violation
+            # rows under this run's run.json
+            sink.clear_outputs(STEP_OUTPUTS)
+        if sink:
+            sink.write_run_metadata(lineage)
+
+        # -- execute. Spark job SUBMISSION stays concurrent across steps;
+        # only the sink COMMITS queue. Concurrent committers sharing one
+        # output root (directory listing, _SUCCESS markers, object-store
+        # rename) are not a guaranteed-safe pattern even with disjoint
+        # dynamic partitions.
         sink_lock = threading.Lock()
 
-        def run_group(group):
-            g_t0 = time.time()
+        def run_group(group, obs):
             gdf = df.where(_part_filter(cfg.partition_col, group))
-            obs = Observation(f"stats_{_group_key(group)}")
             # one footer read per file per group: the decode's split
             # listing and the row-integrity audit below share it
             fcache: Dict = {}
@@ -625,21 +639,20 @@ class ClipsValidationJob:
                                           observation=obs,
                                           footer_cache=fcache,
                                           compiled=compiled)
+            n_viols = None
             if sink:
-                out_v = viols
                 if cfg.violations_sink == "exemplars":
                     from .sinks.writers import exemplar_cap
-                    out_v = exemplar_cap(viols, cfg.violations_exemplars,
+                    viols = exemplar_cap(viols, cfg.violations_exemplars,
                                          cfg.partition_col)
                 with sink_lock:
-                    sink.overwrite_partitions(out_v, "violations",
+                    sink.overwrite_partitions(viols, "violations",
                                               cfg.partition_col)
-                g_viols = None  # counted lazily from written data if needed
             else:
-                g_viols = viols.count()
-            g_stats = obs.get  # available once the action above ran
-            g_rows = int(g_stats["rows"])
-            g_integrity = None
+                n_viols = viols.count()
+            rec: Dict = {"rows": int(obs.get["rows"])}  # set by the action
+            if n_viols is not None:
+                rec["violations"] = n_viols
             if hive:
                 # scan-vs-footer audit: metadata-only, prunes the same
                 # directories the decode does. Catches the JVM scan
@@ -650,51 +663,28 @@ class ClipsValidationJob:
                 exp, unreadable = footer_row_counts(
                     table_root, group, cfg.partition_col,
                     footer_cache=fcache)
-                g_integrity = {
+                rec["row_integrity"] = {
                     "rows_expected": exp,
                     "unreadable_files": unreadable,
-                    "ok": bool(g_rows == exp and unreadable == 0)}
+                    "ok": bool(rec["rows"] == exp and unreadable == 0)}
             elif iceberg_counts is not None and group:
                 # Iceberg analog: .partitions record_count is the
                 # committed truth for the snapshot (manifest read, no
                 # data files) — same audit, different metadata source
                 exp = sum(iceberg_counts.get(p, 0) for p in group)
-                g_integrity = {
+                rec["row_integrity"] = {
                     "rows_expected": exp,
                     "unreadable_files": 0,
-                    "ok": bool(g_rows == exp)}
-            if manifest:  # marked LAST, after the group's writes → resume-safe
-                details = {"rows": g_rows}
-                if g_integrity is not None:
-                    details["row_integrity"] = g_integrity
-                manifest.mark(f"group_{_group_key(group)}", group, details)
-            return (g_rows, g_viols, g_stats, g_integrity,
-                    time.time() - g_t0)
-
-        def recorded(step_key: str) -> Optional[Dict]:
-            """A global step's recorded results when a resumed run finds
-            it complete, else None: the step is skipped, but its RESULTS
-            must survive into this run's metrics/run.json — a 0 would
-            contradict the written outputs."""
-            if not (manifest and resume):
-                return None
-            rec = manifest.completed().get(step_key)
-            return None if rec is None else rec.get("metrics", {})
+                    "ok": bool(rec["rows"] == exp)}
+            return rec
 
         # global step 1: uniqueness (duplicate ids cross partition groups)
-        uniq_cert: Dict = {}
-
         def run_uniqueness():
-            u_t0 = time.time()
-            uniq_key = "_global_uniqueness"
-            rec = recorded(uniq_key)
-            if rec is not None:
-                uniq_cert.update(rec.get("certificate") or {})
-                return int(rec.get("violations", 0)), time.time() - u_t0
+            cert: Dict = {}
             uv = uniqueness_check(
                 df, "clip_id", layout=cfg.uniqueness_layout,
                 on_unclustered=cfg.uniqueness_on_unclustered,
-                certificate=uniq_cert)
+                certificate=cert)
             if sink:
                 # the write's own observed row count: a count() after it
                 # would re-plan the whole-table groupBy
@@ -708,75 +698,84 @@ class ClipsValidationJob:
                 n = int(seen.get["rows"])
             else:
                 n = uv.count()
-            if manifest:
-                details = {"violations": n}
-                if uniq_cert:
-                    details["certificate"] = uniq_cert
-                manifest.mark(uniq_key, [], details)
-            return n, time.time() - u_t0
+            return {"violations": n, **({"certificate": cert}
+                                        if cert else {})}
 
         # global step 2: drift snapshot + check
         def run_drift():
-            d_t0 = time.time()
-            if not cfg.drift:
-                return [], time.time() - d_t0
-            drift_key = "_global_drift"
-            rec = recorded(drift_key)
-            if rec is not None:
-                return list(rec.get("drift") or []), time.time() - d_t0
             snap = snapshot(df, DRIFT_SPECS)
             if sink:
-                # same single-committer rule as the group/uniqueness
-                # writes: all commits into one output root queue
                 with sink_lock:
-                    snap.write.mode("overwrite").parquet(
-                        sink.path("snapshot"))
+                    sink.overwrite(snap, "snapshot")
             if self.baseline is None:
-                if manifest:
-                    # baseline-less runs still pay the snapshot scan —
-                    # record the (empty) result so resume skips it too
-                    manifest.mark(drift_key, [], {"drift": []})
-                return [], time.time() - d_t0
+                # baseline-less runs still pay the snapshot scan — the
+                # (empty) result is recorded so resume skips it too
+                return {"drift": []}
             dc = drift_check(snap, self.baseline)
             rows = [r.asDict() for r in dc.collect()]
             if sink:
                 with sink_lock:
-                    dc.write.mode("overwrite").parquet(sink.path("drift"))
-            if manifest:  # marked LAST, after the drift write → resume-safe
-                manifest.mark(drift_key, [], {"drift": rows})
-            return rows, time.time() - d_t0
+                    sink.overwrite(dc, "drift")
+            return {"drift": rows}
 
-        if cfg.group_concurrency > 1:
-            # the read-only global steps overlap the group jobs: Spark
-            # schedules all of them; no step depends on another's output
-            from concurrent.futures import ThreadPoolExecutor
-            # the global steps get their OWN two workers: sharing one
-            # oversized pool would let finished global slots run extra
-            # groups, exceeding the group_concurrency contract the user
-            # set to bound concurrent Spark jobs
-            with ThreadPoolExecutor(2) as global_pool, \
-                    ThreadPoolExecutor(cfg.group_concurrency) as pool:
-                uniq_f = global_pool.submit(run_uniqueness)
-                drift_f = global_pool.submit(run_drift)
-                results = list(pool.map(run_group, groups))
-                uniq_viols, uniq_sec = uniq_f.result()
-                drift_rows, drift_sec = drift_f.result()
-        else:
-            results = [run_group(g) for g in groups]
-            uniq_viols, uniq_sec = run_uniqueness()
-            drift_rows, drift_sec = run_drift()
+        observations = [Observation(f"stats_{_group_key(g)}")
+                        for g in groups]
+        steps = [(f"group_{_group_key(g)}", g, partial(run_group, g, obs))
+                 for g, obs in zip(groups, observations)]
+        steps.append(("_global_uniqueness", [], run_uniqueness))
+        if cfg.drift:
+            steps.append(("_global_drift", [], run_drift))
+        failed = threading.Event()
 
-        group_stats = []
-        integrity = []
-        group_secs = []
-        for g_rows, g_viols, g_stats, g_integrity, g_sec in results:
-            if g_viols is not None:
-                total_viols += g_viols
-            rows_processed += g_rows
-            group_stats.append(g_stats)
-            if g_integrity is not None:
-                integrity.append(g_integrity)
-            group_secs.append(g_sec)
+        def run_step(key: str, partitions: Sequence, body):
+            """THE step protocol: (record, seconds). A step a resumed run
+            finds complete is skipped, and its recorded results stand
+            in this run's metrics (a 0 would contradict the written
+            outputs); otherwise its body runs and its record is marked
+            LAST, after the body's writes → resume-safe. Once any step
+            has failed, no further step starts."""
+            if failed.is_set():
+                return None
+            t = time.time()
+            try:
+                if key in completed:
+                    rec = completed[key].get("metrics", {})
+                else:
+                    rec = body()
+                    if manifest:
+                        manifest.mark(key, partitions, rec)
+            except BaseException:
+                failed.set()
+                raise
+            return rec, time.time() - t
+
+        def inheriting(fn):
+            """``fn`` run with a copy of the caller's local properties
+            (job group, scheduler pool) and session tags. One copy per
+            step: a shared one would hand concurrent steps the same
+            ``Properties`` object. With pinned threads off, PySpark
+            returns the session itself, and no Python thread owns a JVM
+            thread to carry them into."""
+            wrap = inheritable_thread_target(self.spark)
+            return fn if wrap is self.spark else wrap(fn)
+
+        # ONE pool, fed in order: at 1 worker this is the serial order,
+        # at N workers at most N Spark-submitting steps run at once
+        with ThreadPoolExecutor(cfg.group_concurrency) as pool:
+            futures = [pool.submit(inheriting(run_step), *s) for s in steps]
+        results = [f.result() for f in futures]
+
+        # -- report
+        group_res = results[:len(groups)]
+        group_recs = [rec for rec, _ in group_res]
+        group_secs = [sec for _, sec in group_res]
+        uniq_rec, uniq_sec = results[len(groups)]
+        drift_rec, drift_sec = results[len(groups) + 1] if cfg.drift \
+            else ({}, 0.0)
+        group_stats = [obs.get for obs in observations]
+        rows_processed = sum(rec["rows"] for rec in group_recs)
+        integrity = [rec["row_integrity"] for rec in group_recs
+                     if "row_integrity" in rec]
         rule_counts = None
         if cfg.observe_rule_counts and group_stats:
             # metadata from the run's one compile, whose entries every
@@ -803,9 +802,10 @@ class ClipsValidationJob:
             "partitions": len(parts),
             "groups_run": len(groups),
             "resumed": resume,
-            "violations": total_viols if not sink else None,
-            "uniqueness_violations": uniq_viols,
-            "drift": drift_rows,
+            "violations": None if sink else sum(
+                rec["violations"] for rec in group_recs),
+            "uniqueness_violations": int(uniq_rec.get("violations", 0)),
+            "drift": list(drift_rec.get("drift") or []),
             "column_stats": col_stats,
             "wall_sec": wall,
             "rows_per_sec": rows_processed / wall if wall > 0 else None,
@@ -824,10 +824,10 @@ class ClipsValidationJob:
             metrics["schema_violations"] = schema_viols
         if rule_counts is not None:
             metrics["rule_counts"] = rule_counts
-        if uniq_cert:
+        if uniq_rec.get("certificate"):
             # the clustered path's runtime exactness verdict (free: built
             # from the boundary rows the merge already collected)
-            metrics["uniqueness_certificate"] = uniq_cert
+            metrics["uniqueness_certificate"] = uniq_rec["certificate"]
         if parquet_table_audit and groups:
             # non-hive layout: one whole-table footer pass vs the run's
             # total observed rows (per-group pruning is impossible here)

@@ -4,18 +4,20 @@ with per-partition lineage + metrics").
 
 Layout under an output root:
 
-    <root>/violations/           parquet, partitioned by bucket_id
-    <root>/decode_results/       parquet, partitioned by bucket_id
-    <root>/metrics/              parquet (per-partition-group summaries)
-    <root>/manifest/             one JSON file per completed partition group
-    <root>/run.json              run-level lineage metadata
+    <root>/violations/             parquet, partitioned by bucket_id
+    <root>/uniqueness_violations/  parquet (the global uniqueness step)
+    <root>/snapshot/               parquet (the drift step's snapshot)
+    <root>/drift/                  parquet (the drift verdicts)
+    <root>/manifest/               one JSON file per completed step
+    <root>/run.json                run-level lineage metadata + metrics
 
-The manifest is the resume protocol: a partition group's outputs are
-APPENDED first, its manifest record is written LAST (rename-free single
-file put — atomic on local fs and object stores). A crashed run re-runs
-only groups with no manifest record; violations for those groups may be
-partially written, so readers must join against the manifest (or the
-resumed run rewrites the group's partitions via dynamic overwrite).
+The manifest is the resume protocol: a step's outputs are written first,
+its manifest record LAST (rename-free single file put — atomic on local
+fs and object stores). A partition group writes ``violations/`` as a
+DYNAMIC partition overwrite of its own partitions; the global steps
+(uniqueness, drift) fully overwrite their directories. Either way a
+crashed run re-runs only steps with no manifest record, and re-running a
+half-written step rewrites exactly what it wrote before.
 """
 
 from __future__ import annotations
@@ -434,13 +436,6 @@ class RunSink:
             return None
         with open(p) as f:
             return json.load(f)
-
-    def append(self, df: DataFrame, name: str,
-               partition_col: Optional[str] = "bucket_id") -> None:
-        w = df.write.mode("append")
-        if partition_col and partition_col in df.columns:
-            w = w.partitionBy(partition_col)
-        w.parquet(self.path(name))
 
     def overwrite(self, df: DataFrame, name: str) -> None:
         """Full overwrite for GLOBAL-step outputs (uniqueness, drift):

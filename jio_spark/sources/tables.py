@@ -52,9 +52,6 @@ class TableAdapter:
         df = self.read(spark, location)
         raw = [r[0] for r in
                df.select(self.partition_col).distinct().collect()]
-        # a NULL partition value is exactly the case the hive listing
-        # degrades to this fallback for (it returns [] on a
-        # __HIVE_DEFAULT_PARTITION__ dir)
         return none_last_sorted(raw)
 
 
@@ -72,15 +69,18 @@ def list_partition_values(spark: SparkSession, location: str,
 
     Hive directory names are strings; integral-looking values are parsed
     back to int so they compare equal to the column values in
-    ``isin`` partition-pruning filters. Returns ``[]`` when the layout
-    isn't partitioned by ``partition_col`` (callers fall back)."""
+    ``isin`` partition-pruning filters. A NULL partition (a
+    ``__HIVE_DEFAULT_PARTITION__`` directory, a null ``.partitions``
+    entry) is a trailing ``None`` member (:func:`none_last_sorted`).
+    Returns ``[]`` when the layout isn't partitioned by
+    ``partition_col`` (callers fall back)."""
     if fmt == "iceberg":
         try:
             meta = spark.read.format("iceberg") \
                 .load(f"{location}.partitions")
-            return sorted(r[0] for r in
-                          meta.select(f"partition.{partition_col}")
-                              .collect())
+            return none_last_sorted(
+                [r[0] for r in
+                 meta.select(f"partition.{partition_col}").collect()])
         except Exception:
             # unpartitioned / differently-partitioned table: the
             # .partitions schema has no such field — degrade to the
@@ -93,19 +93,17 @@ def list_partition_values(spark: SparkSession, location: str,
         return []
     prefix = f"{partition_col}="
     raw_vals: List[str] = []
+    has_null = False
     for st in fs.listStatus(path):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(prefix):
             raw = name[len(prefix):]
             if raw == "__HIVE_DEFAULT_PARTITION__":
-                # a null-partition directory exists: hive dir names
-                # cannot express NULL as an isin()-matchable value, so
-                # report "not listable" and let callers fall back to
-                # the scan path rather than silently skipping the
-                # null partition's rows
-                return []
-            raw_vals.append(_unescape_hive(raw))
-    return sorted(parse_hive_values(raw_vals).values())
+                has_null = True
+            else:
+                raw_vals.append(_unescape_hive(raw))
+    vals = list(parse_hive_values(raw_vals).values())
+    return none_last_sorted(vals + [None] if has_null else vals)
 
 
 _HIVE_INT = re.compile(r"[+-]?[0-9]+", re.ASCII)
@@ -186,12 +184,12 @@ def check_partition_value_types(parts: List, dtype) -> None:
 
 def none_last_sorted(raw: List) -> List:
     """Distinct partition values sorted with an explicit trailing None.
-    THE one copy of the scan-fallback convention (NULL can't sort against
-    ints/strings, and ``isin`` never matches NULL, so None rides as an
-    explicit last member whose row filter is ``isNull()``): both
-    ``TableAdapter.partitions`` and the runner's in-memory-frame fallback
-    ride this, so the two discovery paths can never order or drop the
-    NULL partition differently."""
+    THE one copy of the NULL-partition convention (NULL can't sort
+    against ints/strings, and ``isin`` never matches NULL, so None rides
+    as an explicit last member whose row filter is ``isNull()``): the
+    hive and Iceberg listings, ``TableAdapter.partitions``' scan and the
+    runner's in-memory-frame fallback all ride this, so no discovery
+    path can order or drop the NULL partition differently."""
     out = sorted(v for v in raw if v is not None)
     if any(v is None for v in raw):
         out.append(None)

@@ -101,6 +101,17 @@ def test_iceberg_partitions_metadata_table(spark):
     assert log == [("load", "iceberg", "cat.db.clips.partitions")]
 
 
+def test_iceberg_partitions_keep_null(spark):
+    """A null ``.partitions`` entry is the NULL partition: it lists as a
+    trailing None member, not as a failed sort that degrades the whole
+    listing to the distinct() scan."""
+    meta = spark.createDataFrame([((3,),), ((None,),), ((1,),)],
+                                 "partition struct<bucket_id: int>")
+    fake = _FakeSpark([], {"cat.db.clips.partitions": meta})
+    assert list_partition_values(fake, "cat.db.clips", "bucket_id",
+                                 "iceberg") == [1, 3, None]
+
+
 def test_iceberg_partitions_fallback_on_missing_field(spark):
     """A table partitioned by something else: the .partitions schema has
     no bucket_id field, list_partition_values degrades to [] and the

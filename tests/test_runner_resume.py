@@ -410,6 +410,24 @@ def test_files_decode_null_partition(spark, tmp_path):
     assert m["violations"] == ref["violations"]
 
 
+def test_hive_listing_keeps_null_partition(spark, tmp_path):
+    """A __HIVE_DEFAULT_PARTITION__ dir lists as a trailing None member,
+    so discovery stays a metadata-only listing instead of degrading to
+    the whole-table distinct() scan."""
+    from jio_spark.sources.tables import TableAdapter, list_partition_values
+    base = clips_frame(spark, 300, partitions=2)
+    nulled = base.withColumn(
+        "bucket_id",
+        F.when(F.col("bucket_id") == 3,
+               F.lit(None).cast("int")).otherwise(F.col("bucket_id")))
+    path = str(tmp_path / "nullpart")
+    nulled.write.partitionBy("bucket_id").parquet(path)
+    want = sorted(r[0] for r in nulled.select("bucket_id").distinct()
+                  .collect() if r[0] is not None) + [None]
+    assert list_partition_values(spark, path, "bucket_id") == want
+    assert TableAdapter().partitions(spark, path) == want
+
+
 def test_null_partition_values_fallback(spark, tmp_path):
     """A NULL in the partition column (the case the hive listing
     deliberately degrades for): the distinct() fallback must not crash
@@ -489,8 +507,7 @@ def test_files_decode_random_partition_layout_fuzz(spark, tmp_path):
         disk = spark.read.parquet(path)
 
         # the runner's own discovery + grouping (incl. its distinct()
-        # fallback: the hive listing intentionally degrades when a
-        # __HIVE_DEFAULT_PARTITION__ dir exists — runner.py run())
+        # fallback for a table the hive listing finds no partition in)
         parts = list_partition_values(spark, path, "bucket_id")
         if not parts:
             raw = [r[0] for r in
@@ -1189,3 +1206,112 @@ def test_fingerprint_sees_callable_instance_call_body():
         return K.object({"q": K.number().check(Chk(limit))})
     assert ruleset_fingerprint(mk_state(5)) != \
         ruleset_fingerprint(mk_state(6))
+
+
+def _root_state(out):
+    """Every file under an output root, the manifest records and the
+    run.json text: what a failed run must leave as it found."""
+    files = sorted(os.path.relpath(os.path.join(d, f), out)
+                   for d, _, fs in os.walk(out) for f in fs)
+    with open(os.path.join(out, "run.json")) as f:
+        return files, Manifest(out).completed(), f.read()
+
+
+@pytest.mark.parametrize("bad", ["missing_table_root", "string_partitions"])
+def test_failed_plan_leaves_finished_root(spark, clips_path, tmp_path, bad):
+    """A fresh run into a finished root that fails while planning — a
+    table_root holding no parquet file, or a string-typed partition
+    column over integral hive directories — raises before its first
+    write: the previous run's violations, uniqueness violations,
+    manifest records and run.json are all still there."""
+    out = str(tmp_path / "root")
+    cfg = ClipsJobConfig(group_size=16, audio_check=False, drift=False,
+                         decode_source="files")
+    job = ClipsValidationJob(spark, cfg)
+    job.run(spark.read.parquet(clips_path), output_root=out,
+            table_root=clips_path)
+    before = _root_state(out)
+    assert {"violations", "uniqueness_violations"} <= {
+        f.split(os.sep)[0] for f in before[0]}
+
+    table_root, df = clips_path, spark.read.parquet(clips_path)
+    if bad == "missing_table_root":
+        table_root, err = str(tmp_path / "no_such_table"), FileNotFoundError
+    else:
+        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        spark.conf.set(key, "false")
+        try:
+            df = spark.read.parquet(clips_path)
+            assert df.schema["bucket_id"].dataType.simpleString() == "string"
+        finally:
+            spark.conf.unset(key)
+        err = ValueError
+    with pytest.raises(err):
+        job.run(df, output_root=out, table_root=table_root)
+    assert _root_state(out) == before
+
+
+@pytest.mark.parametrize("conc", [1, 4])
+def test_caller_job_group_reaches_every_step(spark, clips_path, conc):
+    """The caller's job group tags every Spark job of the run, whichever
+    worker thread runs the step: no run job lands outside it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    job = ClipsValidationJob(spark, ClipsJobConfig(
+        group_size=4, audio_check=False, group_concurrency=conc))
+    df = spark.read.parquet(clips_path)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"caller_group_{conc}"
+    sc.setJobGroup(group, "caller's job group")
+    try:
+        m = job.run(df)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert m["groups_run"] == 4
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_run_without_pinned_threads(spark, clips_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself, not a decorator: run() must still run
+    its steps (they have no per-thread JVM state to inherit)."""
+    import jio_spark.runner as runner
+    monkeypatch.setattr(runner, "inheritable_thread_target",
+                        lambda f=None: f)
+    cfg = ClipsJobConfig(group_size=8, audio_check=False, drift=False,
+                         group_concurrency=2)
+    m = ClipsValidationJob(spark, cfg).run(spark.read.parquet(clips_path))
+    assert m["rows"] == 1200 and m["groups_run"] == 2
+
+
+def test_failed_group_stops_unstarted_steps(spark, clips_path, tmp_path,
+                                            monkeypatch):
+    """At group_concurrency=2 a group that raises at once stops every
+    step that has not started: only a step already running beside it
+    (plus, at most, one that passed the check in the instant before the
+    failure was recorded) can finish and be marked — not the other
+    fourteen groups, and not the uniqueness step."""
+    from jio_spark.runner import ClipsValidationJob as Job
+    orig = Job.group_violations
+    calls = []
+
+    def boom(self, df, group=None, **kw):
+        calls.append(group)
+        if len(calls) == 1:
+            raise RuntimeError("injected group failure")
+        return orig(self, df, group=group, **kw)
+
+    monkeypatch.setattr(Job, "group_violations", boom)
+    out = str(tmp_path / "stop")
+    cfg = ClipsJobConfig(group_size=1, audio_check=False, drift=False,
+                         group_concurrency=2)
+    with pytest.raises(RuntimeError, match="injected group failure"):
+        Job(spark, cfg).run(spark.read.parquet(clips_path),
+                            output_root=out, table_root=clips_path)
+    done = Manifest(out).completed()
+    assert len(calls) <= 3
+    assert len([k for k in done if k.startswith("group_")]) <= 2
+    assert "_global_uniqueness" not in done

@@ -99,12 +99,15 @@ def test_mode_typos_fail_loudly(spark):
 
 @pytest.mark.parametrize("name, typo", [("decode_source", "File"),
                                         ("table_format", "Parquet"),
-                                        ("uniqueness_layout", "Clustered")])
+                                        ("uniqueness_layout", "Clustered"),
+                                        ("group_size", 0),
+                                        ("group_concurrency", 0)])
 def test_config_typo_fails_at_construction(name, typo):
     """A typo'd mode refuses when the config is built: 'File' or
     'Parquet' must not silently run the Arrow decode and skip the row
     audit, and a bad uniqueness layout must not raise only after every
-    group has been scanned and committed."""
+    group has been scanned and committed. A group size or concurrency
+    below 1 refuses too, instead of failing inside run()."""
     with pytest.raises(ValueError, match=name):
         ClipsJobConfig(**{name: typo})
 
