@@ -1315,3 +1315,25 @@ def test_failed_group_stops_unstarted_steps(spark, clips_path, tmp_path,
     assert len(calls) <= 3
     assert len([k for k in done if k.startswith("group_")]) <= 2
     assert "_global_uniqueness" not in done
+
+
+def test_resume_reruns_group_whose_key_another_set_recorded(spark,
+                                                            tmp_path):
+    """Group steps are never skipped by manifest key: the partition
+    listing already left out the done partitions. A first run over a
+    string-typed partition column '1'..'8' records group_1_8; a resume
+    over the same values typed int finds none of them done, and its one
+    group — same key, other members — must run and report its own rows
+    instead of reading an Observation no action filled."""
+    base = clips_frame(spark, 160, clean=True, partitions=2)
+    part = F.col("bucket_id") % 8 + 1
+    out = str(tmp_path / "retyped")
+    job = ClipsValidationJob(spark, ClipsJobConfig(
+        group_size=8, audio_check=False, drift=False))
+    m1 = job.run(base.withColumn("bucket_id", part.cast("string")),
+                 output_root=out)
+    assert "group_1_8" in Manifest(out).completed()
+    m2 = job.run(base.withColumn("bucket_id", part.cast("int")),
+                 output_root=out, resume=True)
+    assert m1["rows"] == m2["rows"] == 160
+    assert m2["groups_run"] == 1
