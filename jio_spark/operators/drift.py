@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks.writers import local_frame
+
 N_QUANTILES = 101
 SNAPSHOT_SCHEMA = ("col_name string, n long, lo double, hi double, "
                    "quantiles array<double>, histogram array<long>")
@@ -90,7 +92,7 @@ def snapshot(df: DataFrame, specs: Dict[str, HistSpec],
         qs = row[f"{c}__q"]
         out.append((c, n, float(spec.lo), float(spec.hi),
                     [float(x) for x in qs] if qs else None, hist))
-    return df.sparkSession.createDataFrame(out, SNAPSHOT_SCHEMA)
+    return local_frame(df.sparkSession, out, SNAPSHOT_SCHEMA)
 
 
 def ks_from_quantiles(q_base: Sequence[float],
@@ -229,7 +231,7 @@ def drift_check(current: DataFrame, baseline: DataFrame,
                     f"field `{c}` drift ks={ks if ks is not None else -1:.4f}"
                     f" psi={psi:.4f} thresholds ks<={ks_threshold}"
                     f" psi<={psi_threshold}"))
-    spark = current.sparkSession
-    return spark.createDataFrame(
-        out, "col_name string, ks double, psi double, ks_pass boolean, "
-             "psi_pass boolean, pass boolean, message string")
+    return local_frame(
+        current.sparkSession, out,
+        "col_name string, ks double, psi double, ks_pass boolean, "
+        "psi_pass boolean, pass boolean, message string")

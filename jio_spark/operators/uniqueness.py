@@ -41,6 +41,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..sinks.writers import local_frame
 
 
 def _scan_schema(df: DataFrame, key: str) -> str:
@@ -270,11 +273,9 @@ def duplicate_ids(df: DataFrame, key: str,
         add(open_key, open_cnt)
 
     bdup = [(k, c) for k, c in merged.items() if c > 1]
-    key_type = df.schema[key].dataType.simpleString()
-    if bdup:
-        bdf = spark.createDataFrame(bdup, f"key {key_type}, cnt long")
-    else:
-        bdf = spark.createDataFrame([], f"key {key_type}, cnt long")
+    bdf = local_frame(spark, bdup, StructType([
+        StructField("key", df.schema[key].dataType),
+        StructField("cnt", LongType())]))
     return interior.unionByName(bdf) \
                    .groupBy("key").agg(F.sum("cnt").alias("cnt"))
 

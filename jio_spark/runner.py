@@ -2,17 +2,23 @@
 audio decode + uniqueness + referential + stats + drift, with per-partition
 checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
-The rule set is compiled once per run, before any group (compiling reads
-only ``df.schema``, which every group frame shares); each group applies
-that one compiled plan to its own ``df.where(...)`` slice.
+Per-run work is paid once per run: the rule set is compiled once
+(compiling reads only ``df.schema``, which every group frame shares), its
+state chain is applied once to ``df`` and each group filters that one
+frame (the filter still reaches the scan as partition pruning), and the
+codec dim is collected once, fingerprinted, and checked as a literal set.
 
 Execution shape per partition group (a group = a batch of bucket_id
 partitions, the resume granularity):
 
-    scan(group) ──┬─ rule verdicts (Catalyst exprs, codegen)  ─┐
-                  ├─ salted repartition → Arrow decode checks ─┼─ violations
-                  └─ referential left_anti (broadcast dim)    ─┘   + metrics
+    scan(group) ──┬─ rule verdicts + codec IN <dim set> (codegen) ─┐
+                  └─ salted repartition → Arrow decode checks     ─┴─ violations
+                                                                      + metrics
     manifest.mark(group)        # written LAST → resume-safe
+
+Every tiny frame the driver builds (the codec dim, the sketch merge, the
+drift snapshot and verdicts) is a JVM ``LocalRelation``
+(``sinks.writers.local_frame``), so reading it back runs no Spark job.
 
 Global steps after the groups (recorded under their own manifest keys):
 uniqueness on clip_id (duplicates span partition groups by construction)
@@ -48,8 +54,8 @@ from .operators.schema import (raise_schema_violations,
                                schema_contract_violations)
 from .operators.stats import stats_exprs
 from .operators.uniqueness import uniqueness_check
-from .sinks.writers import (Manifest, RunSink, frame_fingerprint,
-                            ruleset_fingerprint)
+from .sinks.writers import (Manifest, RunSink, local_frame,
+                            rows_fingerprint, ruleset_fingerprint)
 
 #: every step-output dir a run can write — a fresh run into an existing
 #: root clears ALL of them (see RunSink.clear_outputs)
@@ -138,8 +144,8 @@ def _merge_observed_stats(group_stats: List[Dict],
         # sketch aggregates (null inputs are skipped by the agg
         # functions) over an O(groups × cols) frame of ~KB sketches —
         # constant job count regardless of column count
-        sdf = spark.createDataFrame(sketch_rows,
-                                    "col string, kind string, s binary")
+        sdf = local_frame(spark, sketch_rows,
+                          "col string, kind string, s binary")
         aggs = []
         for c, kind in wanted:
             m = (F.col("col") == c) & (F.col("kind") == kind)
@@ -182,6 +188,15 @@ def _group_key(group: Sequence) -> str:
     return key
 
 
+def _dim_codecs(rows: Optional[Sequence]) -> Optional[List]:
+    """The codec dim's distinct non-NULL ``codec`` values, sorted: the
+    literal set the referential check tests each row's codec against (a
+    NULL dim key matches no row, as in a join). None without a dim."""
+    if rows is None:
+        return None
+    return sorted({r["codec"] for r in rows if r["codec"] is not None})
+
+
 def default_clip_rules() -> ObjectSchema:
     """The jio-style rule set for the north-star clips shape
     (BASELINE.json input_hint)."""
@@ -197,7 +212,8 @@ def default_clip_rules() -> ObjectSchema:
 
 def default_codec_dim(spark: SparkSession) -> DataFrame:
     """FIXTURES.md §2 dim_codec."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("pcm_s16le", 16, "wav"), ("ulaw", 8, "wav"), ("alaw", 8, "wav"),
          ("adpcm_ima", 4, "wav"), ("pcm_u8", 8, "wav"),
          ("pcm_s24le", 24, "wav"), ("pcm_f32le", 32, "wav"),
@@ -353,26 +369,34 @@ class ClipsValidationJob:
                          table_root: Optional[str] = None,
                          observation=None,
                          footer_cache: Optional[dict] = None,
-                         compiled: Optional[CompiledRuleSet] = None
+                         compiled: Optional[CompiledRuleSet] = None,
+                         prepared: Optional[DataFrame] = None,
+                         dim_codecs: Optional[Sequence] = None
                          ) -> DataFrame:
         """All per-row violations for a slice of the table, in the standard
         shape + partition column.
 
-        ``compiled`` is the rule set compiled against a frame with
-        ``df``'s schema; :meth:`run` compiles once and passes it to every
-        group. Without it the rules are compiled here.
+        :meth:`run` pays the per-run work once and passes it to every
+        group: ``compiled`` is the rule set compiled against a frame with
+        ``df``'s schema, ``prepared`` is ``compiled.prepare`` of the whole
+        table filtered to this slice, and ``dim_codecs`` is the codec
+        dim's non-NULL codec values. Called on its own, this compiles,
+        prepares and collects the dim itself (``prepared`` needs
+        ``compiled``).
 
         Scan economy (SURVEY.md §4.2 "single-pass multi-metric"): the rule
-        chain AND the referential check share ONE scan — the broadcast dim
-        lookup is appended as one more element of the per-row violations
-        array before the single explode, and the scan never reads `bytes`
-        (column pruning). The audio decode is the only second scan, reading
+        chain AND the referential check share ONE scan, with no join and
+        no exchange — the check is ``codec NOT IN <dim set>``, appended as
+        one more element of the per-row violations array before the
+        single explode, and the scan never reads `bytes` (column
+        pruning). The audio decode is the only second scan, reading
         exactly (id, bytes, metadata)."""
         ids = ["clip_id", self.cfg.partition_col]
         if compiled is None:
             compiled = compile_ruleset(df, self.cfg.rules.clone())
-        ann = compiled.prepare(df).withColumn(
-            "_violations", compiled.violations_array)
+        if prepared is None:
+            prepared = compiled.prepare(df)
+        ann = prepared.withColumn("_violations", compiled.violations_array)
         if observation is not None:
             # stats piggyback on the SAME scan (before the violation
             # filter drops passing rows) — no extra source read
@@ -388,17 +412,18 @@ class ClipsValidationJob:
             ann = ann.observe(observation, *exprs)
 
         if self.codec_dim is not None:
-            dim = F.broadcast(self.codec_dim.select(
-                F.col("codec"), F.lit(True).alias("_dim_hit"))
-                .dropDuplicates(["codec"]))
-            ann = ann.join(dim, on="codec", how="left")
-            ref_fail = F.col("codec").isNotNull() & F.col("_dim_hit").isNull()
+            if dim_codecs is None:
+                dim_codecs = _dim_codecs(self.codec_dim.collect())
+            codec = F.col("codec")
+            ref_fail = codec.isNotNull()
+            if dim_codecs:
+                ref_fail = ref_fail & ~codec.isin(list(dim_codecs))
             ref_struct = F.struct(
                 F.lit("codec").alias("rule_path"),
                 F.lit("referential").alias("rule_name"),
                 F.lit("exists in dim.codec").alias("expected"),
-                F.col("codec").alias("actual"),
-                F.concat(F.lit("field `codec` value "), F.col("codec"),
+                codec.alias("actual"),
+                F.concat(F.lit("field `codec` value "), codec,
                          F.lit(" not found in dimension `codec`"))
                  .alias("message"))
             ann = ann.withColumn(
@@ -484,6 +509,20 @@ class ClipsValidationJob:
         # every group (and the rule_counts metadata) reuses the plan
         # instead of rebuilding its Column trees
         compiled = compile_ruleset(df, cfg.rules.clone())
+        # ... and ONE rule-chain frame: each group filters it. Catalyst
+        # pushes that filter through the chain's projections down to the
+        # scan only when every expression in them is deterministic; a
+        # nondeterministic chain (a transform using rand(), say) would
+        # lose partition pruning, so it is prepared per group instead
+        prepared = compiled.prepare(df)
+        if not prepared._jdf.queryExecution().analyzed().deterministic():
+            prepared = None
+        # the codec dim is read ONCE: the same rows give the run.json
+        # fingerprint and the literal set every group checks codecs
+        # against
+        dim_rows = (self.codec_dim.collect()
+                    if self.codec_dim is not None else None)
+        dim_codecs = _dim_codecs(dim_rows)
         sink = RunSink(output_root) if output_root else None
         manifest = Manifest(output_root) if output_root else None
 
@@ -497,9 +536,9 @@ class ClipsValidationJob:
             "ruleset": ruleset_fingerprint(cfg.rules),
             # the referential dim's CONTENTS change which rows come out
             # exactly like the rule set does (a codec missing from a
-            # rebuilt dim flags every row carrying it) — tiny broadcast
-            # frame, so hashing it costs one dimension-sized collect
-            "codec_dim": frame_fingerprint(self.codec_dim),
+            # rebuilt dim flags every row carrying it) — hashed from the
+            # rows collected above, which must stay dimension-sized
+            "codec_dim": rows_fingerprint(dim_rows),
             "partition_col": cfg.partition_col,
             "audio_check": cfg.audio_check,
             "check_reference": cfg.check_reference,
@@ -630,15 +669,15 @@ class ClipsValidationJob:
         sink_lock = threading.Lock()
 
         def run_group(group, obs):
-            gdf = df.where(_part_filter(cfg.partition_col, group))
+            cond = _part_filter(cfg.partition_col, group)
             # one footer read per file per group: the decode's split
             # listing and the row-integrity audit below share it
             fcache: Dict = {}
-            viols = self.group_violations(gdf, group=group,
-                                          table_root=table_root,
-                                          observation=obs,
-                                          footer_cache=fcache,
-                                          compiled=compiled)
+            viols = self.group_violations(
+                df.where(cond), group=group, table_root=table_root,
+                observation=obs, footer_cache=fcache, compiled=compiled,
+                prepared=None if prepared is None else prepared.where(cond),
+                dim_codecs=dim_codecs)
             n_viols = None
             if sink:
                 if cfg.violations_sink == "exemplars":

@@ -28,9 +28,12 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence, Union
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def _fn_token(fn) -> str:
@@ -378,15 +381,35 @@ class Manifest:
                 os.remove(os.path.join(self.dir, name))
 
 
-def frame_fingerprint(df: Optional[DataFrame]) -> Optional[str]:
-    """Stable hash of a SMALL frame's contents (order-insensitive) —
-    lineage for tiny config-like inputs such as the referential codec
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: Union[str, StructType]) -> DataFrame:
+    """A small frame the driver built, as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a Python RDD, so every
+    action on it (a collect of 8 rows, a write, a join's shuffle) is a
+    multi-task Spark job. An Arrow table built from the same rows is
+    handed to the JVM whole: collecting it runs no job, and a write or
+    an aggregation over it runs a shorter one. ``rows`` are tuples in
+    ``schema``'s field order (a DDL string or a ``StructType``). The
+    rows live in driver memory: only for dimension-sized data."""
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) \
+        else schema
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table)
+
+
+def rows_fingerprint(rows: Optional[Sequence]) -> Optional[str]:
+    """Stable hash of a SMALL frame's collected rows (order-insensitive)
+    — lineage for tiny config-like inputs such as the referential codec
     dim, whose contents change which violation rows come out just as
-    much as the rule set does. Collects the frame: callers must only
-    pass dimension-sized inputs."""
-    if df is None:
+    much as the rule set does. The caller collects the frame once and
+    can use the same rows for the check itself."""
+    if rows is None:
         return None
-    blob = "\n".join(sorted(repr(r) for r in df.collect())).encode()
+    blob = "\n".join(sorted(repr(r) for r in rows)).encode()
     return hashlib.sha256(blob).hexdigest()[:16]
 
 

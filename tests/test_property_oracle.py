@@ -27,10 +27,13 @@ finite_doubles = st.one_of(
 safe_text = st.one_of(
     st.none(),
     st.text(alphabet="abcXYZ019 _\t.é\xa0\u3000\u2028\x1c"
+                     "\r\x85\u2029\v\f"
                      "\xdf\u03a3\u03c2\u0130\U00010428",
             min_size=0, max_size=12))
-# the second alphabet row: ß Σ ς İ 𐐨 — full-vs-simple case-mapping
-# divergers (and 2-/4-byte UTF-8, so byte-length rules see them too)
+# the second alphabet row: the other line terminators and whitespace
+# (CR, NEL, PS, VT, FF) that regex anchors and trims treat differently;
+# the third: ß Σ ς İ 𐐨 — full-vs-simple case-mapping divergers (and
+# 2-/4-byte UTF-8, so byte-length rules see them too)
 
 
 def run_chain(spark, schema, values, dtype):

@@ -6,8 +6,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from jio_spark.audio.synth import clips_frame, write_clips
+from jio_spark import K
 from jio_spark.runner import (ClipsJobConfig, ClipsValidationJob,
-                              default_codec_dim)
+                              default_clip_rules, default_codec_dim)
 from jio_spark.operators.drift import HistSpec, snapshot
 from jio_spark.sinks.writers import Manifest
 
@@ -1337,3 +1338,143 @@ def test_resume_reruns_group_whose_key_another_set_recorded(spark,
                  output_root=out, resume=True)
     assert m1["rows"] == m2["rows"] == 160
     assert m2["groups_run"] == 1
+
+
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+               or [])
+
+
+def test_each_group_runs_one_spark_job(spark, clips_path, tmp_path):
+    """A group's only Spark job is its violations write: the codec dim
+    is read once per run and checked as a literal set (no per-group
+    shuffle or broadcast of it), and every other frame the run builds
+    on the driver is a LocalRelation, whose size does not depend on the
+    group count. So the run at 4 groups runs exactly 2 more jobs than
+    the same run at 2 groups."""
+    df = spark.read.parquet(clips_path)
+    jobs = {}
+    for size in (8, 4):
+        job = ClipsValidationJob(
+            spark, ClipsJobConfig(group_size=size, audio_check=False),
+            codec_dim=default_codec_dim(spark))
+        before = _job_ids(spark)
+        m = job.run(df, output_root=str(tmp_path / f"size{size}"),
+                    table_root=clips_path)
+        jobs[m["groups_run"]] = len(_job_ids(spark) - before)
+    assert jobs[4] - jobs[2] == 2, jobs
+
+
+def test_local_frame_is_jobless_and_round_trips(spark):
+    """local_frame builds a LocalRelation: collecting it runs no Spark
+    job, and its rows and schema equal the Python-list path's — a NULL
+    array, no rows at all, and binary included."""
+    from jio_spark.operators.drift import SNAPSHOT_SCHEMA
+    from jio_spark.sinks.writers import local_frame
+    cases = [
+        (SNAPSHOT_SCHEMA, [("dur_ms", 3, 200.0, 30000.0, None, [0, 3, 0]),
+                           ("sr_hz", 3, 0.0, 48000.0, [1.0, 2.5], [])]),
+        (SNAPSHOT_SCHEMA, []),
+        ("col string, kind string, s binary",
+         [("a", "hll", bytes(range(256))), ("b", "kll", None)]),
+    ]
+    for schema, rows in cases:
+        lf = local_frame(spark, rows, schema)
+        leaf = lf._jdf.queryExecution().logical()
+        assert leaf.getClass().getSimpleName() == "LocalRelation"
+        before = _job_ids(spark)
+        got = lf.collect()
+        assert _job_ids(spark) == before
+        ref = spark.createDataFrame(rows, schema)
+        assert lf.schema == ref.schema
+        assert got == ref.collect()
+
+
+def test_referential_rows_match_left_anti_operator(spark, tmp_path):
+    """The literal-set referential check gives the rows of the left-anti
+    operator (operators.referential) over a dim with a duplicate and a
+    NULL codec, and over an empty dim; the fact side holds NULL and
+    unknown codecs. Both the run (dim collected once) and a standalone
+    group_violations call (dim collected there) are checked."""
+    from jio_spark.operators.referential import referential_check
+    codecs = ["pcm_s16le", "ulaw", None, "mp3", "pcm_s16le", "flac", None,
+              "ulaw", "alaw"]
+    fact = spark.createDataFrame(
+        [(f"clip_{i:012d}", i % 3, c) for i, c in enumerate(codecs)],
+        "clip_id string, bucket_id int, codec string")
+    dim_schema = "codec string, bits_per_sample int, container string"
+    dims = {
+        "dup_and_null": [("pcm_s16le", 16, "wav"), ("ulaw", 8, "wav"),
+                         ("pcm_s16le", 16, "wav"), (None, 8, "wav")],
+        "empty": [],
+    }
+    cols = ["clip_id", "rule_path", "rule_name", "expected", "actual",
+            "message"]
+    for name, rows in dims.items():
+        dim = spark.createDataFrame(rows, dim_schema)
+        want = sorted(tuple(r) for r in referential_check(
+            fact, "codec", dim, "codec", id_cols=["clip_id"]).collect())
+        assert want, name
+        job = ClipsValidationJob(spark, ClipsJobConfig(
+            rules=K.object({"clip_id": K.string().required()}),
+            stat_cols=("codec",), group_size=2, audio_check=False, drift=False), codec_dim=dim)
+        out = str(tmp_path / name)
+        job.run(fact, output_root=out)
+        ran = spark.read.parquet(os.path.join(out, "violations"))
+        alone = job.group_violations(fact)
+        for got in (ran, alone):
+            got = sorted(tuple(r) for r in got.where(
+                F.col("rule_name") == "referential").select(cols).collect())
+            assert got == want, name
+
+
+def _partition_filters(viols) -> list:
+    import re
+    plan = viols._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+
+
+@pytest.mark.parametrize("nondeterministic", [False, True])
+def test_groups_filter_one_prepared_frame(spark, clips_path, monkeypatch,
+                                          nondeterministic):
+    """run() applies the rule chain once and each group filters that
+    frame; the group filter still reaches every scan as a partition
+    filter. A chain holding a nondeterministic expression (a transform
+    using rand()) would stop the filter above it, so such a run
+    prepares per group instead — and keeps its partition filters."""
+    from jio_spark.compiler import CompiledRuleSet
+    prepares, filters = [], []
+    real_prepare = CompiledRuleSet.prepare
+    real_group = ClipsValidationJob.group_violations
+
+    def prepare(self, df):
+        prepares.append(df)
+        return real_prepare(self, df)
+
+    def group_violations(self, *a, **k):
+        viols = real_group(self, *a, **k)
+        filters.append(_partition_filters(viols))
+        return viols
+
+    monkeypatch.setattr(CompiledRuleSet, "prepare", prepare)
+    monkeypatch.setattr(ClipsValidationJob, "group_violations",
+                        group_violations)
+    rules = default_clip_rules()
+    if nondeterministic:
+        rules = K.object({
+            "clip_id": K.string().required().regex(r"^clip_[0-9]{12}$"),
+            # always the value itself, but the optimizer can neither
+            # fold it (a bare `rand() >= 0` it would) nor prune it: the
+            # length rules read the transformed value
+            "transcript": K.string().transform(
+                lambda c: F.when(F.rand() * 2 >= 0, c)).min(1).max(4096)})
+    cfg = ClipsJobConfig(rules=rules, group_size=4, audio_check=False,
+                         drift=False)
+    m = ClipsValidationJob(spark, cfg, codec_dim=default_codec_dim(spark)) \
+        .run(spark.read.parquet(clips_path), table_root=clips_path)
+    assert m["groups_run"] == 4 and m["rows"] == 1200
+    assert len(filters) == 4
+    assert all(f and all("bucket_id" in s for s in f) for f in filters), \
+        filters
+    # the once-per-run frame, plus one per group when it cannot be shared
+    assert len(prepares) == (1 + 4 if nondeterministic else 1)
