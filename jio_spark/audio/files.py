@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .decode import (DECODE_RESULT_SCHEMA, _decode_batches,
                      _unasserted_results, validate_gates)
+from ..sinks.writers import local_frame
 from ..sources.tables import _unescape_hive, parse_hive_values
 
 _COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
@@ -333,6 +334,23 @@ def _corrupt_frame(clip_marker: str, msg: str, pval,
     return pd.DataFrame(out)
 
 
+def split_frame(spark: SparkSession, splits: Sequence[Tuple],
+                n_tasks: int, partition_col: str, ptype: str) -> DataFrame:
+    """The ``(path, rg, partition value)`` splits as a frame of
+    ``n_tasks`` partitions, task ``k`` holding the ``k``-th contiguous
+    run of ``splits`` (runs differ in length by at most one).
+    ``spark.range`` fixes each split index's task, and a broadcast of the
+    split rows (a ``LocalRelation``) supplies its values: the join keeps
+    the range's partitioning, no Python RDD job runs, and the split list
+    stays out of any task closure."""
+    rows = local_frame(
+        spark, [(i, *s) for i, s in enumerate(splits)],
+        f"split bigint, path string, rg int, {partition_col} {ptype}")
+    return (spark.range(len(splits), numPartitions=n_tasks)
+            .join(F.broadcast(rows), F.col("id") == F.col("split"))
+            .select("path", "rg", partition_col))
+
+
 def decode_check_files(spark: SparkSession, root: str,
                        check_reference: bool = True,
                        snr_threshold=30.0,
@@ -344,9 +362,10 @@ def decode_check_files(spark: SparkSession, root: str,
                        footer_cache: Optional[dict] = None) -> DataFrame:
     """Decode-and-check over a parquet clips table, payload-local.
 
-    Splits are deterministically shuffled (hash order) before round-robin
-    packing so file-size skew spreads evenly — the payload-local analog of
-    the salted repartition, without moving a single payload byte.
+    Splits are deterministically shuffled (hash order) before they are
+    packed into tasks in contiguous runs (:func:`split_frame`), so
+    file-size skew spreads evenly — the payload-local analog of the salted
+    repartition, without moving a single payload byte.
 
     ``on_corrupt='violation'``: an unreadable file or row group (damaged
     footer, corrupt data pages) becomes ONE structured decode-violation
@@ -371,10 +390,7 @@ def decode_check_files(spark: SparkSession, root: str,
                          spark.sparkContext.defaultParallelism
                          * tasks_per_cpu))
     ptype = _partition_dtype(splits, partition_col)
-    sdf = spark.createDataFrame(
-        [(p, rg, pv) for p, rg, pv in splits],
-        f"path string, rg int, {partition_col} {ptype}") \
-        .repartition(n_tasks)
+    sdf = split_frame(spark, splits, n_tasks, partition_col, ptype)
 
     # per-codec SNR gates: carry codec into the results so the snr
     # violation's expected text can name that codec's own bound. A table

@@ -1,4 +1,4 @@
-"""Compile a jio-semantics rule tree into Spark ``Column`` expressions.
+"""Compile a jio-semantics rule tree into Spark SQL expressions.
 
 The reference interprets one document at a time: each schema node runs an
 ordered closure list over a ``Context`` carrying ``(Value, Err, skip)``
@@ -7,7 +7,7 @@ ordered closure list over a ``Context`` carrying ``(Value, Err, skip)``
 (``object.go:160-162``).
 
 Here the same state machine is *vectorized*: for every field we thread
-Column expressions through the rule list at **compile time**, emitting
+expressions through the rule list at **compile time**, emitting
 
 * one tri-state verdict per rule (NULL = not evaluated because an earlier
   rule skipped/aborted — preserving jio's first-error-only reporting),
@@ -16,11 +16,17 @@ Column expressions through the rule list at **compile time**, emitting
 * a normalized ("mutated") value expression per field, reproducing the
   write-back at ``object.go:163-165``.
 
-Everything is built from ``pyspark.sql.functions`` — zero UDFs — so the whole
-rule set runs inside Catalyst whole-stage codegen in a single pass over the
-table, at any scale.
+Every expression is Spark SQL text built in pure Python
+(:mod:`jio_spark.sqltext`), with no UDF of its own, so the whole rule set
+runs inside Catalyst whole-stage codegen in a single pass over the table,
+at any scale. Building text costs no driver–JVM round trip per node: Spark
+parses each stage of the chain with one call, and the public ``Column``
+fields of :class:`CompiledRuleSet` are parsed only when read. User
+``transform`` / ``check`` / ``convert`` callables still receive a real
+``Column`` (the named column of their input) and their result becomes a
+stage of its own, which later text refers to by name.
 
-Two deliberate scale properties of the compilation:
+Three deliberate scale properties of the compilation:
 
 1. **Single-reference recurrences.** The threaded state is ``ev`` ("chain
    still active": the vectorized ``!ctx.skip``) and ``err``; each step
@@ -30,9 +36,13 @@ Two deliberate scale properties of the compilation:
    referenced its predecessor twice (e.g. ``skip OR (NOT skip AND x)``)
    inlines to an exponentially sized tree and OOMs the optimizer on
    realistic rule sets — observed, not theoretical.
-2. **SSA state columns.** Each rule's updated state is materialized as a
-   named internal column (one ``withColumns`` batch per rule), so the
-   analyzed plan stays linear even before optimization.
+2. **SSA state columns.** Each rule's updated state is materialized as
+   named internal columns, so the analyzed plan stays linear even before
+   optimization. Stages that do not read each other's columns share one
+   projection (one projection per dependency level).
+3. **Plain root columns.** The root document is the row itself: a field of
+   it is read as its own column, never as a field of a struct of all
+   columns, so no expression drags the whole row along.
 
 Dynamic-typing corners of JSON (a value that *becomes* a number via
 ``ParseString``, number.go:190-201, or a bool via ``Truthy``,
@@ -48,15 +58,19 @@ import itertools
 import math
 import re
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from functools import cached_property
+from typing import (Any, Callable, Dict, Iterator, List, Mapping, Optional,
+                    Tuple, Union)
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sqltext as sx
 from .dsl import (AnySchema, ArraySchema, BaseSchema, BoolSchema, K,
                   NumberSchema, ObjectSchema, RuleSpec, StringSchema)
 from .gofmt import fmt_col, go_repr, go_repr_list
+from .sqltext import Expr
 
 # ---------------------------------------------------------------------------
 # type tags
@@ -111,16 +125,33 @@ def _lit_tag(v: Any) -> str:
 @dataclass
 class VerdictEntry:
     """One rule's compiled outcome — the vectorized analog of a single
-    ``ctx.Abort`` site in the reference."""
+    ``ctx.Abort`` site in the reference. The ``*_text`` fields are the
+    SQL text; the same-named properties parse it into a ``Column``."""
 
     rule_id: str
     path: str
     rule_name: str
     expected: str
-    evaluated: Column   # boolean: did this rule run for the row
-    passed: Column      # boolean: meaningful where evaluated
-    actual: Column      # string: value rendering at rule time (Go %v style)
-    message: Column     # string: jio-shaped error text
+    evaluated_text: Expr   # boolean: did this rule run for the row
+    passed_text: Expr      # boolean: meaningful where evaluated
+    actual_text: Expr      # string: value rendering at rule time (Go %v)
+    message_text: Expr     # string: jio-shaped error text
+
+    @property
+    def evaluated(self) -> Column:
+        return F.expr(self.evaluated_text.sql)
+
+    @property
+    def passed(self) -> Column:
+        return F.expr(self.passed_text.sql)
+
+    @property
+    def actual(self) -> Column:
+        return F.expr(self.actual_text.sql)
+
+    @property
+    def message(self) -> Column:
+        return F.expr(self.message_text.sql)
 
 
 @dataclass
@@ -133,13 +164,13 @@ class ColState:
     expression when the column's type differs from the schema type.
     """
 
-    typed: Column
-    is_typed: Column
-    untyped: Optional[Column]
+    typed: Expr
+    is_typed: Expr
+    untyped: Optional[Expr]
     utype: str               # tag of untyped
     vtype: str               # schema's expected tag ('any' → column's own)
-    ev: Column               # chain still active
-    err: Column              # aborted with error
+    ev: Expr                 # chain still active
+    err: Expr                # aborted with error
     spark_type: Optional[T.DataType] = None
     #: the COLUMN's declared type, never mutated (spark_type tracks the
     #: dynamic value and changes under Convert/Set) — the write-back
@@ -148,25 +179,24 @@ class ColState:
     #: (value-state key, rendering) of the last display() call
     _shown: Optional[tuple] = field(default=None, repr=False, compare=False)
 
-    def cur_null(self) -> Column:
+    def cur_null(self) -> Expr:
         """Is the current dynamic value nil (any.go:48 / 60 / 70)."""
         if self.untyped is None:
             return self.typed.isNull()
-        return F.when(self.is_typed, self.typed.isNull()) \
-                .otherwise(self.untyped.isNull())
+        return sx.when(self.is_typed, self.typed.isNull()) \
+                 .otherwise(self.untyped.isNull())
 
-    def display(self) -> Column:
+    def display(self) -> Expr:
         """Go-%v rendering of the current dynamic value, for messages.
 
         Built once per value state: a rule's ``actual``, its type-fail
         message and its value message all render the same value, and
-        the double rendering alone is a seven-branch CASE tree costing
-        hundreds of JVM calls to build. The memo is keyed on the
-        IDENTITY of every attribute the rendering reads, so a handler
-        that replaces any of them (a coercion, Set, the SSA
-        materialization) starts a fresh entry. One Column object reused
-        at several places in the tree yields the same Catalyst
-        expression as building it again."""
+        the double rendering alone is a seven-branch CASE tree. The memo
+        is keyed on the IDENTITY of every attribute the rendering reads,
+        so a handler that replaces any of them (a coercion, Set, the SSA
+        materialization) starts a fresh entry. The same text reused at
+        several places parses to the same Catalyst expression as
+        rendering it again."""
         key = (self.typed, self.is_typed, self.untyped, self.vtype,
                self.utype, self.spark_type, self.orig_spark_type)
         if self._shown is not None and all(
@@ -175,7 +205,7 @@ class ColState:
         out = fmt_col(self.typed, self.vtype, self.spark_type)
         if self.untyped is not None:
             u = fmt_col(self.untyped, self.utype, self.orig_spark_type)
-            out = F.when(self.is_typed, out).otherwise(u)
+            out = sx.when(self.is_typed, out).otherwise(u)
         self._shown = (key, out)
         return out
 
@@ -201,13 +231,14 @@ class CompileCtx:
         self.pure = pure
         self.entries: List[VerdictEntry] = []
         # path -> (normalized expr, tag): visible to later `when` refs
-        self.completed: Dict[str, Tuple[Column, str]] = {}
+        self.completed: Dict[str, Tuple[Expr, str]] = {}
         # path -> normalized leaf expr for the output projection
-        self.normalized: Dict[str, Column] = {}
-        #: SSA state columns: each stage is one withColumns batch whose
-        #: expressions reference only earlier stages
-        self.stages: List[Dict[str, Column]] = []
-        self.internal_cols: List[str] = []
+        self.normalized: Dict[str, Expr] = {}
+        #: SSA state columns in emission order: each expression reads
+        #: only earlier ones. Text, or the Column of a user callable
+        self.stages: List[Tuple[str, Union[Expr, Column]]] = []
+        #: the one column each user-callable stage reads
+        self.user_inputs: Dict[str, str] = {}
         self._n = 0
         self._ecnt = 0
         # unique per-compilation prefix: a second validate() CHAINED over
@@ -216,33 +247,53 @@ class CompileCtx:
         # columns
         self._prefix = f"_js{next(_CTX_SEQ)}"
 
-    def add(self, path: str, name: str, expected: str, evaluated: Column,
-            passed: Column, actual: Column, message: Column) -> None:
+    def add(self, path: str, name: str, expected: str, evaluated: Expr,
+            passed: Expr, actual: Expr, message: Expr) -> None:
         if self.pure:
             return
         rid = f"{path}#{self._n:03d}:{name}" if path else f"#{self._n:03d}:{name}"
         self._n += 1
         self.entries.append(VerdictEntry(
             rule_id=rid, path=path, rule_name=name, expected=expected,
-            evaluated=evaluated, passed=passed, actual=actual,
-            message=message))
+            evaluated_text=evaluated, passed_text=passed,
+            actual_text=actual, message_text=message))
 
-    def emit(self, kind: str, col: Column) -> Column:
+    def _name(self, kind: str) -> str:
+        name = f"{self._prefix}_{kind}_{self._ecnt}"
+        self._ecnt += 1
+        return name
+
+    def emit(self, kind: str, expr: Expr) -> Expr:
         """Materialize an intermediate as a named column; later references
         become attribute refs instead of copied subtrees."""
         if self.pure:
-            return col
-        name = f"{self._prefix}_{kind}_{self._ecnt}"
-        self._ecnt += 1
-        self.stages.append({name: col})
-        self.internal_cols.append(name)
-        return F.col(name)
+            return expr
+        name = self._name(kind)
+        self.stages.append((name, expr))
+        return sx.col(name)
 
-    def emit_batch(self, batch: Dict[str, Column]) -> None:
-        self.stages.append(batch)
-        self.internal_cols.extend(batch.keys())
+    def apply_user(self, fn: Callable[[Column], Column], x: Expr) -> Expr:
+        """A user ``Column -> Column`` callable over the value ``x``.
 
-    def ref(self, ref_path: str) -> Tuple[Column, str, Column, T.DataType]:
+        ``fn`` gets ``F.col`` of the column holding ``x`` (materialized
+        first if ``x`` is not a bare column), and its result becomes a
+        stage of its own. In pure mode nothing can be materialized (the
+        value may be a lambda variable), so the callable's Column is
+        spliced in as the SQL text of its Catalyst expression. That text
+        spells string literals with backslash escapes, as the default
+        parser settings read them, and a callable whose Column has no
+        SQL form (a Python UDF) is not supported there."""
+        if self.pure:
+            return Expr(_column_sql(fn(F.expr(x.sql))))
+        src = sx.column_name(x)
+        if src is None:
+            src = sx.column_name(self.emit("uin", x))
+        name = self._name("user")
+        self.stages.append((name, fn(F.col(sx.quote(src)))))
+        self.user_inputs[name] = src
+        return sx.col(name)
+
+    def ref(self, ref_path: str) -> Tuple[Expr, str, Expr, T.DataType]:
         """Resolve a `When` refPath (dotted, from the document root —
         context.go:30-45). Fields already walked resolve to their
         *normalized* expression (mutation visibility under SetPriority,
@@ -261,16 +312,16 @@ class CompileCtx:
         parts = ref_path.split(".")
         dt: T.DataType = self.root_schema
         col = None
-        ok = F.lit(True)
+        ok = sx.lit(True)
         for p in parts:
             if isinstance(dt, T.MapType):
                 # jio's ctx.Ref walks map documents too (context.go:
                 # 29-44); try_element_at: NULL for absent keys, but the
                 # `ok` distinction between absent and present-nil is real
                 # key presence
-                ok = ok & F.coalesce(F.map_contains_key(col, F.lit(p)),
-                                     F.lit(False))
-                col = F.try_element_at(col, F.lit(p))
+                ok = ok & sx.coalesce(sx.map_contains_key(col, p),
+                                      sx.lit(False))
+                col = sx.try_element_at(col, p)
                 dt = dt.valueType
                 continue
             if not isinstance(dt, T.StructType) or p not in dt.fieldNames():
@@ -281,7 +332,7 @@ class CompileCtx:
                 # intermediate to be a non-nil object (context.go:36-38)
                 ok = ok & col.isNotNull()
             dt = dt[p].dataType
-            col = F.col(parts[0]) if col is None else col.getField(p)
+            col = sx.col(parts[0]) if col is None else col.getField(p)
         if ref_path in self.completed:
             ccol, ctag = self.completed[ref_path]
             # a coerced completed ref (e.g. parse_string'd) carries its
@@ -291,19 +342,28 @@ class CompileCtx:
         return col, type_tag(dt), ok, dt
 
 
+def _column_sql(col: Column) -> str:
+    """The SQL text of a Column's (unresolved) Catalyst expression."""
+    from pyspark import SparkContext
+    classic = SparkContext._jvm.org.apache.spark.sql.classic
+    converter = getattr(getattr(classic, "ColumnNodeToExpressionConverter$"),
+                        "MODULE$")
+    return converter.apply(col._jc.node()).sql()
+
+
 # ---------------------------------------------------------------------------
 # message builders (error shapes from the reference, SURVEY.md §2 footer)
 
 
-def _msg(path: str, *parts: Column) -> Column:
-    return F.concat(F.lit(f"field `{path}` "), *parts)
+def _msg(path: str, *parts: Expr) -> Expr:
+    return sx.concat(sx.lit(f"field `{path}` "), *parts)
 
 
-def _msg_value(path: str, st: ColState, suffix: str) -> Column:
-    return _msg(path, F.lit("value "), st.display(), F.lit(" " + suffix))
+def _msg_value(path: str, st: ColState, suffix: str) -> Expr:
+    return _msg(path, sx.lit("value "), st.display(), sx.lit(" " + suffix))
 
 
-def _type_fail_msg(path: str, st: ColState) -> Column:
+def _type_fail_msg(path: str, st: ColState) -> Expr:
     noun = _TYPE_NOUN.get(st.vtype, st.vtype)
     return _msg_value(path, st, f"is not {noun}")
 
@@ -312,14 +372,14 @@ def _type_fail_msg(path: str, st: ColState) -> Column:
 # state-step primitives (the vectorized Abort/Skip of context.go:53-61)
 
 
-def _abort_step(cc: CompileCtx, st: ColState, fail_cond: Column) -> None:
+def _abort_step(cc: CompileCtx, st: ColState, fail_cond: Expr) -> None:
     """ctx.Abort where fail_cond holds: error + stop. Single-reference
     recurrence (see module docstring)."""
     st.err = st.err | (st.ev & fail_cond)
     st.ev = st.ev & ~fail_cond
 
 
-def _skip_step(cc: CompileCtx, st: ColState, skip_cond: Column) -> None:
+def _skip_step(cc: CompileCtx, st: ColState, skip_cond: Expr) -> None:
     """ctx.Skip where skip_cond holds: stop without error."""
     st.ev = st.ev & ~skip_cond
 
@@ -328,9 +388,9 @@ def _skip_step(cc: CompileCtx, st: ColState, skip_cond: Column) -> None:
 # the chain compiler
 
 
-def compile_chain(schema: BaseSchema, col: Optional[Column],
+def compile_chain(schema: BaseSchema, col: Optional[Expr],
                   dtype: Optional[T.DataType], path: str, cc: CompileCtx,
-                  init_ev: Column,
+                  init_ev: Expr,
                   seed: Optional[ColState] = None) -> ColState:
     """Compile one field's rule list — the analog of ``Validate``
     (any.go:122-132): run rules in order with skip/abort threading, then the
@@ -342,13 +402,13 @@ def compile_chain(schema: BaseSchema, col: Optional[Column],
     if seed is not None:
         st = ColState(typed=seed.typed, is_typed=seed.is_typed,
                       untyped=seed.untyped, utype=seed.utype,
-                      vtype=seed.vtype, ev=F.lit(False), err=F.lit(False),
+                      vtype=seed.vtype, ev=sx.lit(False), err=sx.lit(False),
                       spark_type=seed.spark_type,
                       orig_spark_type=seed.orig_spark_type)
     else:
         st = _init_state(schema, col, dtype)
     st.ev = init_ev
-    st.err = F.lit(False)
+    st.err = sx.lit(False)
 
     for spec in schema._ordered_rules():
         handler = _HANDLERS.get(spec.name)
@@ -374,38 +434,34 @@ _STATE_ATTRS = ("typed", "is_typed", "untyped", "ev", "err")
 
 
 def _materialize_state(cc: CompileCtx, st: ColState, prev: tuple) -> None:
-    """Emit every state expr a rule changed as named columns (one
-    withColumns batch per rule — all exprs reference only pre-rule state)."""
+    """Emit every state expr a rule changed as a named column (all of a
+    rule's exprs reference only pre-rule state). A state that is already
+    a bare column (a user callable's stage) is read as it is."""
     if cc.pure:
         return
-    batch: Dict[str, Column] = {}
     for attr, old in zip(_STATE_ATTRS, prev):
         new = getattr(st, attr)
-        if new is not old and new is not None:
-            name = f"{cc._prefix}_{attr}_{cc._ecnt}"
-            cc._ecnt += 1
-            batch[name] = new
-            setattr(st, attr, F.col(name))
-    if batch:
-        cc.emit_batch(batch)
+        if new is not old and new is not None \
+                and sx.column_name(new) is None:
+            setattr(st, attr, cc.emit(attr, new))
 
 
-def _init_state(schema: BaseSchema, col: Optional[Column],
+def _init_state(schema: BaseSchema, col: Optional[Expr],
                 dtype: Optional[T.DataType]) -> ColState:
     tag = type_tag(dtype)
-    f = F.lit(False)
+    f = sx.lit(False)
     if schema.TYPE == "any":
-        return ColState(typed=col, is_typed=F.lit(True), untyped=None,
+        return ColState(typed=col, is_typed=sx.lit(True), untyped=None,
                         utype=tag, vtype=tag, ev=f, err=f, spark_type=dtype,
                         orig_spark_type=dtype)
     want = schema.TYPE
     matches = (tag == want) or (want == "struct" and tag == "map")
     if matches:
-        return ColState(typed=col, is_typed=F.lit(True), untyped=None,
+        return ColState(typed=col, is_typed=sx.lit(True), untyped=None,
                         utype=tag, vtype=want, ev=f, err=f, spark_type=dtype,
                         orig_spark_type=dtype)
-    null_typed = F.lit(None).cast(_null_type(want))
-    return ColState(typed=null_typed, is_typed=F.lit(False), untyped=col,
+    null_typed = sx.lit(None).cast(_null_type(want))
+    return ColState(typed=null_typed, is_typed=sx.lit(False), untyped=col,
                     utype=tag, vtype=want, ev=f, err=f, spark_type=dtype,
                     orig_spark_type=dtype)
 
@@ -431,7 +487,7 @@ def _h_required(cc, st, path, spec, schema):
     # any.go:45-52
     is_null = st.cur_null()
     cc.add(path, "required", "required", st.ev, ~is_null, st.display(),
-           F.lit(f"field `{path}` is required"))
+           sx.lit(f"field `{path}` is required"))
     _abort_step(cc, st, is_null)
 
 
@@ -449,14 +505,14 @@ def _h_default(cc, st, path, spec, schema):
         vt = st.vtype
         if isinstance(st.spark_type, T.MapType):
             pairs = [x for k, val in v.items()
-                     for x in (F.lit(k), F.lit(val))]
-            lit = F.create_map(*pairs).cast(st.spark_type)
+                     for x in (sx.lit(k), sx.lit(val))]
+            lit = sx.create_map(*pairs).cast(st.spark_type)
         elif isinstance(st.spark_type, T.StructType):
             names = st.spark_type.fieldNames()
-            lit = F.struct(*[
-                (F.lit(v[n]) if n in v
-                 else F.lit(None).cast(st.spark_type[n].dataType))
-                .alias(n) for n in names]).cast(st.spark_type)
+            lit = sx.struct({
+                n: (sx.lit(v[n]) if n in v
+                    else sx.lit(None).cast(st.spark_type[n].dataType))
+                for n in names}).cast(st.spark_type)
         else:
             # DOCUMENTED DEVIATION (pinned in test_map_custom.py): a dict
             # default over a column that is physically neither map nor
@@ -471,9 +527,9 @@ def _h_default(cc, st, path, spec, schema):
                 f"default({v!r}) incompatible with {st.vtype} "
                 f"field {path}")
     else:
-        lit = F.lit(v)
+        lit = sx.lit(v)
     if st.vtype == "any" or vt == st.vtype:
-        st.typed = F.when(was_null, lit).otherwise(st.typed)
+        st.typed = sx.when(was_null, lit).otherwise(st.typed)
         st.is_typed = st.is_typed | was_null
         if isinstance(v, float) and not isinstance(v, bool) \
                 and isinstance(st.spark_type,
@@ -485,7 +541,7 @@ def _h_default(cc, st, path, spec, schema):
             st.spark_type = T.DoubleType()
     else:
         if st.untyped is not None and vt == st.utype:
-            st.untyped = F.when(was_null, lit).otherwise(st.untyped)
+            st.untyped = sx.when(was_null, lit).otherwise(st.untyped)
         else:
             raise TypeError(
                 f"default({v!r}) incompatible with {st.vtype} field {path}")
@@ -506,15 +562,15 @@ def _h_set(cc, st, path, spec, schema):
         # Set(nil): Required sees nil, typed chains fail their type
         # gate per-row (Go type switch on nil), Any chains carry nil
         if schema.TYPE == "any" and st.spark_type is not None:
-            st.typed = F.lit(None).cast(st.spark_type)
+            st.typed = sx.lit(None).cast(st.spark_type)
         else:
-            st.typed = F.lit(None).cast(_null_type(st.vtype))
-        st.is_typed = F.lit(schema.TYPE == "any")
+            st.typed = sx.lit(None).cast(_null_type(st.vtype))
+        st.is_typed = sx.lit(schema.TYPE == "any")
         st.untyped = None
         return
     if vt == st.vtype:
-        st.typed = F.lit(float(v)) if st.vtype == "double" else F.lit(v)
-        st.is_typed = F.lit(True)
+        st.typed = sx.lit(float(v)) if st.vtype == "double" else sx.lit(v)
+        st.is_typed = sx.lit(True)
         st.untyped = None
         if st.vtype == "double" and isinstance(
                 st.spark_type, (T.ByteType, T.ShortType, T.IntegerType,
@@ -527,8 +583,8 @@ def _h_set(cc, st, path, spec, schema):
     elif schema.TYPE == "any":
         # Any chain: the unconditional replace retags the dynamic
         # value for every row — rebuild the state around the literal
-        st.typed = F.lit(v)
-        st.is_typed = F.lit(True)
+        st.typed = sx.lit(v)
+        st.is_typed = sx.lit(True)
         st.untyped = None
         st.utype = vt
         st.vtype = vt
@@ -537,9 +593,9 @@ def _h_set(cc, st, path, spec, schema):
         # cross-type Set on a typed chain: the value rides the untyped
         # carrier and every later type gate fails per-row, exactly like
         # the reference substituting a mis-typed value
-        st.untyped = F.lit(v)
+        st.untyped = sx.lit(v)
         st.utype = vt
-        st.is_typed = F.lit(False)
+        st.is_typed = sx.lit(False)
 
 
 def _is_nan_lit(v: Any) -> bool:
@@ -562,7 +618,7 @@ def _h_equal(cc, st, path, spec, schema):
         want = "double" if isinstance(schema, NumberSchema) else "string"
         cross = _lit_tag(v) != want
         _gated_check(cc, st, path, "equal", expected,
-                     (lambda c: F.lit(False))
+                     (lambda c: sx.lit(False))
                      if (_is_nan_lit(v) or cross)
                      else (lambda c: c.eqNullSafe(_typed_lit(st, v))),
                      f"is not {expected}")
@@ -586,12 +642,12 @@ def _h_valid(cc, st, path, spec, schema):
         lits = [_typed_lit(st, v) for v in values
                 if not _is_nan_lit(v) and _lit_tag(v) == want]
         _gated_check(cc, st, path, "valid", expected,
-                     lambda c: c.isin(*lits) if lits else F.lit(False),
+                     lambda c: c.isin(*lits) if lits else sx.lit(False),
                      f"not in {expected}")
         return
     # AnySchema.Valid (any.go:105-119): untyped membership
     preds = [_dyn_eq(st, v) for v in values]
-    pass_pred = preds[0] if preds else F.lit(False)
+    pass_pred = preds[0] if preds else sx.lit(False)
     for p in preds[1:]:
         pass_pred = pass_pred | p
     cc.add(path, "valid", expected, st.ev, pass_pred, st.display(),
@@ -599,27 +655,27 @@ def _h_valid(cc, st, path, spec, schema):
     _abort_step(cc, st, ~pass_pred)
 
 
-def _dyn_eq(st: ColState, v: Any) -> Column:
+def _dyn_eq(st: ColState, v: Any) -> Expr:
     """Go interface equality of the current dynamic value vs literal v."""
     vt = _lit_tag(v)
     if v is None:
         return st.cur_null()
     if _is_nan_lit(v):
-        return F.lit(False)
+        return sx.lit(False)
     preds = []
     if vt == st.vtype or st.vtype == "any":
         preds.append(st.is_typed & st.typed.eqNullSafe(_typed_lit(st, v)))
     if st.untyped is not None and vt == st.utype:
-        preds.append(~st.is_typed & st.untyped.eqNullSafe(F.lit(v)))
+        preds.append(~st.is_typed & st.untyped.eqNullSafe(sx.lit(v)))
     if not preds:
-        return F.lit(False)
+        return sx.lit(False)
     out = preds[0]
     for p in preds[1:]:
         out = out | p
     return out
 
 
-def _typed_lit(st: ColState, v: Any) -> Column:
+def _typed_lit(st: ColState, v: Any) -> Expr:
     if st.vtype == "double" and isinstance(v, (int, float)) \
             and not isinstance(v, bool):
         if st.spark_type is not None and type_tag(st.spark_type) == "double" \
@@ -627,27 +683,27 @@ def _typed_lit(st: ColState, v: Any) -> Column:
             # integral columns compare against integral literals so the
             # predicate stays pushdown-friendly (no cast on the column side)
             if float(v) == int(v):
-                return F.lit(int(v))
-        return F.lit(float(v))
-    return F.lit(v)
+                return sx.lit(int(v))
+        return sx.lit(float(v))
+    return sx.lit(v)
 
 
 def _gated_check(cc, st: ColState, path: str, name: str, expected: str,
-                 pred_fn: Callable[[Column], Column], fail_suffix: str):
+                 pred_fn: Callable[[Expr], Expr], fail_suffix: str):
     """The ``Check`` pattern (number.go:99-110, string.go:98-109,
     array.go:81-91): abort "is not <type>" when the dynamic value is not of
     the schema type, else run the predicate."""
     type_ok = st.is_typed
-    pred = F.coalesce(pred_fn(st.typed), F.lit(False))
+    pred = sx.coalesce(pred_fn(st.typed), sx.lit(False))
     passed = type_ok & pred
-    message = F.when(~type_ok, _type_fail_msg(path, st)) \
-               .otherwise(_msg_value(path, st, fail_suffix))
+    message = sx.when(~type_ok, _type_fail_msg(path, st)) \
+                .otherwise(_msg_value(path, st, fail_suffix))
     cc.add(path, name, expected, st.ev, passed, st.display(), message)
     _abort_step(cc, st, ~passed)
 
 
 def _gated_transform(cc, st: ColState, path: str, name: str,
-                     fn: Callable[[Column], Column],
+                     fn: Callable[[Expr], Expr],
                      result_cast: Optional[str] = None):
     """``Convert`` pattern (number.go:161-170, string.go:181-190): abort
     "is not <type>" on type mismatch, else replace the value."""
@@ -679,7 +735,7 @@ def _h_nmax(cc, st, path, spec, schema):
     # true), so NaN must be exempted explicitly. Min needs no exemption:
     # Go's !(NaN < min) and Spark's NaN >= min are both true.
     _gated_check(cc, st, path, "max", f"<= {go_repr(v)}",
-                 lambda c: F.isnan(c.cast("double"))
+                 lambda c: sx.isnan(c.cast("double"))
                  | (c <= _typed_lit(st, v)),
                  f"exceeded {go_repr(v)}")
 
@@ -689,11 +745,11 @@ def _h_integer(cc, st, path, spec, schema):
     if st.spark_type is not None and isinstance(
             st.spark_type, (T.ByteType, T.ShortType, T.IntegerType,
                             T.LongType)):
-        pred_fn = lambda c: F.lit(True)  # integral columns trivially pass
+        pred_fn = lambda c: sx.lit(True)  # integral columns trivially pass
     else:
         # Go: NaN != math.Trunc(NaN) fails Integer; Spark's NaN == NaN
         # is true, so NaN must be rejected explicitly
-        pred_fn = lambda c: ~F.isnan(c.cast("double")) & (c == _trunc(c))
+        pred_fn = lambda c: ~sx.isnan(c.cast("double")) & (c == _trunc(c))
     _gated_check(cc, st, path, "integer", "integer", pred_fn, "not integer")
 
 
@@ -706,23 +762,23 @@ _INTEGRAL_ABOVE = 2.0 ** 53
 
 
 def _big_identity(fn, threshold: float = _INTEGRAL_ABOVE):
-    return lambda c: F.when(F.abs(c) >= F.lit(threshold), c) \
+    return lambda c: sx.when(sx.abs(c) >= sx.lit(threshold), c) \
                       .otherwise(fn(c).cast("double"))
 
 
-def _trunc(c: Column) -> Column:
+def _trunc(c: Expr) -> Expr:
     # Go math.Trunc: toward zero
     return _big_identity(
-        lambda x: F.when(x >= 0, F.floor(x)).otherwise(F.ceil(x)))(c)
+        lambda x: sx.when(x >= 0, sx.floor(x)).otherwise(sx.ceil(x)))(c)
 
 
 def _h_ceil(cc, st, path, spec, schema):
-    _gated_transform(cc, st, path, "ceil", _big_identity(F.ceil),
+    _gated_transform(cc, st, path, "ceil", _big_identity(sx.ceil),
                      result_cast="double")
 
 
 def _h_floor(cc, st, path, spec, schema):
-    _gated_transform(cc, st, path, "floor", _big_identity(F.floor),
+    _gated_transform(cc, st, path, "floor", _big_identity(sx.floor),
                      result_cast="double")
 
 
@@ -734,11 +790,11 @@ def _h_round(cc, st, path, spec, schema):
     # ulp below .5 (0.49999999999999994 + 0.5 → 1.0, Go returns 0).
     # Comparing the exact fractional part avoids the addition entirely:
     # round(|v|) = floor(|v|) + (|v| - floor(|v|) >= 0.5 ? 1 : 0).
-    def go_round(c: Column) -> Column:
-        a = F.abs(c)
-        fl = F.floor(a)
-        return F.signum(c) * (fl + F.when(a - fl >= 0.5, F.lit(1))
-                                    .otherwise(F.lit(0)))
+    def go_round(c: Expr) -> Expr:
+        a = sx.abs(c)
+        fl = sx.floor(a)
+        return sx.signum(c) * (fl + sx.when(a - fl >= 0.5, sx.lit(1))
+                                     .otherwise(sx.lit(0)))
     _gated_transform(cc, st, path, "round", _big_identity(go_round),
                      result_cast="double")
 
@@ -746,7 +802,8 @@ def _h_round(cc, st, path, spec, schema):
 def _h_convert(cc, st, path, spec, schema):
     fn = spec.params["fn"]
     cast = "double" if isinstance(schema, NumberSchema) else None
-    _gated_transform(cc, st, path, "convert", fn, result_cast=cast)
+    _gated_transform(cc, st, path, "convert",
+                     lambda x: cc.apply_user(fn, x), result_cast=cast)
 
 
 # Go strconv.ParseFloat syntax (decimal + inf/infinity/nan forms, NO
@@ -777,15 +834,15 @@ def _h_parse_string(cc, st, path, spec, schema):
     if st.untyped is None or st.utype != "string":
         return  # nothing string-typed can flow here
     u = st.untyped
-    num = F.replace(u, F.lit("_"), F.lit("")).try_cast("double")
-    finite = (num > F.lit(float("-inf"))) & (num < F.lit(float("inf")))
-    parsed = F.when(u.rlike(_GO_FLOAT_NUM),
-                    F.when(finite, num)) \
-              .when(u.rlike(_GO_FLOAT_INF),
-                    F.when(u.startswith("-"),
-                           F.lit(float("-inf")))
-                     .otherwise(F.lit(float("inf")))) \
-              .when(F.lower(u) == "nan", F.lit(float("nan")))
+    num = sx.replace(u, sx.lit("_"), sx.lit("")).try_cast("double")
+    finite = (num > sx.lit(float("-inf"))) & (num < sx.lit(float("inf")))
+    parsed = sx.when(u.rlike(_GO_FLOAT_NUM),
+                     sx.when(finite, num)) \
+               .when(u.rlike(_GO_FLOAT_INF),
+                     sx.when(u.startswith("-"),
+                             sx.lit(float("-inf")))
+                       .otherwise(sx.lit(float("inf")))) \
+               .when(sx.lower(u) == "nan", sx.lit(float("nan")))
     attempt = ~st.is_typed & u.isNotNull()
     ok = attempt & parsed.isNotNull()
     fail = attempt & parsed.isNull()
@@ -793,7 +850,7 @@ def _h_parse_string(cc, st, path, spec, schema):
            ~parsed.isNull(), st.display(),
            # jio's message, typo and all (number.go:195)
            _msg_value(path, st, "corvert to float64 failed"))
-    st.typed = F.when(ok, parsed).otherwise(st.typed)
+    st.typed = sx.when(ok, parsed).otherwise(st.typed)
     st.is_typed = st.is_typed | ok
     _abort_step(cc, st, fail)
 
@@ -804,45 +861,100 @@ def _h_parse_string(cc, st, path, spec, schema):
 def _h_smin(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "min", f"len >= {n}",
-                 lambda c: F.octet_length(c) >= n, f"length less than {n}")
+                 lambda c: sx.octet_length(c) >= n, f"length less than {n}")
 
 
 def _h_smax(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "max", f"len <= {n}",
-                 lambda c: F.octet_length(c) <= n, f"length exceeded {n}")
+                 lambda c: sx.octet_length(c) <= n, f"length exceeded {n}")
 
 
 def _h_slength(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "length", f"len == {n}",
-                 lambda c: F.octet_length(c) == n,
+                 lambda c: sx.octet_length(c) == n,
                  f"length not equal to {n}")
 
 
-#: the tokens of a pattern that can hold a ``$`` which is NOT the end
-#: anchor (a \Q..\E span, an escape pair, a character class), or the
-#: anchor itself
-_RE_DOLLAR = re.compile(
-    r"\\Q.*?(?:\\E|\Z)|\\.|\[\^?\]?(?:\[:\^?\w+:\]|\\.|[^\]\\])*\]|\$",
-    re.S)
+#: the tokens of a pattern that _go_regex rewrites or must step over: a
+#: \Q..\E span, a Unicode class name, any other escape pair, a character
+#: class, or the end anchor
+_RE_TOKEN = re.compile(
+    r"\\Q.*?(?:\\E|\Z)|\\[pP](?:\{\^?\w+\}|\w)|\\."
+    r"|\[\^?\]?(?:\[:\^?\w+:\]|\\.|[^\]\\])*\]|\$", re.S)
+#: inside a character class: a Unicode class name, or any escape pair
+_RE_CLASS_TOKEN = re.compile(r"\\[pP](?:\{\^?\w+\}|\w)|\\.", re.S)
 _RE_MULTILINE = re.compile(r"\(\?[a-zA-Z]*m")
+#: RE2's \b and \B test ASCII word characters, whatever the case flags;
+#: Java's test Unicode letters and digits
+_ASCII_WORD = "[0-9A-Za-z_]"
+_BOUNDARY = {
+    "\\b": f"(?-i:(?<={_ASCII_WORD})(?!{_ASCII_WORD})"
+           f"|(?<!{_ASCII_WORD})(?={_ASCII_WORD}))",
+    "\\B": f"(?-i:(?<={_ASCII_WORD})(?={_ASCII_WORD})"
+           f"|(?<!{_ASCII_WORD})(?!{_ASCII_WORD}))",
+}
+#: the Unicode general categories RE2 names in \p{..}; Java spells them
+#: the same. Any other name RE2 accepts is a script, which Java spells
+#: with an ``Is`` prefix
+_GO_CATEGORIES = frozenset(
+    "C Cc Cf Co Cs L Ll Lm Lo Lt Lu M Mc Me Mn N Nd Nl No "
+    "P Pc Pd Pe Pf Pi Po Ps S Sc Sk Sm So Z Zl Zp Zs".split())
+
+
+def _java_unicode_class(token: str) -> str:
+    r"""RE2's ``\pL`` / ``\p{Greek}`` / ``\P{^Greek}`` in Java's spelling."""
+    negated = token[1] == "P"
+    name = token[3:-1] if token[2] == "{" else token[2]
+    if name.startswith("^"):
+        negated, name = not negated, name[1:]
+    if name == "Any":
+        return r"[^\x{0}-\x{10FFFF}]" if negated else r"[\x{0}-\x{10FFFF}]"
+    if name not in _GO_CATEGORIES:
+        name = "Is" + name
+    return ("\\P{" if negated else "\\p{") + name + "}"
 
 
 def _go_regex(pattern: str) -> str:
     r"""A Go RE2 pattern as the Java pattern ``rlike`` needs for the same
-    verdicts on line terminators. Without flags RE2's ``.`` excludes only
-    ``\n`` and ``$`` matches only at the end of the text; Java's ``.``
-    also excludes ``\r \x85 \u2028 \u2029`` and its ``$`` also matches
-    before a final line terminator. ``(?d)`` (UNIX_LINES) narrows Java's
-    terminators to ``\n``, and each end anchor outside a character class
-    becomes ``\z`` -- unless the pattern turns on ``(?m)``, where ``$``
-    ends a line, and under ``(?d)`` Java's lines end only at ``\n``, as
-    RE2's do."""
-    if _RE_MULTILINE.search(pattern):
-        return "(?d)" + pattern
-    return "(?d)" + _RE_DOLLAR.sub(
-        lambda m: r"\z" if m.group() == "$" else m.group(), pattern)
+    verdicts.
+
+    * Line terminators: without flags RE2's ``.`` excludes only ``\n``
+      and ``$`` matches only at the end of the text; Java's ``.`` also
+      excludes ``\r \x85 \u2028 \u2029`` and its ``$`` also matches
+      before a final line terminator. ``(?d)`` (UNIX_LINES) narrows
+      Java's terminators to ``\n``, and each end anchor outside a
+      character class becomes ``\z`` -- unless the pattern turns on
+      ``(?m)``, where ``$`` ends a line, and under ``(?d)`` Java's lines
+      end only at ``\n``, as RE2's do.
+    * Case folding: RE2's ``(?i)`` folds Unicode (``k`` matches the
+      Kelvin sign); Java's folds ASCII only unless ``(?u)``
+      (UNICODE_CASE) is on, which changes nothing without ``(?i)``.
+    * Word boundaries: RE2's ``\b`` / ``\B`` are ASCII; Java's are
+      Unicode, so they become lookarounds over ``[0-9A-Za-z_]``.
+    * Unicode classes: RE2 names a script bare (``\p{Greek}``), where
+      Java needs ``\p{IsGreek}`` and would throw on the bare name."""
+    multiline = _RE_MULTILINE.search(pattern) is not None
+
+    def in_class(m: re.Match) -> str:
+        tok = m.group()
+        # an escape pair is two characters, a class name longer
+        return _java_unicode_class(tok) if len(tok) > 2 else tok
+
+    def rewrite(m: re.Match) -> str:
+        tok = m.group()
+        if tok == "$":
+            return tok if multiline else r"\z"
+        if tok in _BOUNDARY:
+            return _BOUNDARY[tok]
+        if tok[:2] in ("\\p", "\\P") and len(tok) > 2:
+            return _java_unicode_class(tok)
+        if tok[0] == "[":
+            return _RE_CLASS_TOKEN.sub(in_class, tok)
+        return tok
+
+    return "(?du)" + _RE_TOKEN.sub(rewrite, pattern)
 
 
 def _h_regex(cc, st, path, spec, schema):
@@ -876,7 +988,7 @@ def _h_strim(cc, st, path, spec, schema):
     # hand-listed code points the old class had).
     _gated_transform(
         cc, st, path, 'trim',
-        lambda c: F.regexp_replace(c, r'(?U)^\s+|\s+$', ''))
+        lambda c: sx.regexp_replace(c, r'(?U)^\s+|\s+$', ''))
 
 
 # bools ------------------------------------------------------------------
@@ -892,10 +1004,10 @@ def _h_falsy(cc, st, path, spec, schema):
 
 def _coerce_bool(st: ColState, values, result: bool):
     # bool.go:94-113: listed values become true/false
-    match = F.lit(False)
+    match = sx.lit(False)
     for v in values:
         match = match | _dyn_eq(st, v)
-    st.typed = F.when(match, F.lit(result)).otherwise(st.typed)
+    st.typed = sx.when(match, sx.lit(result)).otherwise(st.typed)
     st.is_typed = st.is_typed | match
 
 
@@ -905,19 +1017,19 @@ def _coerce_bool(st: ColState, values, result: bool):
 def _h_amin(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "min", f"len >= {n}",
-                 lambda c: F.size(c) >= n, f"length less than {n}")
+                 lambda c: sx.size(c) >= n, f"length less than {n}")
 
 
 def _h_amax(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "max", f"len <= {n}",
-                 lambda c: F.size(c) <= n, f"length exceeded {n}")
+                 lambda c: sx.size(c) <= n, f"length exceeded {n}")
 
 
 def _h_alength(cc, st, path, spec, schema):
     n = spec.params["value"]
     _gated_check(cc, st, path, "length", f"len == {n}",
-                 lambda c: F.size(c) == n, f"length not equal to {n}")
+                 lambda c: sx.size(c) == n, f"length not equal to {n}")
 
 
 def _h_items(cc, st, path, spec, schema):
@@ -926,34 +1038,34 @@ def _h_items(cc, st, path, spec, schema):
     elem_type = (st.spark_type.elementType
                  if isinstance(st.spark_type, T.ArrayType) else None)
 
-    def elem_ok(e: Column) -> Column:
+    def elem_ok(e: Expr) -> Expr:
         preds = [compile_pass_predicate(s, e, elem_type, cc.root_schema)
                  for s in schemas]
         if not preds:
             # Items() with zero schemas is legal in the reference: no
             # schema can validate an element, so every element fails and
             # only empty arrays pass (array.go:95-113)
-            return F.lit(False)
+            return sx.lit(False)
         out = preds[0]
         for p in preds[1:]:
             out = out | p
         return out
 
     _gated_check(cc, st, path, "items", "items",
-                 lambda c: F.forall(c, elem_ok), "not valid type")
+                 lambda c: sx.forall(c, elem_ok), "not valid type")
 
 
 # objects ----------------------------------------------------------------
 
 
-def _presence(st: ColState, key: str) -> Column:
+def _presence(st: ColState, key: str) -> Expr:
     """Key presence. On fixed (struct) schemas a key "present" means IS NOT
     NULL (FIXTURES.md §4 mapping); on MapType it is real key presence."""
     if isinstance(st.spark_type, T.MapType):
-        return F.map_contains_key(st.typed, key)
+        return sx.map_contains_key(st.typed, key)
     if isinstance(st.spark_type, T.StructType):
         if key not in st.spark_type.fieldNames():
-            return F.lit(False)
+            return sx.lit(False)
         return st.typed.getField(key).isNotNull()
     raise TypeError("with/without on a non-object field")
 
@@ -964,9 +1076,9 @@ def _object_gate(cc, st, path, name: str, expected: str) -> bool:
     schema compilation. Returns True when the chain can proceed."""
     if isinstance(st.spark_type, (T.MapType, T.StructType)):
         return True
-    cc.add(path, name, expected, st.ev, F.lit(False), st.display(),
+    cc.add(path, name, expected, st.ev, sx.lit(False), st.display(),
            _type_fail_msg(path, st))
-    _abort_step(cc, st, F.lit(True))
+    _abort_step(cc, st, sx.lit(True))
     return False
 
 
@@ -976,14 +1088,15 @@ def _h_with(cc, st, path, spec, schema):
     if not _object_gate(cc, st, path, "with", go_repr_list(keys)):
         return
     presences = [(k, _presence(st, k)) for k in keys]
-    passed = F.lit(True)
+    passed = sx.lit(True)
     for _, p in presences:
         passed = passed & p
-    first_missing = F.array_compact(F.array(
-        *[F.when(~p, F.lit(k)).otherwise(F.lit(None)) for k, p in presences]))
-    message = F.concat(F.lit(f"field `{path}` not contains "),
-                       F.coalesce(F.try_element_at(first_missing, F.lit(1)),
-                                  F.lit("")))
+    first_missing = sx.array_compact(sx.array(
+        *[sx.when(~p, sx.lit(k)).otherwise(sx.lit(None))
+          for k, p in presences]))
+    message = sx.concat(sx.lit(f"field `{path}` not contains "),
+                       sx.coalesce(sx.try_element_at(first_missing, sx.lit(1)),
+                                  sx.lit("")))
     cc.add(path, "with", go_repr_list(keys), st.ev, passed, st.display(),
            message)
     _abort_step(cc, st, ~passed)
@@ -995,13 +1108,14 @@ def _h_without(cc, st, path, spec, schema):
     if not _object_gate(cc, st, path, "without", go_repr_list(keys)):
         return
     presences = [(k, _presence(st, k)) for k in keys]
-    passed = F.lit(True)
+    passed = sx.lit(True)
     for _, p in presences:
         passed = passed & ~p
-    present = F.array_compact(F.array(
-        *[F.when(p, F.lit(k)).otherwise(F.lit(None)) for k, p in presences]))
-    message = F.concat(F.lit(f"field `{path}` contains "),
-                       F.array_join(present, ","))
+    present = sx.array_compact(sx.array(
+        *[sx.when(p, sx.lit(k)).otherwise(sx.lit(None))
+          for k, p in presences]))
+    message = sx.concat(sx.lit(f"field `{path}` contains "),
+                       sx.array_join(present, ","))
     cc.add(path, "without", go_repr_list(keys), st.ev, passed, st.display(),
            message)
     _abort_step(cc, st, ~passed)
@@ -1031,12 +1145,12 @@ def _h_keys(cc, st, path, spec, schema):
         # normalized map keeps its original values — verdicts and the
         # walk's first-error stop are full-fidelity.
         walk_ok = st.ev
-        walk_err = F.lit(False)
+        walk_err = sx.lit(False)
         vtype = st.spark_type.valueType
         for key, child_schema in _sorted_children(children):
             # try_element_at: NULL for missing keys (ANSI-mode getItem
             # would throw MAP_KEY_DOES_NOT_EXIST)
-            child_col = F.try_element_at(st.typed, F.lit(key))
+            child_col = sx.try_element_at(st.typed, sx.lit(key))
             child_path = f"{path}.{key}" if path else key
             sub = compile_chain(child_schema, child_col, vtype,
                                 child_path, cc, init_ev=walk_ok)
@@ -1053,9 +1167,9 @@ def _h_keys(cc, st, path, spec, schema):
     # child chains gate on "object still active AND no earlier child
     # errored" — `walk_ok` threads with single references
     walk_ok = st.ev
-    walk_err = F.lit(False)
-    norm_fields: Dict[str, Column] = {}
-    fallback_fields: Dict[str, Column] = {}
+    walk_err = sx.lit(False)
+    norm_fields: Dict[str, Expr] = {}
+    fallback_fields: Dict[str, Expr] = {}
     norm_types: Dict[str, T.DataType] = {}
     for key, child_schema in _sorted_children(children):
         if key not in st.spark_type.fieldNames():
@@ -1070,7 +1184,7 @@ def _h_keys(cc, st, path, spec, schema):
             # document's role here, so the child validates an always-nil
             # value (optional/default/required decide, like any nil).
             # No write-back entry: the rebuilt struct must keep its shape.
-            sub = compile_chain(child_schema, F.lit(None), None,
+            sub = compile_chain(child_schema, sx.lit(None), None,
                                 f"{path}.{key}" if path else key, cc,
                                 init_ev=walk_ok)
             walk_ok = cc.emit("walkok", walk_ok & ~sub.err)
@@ -1099,12 +1213,12 @@ def _h_keys(cc, st, path, spec, schema):
     # struct cast that HARD-casts original values (e.g. a '$5' string
     # under a Number child) and crashes at runtime on any row where a
     # sibling failed
-    rebuilt = F.struct(*[
-        (F.when(walk_err, fallback_fields[f.name])
-          .otherwise(norm_fields[f.name])
-         if f.name in norm_fields
-         else st.typed.getField(f.name)).alias(f.name)
-        for f in st.spark_type.fields])
+    rebuilt = sx.struct({
+        f.name: (sx.when(walk_err, fallback_fields[f.name])
+                   .otherwise(norm_fields[f.name])
+                 if f.name in norm_fields
+                 else st.typed.getField(f.name))
+        for f in st.spark_type.fields})
     st.typed = rebuilt
     # the rebuilt struct's field types can differ from the original's
     # (a coercing child like ParseString writes back its final type);
@@ -1154,7 +1268,7 @@ def _normalized_dtype(sub: ColState, child_dt: T.DataType) -> T.DataType:
     return child_dt
 
 
-def _fallback_value(sub: ColState, original: Column) -> Column:
+def _fallback_value(sub: ColState, original: Expr) -> Expr:
     """The original value, explicitly coerced to the same Spark type as
     :func:`_normalized_value`'s result for this child — so the per-field
     ``when(walk_err, fallback).otherwise(norm)`` branches agree on type
@@ -1168,7 +1282,7 @@ def _fallback_value(sub: ColState, original: Column) -> Column:
     return original.try_cast(_null_type(sub.vtype))
 
 
-def _normalized_value(sub: ColState, original: Column) -> Column:
+def _normalized_value(sub: ColState, original: Expr) -> Expr:
     """Write-back rule (object.go:163-165): the mutated value lands in the
     output only when the child's chain completed without skip/abort;
     otherwise the original (possibly NULL) value stays. When the dynamic
@@ -1192,9 +1306,9 @@ def _normalized_value(sub: ColState, original: Column) -> Column:
             # insert an implicit HARD cast of the original struct
             # (crashing at runtime on any non-conforming row — the same
             # class the per-field fallback fixes one level down)
-            return F.when(completed, out).otherwise(
+            return sx.when(completed, out).otherwise(
                 original.try_cast(sub.spark_type))
-        return F.when(completed, out).otherwise(original)
+        return sx.when(completed, out).otherwise(original)
     if sub.vtype not in ("double", "boolean", "string"):
         # array/object schemas have no coercion rules: a mismatched column
         # can never become typed, so the original value stays as-is
@@ -1203,7 +1317,7 @@ def _normalized_value(sub: ColState, original: Column) -> Column:
     # completed ⇒ is_typed: every typed chain ends with the final type
     # assertion, which aborts (ev = false) wherever is_typed is false,
     # so no completed-but-untyped state can exist here
-    return F.when(completed, sub.typed) \
+    return sx.when(completed, sub.typed) \
             .otherwise(original.try_cast(target))
 
 
@@ -1212,8 +1326,8 @@ def _normalized_value(sub: ColState, original: Column) -> Column:
 
 def _h_transform(cc, st, path, spec, schema):
     """Custom Transform (any.go:38-41): fn is Column -> Column; the result
-    replaces the value. Use a pandas_udf-wrapped fn for Python logic.
-    The reference transforms the CURRENT raw value whatever its type, so
+    replaces the value (:meth:`CompileCtx.apply_user`). Use a
+    pandas_udf-wrapped fn for Python logic. The reference transforms the CURRENT raw value whatever its type, so
     fn applies to the untyped branch too (e.g. PrependTransform stripping
     '$' from a string before ParseString on a Number schema) — the typed
     placeholder alone would hand fn an always-NULL column. Whether fn can
@@ -1225,10 +1339,10 @@ def _h_transform(cc, st, path, spec, schema):
     constraint, documented). fns that analyze only via implicit casts
     behave as Spark casts them — also documented."""
     fn = spec.params["fn"]
-    st.typed = fn(st.typed)
+    st.typed = cc.apply_user(fn, st.typed)
     if st.untyped is not None and _fn_analyzes(fn, st.spark_type):
         try:
-            st.untyped = fn(st.untyped)
+            st.untyped = cc.apply_user(fn, st.untyped)
         except Exception:
             pass
 
@@ -1252,12 +1366,13 @@ def _fn_analyzes(fn, dtype: Optional[T.DataType]) -> bool:
 
 
 def _h_check(cc, st, path, spec, schema):
-    fn = spec.params["fn"]
+    user = spec.params["fn"]
+    fn = lambda x: cc.apply_user(user, x)  # noqa: E731
     message = spec.params.get("message", "check failed")
     if isinstance(schema, (NumberSchema, StringSchema, ArraySchema)):
         _gated_check(cc, st, path, "check", message, fn, message)
     else:
-        pred = F.coalesce(fn(st.typed), F.lit(False))
+        pred = sx.coalesce(fn(st.typed), sx.lit(False))
         cc.add(path, "check", message, st.ev, pred, st.display(),
                _msg_value(path, st, message))
         _abort_step(cc, st, ~pred)
@@ -1298,10 +1413,10 @@ def _h_when(cc, st, path, spec, schema):
         cond_tag = _lit_tag(condition)
         if ref_tag not in ("double", "string", "boolean", "any") \
                 or (cond_tag != ref_tag and ref_tag != "any"):
-            cond_ok = F.lit(False)
+            cond_ok = sx.lit(False)
         else:
-            cond_ok = F.coalesce(ref_col.eqNullSafe(F.lit(condition)),
-                                 F.lit(False))
+            cond_ok = sx.coalesce(ref_col.eqNullSafe(sx.lit(condition)),
+                                 sx.lit(False))
 
     # per-row unresolvable ref (NULL intermediate / absent map key) makes
     # the whole When a no-op, even for a condition schema that would pass
@@ -1328,16 +1443,16 @@ def _h_when(cc, st, path, spec, schema):
     # ParseString mutations; the typed triple AND the untyped branch both
     # merge under the gate
     st.err = st.err | sub.err
-    st.ev = F.when(gate, sub.ev).otherwise(st.ev)
+    st.ev = sx.when(gate, sub.ev).otherwise(st.ev)
     merged_typed, merged_is_typed = _merge_when_value(st, sub, gate)
     st.typed = merged_typed
     st.is_typed = merged_is_typed
     if st.untyped is not None and sub.untyped is not None \
             and sub.utype == st.utype:
-        st.untyped = F.when(gate, sub.untyped).otherwise(st.untyped)
+        st.untyped = sx.when(gate, sub.untyped).otherwise(st.untyped)
 
 
-def _current_as_column(st: ColState) -> Tuple[Column, Optional[T.DataType]]:
+def _current_as_column(st: ColState) -> Tuple[Expr, Optional[T.DataType]]:
     """Materialize the current dynamic value for a sub-chain. When the value
     is still untyped (original column of a different type), hand the
     sub-chain the original column; when typed, the typed expr."""
@@ -1346,12 +1461,12 @@ def _current_as_column(st: ColState) -> Tuple[Column, Optional[T.DataType]]:
     return st.untyped, st.spark_type
 
 
-def _merge_when_value(st: ColState, sub: ColState, gate: Column):
+def _merge_when_value(st: ColState, sub: ColState, gate: Expr):
     """Merge a `then` sub-chain's (typed, is_typed) back into the parent
     state where the condition held."""
     if sub.vtype == st.vtype or st.vtype == "any":
-        typed = F.when(gate, sub.typed).otherwise(st.typed)
-        is_typed = F.when(gate, sub.is_typed).otherwise(st.is_typed)
+        typed = sx.when(gate, sub.typed).otherwise(st.typed)
+        is_typed = sx.when(gate, sub.is_typed).otherwise(st.is_typed)
         return typed, is_typed
     # type-changing `then` (e.g. Number().Set on a string field) is not
     # representable in a typed column; keep the parent value — the
@@ -1386,9 +1501,9 @@ def _contains_when(schema: BaseSchema) -> bool:
     return False
 
 
-def compile_pass_predicate(schema: BaseSchema, col: Column,
+def compile_pass_predicate(schema: BaseSchema, col: Expr,
                            dtype: Optional[T.DataType],
-                           root_schema: T.StructType) -> Column:
+                           root_schema: T.StructType) -> Expr:
     """Pass/fail of a full schema chain over an expression — used for
     ``Items`` elements (array.go:100-107) and `When` condition schemas
     (schema.go:26-33): pass ⇔ ``ctx.Err == nil`` (a Skip without error,
@@ -1409,7 +1524,7 @@ def compile_pass_predicate(schema: BaseSchema, col: Column,
             "compiler cannot rebase — lift the when() to the field chain")
     cc = CompileCtx(root_schema, pure=True)
     sub = compile_chain(schema, col, dtype, "<cond>", cc,
-                        init_ev=F.lit(True))
+                        init_ev=sx.lit(True))
     return ~sub.err
 
 
@@ -1454,34 +1569,98 @@ _HANDLERS = {
 # root compilation
 
 
+class _ColumnMap(Mapping):
+    """``{key: Column}`` over ``{key: Expr}``, each parsed when read."""
+
+    def __init__(self, texts: Dict[str, Expr]):
+        self._texts = texts
+
+    def __getitem__(self, key: str) -> Column:
+        return F.expr(self._texts[key].sql)
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._texts)
+
+    def __len__(self) -> int:
+        return len(self._texts)
+
+
+_VIOLATION_TYPE = ("array<struct<rule_path:string,rule_name:string,"
+                   "expected:string,actual:string,message:string>>")
+
+
 @dataclass
 class CompiledRuleSet:
     """The compiled artifact: everything the engine materializes from one
-    pass over the table."""
+    pass over the table. The ``*_text`` fields hold SQL text; the public
+    ``Column`` fields parse it when first read."""
 
     entries: List[VerdictEntry]
-    row_pass: Column                      # per-row: no rule aborted
-    violations_array: Column              # array<struct> of failed rules,
+    row_pass_text: Expr                   # per-row: no rule aborted
+    violations_text: Expr                 # array<struct> of failed rules,
                                           # in jio walk order (first = ctx.Err)
-    normalized: Dict[str, Column]         # top-level column -> normalized expr
-    verdict_cols: Dict[str, Column]       # rule_id -> tri-state boolean
-    stages: List[Dict[str, Column]]       # SSA state columns, in order
+    normalized_text: Dict[str, Expr]      # top-level column -> normalized
+    verdict_text: Dict[str, Expr]         # rule_id -> tri-state boolean
+    #: SSA state columns by dependency level: a level reads only columns
+    #: of earlier levels, so each is one projection
+    stages: List[Dict[str, Union[Expr, Column]]]
     internal_cols: List[str]              # names of the state columns
 
+    @cached_property
+    def row_pass(self) -> Column:
+        return F.expr(self.row_pass_text.sql)
+
+    @cached_property
+    def violations_array(self) -> Column:
+        return F.expr(self.violations_text.sql)
+
+    @cached_property
+    def normalized(self) -> Mapping[str, Column]:
+        return _ColumnMap(self.normalized_text)
+
+    @cached_property
+    def verdict_cols(self) -> Mapping[str, Column]:
+        return _ColumnMap(self.verdict_text)
+
     def prepare(self, df: DataFrame) -> DataFrame:
-        """Apply the SSA state stages; every output expression above
-        references these named columns."""
+        """Apply the SSA state stages, one projection per level (a user
+        callable's Columns in a second one); every output expression
+        above references these named columns."""
         out = df
-        for stage in self.stages:
-            out = out.withColumns(stage)
+        for level in self.stages:
+            texts = [f"{e.sql} AS {sx.quote(n)}" for n, e in level.items()
+                     if isinstance(e, Expr)]
+            if texts:
+                out = out.selectExpr("*", *texts)
+            user = {n: c for n, c in level.items()
+                    if not isinstance(c, Expr)}
+            if user:
+                out = out.withColumns(user)
         return out
+
+
+def _levels(cc: CompileCtx) -> List[Dict[str, Union[Expr, Column]]]:
+    """Group the SSA stages by dependency level: a stage sits one level
+    above the highest stage it reads."""
+    ref = re.compile(rf"`({re.escape(cc._prefix)}_\w+)`")
+    level: Dict[str, int] = {}
+    out: List[Dict[str, Union[Expr, Column]]] = []
+    for name, value in cc.stages:
+        reads = (ref.findall(value.sql) if isinstance(value, Expr)
+                 else [cc.user_inputs[name]])
+        lv = max((level[r] + 1 for r in reads if r in level), default=0)
+        level[name] = lv
+        if lv == len(out):
+            out.append({})
+        out[lv][name] = value
+    return out
 
 
 def compile_ruleset(df: DataFrame, schema: BaseSchema) -> CompiledRuleSet:
     """Compile a root schema against a DataFrame's schema. The root schema
     plays the part of the whole-document ObjectSchema in ``ValidateJSON``
     (jio.go:22-38); a plain dict of column schemas is wrapped in
-    ``K.object``."""
+    ``K.object``. Only ``df.schema`` is read."""
     if isinstance(schema, dict):
         schema = K.object(schema)
     if not isinstance(schema, ObjectSchema):
@@ -1492,43 +1671,42 @@ def compile_ruleset(df: DataFrame, schema: BaseSchema) -> CompiledRuleSet:
         # the engine's paths, refs, and normalized-output keys are all
         # dot-delimited: a literal-dot column name would silently lose
         # its normalized output (the top-level filter below reads it as
-        # nested), fail root_col's F.col parse, and collide with a real
-        # nested path — refuse at compile time instead
+        # nested), and collide with a real nested path — refuse at
+        # compile time instead
         raise ValueError(
             f"column names containing '.' are not addressable by the "
             f"dot-delimited rule paths: {dotted}; rename the column(s) "
             f"(e.g. withColumnRenamed) before validating")
 
-    cc = CompileCtx(df.schema)
-    # the root document is the row itself: a synthetic struct of all columns
-    root_col = F.struct(*[F.col(f.name).alias(f.name)
-                          for f in df.schema.fields])
-    st = compile_chain(schema, root_col, df.schema, "", cc,
-                       init_ev=F.lit(True))
+    root_schema = df.schema
+    cc = CompileCtx(root_schema)
+    # the root document is the row itself: a struct whose members are the
+    # plain columns, so each child reads its own column
+    root_col = sx.struct({f.name: sx.col(f.name)
+                          for f in root_schema.fields})
+    st = compile_chain(schema, root_col, root_schema, "", cc,
+                       init_ev=sx.lit(True))
 
     viol_structs = []
-    verdict_cols: Dict[str, Column] = {}
+    verdict_text: Dict[str, Expr] = {}
     for e in cc.entries:
-        failed = e.evaluated & ~e.passed
-        viol_structs.append(
-            F.when(failed, F.struct(
-                F.lit(e.path).alias("rule_path"),
-                F.lit(e.rule_name).alias("rule_name"),
-                F.lit(e.expected).alias("expected"),
-                e.actual.alias("actual"),
-                e.message.alias("message"),
-            )).otherwise(F.lit(None)))
-        verdict_cols[e.rule_id] = F.when(e.evaluated, e.passed) \
-                                   .otherwise(F.lit(None))
+        verdict_text[e.rule_id] = sx.when(e.evaluated_text, e.passed_text)
+        if e.passed_text.sql == "true":
+            # a rule that always passes (the type assertion of a column
+            # already of the schema's type) adds nothing to the array
+            continue
+        viol_structs.append(sx.when(
+            e.evaluated_text & ~e.passed_text,
+            sx.struct({"rule_path": e.path, "rule_name": e.rule_name,
+                       "expected": e.expected, "actual": e.actual_text,
+                       "message": e.message_text})))
 
-    violations_array = (F.array_compact(F.array(*viol_structs))
-                        if viol_structs
-                        else F.array().cast(
-                            "array<struct<rule_path:string,rule_name:string,"
-                            "expected:string,actual:string,message:string>>"))
+    violations = (sx.array_compact(sx.array(*viol_structs)) if viol_structs
+                  else sx.array().cast(_VIOLATION_TYPE))
     # only top-level normalized columns feed the output projection
     normalized = {p: c for p, c in cc.normalized.items() if "." not in p}
-    return CompiledRuleSet(entries=cc.entries, row_pass=~st.err,
-                           violations_array=violations_array,
-                           normalized=normalized, verdict_cols=verdict_cols,
-                           stages=cc.stages, internal_cols=cc.internal_cols)
+    return CompiledRuleSet(entries=cc.entries, row_pass_text=~st.err,
+                           violations_text=violations,
+                           normalized_text=normalized,
+                           verdict_text=verdict_text, stages=_levels(cc),
+                           internal_cols=[n for n, _ in cc.stages])

@@ -12,10 +12,10 @@ table-scale analog returns, from ONE compiled pass over the input:
 * ``summary()`` — per-rule evaluated/pass/fail counts computed in a single
   map-side-combinable aggregation (no shuffle of row-level data)
 
-All verdict logic is Catalyst ``Column`` expressions threaded through
-SSA-style intermediate columns (linear plan size) — the pass is fully
-codegen'd, zero UDFs, and Parquet/Iceberg column pruning sees exactly the
-referenced columns.
+All verdict logic is Catalyst expressions (compiled as SQL text, see
+:mod:`jio_spark.compiler`) threaded through SSA-style intermediate columns
+(linear plan size) — the pass is fully codegen'd, zero UDFs, and
+Parquet/Iceberg column pruning sees exactly the referenced columns.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .compiler import CompiledRuleSet, compile_ruleset
 from .dsl import BaseSchema, ObjectSchema
+from .sqltext import quote
 
 VIOLATION_FIELDS = ["rule_path", "rule_name", "expected", "actual", "message"]
 
@@ -38,11 +39,14 @@ def rule_count_exprs(entries, prefix: str = "__rule") -> List[Column]:
     :meth:`ValidationResult.summary` and the runner's observe-riding
     ``rule_counts`` both consume it, so the two can never diverge.
     ``failed = evaluated - passed`` by boolean identity
-    (``ev&!ps = ev - ev&ps``), so no third sum is carried."""
+    (``ev&!ps = ev - ev&ps``), so no third sum is carried. Each sum is
+    parsed from the entries' SQL text in one call."""
     aggs: List[Column] = []
     for i, e in enumerate(entries):
-        aggs += [F.sum(e.evaluated.cast("long")).alias(f"{prefix}{i}__ev"),
-                 F.sum((e.evaluated & e.passed).cast("long"))
+        ev, ps = e.evaluated_text.sql, e.passed_text.sql
+        aggs += [F.expr(f"sum(CAST({ev} AS BIGINT))")
+                  .alias(f"{prefix}{i}__ev"),
+                 F.expr(f"sum(CAST(({ev} AND {ps}) AS BIGINT))")
                   .alias(f"{prefix}{i}__ps")]
     return aggs
 
@@ -134,7 +138,7 @@ class ValidationResult:
         out = self._prepared
         if self.compiled.normalized:
             out = out.withColumns(dict(self.compiled.normalized))
-        return out.select(*self.df.columns)
+        return out.select(*[F.col(quote(c)) for c in self.df.columns])
 
     @property
     def verdicts(self) -> DataFrame:

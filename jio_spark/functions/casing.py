@@ -48,8 +48,7 @@ from __future__ import annotations
 from functools import lru_cache
 from typing import Dict, Tuple
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ..sqltext import functions_for
 
 # UnicodeData.txt simple mappings that the per-char full-mapping trick
 # cannot see (full result is multi-char, simple mapping still exists):
@@ -96,13 +95,15 @@ def _table(direction: str) -> Tuple[str, str]:
     return "".join(src), "".join(dst)
 
 
-def go_upper(col: Column) -> Column:
-    """``strings.ToUpper`` (string.go:198-200): simple per-rune mapping."""
+def go_upper(col):
+    """``strings.ToUpper`` (string.go:198-200): simple per-rune mapping,
+    over a ``Column`` or an :class:`~jio_spark.sqltext.Expr`."""
     src, dst = _table("upper")
-    return F.translate(col, src, dst)
+    return functions_for(col).translate(col, src, dst)
 
 
-def go_lower(col: Column) -> Column:
-    """``strings.ToLower`` (string.go:192-194): simple per-rune mapping."""
+def go_lower(col):
+    """``strings.ToLower`` (string.go:192-194): simple per-rune mapping,
+    over a ``Column`` or an :class:`~jio_spark.sqltext.Expr`."""
     src, dst = _table("lower")
-    return F.translate(col, src, dst)
+    return functions_for(col).translate(col, src, dst)

@@ -5,8 +5,11 @@ The reference formats every error with ``fmt.Errorf("field `%s` value %v
 the shortest decimal repr — ``12.0`` → ``"12"``, ``3.1`` → ``"3.1"`` — and
 slices space-separated in brackets — ``[]float64{1,2}`` → ``"[1 2]"``. These
 helpers reproduce that for the common (test-corpus) cases, both for Python
-literals (compile-time "expected" strings) and for Spark Columns (runtime
-"actual" strings). One documented corner remains: integral digits above
+literals (compile-time "expected" strings) and for runtime "actual"
+strings. The runtime renderings build either a Spark ``Column`` or, for
+the rule compiler, SQL text (:mod:`jio_spark.sqltext`) from one recipe:
+each picks its backend from the value it renders. One documented corner
+remains: integral digits above
 2^53 can differ from Go's in the last places on the Column side (Java 17's
 Double.toString is not always minimal-length; fixed in JDK 19).
 """
@@ -16,8 +19,9 @@ from __future__ import annotations
 import math
 from typing import Any, Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .sqltext import functions_for
 
 
 def go_repr(v: Any) -> str:
@@ -56,16 +60,18 @@ def go_repr_list(values: Sequence[Any]) -> str:
     return "[" + " ".join(go_repr(v) for v in values) + "]"
 
 
-def _strip_dec_zeros(s: Column) -> Column:
+def _strip_dec_zeros(s):
     """'12345678.5000000000' → '12345678.5'; '15.0000000000' → '15'."""
+    F = functions_for(s)
     return F.regexp_replace(
         F.regexp_replace(s, r"(\.\d*?)0+$", "$1"), r"\.$", "")
 
 
-def _norm_e(s: Column) -> Column:
+def _norm_e(s):
     """Java E-notation → Go strconv style: '1.0E19' → '1e+19',
     '1.23E-5' → '1.23e-05' (Go prints a sign and ≥2 exponent digits,
     and drops a bare '.0' mantissa)."""
+    F = functions_for(s)
     s = F.regexp_replace(s, r"\.0E", "E")
     s = F.regexp_replace(s, r"E(\d)$", "e+0$1")
     s = F.regexp_replace(s, r"E(\d\d+)$", "e+$1")
@@ -74,7 +80,7 @@ def _norm_e(s: Column) -> Column:
     return s
 
 
-def _go_double(col: Column) -> Column:
+def _go_double(col):
     """Go-%v rendering of one float64 Column (shared by the scalar
     'double' branch and per-element array rendering, so the two can't
     drift). Go prints integral float64 as plain digits and switches to
@@ -95,6 +101,7 @@ def _go_double(col: Column) -> Column:
     # integrality via round(col, 0) — double in, double out; F.floor
     # returns LONG, which silently saturates past 2^63 and made every
     # integral value ≥ 2^63 test non-integral
+    F = functions_for(col)
     integral = (~F.isnan(col)) & (col == F.round(col, 0)) \
         & (F.abs(col) < F.lit(1e21))
     # non-integral values ≥ 1e7: shortest repr carries ≤ 9 fractional
@@ -122,8 +129,9 @@ def _go_double(col: Column) -> Column:
                                              r"\.0$", ""))))
 
 
-def fmt_col(col: Column, vtype: str, spark_type=None) -> Column:
-    """Column → string Column rendered Go-%v style.
+def fmt_col(col, vtype: str, spark_type=None):
+    """Column (or :class:`~jio_spark.sqltext.Expr`) → string of the same
+    kind, rendered Go-%v style.
 
     ``vtype`` is the compiler's logical type tag ('double', 'string',
     'boolean', 'array', ...). ``spark_type`` (optional) is the column's
@@ -131,8 +139,8 @@ def fmt_col(col: Column, vtype: str, spark_type=None) -> Column:
     element type instead of the string-level heuristic. NULL renders as
     ``<nil>`` (Go prints untyped nil that way).
     """
+    F = functions_for(col)
     if vtype == "double":
-        from pyspark.sql import types as T
         if isinstance(spark_type, T.DecimalType):
             # decimal→string preserves the column's full scale
             # ('12.5000000000' for decimal(20,10)) where Go %v of the
@@ -143,7 +151,6 @@ def fmt_col(col: Column, vtype: str, spark_type=None) -> Column:
     elif vtype == "boolean":
         rendered = col.cast("string")  # 'true'/'false' like Go
     elif vtype == "array":
-        from pyspark.sql import types as T
         elem = (spark_type.elementType
                 if isinstance(spark_type, T.ArrayType) else None)
         if isinstance(elem, (T.DoubleType, T.FloatType)):

@@ -2,18 +2,24 @@
 audio decode + uniqueness + referential + stats + drift, with per-partition
 checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
-Per-run work is paid once per run: the rule set is compiled once
-(compiling reads only ``df.schema``, which every group frame shares), its
-state chain is applied once to ``df`` and each group filters that one
-frame (the filter still reaches the scan as partition pruning), and the
-codec dim is collected once, fingerprinted, and checked as a literal set.
+Per-run work is paid once per run, in the plan: the rule set is compiled
+once (compiling reads only ``df.schema``, which every group frame shares),
+the codec dim is collected once, fingerprinted, and checked as a literal
+set, and the whole table is annotated once — the rule chain's state
+columns plus one ``_violations`` array holding the rule violations and
+the ``codec NOT IN <dim set>`` check. Each group filters that one frame;
+the filter still reaches the scan as partition pruning, and the group's
+observed stats and its explode sit above the filter. A rule chain that
+is not deterministic (a transform using ``rand()``) would stop the
+filter above it, so such a run prepares and annotates per group instead.
 
 Execution shape per partition group (a group = a batch of bucket_id
-partitions, the resume granularity):
+partitions, the resume granularity; ``annotated`` carries the rule
+verdicts and ``codec NOT IN <dim set>`` as codegen'd expressions):
 
-    scan(group) ──┬─ rule verdicts + codec IN <dim set> (codegen) ─┐
-                  └─ salted repartition → Arrow decode checks     ─┴─ violations
-                                                                      + metrics
+    annotated.where(group) → observe(stats) → explode ─┐
+    scan(group) → salted repartition → Arrow decode   ─┴─ violations
+                                                          + metrics
     manifest.mark(group)        # written LAST → resume-safe
 
 Every tiny frame the driver builds (the codec dim, the sketch merge, the
@@ -24,9 +30,10 @@ Global steps after the groups (recorded under their own manifest keys):
 uniqueness on clip_id (duplicates span partition groups by construction)
 and the drift snapshot/check.
 
-``run`` plans, executes, reports. The plan only reads (compile, resume
-check, partition discovery, group split), so bad input fails before
-anything under the output root changes. Every step then runs through one
+``run`` plans, executes, reports. The plan only reads (compile, dim read,
+prepare and annotate, resume check, partition discovery, group split), so
+bad input fails before anything under the output root changes; its wall
+is ``metrics["phase_sec"]["plan"]``. Every step then runs through one
 pool of ``group_concurrency`` workers and one protocol: skip it if a
 resumed run finds it complete, else run it, then mark it.
 """
@@ -365,55 +372,26 @@ class ClipsValidationJob:
 
     # -- one partition group ------------------------------------------------
 
-    def group_violations(self, df: DataFrame, group=None,
-                         table_root: Optional[str] = None,
-                         observation=None,
-                         footer_cache: Optional[dict] = None,
-                         compiled: Optional[CompiledRuleSet] = None,
-                         prepared: Optional[DataFrame] = None,
-                         dim_codecs: Optional[Sequence] = None
-                         ) -> DataFrame:
-        """All per-row violations for a slice of the table, in the standard
-        shape + partition column.
+    def _observe_exprs(self, df: DataFrame,
+                       compiled: CompiledRuleSet) -> List:
+        """The aggregates each group observes on its rule scan: the
+        column stats, and the per-rule tallies when asked for."""
+        exprs = stats_exprs(df, list(self.cfg.stat_cols), quantiles=None,
+                            hll_sketch=True, kll_quantiles=True)
+        if self.cfg.observe_rule_counts:
+            # per-rule verdict tallies on the same pass (the shared
+            # recipe from engine.rule_count_exprs — summary() and this
+            # path can never diverge)
+            exprs += rule_count_exprs(compiled.entries)
+        return exprs
 
-        :meth:`run` pays the per-run work once and passes it to every
-        group: ``compiled`` is the rule set compiled against a frame with
-        ``df``'s schema, ``prepared`` is ``compiled.prepare`` of the whole
-        table filtered to this slice, and ``dim_codecs`` is the codec
-        dim's non-NULL codec values. Called on its own, this compiles,
-        prepares and collects the dim itself (``prepared`` needs
-        ``compiled``).
-
-        Scan economy (SURVEY.md §4.2 "single-pass multi-metric"): the rule
-        chain AND the referential check share ONE scan, with no join and
-        no exchange — the check is ``codec NOT IN <dim set>``, appended as
-        one more element of the per-row violations array before the
-        single explode, and the scan never reads `bytes` (column
-        pruning). The audio decode is the only second scan, reading
-        exactly (id, bytes, metadata)."""
-        ids = ["clip_id", self.cfg.partition_col]
-        if compiled is None:
-            compiled = compile_ruleset(df, self.cfg.rules.clone())
-        if prepared is None:
-            prepared = compiled.prepare(df)
+    def _annotate(self, prepared: DataFrame, compiled: CompiledRuleSet,
+                  dim_codecs: Optional[Sequence]) -> DataFrame:
+        """``prepared`` plus ``_violations``: the rule chain's violations
+        and, with a codec dim, the referential check ``codec NOT IN <dim
+        set>`` appended as one more element."""
         ann = prepared.withColumn("_violations", compiled.violations_array)
-        if observation is not None:
-            # stats piggyback on the SAME scan (before the violation
-            # filter drops passing rows) — no extra source read
-            exprs = stats_exprs(df, list(self.cfg.stat_cols),
-                                quantiles=None,
-                                hll_sketch=True,
-                                kll_quantiles=True)
-            if self.cfg.observe_rule_counts:
-                # per-rule verdict tallies on the same pass (the shared
-                # recipe from engine.rule_count_exprs — summary() and
-                # this path can never diverge)
-                exprs += rule_count_exprs(compiled.entries)
-            ann = ann.observe(observation, *exprs)
-
         if self.codec_dim is not None:
-            if dim_codecs is None:
-                dim_codecs = _dim_codecs(self.codec_dim.collect())
             codec = F.col("codec")
             ref_fail = codec.isNotNull()
             if dim_codecs:
@@ -431,6 +409,50 @@ class ClipsValidationJob:
                 F.when(ref_fail,
                        F.concat("_violations", F.array(ref_struct)))
                  .otherwise(F.col("_violations")))
+        return ann
+
+    def group_violations(self, df: DataFrame, group=None,
+                         table_root: Optional[str] = None,
+                         observation=None,
+                         footer_cache: Optional[dict] = None,
+                         compiled: Optional[CompiledRuleSet] = None,
+                         annotated: Optional[DataFrame] = None,
+                         dim_codecs: Optional[Sequence] = None,
+                         observe_exprs: Optional[List] = None
+                         ) -> DataFrame:
+        """All per-row violations for a slice of the table, in the standard
+        shape + partition column.
+
+        :meth:`run` pays the per-run work once and passes it to every
+        group: ``compiled`` is the rule set compiled against a frame with
+        ``df``'s schema, ``annotated`` is :meth:`_annotate` of the whole
+        table filtered to this slice, ``dim_codecs`` is the codec dim's
+        non-NULL codec values, and ``observe_exprs`` are the aggregates
+        ``observation`` collects. Called on its own, this compiles,
+        collects the dim, prepares and annotates itself.
+
+        Scan economy (SURVEY.md §4.2 "single-pass multi-metric"): the rule
+        chain AND the referential check share ONE scan, with no join and
+        no exchange — the check is ``codec NOT IN <dim set>``, appended as
+        one more element of the per-row violations array before the
+        single explode, and the scan never reads `bytes` (column
+        pruning). The audio decode is the only second scan, reading
+        exactly (id, bytes, metadata)."""
+        ids = ["clip_id", self.cfg.partition_col]
+        if compiled is None:
+            compiled = compile_ruleset(df, self.cfg.rules.clone())
+        if annotated is None:
+            if dim_codecs is None and self.codec_dim is not None:
+                dim_codecs = _dim_codecs(self.codec_dim.collect())
+            annotated = self._annotate(compiled.prepare(df), compiled,
+                                       dim_codecs)
+        ann = annotated
+        if observation is not None:
+            # stats piggyback on the SAME scan (before the violation
+            # filter drops passing rows) — no extra source read
+            if observe_exprs is None:
+                observe_exprs = self._observe_exprs(df, compiled)
+            ann = ann.observe(observation, *observe_exprs)
 
         # no size()>0 pre-filter: explode drops empty arrays itself;
         # the filter variant re-evaluates the violations-array expr in a
@@ -507,22 +529,23 @@ class ClipsValidationJob:
                 raise_schema_violations(schema_viols)
         # ONE compile per run: a rule on a missing column fails here, and
         # every group (and the rule_counts metadata) reuses the plan
-        # instead of rebuilding its Column trees
         compiled = compile_ruleset(df, cfg.rules.clone())
-        # ... and ONE rule-chain frame: each group filters it. Catalyst
-        # pushes that filter through the chain's projections down to the
-        # scan only when every expression in them is deterministic; a
-        # nondeterministic chain (a transform using rand(), say) would
-        # lose partition pruning, so it is prepared per group instead
-        prepared = compiled.prepare(df)
-        if not prepared._jdf.queryExecution().analyzed().deterministic():
-            prepared = None
         # the codec dim is read ONCE: the same rows give the run.json
         # fingerprint and the literal set every group checks codecs
         # against
         dim_rows = (self.codec_dim.collect()
                     if self.codec_dim is not None else None)
         dim_codecs = _dim_codecs(dim_rows)
+        # ... and ONE annotated frame: each group filters it. Catalyst
+        # pushes that filter through the chain's projections down to the
+        # scan only when every expression in them is deterministic; a
+        # nondeterministic chain (a transform using rand(), say) would
+        # lose partition pruning, so it is annotated per group instead
+        prepared = compiled.prepare(df)
+        annotated = None
+        if prepared._jdf.queryExecution().analyzed().deterministic():
+            annotated = self._annotate(prepared, compiled, dim_codecs)
+        observe_exprs = self._observe_exprs(df, compiled)
         sink = RunSink(output_root) if output_root else None
         manifest = Manifest(output_root) if output_root else None
 
@@ -645,6 +668,7 @@ class ClipsValidationJob:
                 self.spark, table_root, cfg.partition_col)
 
         # -- the plan holds: the first writes
+        plan_sec = time.time() - t0
         if manifest and not resume:
             # a FRESH run into an existing root invalidates every old
             # completion record: if this run crashes, a later resume
@@ -676,8 +700,9 @@ class ClipsValidationJob:
             viols = self.group_violations(
                 df.where(cond), group=group, table_root=table_root,
                 observation=obs, footer_cache=fcache, compiled=compiled,
-                prepared=None if prepared is None else prepared.where(cond),
-                dim_codecs=dim_codecs)
+                annotated=None if annotated is None
+                else annotated.where(cond),
+                dim_codecs=dim_codecs, observe_exprs=observe_exprs)
             n_viols = None
             if sink:
                 if cfg.violations_sink == "exemplars":
@@ -857,6 +882,8 @@ class ClipsValidationJob:
             # these sum past wall_sec by design): where a slow run went —
             # the first question a reader of the run metrics asks
             "phase_sec": {
+                # compile, dim read, prepare + annotate, listing, split
+                "plan": round(plan_sec, 3),
                 "groups_max": round(max(group_secs), 3) if group_secs
                 else 0.0,
                 "groups_sum": round(sum(group_secs), 3),

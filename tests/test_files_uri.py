@@ -152,3 +152,24 @@ def test_uri_root_resume_audits_rerun_group(spark, table, tmp_path):
     assert plain["row_integrity"]["rows_expected"] == plain["rows"] > 0
     assert uri["row_integrity"] == plain["row_integrity"]
     assert uri["rows"] == plain["rows"]
+
+
+def test_split_frame_packs_contiguous_runs(spark):
+    """Task k of the decode's split frame holds the k-th contiguous run
+    of the (hash-shuffled) split list, for 1 to 32 splits: one split per
+    task when there are no more splits than tasks, and runs differing in
+    length by at most one when there are."""
+    from jio_spark.audio.files import split_frame
+    for n in range(1, 33):
+        splits = [(f"/t/bucket_id={i % 16}/f{i}.parquet", i % 3, i % 16)
+                  for i in range(n)]
+        for tasks in sorted({n, min(n, 5)}):
+            rows = split_frame(spark, splits, tasks, "bucket_id", "int") \
+                .select(F.spark_partition_id().alias("task"), "path", "rg",
+                        "bucket_id").collect()
+            got = sorted((r["task"], r["path"], r["rg"], r["bucket_id"])
+                         for r in rows)
+            want = sorted((k, *s) for k in range(tasks)
+                          for s in splits[k * n // tasks:
+                                          (k + 1) * n // tasks])
+            assert got == want, (n, tasks)

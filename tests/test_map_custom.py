@@ -57,6 +57,23 @@ def test_custom_check_with_pandas_udf(spark):
     assert v["message"] == "field `v` value abc not a palindrome"
 
 
+def test_custom_check_inside_items_and_condition(spark):
+    """A user check inside an Items element schema or a When condition
+    schema, where its value is a lambda variable or a condition input:
+    the callable's Column still decides the verdict."""
+    df = spark.createDataFrame(
+        [(0, [2.0, 3.0], 5.0), (1, [1.0, 5.0], 5.0), (2, [], 0.0)],
+        "id int, v array<double>, q double")
+    res = validate(df, K.object({
+        "v": K.array().items(K.number().check(lambda c: c > 1)),
+        "q": K.number().when("q", K.number().check(lambda c: c > 1),
+                             K.number().max(4))}), id_cols=["id"])
+    got = {r["id"]: r["_pass"] for r in res.annotated.collect()}
+    assert got == {0: False, 1: False, 2: True}
+    got = {r["id"]: r["rule_path"] for r in res.first_violations.collect()}
+    assert got == {0: "q", 1: "v"}
+
+
 def test_prepend_transform_order(spark):
     # PrependTransform runs before earlier-appended rules (any.go:32-35):
     # uppercase prepended before an equality check sees the uppercased value

@@ -71,3 +71,43 @@ def test_parse_string_rejects_line_terminators(spark):
         assert got[i] is want, f"engine: {v!r}"
         err, _ = jio_validate(schema.clone(), v)
         assert (err is None) is want, f"oracle: {v!r}"
+
+
+def _re2_dialect_cases():
+    """(pattern, value, Go's regexp.MatchString verdict), each verdict
+    read off RE2's syntax table, where Java's default reading differs."""
+    # \b and \B are ASCII word boundaries: é is not a word character
+    yield r"\bé", "é", False
+    yield r"a\b", "aé", True
+    yield r"a\B", "aé", False
+    # ... whatever the case flags: the Kelvin sign folds to k, but is
+    # not an ASCII word character
+    yield r"(?i)\bk", "K", False
+    # (?i) folds Unicode
+    yield r"(?i)k", "K", True
+    yield r"(?i)é", "É", True
+    yield r"(?i)^k$", "K", True
+    # \p{Greek} names a script, with or without negation, in a class too
+    yield r"^\p{Greek}+$", "αβγ", True
+    yield r"^\p{Greek}+$", "abc", False
+    yield r"^\P{Greek}+$", "abc", True
+    yield r"^\p{^Greek}+$", "abc", True
+    yield r"^[\p{Greek}\d]+$", "α1", True
+    yield r"^\pL\p{Lu}$", "aB", True
+
+
+@pytest.mark.parametrize("pattern", sorted({p for p, _, _ in
+                                            _re2_dialect_cases()}))
+def test_regex_dialect_matches_re2(spark, pattern):
+    """Word boundaries, case folding and Unicode script classes follow
+    RE2, not Java's default reading of the same pattern."""
+    cases = [(v, want) for p, v, want in _re2_dialect_cases()
+             if p == pattern]
+    df = spark.createDataFrame(
+        [(i, v) for i, (v, _) in enumerate(cases)], "id int, v string")
+    res = validate(df, K.object({"v": K.string().regex(pattern)}),
+                   id_cols=["id"])
+    got = {r["id"]: r["p"] for r in res.prepared.select(
+        "id", res.compiled.row_pass.alias("p")).collect()}
+    for i, (v, want) in enumerate(cases):
+        assert got[i] is want, f"engine: {pattern!r} on {v!r}"

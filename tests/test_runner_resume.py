@@ -39,7 +39,8 @@ def test_full_job_metrics(spark, clips_path, tmp_path):
     # per-step walls: every step > 0, and the group phase is bounded by
     # the run wall (steps may overlap, so their SUM may exceed it)
     ph = m["phase_sec"]
-    assert set(ph) == {"groups_max", "groups_sum", "uniqueness", "drift"}
+    assert set(ph) == {"plan", "groups_max", "groups_sum", "uniqueness",
+                       "drift"}
     assert 0 < ph["groups_max"] <= ph["groups_sum"]
     assert ph["groups_max"] <= m["wall_sec"]
     assert ph["uniqueness"] > 0 and ph["drift"] > 0
