@@ -895,6 +895,12 @@ _BOUNDARY = {
     "\\B": f"(?-i:(?<={_ASCII_WORD})(?={_ASCII_WORD})"
            f"|(?<!{_ASCII_WORD})(?!{_ASCII_WORD}))",
 }
+#: RE2's whitespace escapes as the members of a character class: its \s
+#: is [\t\n\f\r ] (Java's adds \x0B), \S the rest, and its \v the one
+#: character \x0B (Java's is the vertical-whitespace class)
+_SPACE_ESCAPES = {"\\s": r"\t\n\f\r\x20",
+                  "\\S": r"\x00-\x08\x0B\x0E-\x1F\x21-\x{10FFFF}",
+                  "\\v": r"\x0B"}
 #: the Unicode general categories RE2 names in \p{..}; Java spells them
 #: the same. Any other name RE2 accepts is a script, which Java spells
 #: with an ``Is`` prefix
@@ -934,11 +940,16 @@ def _go_regex(pattern: str) -> str:
     * Word boundaries: RE2's ``\b`` / ``\B`` are ASCII; Java's are
       Unicode, so they become lookarounds over ``[0-9A-Za-z_]``.
     * Unicode classes: RE2 names a script bare (``\p{Greek}``), where
-      Java needs ``\p{IsGreek}`` and would throw on the bare name."""
+      Java needs ``\p{IsGreek}`` and would throw on the bare name.
+    * Whitespace: RE2's ``\s`` leaves out ``\x0B``, which Java's holds,
+      and RE2's ``\v`` is ``\x0B`` alone, so ``\s``, ``\S`` and ``\v``
+      are spelled out as ranges, inside character classes and out."""
     multiline = _RE_MULTILINE.search(pattern) is not None
 
     def in_class(m: re.Match) -> str:
         tok = m.group()
+        if tok in _SPACE_ESCAPES:
+            return _SPACE_ESCAPES[tok]
         # an escape pair is two characters, a class name longer
         return _java_unicode_class(tok) if len(tok) > 2 else tok
 
@@ -948,6 +959,8 @@ def _go_regex(pattern: str) -> str:
             return tok if multiline else r"\z"
         if tok in _BOUNDARY:
             return _BOUNDARY[tok]
+        if tok in _SPACE_ESCAPES:
+            return f"[{_SPACE_ESCAPES[tok]}]"
         if tok[:2] in ("\\p", "\\P") and len(tok) > 2:
             return _java_unicode_class(tok)
         if tok[0] == "[":

@@ -20,15 +20,14 @@ round-trip through parquet so a previous run's snapshot is the baseline.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Mapping, Sequence
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from .. import sqltext as sx
 from ..sinks.writers import local_frame
 
 N_QUANTILES = 101
@@ -58,37 +57,38 @@ def snapshot(df: DataFrame, specs: Dict[str, HistSpec],
 
     ``accuracy`` is the ``percentile_approx`` relative-rank error bound
     (1/accuracy); 2500 perturbs the derived KS statistic by ≤ ~0.01
-    against a 0.1 threshold at half the sketch cost of 10000."""
-    exprs = [F.count(F.lit(1)).alias("rows")]
-    ps = [i / (N_QUANTILES - 1) for i in range(N_QUANTILES)]
-    for c, spec in specs.items():
-        exprs.append(F.percentile_approx(F.col(c).cast("double"), ps,
-                                         accuracy).alias(f"{c}__q"))
-    row = df.agg(*exprs).collect()[0].asDict()
+    against a 0.1 threshold at half the sketch cost of 10000.
+
+    Both aggregates are SQL text (see ``sqltext``): the 101 quantile
+    probabilities cross to the JVM in one parse, not one call each."""
+    ps = sx.array(*[i / (N_QUANTILES - 1) for i in range(N_QUANTILES)])
+    exprs = ["count(1) AS `rows`"]
+    for c in specs:
+        q = sx.call("percentile_approx", sx.col(c).cast("double"), ps,
+                    accuracy)
+        exprs.append(f"{q.sql} AS {sx.quote(f'{c}__q')}")
+    row = df.selectExpr(*exprs).collect()[0].asDict()
     n = int(row["rows"])
 
     buckets = []
     for c, spec in specs.items():
-        col = F.col(c).cast("double")
+        col = sx.col(c).cast("double")
         w = (spec.hi - spec.lo) / spec.bins
-        bucket = F.floor((col - F.lit(spec.lo)) / F.lit(w))
-        bucket = F.when(col < spec.lo, F.lit(-1)) \
-                  .when(col >= spec.hi, F.lit(spec.bins)) \
-                  .otherwise(bucket)
-        buckets.append(F.struct(F.lit(c).alias("col_name"),
-                                bucket.cast("int").alias("bin")))
-    counts = (df.select(F.explode(F.array(*buckets)).alias("p"))
-              .select("p.col_name", "p.bin")
-              .where(F.col("bin").isNotNull())  # nulls uncounted, as before
+        bucket = sx.when(col < spec.lo, -1).when(col >= spec.hi, spec.bins) \
+            .otherwise(sx.floor((col - spec.lo) / w))
+        buckets.append(sx.struct({"col_name": c,
+                                  "bin": bucket.cast("int")}))
+    counts = (df.selectExpr(f"explode({sx.array(*buckets).sql}) AS p")
+              .selectExpr("p.col_name", "p.bin")
+              .where("bin IS NOT NULL")  # nulls uncounted, as before
               .groupBy("col_name", "bin")
-              .agg(F.count(F.lit(1)).alias("cnt"))
+              .count()
               .collect())
-    hists = {c: {} for c in specs}
-    for r in counts:
-        hists[r["col_name"]][int(r["bin"])] = int(r["cnt"])
+    hists = {(r["col_name"], int(r["bin"])): int(r["count"])
+             for r in counts}
     out = []
     for c, spec in specs.items():
-        hist = [hists[c].get(i, 0) for i in range(-1, spec.bins + 1)]
+        hist = [hists.get((c, i), 0) for i in range(-1, spec.bins + 1)]
         qs = row[f"{c}__q"]
         out.append((c, n, float(spec.lo), float(spec.hi),
                     [float(x) for x in qs] if qs else None, hist))
@@ -134,7 +134,7 @@ def psi_from_histograms(h_base: Sequence[int], h_cur: Sequence[int],
     return float(np.sum((pc - pb) * np.log(pc / pb)))
 
 
-def assert_baseline_spec_compatible(baseline: DataFrame,
+def assert_baseline_spec_compatible(baseline: DataFrame | Mapping,
                                     specs: Dict[str, HistSpec]) -> None:
     """Driver-side preflight: the baseline snapshot's recorded (lo, hi,
     bins) must match the CURRENT HistSpecs for every shared column.
@@ -144,8 +144,10 @@ def assert_baseline_spec_compatible(baseline: DataFrame,
     last partition group finished (drift_check keeps the same guard as
     defense in depth for direct callers). Columns only one side knows
     are not an error — drift_check surfaces them as explicit
-    not-evaluated rows."""
-    rows = {r["col_name"]: r for r in baseline.collect()}
+    not-evaluated rows. ``baseline`` is a snapshot frame, or its rows by
+    column name."""
+    rows = baseline if isinstance(baseline, Mapping) else {
+        r["col_name"]: r for r in baseline.collect()}
     bad = []
     for c, spec in specs.items():
         r = rows.get(c)
@@ -173,6 +175,11 @@ def drift_check(current: DataFrame, baseline: DataFrame,
     is driver-side numpy."""
     cur = {r["col_name"]: r for r in current.collect()}
     base = {r["col_name"]: r for r in baseline.collect()}
+    # PSI over misaligned bins is a meaningless number, not a drift
+    # verdict — this is a config error, fail loudly
+    assert_baseline_spec_compatible(base, {
+        c: HistSpec(r["lo"], r["hi"], len(r["histogram"]) - 2)
+        for c, r in cur.items()})
     out = []
     for c in sorted(set(cur) - set(base)):
         # a monitored column with no baseline is NOT silently skipped —
@@ -190,16 +197,6 @@ def drift_check(current: DataFrame, baseline: DataFrame,
                     "snapshot — drift no longer evaluated"))
     for c in sorted(set(cur) & set(base)):
         rc, rb = cur[c], base[c]
-        if (rb["lo"], rb["hi"], len(rb["histogram"])) != \
-                (rc["lo"], rc["hi"], len(rc["histogram"])):
-            # PSI over misaligned bins is a meaningless number, not a
-            # drift verdict — this is a config error, fail loudly
-            raise ValueError(
-                f"drift baseline for `{c}` was built with a different "
-                f"histogram spec (baseline lo={rb['lo']} hi={rb['hi']} "
-                f"bins={len(rb['histogram']) - 2}, current lo={rc['lo']} "
-                f"hi={rc['hi']} bins={len(rc['histogram']) - 2}) — "
-                "rebuild the baseline snapshot with the current HistSpec")
         # an EMPTY side is a verdict of its own, never a silent pass:
         # psi_from_histograms returns 0.0 when either histogram is all
         # zeros and KS is skipped when a quantile sketch is null, so an

@@ -2,40 +2,46 @@
 audio decode + uniqueness + referential + stats + drift, with per-partition
 checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
-Per-run work is paid once per run, in the plan: the rule set is compiled
-once (compiling reads only ``df.schema``, which every group frame shares),
-the codec dim is collected once, fingerprinted, and checked as a literal
-set, and the whole table is annotated once — the rule chain's state
-columns plus one ``_violations`` array holding the rule violations and
-the ``codec NOT IN <dim set>`` check. Each group filters that one frame;
-the filter still reaches the scan as partition pruning, and the group's
-observed stats and its explode sit above the filter. A rule chain that
-is not deterministic (a transform using ``rand()``) would stop the
-filter above it, so such a run prepares and annotates per group instead.
+``run`` is three parts:
+
+    _plan(df, ...) -> RunPlan      reads only: nothing under the output
+                                   root changes, so bad input fails first
+    steps: (key, partitions, body) one pool of group_concurrency workers,
+                                   one protocol: skip | run, then mark
+    _report(plan, results)         metrics from the step records alone
+
+The plan pays the per-run work once: the rule set is compiled once
+(compiling reads only ``df.schema``, which every group frame shares), the
+codec dim is collected once, fingerprinted, and checked as a literal set,
+and the whole table is annotated once — the rule chain's state columns
+plus one ``_violations`` array holding the rule violations and the
+``codec NOT IN <dim set>`` check. Each group filters that one frame; the
+filter still reaches the scan as partition pruning, and the group's
+observed stats and its explode sit above the filter. A rule chain that is
+not deterministic (a transform using ``rand()``) would stop the filter
+above it, so such a run prepares and annotates per group instead. The
+plan also chooses where row integrity comes from (parquet footers per
+group or for the whole table, or Iceberg partition counts). Its wall is
+``metrics["phase_sec"]["plan"]``.
 
 Execution shape per partition group (a group = a batch of bucket_id
-partitions, the resume granularity; ``annotated`` carries the rule
-verdicts and ``codec NOT IN <dim set>`` as codegen'd expressions):
+partitions, the resume granularity):
 
     annotated.where(group) → observe(stats) → explode ─┐
     scan(group) → salted repartition → Arrow decode   ─┴─ violations
-                                                          + metrics
+                                                          + record
     manifest.mark(group)        # written LAST → resume-safe
-
-Every tiny frame the driver builds (the codec dim, the sketch merge, the
-drift snapshot and verdicts) is a JVM ``LocalRelation``
-(``sinks.writers.local_frame``), so reading it back runs no Spark job.
 
 Global steps after the groups (recorded under their own manifest keys):
 uniqueness on clip_id (duplicates span partition groups by construction)
-and the drift snapshot/check.
+and the drift snapshot/check. A resumed run skips a global step it finds
+recorded, and its record stands in the report.
 
-``run`` plans, executes, reports. The plan only reads (compile, dim read,
-prepare and annotate, resume check, partition discovery, group split), so
-bad input fails before anything under the output root changes; its wall
-is ``metrics["phase_sec"]["plan"]``. Every step then runs through one
-pool of ``group_concurrency`` workers and one protocol: skip it if a
-resumed run finds it complete, else run it, then mark it.
+Steps submit their Spark jobs concurrently; the sink (``RunSink``)
+serializes its own commits. Every tiny frame the driver builds (the
+codec dim, the sketch merge, the drift snapshot and verdicts) is a JVM
+``LocalRelation`` (``sinks.writers.local_frame``), so reading it back
+runs no Spark job.
 """
 
 from __future__ import annotations
@@ -45,12 +51,13 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
-from typing import Dict, List, Mapping, Optional, Sequence
+from typing import Callable, Dict, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import sqltext as sx
 from .compiler import CompiledRuleSet, compile_ruleset
 from .dsl import K, ObjectSchema
 from .engine import rule_count_exprs
@@ -115,22 +122,19 @@ def _merge_observed_stats(group_stats: List[Dict],
             entry["distinct_lower_bound"] = int(max(dv))
         if spark is not None:
             nonnull = total - nulls
-            hlls = [bytes(g[f"{c}__hll"]) for g in group_stats
-                    if g.get(f"{c}__hll") is not None]
-            klls = [bytes(g[f"{c}__kll"]) for g in group_stats
-                    if g.get(f"{c}__kll") is not None]
-            # all-null columns: the sketches are EMPTY — KLL's quantile
-            # extractor throws on an empty merged sketch, and HLL's
-            # answer is trivially 0 — so answer driver-side, no merge
-            if hlls:
-                if nonnull == 0:
+            for kind in ("hll", "kll"):
+                sketches = [(c, kind, bytes(g[f"{c}__{kind}"]))
+                            for g in group_stats
+                            if g.get(f"{c}__{kind}") is not None]
+                # all-null columns: the sketches are EMPTY — KLL's
+                # quantile extractor throws on an empty merged sketch,
+                # and HLL's answer is trivially 0 — so answer
+                # driver-side, no merge
+                if sketches and nonnull == 0 and kind == "hll":
                     entry["distinct"] = 0
-                else:
-                    sketch_rows += [(c, "hll", s) for s in hlls]
-                    wanted.append((c, "hll"))
-            if klls and nonnull > 0:
-                sketch_rows += [(c, "kll", s) for s in klls]
-                wanted.append((c, "kll"))
+                elif sketches and nonnull > 0:
+                    sketch_rows += sketches
+                    wanted.append((c, kind))
         for stat, fold in (("min", min), ("max", max),
                            ("min_len", min), ("max_len", max)):
             vals = [g[f"{c}__{stat}"] for g in group_stats
@@ -150,29 +154,31 @@ def _merge_observed_stats(group_stats: List[Dict],
         # one tiny aggregation for every column's merges: conditional
         # sketch aggregates (null inputs are skipped by the agg
         # functions) over an O(groups × cols) frame of ~KB sketches —
-        # constant job count regardless of column count
+        # constant job count regardless of column count. Built as SQL
+        # text, so the aggregate crosses to the JVM in one parse, not
+        # one call per literal
         sdf = local_frame(spark, sketch_rows,
                           "col string, kind string, s binary")
+        ps = sx.array(*[float(p) for p in quantile_ps])
         aggs = []
         for c, kind in wanted:
-            m = (F.col("col") == c) & (F.col("kind") == kind)
+            sk = sx.when((sx.col("col") == c) & (sx.col("kind") == kind),
+                         sx.col("s"))
             if kind == "hll":
-                aggs.append(F.hll_sketch_estimate(
-                    F.hll_union_agg(F.when(m, F.col("s"))))
-                    .alias(f"{c}__d"))
+                agg = sx.call("hll_sketch_estimate",
+                              sx.call("hll_union_agg", sk))
             else:
-                aggs.append(F.kll_sketch_get_quantile_double(
-                    F.kll_merge_agg_double(F.when(m, F.col("s"))),
-                    F.array(*[F.lit(float(p)) for p in quantile_ps]))
-                    .alias(f"{c}__q"))
-        row = sdf.agg(*aggs).collect()[0]
-        for c, kind in wanted:
+                agg = sx.call("kll_sketch_get_quantile_double",
+                              sx.call("kll_merge_agg_double", sk), ps)
+            aggs.append(agg.sql)
+        # one value per wanted merge, in order
+        row = sdf.selectExpr(*aggs).collect()[0]
+        for (c, kind), v in zip(wanted, row):
             if kind == "hll":
-                out[c]["distinct"] = int(row[f"{c}__d"])
+                out[c]["distinct"] = int(v)
             else:
-                out[c]["quantiles"] = dict(
-                    zip([str(p) for p in quantile_ps],
-                        [float(v) for v in row[f"{c}__q"]]))
+                out[c]["quantiles"] = dict(zip(
+                    [str(p) for p in quantile_ps], [float(q) for q in v]))
     return out
 
 
@@ -204,6 +210,21 @@ def _dim_codecs(rows: Optional[Sequence]) -> Optional[List]:
     return sorted({r["codec"] for r in rows if r["codec"] is not None})
 
 
+def _row_integrity(rows: int, expected: int, unreadable: int) -> Dict:
+    """The row-integrity record: the rows a run observed against the
+    rows the table's metadata holds. Files whose footer could not be
+    read make ``expected`` a lower bound, so they fail the check too."""
+    return {"ok": bool(rows == expected and unreadable == 0),
+            "rows_expected": expected, "unreadable_files": unreadable}
+
+
+def _counted_rows(counts: Mapping, group: Sequence,
+                  footer_cache: Optional[dict] = None) -> Tuple[int, int]:
+    """``(rows_expected, 0)`` of a group from per-partition row counts
+    (an Iceberg table's committed ``.partitions`` record counts)."""
+    return sum(counts.get(p, 0) for p in group), 0
+
+
 def default_clip_rules() -> ObjectSchema:
     """The jio-style rule set for the north-star clips shape
     (BASELINE.json input_hint)."""
@@ -231,6 +252,15 @@ def default_codec_dim(spark: SparkSession) -> DataFrame:
 DRIFT_SPECS = {"dur_ms": HistSpec(200.0, 30000.0, 32),
                "sr_hz": HistSpec(0.0, 48000.0, 48)}
 
+
+#: the config fields that change WHICH rows a run writes, in run.json's
+#: lineage order. The sink shape is one: resuming a full-mode root in
+#: exemplars mode would mix bounded and unbounded groups in one
+#: violations dir
+_SEMANTIC_FIELDS = (
+    "partition_col", "audio_check", "check_reference", "snr_threshold",
+    "decode_on_corrupt", "decode_source", "uniqueness_layout",
+    "uniqueness_on_unclustered", "violations_sink")
 
 #: allowed values of every mode knob: a typo must fail at construction,
 #: not silently take another branch or raise after the group scans
@@ -338,14 +368,44 @@ class ClipsJobConfig:
                 raise ValueError(
                     f"{name} must be one of {', '.join(map(repr, allowed))}"
                     f", got {value!r}")
-        if self.violations_sink == "exemplars" \
-                and self.violations_exemplars < 1:
-            raise ValueError("violations_exemplars must be >= 1, got "
-                             f"{self.violations_exemplars!r}")
-        for name in ("group_size", "group_concurrency"):
+        # the exemplar cap is read only in exemplars mode
+        capped = ("violations_exemplars",) \
+            if self.violations_sink == "exemplars" else ()
+        for name in capped + ("group_size", "group_concurrency"):
             if getattr(self, name) < 1:
                 raise ValueError(
                     f"{name} must be >= 1, got {getattr(self, name)!r}")
+
+
+@dataclass(frozen=True)
+class RunPlan:
+    """What a run decided before its first write (``_plan``).
+
+    ``annotated`` is the whole table annotated once, or None when the
+    rule chain is not deterministic (each group then annotates its own
+    slice). ``recorded`` holds the manifest records of the global steps
+    a resumed run finds complete. ``row_source(group, footer_cache=)``
+    gives ``(rows_expected, unreadable_files)`` for a group, or for the
+    whole table with ``group=None`` when ``table_integrity``; None when
+    the table has no row counts to audit against."""
+    df: DataFrame
+    table_root: Optional[str]
+    resume: bool
+    sink: Optional[RunSink]
+    manifest: Optional[Manifest]
+    compiled: CompiledRuleSet
+    dim_codecs: Optional[List]
+    annotated: Optional[DataFrame]
+    observe_exprs: List
+    schema_viols: List[Dict]
+    lineage: Dict
+    recorded: Dict[str, Dict]
+    partitions: int
+    groups: List[List]
+    row_source: Optional[Callable]
+    table_integrity: bool
+    started: float
+    plan_sec: float
 
 
 class ClipsValidationJob:
@@ -372,19 +432,6 @@ class ClipsValidationJob:
 
     # -- one partition group ------------------------------------------------
 
-    def _observe_exprs(self, df: DataFrame,
-                       compiled: CompiledRuleSet) -> List:
-        """The aggregates each group observes on its rule scan: the
-        column stats, and the per-rule tallies when asked for."""
-        exprs = stats_exprs(df, list(self.cfg.stat_cols), quantiles=None,
-                            hll_sketch=True, kll_quantiles=True)
-        if self.cfg.observe_rule_counts:
-            # per-rule verdict tallies on the same pass (the shared
-            # recipe from engine.rule_count_exprs — summary() and this
-            # path can never diverge)
-            exprs += rule_count_exprs(compiled.entries)
-        return exprs
-
     def _annotate(self, prepared: DataFrame, compiled: CompiledRuleSet,
                   dim_codecs: Optional[Sequence]) -> DataFrame:
         """``prepared`` plus ``_violations``: the rule chain's violations
@@ -392,44 +439,33 @@ class ClipsValidationJob:
         set>`` appended as one more element."""
         ann = prepared.withColumn("_violations", compiled.violations_array)
         if self.codec_dim is not None:
-            codec = F.col("codec")
+            # SQL text, parsed in one call (see sqltext)
+            codec, viols = sx.col("codec"), sx.col("_violations")
             ref_fail = codec.isNotNull()
             if dim_codecs:
-                ref_fail = ref_fail & ~codec.isin(list(dim_codecs))
-            ref_struct = F.struct(
-                F.lit("codec").alias("rule_path"),
-                F.lit("referential").alias("rule_name"),
-                F.lit("exists in dim.codec").alias("expected"),
-                codec.alias("actual"),
-                F.concat(F.lit("field `codec` value "), codec,
-                         F.lit(" not found in dimension `codec`"))
-                 .alias("message"))
-            ann = ann.withColumn(
-                "_violations",
-                F.when(ref_fail,
-                       F.concat("_violations", F.array(ref_struct)))
-                 .otherwise(F.col("_violations")))
+                ref_fail = ref_fail & ~codec.isin(*dim_codecs)
+            ref = sx.struct({
+                "rule_path": "codec", "rule_name": "referential",
+                "expected": "exists in dim.codec", "actual": codec,
+                "message": sx.concat("field `codec` value ", codec,
+                                     " not found in dimension `codec`")})
+            ann = ann.withColumn("_violations", F.expr(
+                sx.when(ref_fail, sx.concat(viols, sx.array(ref)))
+                .otherwise(viols).sql))
         return ann
 
     def group_violations(self, df: DataFrame, group=None,
                          table_root: Optional[str] = None,
-                         observation=None,
                          footer_cache: Optional[dict] = None,
-                         compiled: Optional[CompiledRuleSet] = None,
-                         annotated: Optional[DataFrame] = None,
-                         dim_codecs: Optional[Sequence] = None,
-                         observe_exprs: Optional[List] = None
+                         annotated: Optional[DataFrame] = None
                          ) -> DataFrame:
         """All per-row violations for a slice of the table, in the standard
         shape + partition column.
 
-        :meth:`run` pays the per-run work once and passes it to every
-        group: ``compiled`` is the rule set compiled against a frame with
-        ``df``'s schema, ``annotated`` is :meth:`_annotate` of the whole
-        table filtered to this slice, ``dim_codecs`` is the codec dim's
-        non-NULL codec values, and ``observe_exprs`` are the aggregates
-        ``observation`` collects. Called on its own, this compiles,
-        collects the dim, prepares and annotates itself.
+        ``annotated`` is :meth:`_annotate` of this slice; a run's group
+        step passes the run's one annotated frame filtered to the slice,
+        with the group's observe on it. Called without it, this
+        compiles, collects the dim, prepares and annotates itself.
 
         Scan economy (SURVEY.md §4.2 "single-pass multi-metric"): the rule
         chain AND the referential check share ONE scan, with no join and
@@ -438,27 +474,19 @@ class ClipsValidationJob:
         single explode, and the scan never reads `bytes` (column
         pruning). The audio decode is the only second scan, reading
         exactly (id, bytes, metadata)."""
-        ids = ["clip_id", self.cfg.partition_col]
-        if compiled is None:
-            compiled = compile_ruleset(df, self.cfg.rules.clone())
         if annotated is None:
-            if dim_codecs is None and self.codec_dim is not None:
-                dim_codecs = _dim_codecs(self.codec_dim.collect())
-            annotated = self._annotate(compiled.prepare(df), compiled,
-                                       dim_codecs)
-        ann = annotated
-        if observation is not None:
-            # stats piggyback on the SAME scan (before the violation
-            # filter drops passing rows) — no extra source read
-            if observe_exprs is None:
-                observe_exprs = self._observe_exprs(df, compiled)
-            ann = ann.observe(observation, *observe_exprs)
+            compiled = compile_ruleset(df, self.cfg.rules.clone())
+            annotated = self._annotate(
+                compiled.prepare(df), compiled, _dim_codecs(
+                    None if self.codec_dim is None
+                    else self.codec_dim.collect()))
 
         # no size()>0 pre-filter: explode drops empty arrays itself;
         # the filter variant re-evaluates the violations-array expr in a
         # separate Filter node for surviving rows (measured cost-neutral
         # at sf0.1 — the single-evaluation plan is simply simpler)
-        viols = (ann.select(*ids, F.explode("_violations").alias("_v"))
+        viols = (annotated.select("clip_id", self.cfg.partition_col,
+                                  F.explode("_violations").alias("_v"))
                  .select("clip_id",
                          *[F.col(f"_v.{c}") for c in VIOLATION_COLS[1:]],
                          self.cfg.partition_col))
@@ -490,7 +518,7 @@ class ClipsValidationJob:
                                   snr_threshold=self.cfg.snr_threshold))
         return viols
 
-    # -- the full job ---------------------------------------------------------
+    # -- the full job: plan, steps, report ----------------------------------
 
     def run(self, df: DataFrame, output_root: Optional[str] = None,
             resume: bool = False,
@@ -506,13 +534,50 @@ class ClipsValidationJob:
         empty groups complete in the resume manifest; filter by
         partition via the manifest/resume machinery instead, or omit
         table_root so discovery derives from df."""
+        plan = self._plan(df, output_root, resume, table_root)
+        # -- the plan holds: the first writes
+        if plan.manifest and not resume:
+            # a FRESH run into an existing root invalidates every old
+            # completion record: if this run crashes, a later resume
+            # must re-run only what THIS run didn't finish — stale
+            # records from a previous (possibly differently-configured)
+            # run would otherwise be trusted and their groups skipped
+            plan.manifest.clear()
+            # ... and every old step output: the violations writer is a
+            # DYNAMIC partition overwrite, which never deletes a
+            # partition absent from the new data — a partition dirty
+            # last run but clean now would keep its stale violation
+            # rows under this run's run.json
+            plan.sink.clear_outputs(STEP_OUTPUTS)
+        if plan.sink:
+            plan.sink.write_run_metadata(plan.lineage)
+
+        steps = [(f"group_{_group_key(g)}", g,
+                  partial(self._group_step, plan, g)) for g in plan.groups]
+        steps.append(("_global_uniqueness", [],
+                      partial(self._uniqueness_step, plan)))
+        if self.cfg.drift:
+            steps.append(("_global_drift", [],
+                          partial(self._drift_step, plan)))
+        metrics = self._report(plan, self._run_steps(plan, steps))
+        if plan.sink:
+            # keep the run-start lineage keys — the final write replaces
+            # run.json wholesale
+            plan.sink.write_run_metadata({
+                **plan.lineage,
+                "metrics": {k: v for k, v in metrics.items()
+                            if k != "drift"},
+            })
+        return metrics
+
+    def _plan(self, df: DataFrame, output_root: Optional[str],
+              resume: bool, table_root: Optional[str]) -> RunPlan:
+        """Everything the run decides before its first write. It only
+        reads, so bad input (a typo'd table_root, a partition column of
+        the wrong type, a stale drift baseline) leaves a finished output
+        root as it was."""
         cfg = self.cfg
         t0 = time.time()
-
-        # -- plan: reads only. Nothing under output_root changes until
-        # the groups are split, so bad input (a typo'd table_root, a
-        # partition column of the wrong type) leaves a finished root as
-        # it was
         if cfg.drift and self.baseline is not None:
             # preflight the baseline's bin specs against the current
             # DRIFT_SPECS NOW (both sides are tiny): a stale baseline
@@ -545,7 +610,15 @@ class ClipsValidationJob:
         annotated = None
         if prepared._jdf.queryExecution().analyzed().deterministic():
             annotated = self._annotate(prepared, compiled, dim_codecs)
-        observe_exprs = self._observe_exprs(df, compiled)
+        # what each group observes on its rule scan: the column stats,
+        # and the per-rule tallies when asked for
+        observe_exprs = stats_exprs(df, list(cfg.stat_cols), quantiles=None,
+                                    hll_sketch=True, kll_quantiles=True)
+        if cfg.observe_rule_counts:
+            # per-rule verdict tallies on the same pass (the shared
+            # recipe from engine.rule_count_exprs — summary() and this
+            # path can never diverge)
+            observe_exprs += rule_count_exprs(compiled.entries)
         sink = RunSink(output_root) if output_root else None
         manifest = Manifest(output_root) if output_root else None
 
@@ -562,19 +635,9 @@ class ClipsValidationJob:
             # rebuilt dim flags every row carrying it) — hashed from the
             # rows collected above, which must stay dimension-sized
             "codec_dim": rows_fingerprint(dim_rows),
-            "partition_col": cfg.partition_col,
-            "audio_check": cfg.audio_check,
-            "check_reference": cfg.check_reference,
-            "snr_threshold": cfg.snr_threshold,
-            "decode_on_corrupt": cfg.decode_on_corrupt,
-            "decode_source": cfg.decode_source,
-            "uniqueness_layout": cfg.uniqueness_layout,
-            "uniqueness_on_unclustered": cfg.uniqueness_on_unclustered,
-            # the sink shape changes WHICH rows a completed group wrote:
-            # resuming a full-mode root in exemplars mode (or under a
-            # different cap) would mix bounded and unbounded groups in
-            # one violations dir
-            "violations_sink": cfg.violations_sink,
+            **{k: getattr(cfg, k) for k in _SEMANTIC_FIELDS},
+            # the cap changes WHICH rows a completed group wrote, like
+            # the sink shape does
             **({"violations_exemplars": cfg.violations_exemplars}
                if cfg.violations_sink == "exemplars" else {}),
         }
@@ -605,13 +668,11 @@ class ClipsValidationJob:
         # the distinct() job — a full scan at 10^12 rows — is only the
         # fallback for ad-hoc in-memory frames
         parts: List = []
-        hive_listed = False
         if table_root:
             from .sources.tables import list_partition_values
             parts = list_partition_values(self.spark, table_root,
                                           cfg.partition_col,
                                           fmt=cfg.table_format)
-            hive_listed = bool(parts)
             if parts:
                 # the wanted-set must isin-match the column's real type
                 # or every group filter selects zero rows while being
@@ -619,6 +680,12 @@ class ClipsValidationJob:
                 from .sources.tables import check_partition_value_types
                 check_partition_value_types(
                     parts, df.schema[cfg.partition_col].dataType)
+        # can the files decode and its footer audit dir-prune per group?
+        # Asked of the decode's own listing (plain paths and URIs alike),
+        # once per run; a listed hive partition set already answers it
+        files_decode = self._files_decode(table_root)
+        hive = files_decode and (bool(parts) or is_hive_layout(
+            table_root, cfg.partition_col))
         if not parts:
             from .sources.tables import none_last_sorted
             raw = [r[0] for r in
@@ -629,12 +696,6 @@ class ClipsValidationJob:
         completed = manifest.completed() if (manifest and resume) else {}
         done = manifest.completed_partitions() if completed else set()
         todo = [p for p in parts if p not in done]
-        # can the files decode and its footer audit dir-prune per group?
-        # Asked of the decode's own listing (plain paths and URIs alike),
-        # once per run; a listed hive partition set already answers it
-        files_decode = self._files_decode(table_root)
-        hive = files_decode and (hive_listed or is_hive_layout(
-            table_root, cfg.partition_col))
         if files_decode and cfg.audio_check and not hive:
             # non-hive layout (e.g. a clip_id-sorted clustered table: the
             # partition value is a DATA column, no directories to prune):
@@ -650,228 +711,203 @@ class ClipsValidationJob:
             groups = [todo[i:i + cfg.group_size]
                       for i in range(0, len(todo), cfg.group_size)]
 
-        # -- row-integrity setup: decided ONCE per run, not per group --
-        # parquet: the footer audit can prune per GROUP only on a hive
-        # layout; a non-hive layout (partition value is a data column)
-        # would count the WHOLE table against each group's rows — a
-        # false flag on every healthy group — so it audits at TABLE
-        # granularity instead, and only when the run spans every
-        # partition (a resumed subset has no whole-table truth either).
-        # iceberg: the .partitions read is group-independent — one
-        # manifest read per run, indexed per group.
-        parquet_table_audit = (files_decode and not hive
-                               and len(todo) == len(parts))
-        iceberg_counts = None
-        if table_root and cfg.table_format == "iceberg":
+        # -- row integrity: ONE source per run, not per group. parquet:
+        # the footer audit can prune per GROUP only on a hive layout; a
+        # non-hive layout (partition value is a data column) would count
+        # the WHOLE table against each group's rows — a false flag on
+        # every healthy group — so it audits at TABLE granularity
+        # instead, and only when the run spans every partition (a
+        # resumed subset has no whole-table truth either). iceberg: the
+        # .partitions read is group-independent — one manifest read per
+        # run, indexed per group.
+        row_source, table_integrity = None, False
+        if files_decode and (hive or len(todo) == len(parts)):
+            from .audio.files import footer_row_counts
+            row_source = partial(footer_row_counts, table_root,
+                                 partition_col=cfg.partition_col)
+            table_integrity = not hive
+        elif table_root and cfg.table_format == "iceberg":
             from .sources.tables import iceberg_partition_row_counts
-            iceberg_counts = iceberg_partition_row_counts(
-                self.spark, table_root, cfg.partition_col)
+            counts = iceberg_partition_row_counts(self.spark, table_root,
+                                                  cfg.partition_col)
+            if counts is not None:      # None: no .partitions to read
+                row_source = partial(_counted_rows, counts)
 
-        # -- the plan holds: the first writes
-        plan_sec = time.time() - t0
-        if manifest and not resume:
-            # a FRESH run into an existing root invalidates every old
-            # completion record: if this run crashes, a later resume
-            # must re-run only what THIS run didn't finish — stale
-            # records from a previous (possibly differently-configured)
-            # run would otherwise be trusted and their groups skipped
-            manifest.clear()
-            # ... and every old step output: the violations writer is a
-            # DYNAMIC partition overwrite, which never deletes a
-            # partition absent from the new data — a partition dirty
-            # last run but clean now would keep its stale violation
-            # rows under this run's run.json
-            sink.clear_outputs(STEP_OUTPUTS)
-        if sink:
-            sink.write_run_metadata(lineage)
-
-        # -- execute. Spark job SUBMISSION stays concurrent across steps;
-        # only the sink COMMITS queue. Concurrent committers sharing one
-        # output root (directory listing, _SUCCESS markers, object-store
-        # rename) are not a guaranteed-safe pattern even with disjoint
-        # dynamic partitions.
-        sink_lock = threading.Lock()
-
-        def run_group(group, obs):
-            cond = _part_filter(cfg.partition_col, group)
-            # one footer read per file per group: the decode's split
-            # listing and the row-integrity audit below share it
-            fcache: Dict = {}
-            viols = self.group_violations(
-                df.where(cond), group=group, table_root=table_root,
-                observation=obs, footer_cache=fcache, compiled=compiled,
-                annotated=None if annotated is None
-                else annotated.where(cond),
-                dim_codecs=dim_codecs, observe_exprs=observe_exprs)
-            n_viols = None
-            if sink:
-                if cfg.violations_sink == "exemplars":
-                    from .sinks.writers import exemplar_cap
-                    viols = exemplar_cap(viols, cfg.violations_exemplars,
-                                         cfg.partition_col)
-                with sink_lock:
-                    sink.overwrite_partitions(viols, "violations",
-                                              cfg.partition_col)
-            else:
-                n_viols = viols.count()
-            rec: Dict = {"rows": int(obs.get["rows"])}  # set by the action
-            if n_viols is not None:
-                rec["violations"] = n_viols
-            if hive:
-                # scan-vs-footer audit: metadata-only, prunes the same
-                # directories the decode does. Catches the JVM scan
-                # silently dropping corrupt files (ignoreCorruptFiles)
-                # — a "successful" run over less data than the table
-                # holds is flagged, not trusted.
-                from .audio.files import footer_row_counts
-                exp, unreadable = footer_row_counts(
-                    table_root, group, cfg.partition_col,
-                    footer_cache=fcache)
-                rec["row_integrity"] = {
-                    "rows_expected": exp,
-                    "unreadable_files": unreadable,
-                    "ok": bool(rec["rows"] == exp and unreadable == 0)}
-            elif iceberg_counts is not None and group:
-                # Iceberg analog: .partitions record_count is the
-                # committed truth for the snapshot (manifest read, no
-                # data files) — same audit, different metadata source
-                exp = sum(iceberg_counts.get(p, 0) for p in group)
-                rec["row_integrity"] = {
-                    "rows_expected": exp,
-                    "unreadable_files": 0,
-                    "ok": bool(rec["rows"] == exp)}
-            return rec
-
-        # global step 1: uniqueness (duplicate ids cross partition groups)
-        def run_uniqueness():
-            cert: Dict = {}
-            uv = uniqueness_check(
-                df, "clip_id", layout=cfg.uniqueness_layout,
-                on_unclustered=cfg.uniqueness_on_unclustered,
-                certificate=cert)
-            if sink:
-                # the write's own observed row count: a count() after it
-                # would re-plan the whole-table groupBy
-                seen = Observation()
-                uv = uv.observe(seen, F.count(F.lit(1)).alias("rows"))
-                # overwrite, not append: a crash between this write and
-                # the step's manifest mark must not duplicate rows when
-                # the resumed run re-executes the step
-                with sink_lock:
-                    sink.overwrite(uv, "uniqueness_violations")
-                n = int(seen.get["rows"])
-            else:
-                n = uv.count()
-            return {"violations": n, **({"certificate": cert}
-                                        if cert else {})}
-
-        # global step 2: drift snapshot + check
-        def run_drift():
-            snap = snapshot(df, DRIFT_SPECS)
-            if sink:
-                with sink_lock:
-                    sink.overwrite(snap, "snapshot")
-            if self.baseline is None:
-                # baseline-less runs still pay the snapshot scan — the
-                # (empty) result is recorded so resume skips it too
-                return {"drift": []}
-            dc = drift_check(snap, self.baseline)
-            rows = [r.asDict() for r in dc.collect()]
-            if sink:
-                with sink_lock:
-                    sink.overwrite(dc, "drift")
-            return {"drift": rows}
-
-        observations = [Observation(f"stats_{_group_key(g)}")
-                        for g in groups]
-        steps = [(f"group_{_group_key(g)}", g, partial(run_group, g, obs))
-                 for g, obs in zip(groups, observations)]
-        steps.append(("_global_uniqueness", [], run_uniqueness))
-        if cfg.drift:
-            steps.append(("_global_drift", [], run_drift))
         # only the global steps are skipped by key: todo already left
         # out the done partitions, and a group whose key ANOTHER
-        # partition set recorded must still run to fill its Observation
-        recorded = {k: completed[k].get("metrics", {}) for k, _, _ in
-                    steps[len(groups):] if k in completed}
+        # partition set recorded must still run for its own rows
+        recorded = {k: rec.get("metrics", {}) for k, rec in completed.items()
+                    if k.startswith("_global_")}
+        return RunPlan(
+            df=df, table_root=table_root, resume=resume, sink=sink,
+            manifest=manifest, compiled=compiled, dim_codecs=dim_codecs,
+            annotated=annotated,
+            observe_exprs=observe_exprs,
+            schema_viols=schema_viols, lineage=lineage, recorded=recorded,
+            partitions=len(parts), groups=groups, row_source=row_source,
+            table_integrity=table_integrity, started=t0,
+            plan_sec=time.time() - t0)
+
+    # -- the steps: each returns its manifest record ------------------------
+
+    def _group_step(self, plan: RunPlan, group: Sequence) -> Dict:
+        """One partition group: its violations written (or counted), and
+        its record — rows, the violation count without a sink, row
+        integrity — plus the group's ``observed`` stats row, which the
+        manifest mark leaves out."""
+        cfg = self.cfg
+        cond = _part_filter(cfg.partition_col, group)
+        gdf = plan.df.where(cond)
+        if plan.annotated is not None:
+            ann = plan.annotated.where(cond)
+        else:
+            ann = self._annotate(plan.compiled.prepare(gdf), plan.compiled,
+                                 plan.dim_codecs)
+        # stats piggyback on the SAME scan (before the explode drops
+        # passing rows) — no extra source read
+        obs = Observation(f"stats_{_group_key(group)}")
+        # one footer read per file per group: the decode's split
+        # listing and the row-integrity audit below share it
+        fcache: Dict = {}
+        viols = self.group_violations(
+            gdf, group=group, table_root=plan.table_root,
+            footer_cache=fcache,
+            annotated=ann.observe(obs, *plan.observe_exprs))
+        counted = {}
+        if plan.sink:
+            if cfg.violations_sink == "exemplars":
+                from .sinks.writers import exemplar_cap
+                viols = exemplar_cap(viols, cfg.violations_exemplars,
+                                     cfg.partition_col)
+            plan.sink.overwrite_partitions(viols, "violations",
+                                           cfg.partition_col)
+        else:
+            counted["violations"] = viols.count()
+        observed = obs.get                      # set by the action
+        rec = {"rows": int(observed["rows"]), **counted}
+        if plan.row_source and not plan.table_integrity:
+            # scan-vs-metadata audit: catches the JVM scan silently
+            # dropping corrupt files (ignoreCorruptFiles) — a
+            # "successful" run over less data than the table holds is
+            # flagged, not trusted
+            rec["row_integrity"] = _row_integrity(
+                rec["rows"], *plan.row_source(group, footer_cache=fcache))
+        rec["observed"] = observed
+        return rec
+
+    def _uniqueness_step(self, plan: RunPlan) -> Dict:
+        """Global step 1: uniqueness (duplicate ids cross partition
+        groups)."""
+        cert: Dict = {}
+        uv = uniqueness_check(
+            plan.df, "clip_id", layout=self.cfg.uniqueness_layout,
+            on_unclustered=self.cfg.uniqueness_on_unclustered,
+            certificate=cert)
+        if plan.sink:
+            # the write's own observed row count: a count() after it
+            # would re-plan the whole-table groupBy
+            seen = Observation()
+            uv = uv.observe(seen, F.count(F.lit(1)).alias("rows"))
+            # overwrite, not append: a crash between this write and the
+            # step's manifest mark must not duplicate rows when the
+            # resumed run re-executes the step
+            plan.sink.overwrite(uv, "uniqueness_violations")
+            n = int(seen.get["rows"])
+        else:
+            n = uv.count()
+        return {"violations": n, **({"certificate": cert} if cert else {})}
+
+    def _drift_step(self, plan: RunPlan) -> Dict:
+        """Global step 2: the drift snapshot, and the check against the
+        baseline."""
+        snap = snapshot(plan.df, DRIFT_SPECS)
+        if plan.sink:
+            plan.sink.overwrite(snap, "snapshot")
+        if self.baseline is None:
+            # baseline-less runs still pay the snapshot scan — the
+            # (empty) result is recorded so resume skips it too
+            return {"drift": []}
+        dc = drift_check(snap, self.baseline)
+        rows = [r.asDict() for r in dc.collect()]
+        if plan.sink:
+            plan.sink.overwrite(dc, "drift")
+        return {"drift": rows}
+
+    def _run_steps(self, plan: RunPlan, steps: Sequence[Tuple]
+                   ) -> Dict[str, Tuple[Dict, float]]:
+        """Every ``(key, partitions, body)`` step through ONE pool, fed
+        in order: at 1 worker this is the serial order, at N workers at
+        most N Spark-submitting steps run at once. Returns
+        ``{key: (record, seconds)}``.
+
+        THE step protocol: a global step a resumed run finds recorded is
+        skipped, and its recorded results stand in this run's metrics (a
+        0 would contradict the written outputs); otherwise its body runs
+        and its record is marked LAST, after the body's writes →
+        resume-safe. Once any step has failed, no further step starts."""
         failed = threading.Event()
 
-        def run_step(key: str, partitions: Sequence, body):
-            """THE step protocol: (record, seconds). A global step a
-            resumed run finds complete is skipped, and its recorded
-            results stand in this run's metrics (a 0 would contradict
-            the written outputs); otherwise its body runs and its record
-            is marked LAST, after the body's writes → resume-safe. Once
-            any step has failed, no further step starts."""
+        def run_step(key: str, partitions: Sequence, body: Callable):
             if failed.is_set():
                 return None
             t = time.time()
             try:
-                if key in recorded:
-                    rec = recorded[key]
-                else:
+                rec = plan.recorded.get(key)
+                if rec is None:
                     rec = body()
-                    if manifest:
-                        manifest.mark(key, partitions, rec)
+                    if plan.manifest:
+                        plan.manifest.mark(key, partitions, {
+                            k: v for k, v in rec.items()
+                            if k != "observed"})
             except BaseException:
                 failed.set()
                 raise
             return rec, time.time() - t
 
-        def inheriting(fn):
-            """``fn`` run with a copy of the caller's local properties
-            (job group, scheduler pool) and session tags. One copy per
-            step: a shared one would hand concurrent steps the same
-            ``Properties`` object. With pinned threads off, PySpark
-            returns the session itself, and no Python thread owns a JVM
-            thread to carry them into."""
-            wrap = inheritable_thread_target(self.spark)
-            return fn if wrap is self.spark else wrap(fn)
+        futures = []
+        with ThreadPoolExecutor(self.cfg.group_concurrency) as pool:
+            for key, parts, body in steps:
+                # each step runs with its own copy of the caller's local
+                # properties (job group, scheduler pool) and session
+                # tags: a shared one would hand concurrent steps the
+                # same ``Properties`` object. With pinned threads off,
+                # PySpark returns the session itself, and no Python
+                # thread owns a JVM thread to carry them into
+                wrap = inheritable_thread_target(self.spark)
+                fn = run_step if wrap is self.spark else wrap(run_step)
+                futures.append((key, pool.submit(fn, key, parts, body)))
+        # every result read, so every step's failure surfaces
+        return {key: f.result() for key, f in futures}
 
-        # ONE pool, fed in order: at 1 worker this is the serial order,
-        # at N workers at most N Spark-submitting steps run at once
-        with ThreadPoolExecutor(cfg.group_concurrency) as pool:
-            futures = [pool.submit(inheriting(run_step), *s) for s in steps]
-        results = [f.result() for f in futures]
+    # -- the report ---------------------------------------------------------
 
-        # -- report
-        group_res = results[:len(groups)]
+    def _report(self, plan: RunPlan,
+                results: Mapping[str, Tuple[Dict, float]]) -> Dict:
+        """The run metrics, from the plan and the step records alone. Its
+        only Spark job is the merge of the groups' stats sketches."""
+        cfg = self.cfg
+        group_res = [res for key, res in results.items()
+                     if key.startswith("group_")]
         group_recs = [rec for rec, _ in group_res]
         group_secs = [sec for _, sec in group_res]
-        uniq_rec, uniq_sec = results[len(groups)]
-        drift_rec, drift_sec = results[len(groups) + 1] if cfg.drift \
-            else ({}, 0.0)
-        group_stats = [obs.get for obs in observations]
+        uniq_rec, uniq_sec = results["_global_uniqueness"]
+        drift_rec, drift_sec = results.get("_global_drift", ({}, 0.0))
+        group_stats = [rec["observed"] for rec in group_recs]
         rows_processed = sum(rec["rows"] for rec in group_recs)
         integrity = [rec["row_integrity"] for rec in group_recs
                      if "row_integrity" in rec]
-        rule_counts = None
-        if cfg.observe_rule_counts and group_stats:
-            # metadata from the run's one compile, whose entries every
-            # group's tallies were built from; counts are plain sums
-            # across groups
-            rule_counts = []
-            for i, e in enumerate(compiled.entries):
-                ev = sum(int(g.get(f"__rule{i}__ev") or 0)
-                         for g in group_stats)
-                ps = sum(int(g.get(f"__rule{i}__ps") or 0)
-                         for g in group_stats)
-                rule_counts.append(
-                    {"rule_id": e.rule_id, "rule_path": e.path,
-                     "rule_name": e.rule_name,
-                     "evaluated": ev, "passed": ps, "failed": ev - ps})
         col_stats = (_merge_observed_stats(group_stats,
                                            list(cfg.stat_cols),
                                            spark=self.spark)
                      if group_stats else None)
 
-        wall = time.time() - t0
+        wall = time.time() - plan.started
         metrics = {
             "rows": rows_processed,
-            "partitions": len(parts),
-            "groups_run": len(groups),
-            "resumed": resume,
-            "violations": None if sink else sum(
+            "partitions": plan.partitions,
+            "groups_run": len(plan.groups),
+            "resumed": plan.resume,
+            "violations": None if plan.sink else sum(
                 rec["violations"] for rec in group_recs),
             "uniqueness_violations": int(uniq_rec.get("violations", 0)),
             "drift": list(drift_rec.get("drift") or []),
@@ -883,32 +919,38 @@ class ClipsValidationJob:
             # the first question a reader of the run metrics asks
             "phase_sec": {
                 # compile, dim read, prepare + annotate, listing, split
-                "plan": round(plan_sec, 3),
-                "groups_max": round(max(group_secs), 3) if group_secs
-                else 0.0,
+                "plan": round(plan.plan_sec, 3),
+                "groups_max": round(max(group_secs, default=0.0), 3),
                 "groups_sum": round(sum(group_secs), 3),
                 "uniqueness": round(uniq_sec, 3),
                 "drift": round(drift_sec, 3),
             },
         }
         if cfg.schema_contract:
-            metrics["schema_violations"] = schema_viols
-        if rule_counts is not None:
-            metrics["rule_counts"] = rule_counts
+            metrics["schema_violations"] = plan.schema_viols
+        if cfg.observe_rule_counts and group_stats:
+            # metadata from the run's one compile, whose entries every
+            # group's tallies were built from; counts are plain sums
+            # across groups
+            metrics["rule_counts"] = []
+            for i, e in enumerate(plan.compiled.entries):
+                ev = sum(int(g.get(f"__rule{i}__ev") or 0)
+                         for g in group_stats)
+                ps = sum(int(g.get(f"__rule{i}__ps") or 0)
+                         for g in group_stats)
+                metrics["rule_counts"].append(
+                    {"rule_id": e.rule_id, "rule_path": e.path,
+                     "rule_name": e.rule_name,
+                     "evaluated": ev, "passed": ps, "failed": ev - ps})
         if uniq_rec.get("certificate"):
             # the clustered path's runtime exactness verdict (free: built
             # from the boundary rows the merge already collected)
             metrics["uniqueness_certificate"] = uniq_rec["certificate"]
-        if parquet_table_audit and groups:
+        if plan.table_integrity and plan.groups:
             # non-hive layout: one whole-table footer pass vs the run's
             # total observed rows (per-group pruning is impossible here)
-            from .audio.files import footer_row_counts
-            exp, unreadable = footer_row_counts(
-                table_root, None, cfg.partition_col)
-            metrics["row_integrity"] = {
-                "ok": bool(rows_processed == exp and unreadable == 0),
-                "rows_expected": exp,
-                "unreadable_files": unreadable}
+            metrics["row_integrity"] = _row_integrity(
+                rows_processed, *plan.row_source(None))
         elif integrity:
             metrics["row_integrity"] = {
                 "ok": all(g["ok"] for g in integrity),
@@ -916,12 +958,4 @@ class ClipsValidationJob:
                                      for g in integrity),
                 "unreadable_files": sum(g["unreadable_files"]
                                         for g in integrity)}
-        if sink:
-            # keep the run-start lineage keys — the final write replaces
-            # run.json wholesale
-            sink.write_run_metadata({
-                **lineage,
-                "metrics": {k: v for k, v in metrics.items()
-                            if k != "drift"},
-            })
         return metrics

@@ -22,16 +22,24 @@ half-written step rewrites exactly what it wrote before.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
+import marshal
 import os
+import shutil
+import threading
 import time
+import urllib.parse
 import uuid
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Dict, List, Optional, Sequence, Union
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -58,7 +66,6 @@ def _fn_token(fn) -> str:
     Instance attrs that fall to ``repr`` with a memory address make the
     token process-UNstable, which fails safe (a spurious refusal, never
     a false accept)."""
-    import functools
     if isinstance(fn, functools.partial):
         return ("fn:partial(" + _fn_token(fn.func)
                 + ";args=" + _encode_str(list(fn.args))
@@ -68,13 +75,7 @@ def _fn_token(fn) -> str:
     parts = [getattr(fn, "__module__", None) or "?",
              getattr(fn, "__qualname__", None) or type(fn).__name__]
     code = getattr(fn, "__code__", None)
-    if code is not None:
-        import marshal
-        try:
-            parts.append(hashlib.sha256(
-                marshal.dumps(code)).hexdigest()[:16])
-        except ValueError:  # unmarshalable code object (exotic)
-            pass
+    parts += _code_digest(code)
     # captured constants change behavior exactly like bytecode does
     # (e.g. `lambda c: c > limit` under two values of `limit`)
     cells = getattr(fn, "__closure__", None)
@@ -93,20 +94,24 @@ def _fn_token(fn) -> str:
         # its bytecode in the token, editing the __call__ body between
         # runs would false-ACCEPT on resume (the one failure direction
         # this fingerprint must never take)
-        call_code = getattr(getattr(type(fn), "__call__", None),
-                            "__code__", None)
-        if call_code is not None:
-            import marshal
-            try:
-                parts.append(hashlib.sha256(
-                    marshal.dumps(call_code)).hexdigest()[:16])
-            except ValueError:
-                pass
+        parts += _code_digest(getattr(getattr(type(fn), "__call__", None),
+                                      "__code__", None))
     state = getattr(inst, "__dict__", None) if inst is not None else None
     if state:
         parts.append("self=" + _encode_str(
             {str(k): state[k] for k in sorted(state)}))
     return "fn:" + ":".join(parts)
+
+
+def _code_digest(code) -> List[str]:
+    """The hash of a code object's bytecode, as a one-item list; empty
+    for no code object or an unmarshalable one (exotic)."""
+    if code is None:
+        return []
+    try:
+        return [hashlib.sha256(marshal.dumps(code)).hexdigest()[:16]]
+    except ValueError:
+        return []
 
 
 def _encode_str(v) -> str:
@@ -182,8 +187,6 @@ def exemplar_order_key(viols: DataFrame,
 
     ONE derivation, shared by :func:`exemplar_cap`'s salt hash and both
     of its window orderings."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
     keys = [partition_col, "rule_path", "rule_name"]
     order: list = [*id_cols, "message"]
     rest = [f for f in viols.schema.fields
@@ -239,8 +242,6 @@ def exemplar_cap(viols: DataFrame, k: int,
     invariant to the salt split (a global top-k row is top-k within
     any subset containing it); rows still tying on the full key are
     byte-identical, which are interchangeable."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
     if k < 1:
         raise ValueError(f"exemplar cap must be >= 1, got {k}")
     if salt < 1:
@@ -297,7 +298,6 @@ def _json_default(v):
     done`` set-membership matches: ``Decimal(n) == int(n)`` and they
     hash equal); anything else raises as before — silently stringifying
     an unexpected type would corrupt resume matching instead."""
-    from decimal import Decimal
     if isinstance(v, Decimal) and v == v.to_integral_value():
         return int(v)
     raise TypeError(f"Object of type {type(v).__name__} "
@@ -336,7 +336,6 @@ class Manifest:
         the group on every resume, forever). Percent-encoding is
         injective; over-long results keep a prefix plus a full-key hash
         so two distinct keys can never share a file."""
-        import urllib.parse
         safe = urllib.parse.quote(group_key, safe="=_.,-")
         if len(safe) > 180:
             digest = hashlib.sha256(group_key.encode()).hexdigest()[:16]
@@ -415,10 +414,20 @@ def rows_fingerprint(rows: Optional[Sequence]) -> Optional[str]:
 
 @dataclass
 class RunSink:
-    """Writers for one validation run."""
+    """Writers for one validation run.
+
+    Its commits serialize: ``overwrite`` and ``overwrite_partitions``
+    hold the sink's one lock for the whole write, so steps running at
+    once (``group_concurrency``) build and submit their plans
+    concurrently but write one at a time. Concurrent committers sharing
+    one output root (directory listing, ``_SUCCESS`` markers,
+    object-store rename) are not a guaranteed-safe pattern even with
+    disjoint dynamic partitions."""
 
     root: str
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
+    _commits: threading.Lock = field(default_factory=threading.Lock,
+                                     init=False, repr=False, compare=False)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -432,7 +441,6 @@ class RunSink:
         forever, and steps this run has disabled (e.g. drift off) would
         leave a previous run's outputs under a run.json that never
         produced them."""
-        import shutil
         for name in names:
             p = self.path(name)
             if os.path.isdir(p):
@@ -466,13 +474,15 @@ class RunSink:
         is idempotent under crash-resume — an append here would duplicate
         rows when the crash lands between the write and the step's
         manifest mark."""
-        df.write.mode("overwrite").parquet(self.path(name))
+        with self._commits:
+            df.write.mode("overwrite").parquet(self.path(name))
 
     def overwrite_partitions(self, df: DataFrame, name: str,
                              partition_col: str = "bucket_id") -> None:
         """Dynamic partition overwrite: a resumed run can safely rewrite a
         half-written group."""
-        (df.write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy(partition_col)
-           .parquet(self.path(name)))
+        with self._commits:
+            (df.write.mode("overwrite")
+               .option("partitionOverwriteMode", "dynamic")
+               .partitionBy(partition_col)
+               .parquet(self.path(name)))

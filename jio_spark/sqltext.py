@@ -112,6 +112,9 @@ class Expr:
     def __rmul__(self, o):
         return self._rop("*", o)
 
+    def __truediv__(self, o):
+        return self._op("/", o)
+
     def __mod__(self, o):
         return self._op("%", o)
 

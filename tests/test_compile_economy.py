@@ -166,3 +166,63 @@ def test_run_annotates_once(spark, monkeypatch, nondeterministic):
     assert m["groups_run"] == 4 and m["rows"] == 96
     assert m["violations"] > 0
     assert len(calls) == (4 if nondeterministic else 1)
+
+
+def _column_snapshot_rows(df, specs, accuracy=2500):
+    """The drift snapshot's two aggregates built as Columns, one call per
+    node: the rows snapshot() must reproduce."""
+    from pyspark.sql import functions as F
+    from jio_spark.operators.drift import N_QUANTILES
+    ps = [i / (N_QUANTILES - 1) for i in range(N_QUANTILES)]
+    row = df.agg(F.count(F.lit(1)).alias("rows"), *[
+        F.percentile_approx(F.col(c).cast("double"), ps, accuracy)
+        .alias(c) for c in specs]).collect()[0]
+    buckets = []
+    for c, spec in specs.items():
+        col = F.col(c).cast("double")
+        w = (spec.hi - spec.lo) / spec.bins
+        bucket = F.when(col < spec.lo, F.lit(-1)) \
+            .when(col >= spec.hi, F.lit(spec.bins)) \
+            .otherwise(F.floor((col - F.lit(spec.lo)) / F.lit(w)))
+        buckets.append(F.struct(F.lit(c).alias("c"),
+                                bucket.cast("int").alias("b")))
+    counts = {(r["c"], r["b"]): r["n"] for r in
+              df.select(F.explode(F.array(*buckets)).alias("p"))
+              .select("p.c", "p.b").where(F.col("b").isNotNull())
+              .groupBy("c", "b").agg(F.count(F.lit(1)).alias("n"))
+              .collect()}
+    return sorted(
+        (c, row["rows"], float(spec.lo), float(spec.hi), list(row[c]),
+         [counts.get((c, i), 0) for i in range(-1, spec.bins + 1)])
+        for c, spec in specs.items())
+
+
+def test_snapshot_aggregates_cross_the_jvm_boundary_once(spark,
+                                                         monkeypatch):
+    """The drift snapshot builds its quantile and histogram aggregates as
+    SQL text: a warm call makes a bounded number of py4j sends (the 101
+    quantile probabilities built one literal at a time made about 1.4k),
+    and its rows equal those of the same aggregates built as Columns."""
+    from py4j.java_gateway import GatewayClient
+    from jio_spark.operators.drift import snapshot
+    from jio_spark.runner import DRIFT_SPECS
+    df = _meta_frame(spark).union(spark.createDataFrame(
+        [("clip_x", None, None, "ulaw", "", 3),
+         ("clip_y", 96000, 99999, "ulaw", "", 3),
+         ("clip_z", -1, 0, "ulaw", "", 3)], _meta_frame(spark).schema))
+    want = _column_snapshot_rows(df, DRIFT_SPECS)
+    snapshot(df, DRIFT_SPECS)
+    sends = []
+    real = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sends.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    snap = snapshot(df, DRIFT_SPECS)
+    monkeypatch.undo()
+    print("snapshot sends", len(sends))
+    assert len(sends) <= 200, len(sends)
+    assert sorted(tuple(r) for r in snap.collect()) == [
+        tuple(r) for r in want]

@@ -94,6 +94,16 @@ def _re2_dialect_cases():
     yield r"^\p{^Greek}+$", "abc", True
     yield r"^[\p{Greek}\d]+$", "α1", True
     yield r"^\pL\p{Lu}$", "aB", True
+    # \s is [\t\n\f\r ]: no \x0B, in a class or out of one
+    yield r"^\s$", "\x0b", False
+    yield r"^\s$", "\x0c", True
+    yield r"^\S$", "\x0b", True
+    yield r"^[^\s]$", "\x0b", True
+    yield r"^[\s]$", "\x0b", False
+    # \v is the one character \x0B, not a class of vertical space
+    yield r"^\v$", "\x0b", True
+    yield r"^\v$", "\n", False
+    yield r"^[\v]$", "\x85", False
 
 
 @pytest.mark.parametrize("pattern", sorted({p for p, _, _ in

@@ -1253,6 +1253,103 @@ def test_failed_plan_leaves_finished_root(spark, clips_path, tmp_path, bad):
     assert _root_state(out) == before
 
 
+class _FakeWrite:
+    """The chain ``df.write.mode(..)[.option(..).partitionBy(..)]
+    .parquet(path)`` with ``parquet`` calling ``probe``."""
+
+    def __init__(self, probe):
+        self.write, self._probe = self, probe
+
+    def mode(self, *_):
+        return self
+
+    option = partitionBy = mode
+
+    def parquet(self, path):
+        self._probe()
+
+
+def test_sink_commits_one_at_a_time(tmp_path):
+    """RunSink serializes its own commits: 16 threads (more than the
+    cores) writing through ``overwrite`` and ``overwrite_partitions`` at
+    once never have two writes in flight."""
+    import sys
+    import threading
+    import time
+    from jio_spark.sinks.writers import RunSink
+    sink = RunSink(str(tmp_path))
+    state = {"active": 0, "peak": 0, "done": 0}
+    guard = threading.Lock()
+
+    def probe():
+        with guard:
+            state["active"] += 1
+            state["peak"] = max(state["peak"], state["active"])
+        time.sleep(0.0005)
+        with guard:
+            state["active"] -= 1
+            state["done"] += 1
+
+    def writer(i):
+        for j in range(20):
+            if (i + j) % 2:
+                sink.overwrite(_FakeWrite(probe), "snapshot")
+            else:
+                sink.overwrite_partitions(_FakeWrite(probe), "violations")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,))
+                   for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert state["done"] == 16 * 20
+    assert state["peak"] == 1, state
+
+
+def _root_bytes(out) -> dict:
+    """Every file under an output root, with its bytes' hash."""
+    import hashlib
+    digests = {}
+    for d, _, fs in os.walk(out):
+        for f in fs:
+            with open(os.path.join(d, f), "rb") as fh:
+                digests[os.path.relpath(os.path.join(d, f), out)] = \
+                    hashlib.sha256(fh.read()).hexdigest()
+    return digests
+
+
+@pytest.mark.parametrize("resume", [False, True])
+def test_plan_only_reads(spark, clips_path, tmp_path, resume):
+    """Planning a run over a hive parquet table with table_root runs no
+    Spark job and changes nothing under a finished output root, fresh or
+    resumed: every Spark job and every write belongs to the steps."""
+    from jio_spark.operators.schema import CLIPS_SCHEMA_CONTRACT
+    from jio_spark.runner import DRIFT_SPECS
+    df = spark.read.parquet(clips_path)
+    job = ClipsValidationJob(spark, ClipsJobConfig(
+        group_size=4, decode_source="files",
+        schema_contract=CLIPS_SCHEMA_CONTRACT, schema_contract_mode="warn"),
+        codec_dim=default_codec_dim(spark),
+        baseline_snapshot=snapshot(df, DRIFT_SPECS))
+    out = str(tmp_path / "root")
+    job.run(df, output_root=out, table_root=clips_path)
+    before = _root_bytes(out)
+    jobs = _job_ids(spark)
+    plan = job._plan(df, out, resume, clips_path)
+    assert _job_ids(spark) == jobs
+    assert _root_bytes(out) == before
+    assert len(plan.groups) == (0 if resume else 4)
+    assert plan.annotated is not None and plan.row_source is not None
+    assert not plan.table_integrity
+
+
 @pytest.mark.parametrize("conc", [1, 4])
 def test_caller_job_group_reaches_every_step(spark, clips_path, conc):
     """The caller's job group tags every Spark job of the run, whichever
