@@ -24,9 +24,10 @@ from typing import Iterator, Mapping, Optional, Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sqltext as sx
 from .codecs import (SAMPLE_CODECS, AdpcmCoded, adpcm_ima_decode_stacked,
                      parse_wav, snr_db_vs_period)
 from .synth import expected_period, expected_transcript
@@ -355,63 +356,63 @@ def decode_violations(results: DataFrame,
     # * codec/sr/dur — static text: `error` is never about these (it is
     #   set only on parse failure, which un-asserts them, or on
     #   reference-lookup failure, which is snr/transcript's).
+    # built as SQL text (see ``sqltext``): the frame crosses to the JVM
+    # in one parse, not one call per expression node
     if isinstance(snr_threshold, Mapping):
         generic = ">= per-codec dB threshold vs reference"
         if "codec" in results.columns:
             default = threshold_for(snr_threshold, "default")
-            chain = F.lit(f">= {default:g}dB vs reference")
+            chain = sx.lit(f">= {default:g}dB vs reference")
             for c in sorted(k for k in snr_threshold if k != "default"):
-                chain = F.when(
-                    F.col("codec") == c,
-                    F.lit(f">= {threshold_for(snr_threshold, c):g}dB "
-                          f"vs reference")).otherwise(chain)
-            snr_expected = F.when(~F.col("codec_match"),
-                                  F.lit(generic)).otherwise(chain)
+                chain = sx.when(
+                    sx.col("codec") == c,
+                    f">= {threshold_for(snr_threshold, c):g}dB "
+                    f"vs reference").otherwise(chain)
+            snr_expected = sx.when(~sx.col("codec_match"),
+                                   generic).otherwise(chain)
         else:
-            snr_expected = F.lit(generic)
+            snr_expected = sx.lit(generic)
     else:
-        snr_expected = F.lit(f">= {float(snr_threshold):g}dB vs reference")
-    snr_actual = F.when(
-        ~F.isnan(F.col("snr_db")),
-        F.format_string("%.2fdB", F.col("snr_db")))
+        snr_expected = sx.lit(
+            f">= {float(snr_threshold):g}dB vs reference")
+    snr_actual = sx.when(
+        ~sx.isnan(sx.col("snr_db")),
+        sx.call("format_string", "%.2fdB", sx.col("snr_db")))
+    error = sx.col("error")
     checks = [
         ("decode_ok", "bytes", "decode", "decodable payload",
          "payload failed to decode",
-         F.coalesce(F.col("error"), F.lit("payload failed to decode"))),
+         sx.coalesce(error, "payload failed to decode")),
         ("codec_match", "codec", "codec_consistency",
          "container format == codec", "declared codec != container format",
-         F.lit("declared codec != container format")),
+         "declared codec != container format"),
         ("sr_match", "sr_hz", "sr_consistency", "declared == decoded",
          "declared sr_hz != decoded sample rate",
-         F.lit("declared sr_hz != decoded sample rate")),
+         "declared sr_hz != decoded sample rate"),
         ("dur_match", "dur_ms", "dur_consistency", "declared ~= decoded",
          "declared dur_ms != decoded duration",
-         F.lit("declared dur_ms != decoded duration")),
+         "declared dur_ms != decoded duration"),
         ("snr_ok", "bytes", "snr",
          snr_expected,
          "decoded PCM SNR below threshold vs reference",
-         F.coalesce(snr_actual, F.col("error"),
-                    F.lit("decoded PCM SNR below threshold vs reference"))),
+         sx.coalesce(snr_actual, error,
+                     "decoded PCM SNR below threshold vs reference")),
         ("transcript_match", "transcript", "transcript_equality",
          "== reference transcript", "transcript != reference",
-         F.coalesce(F.col("error"), F.lit("transcript != reference"))),
+         sx.coalesce(error, "transcript != reference")),
     ]
     structs = [
-        F.when(~F.col(flag), F.struct(
-            F.lit(path).alias("rule_path"),
-            F.lit(name).alias("rule_name"),
-            (expected if isinstance(expected, Column)
-             else F.lit(expected)).alias("expected"),
-            actual.alias("actual"),
-            F.concat(F.lit(f"field `{path}` "), F.lit(msg),
-                     F.lit(" (clip "),
-                     F.coalesce(F.col("clip_id"), F.lit("<null>")),
-                     F.lit(")"))
-             .alias("message"))).otherwise(F.lit(None))
-        for flag, path, name, expected, msg, actual in checks]
-    arr = F.array_compact(F.array(*structs))
-    extra = list(extra_cols or [])
-    return (results
-            .withColumn("_v", F.explode(arr))
-            .select("clip_id", "_v.rule_path", "_v.rule_name",
-                    "_v.expected", "_v.actual", "_v.message", *extra))
+        sx.when(~sx.col(name), sx.struct({
+            "rule_path": path,
+            "rule_name": rule,
+            "expected": expected,
+            "actual": actual,
+            "message": sx.concat(
+                f"field `{path}` ", msg, " (clip ",
+                sx.coalesce(sx.col("clip_id"), "<null>"), ")")}))
+        .otherwise(None)
+        for name, path, rule, expected, msg, actual in checks]
+    # inline = explode + one column per struct field
+    return results.selectExpr(
+        "clip_id", f"inline({sx.array_compact(sx.array(*structs)).sql})",
+        *[sx.quote(c) for c in extra_cols or []])

@@ -12,6 +12,17 @@ CPU: storage → Python, one hop. At cluster scale each executor reads from
 object storage directly (pyarrow.fs handles s3:// / hdfs:// URIs the same
 way).
 
+Task count: one Python task per core's share of payload bytes
+(:func:`pack_splits`), not a fixed number of tasks per core. In PySpark
+4.1 a Python task pays about 0.18 s before its UDF runs (the median
+launch-to-UDF time over 32 tasks on 4 vCPU): ``setup_spark_files`` calls
+``importlib.invalidate_caches()`` on every task, and on Python 3.11 each
+cached zip importer for ``pyspark.zip`` then re-reads the archive's
+directory. An identity ``mapInPandas`` took 2.2 s as 32 tasks and 0.35 s
+as 4. At 8 tasks per core the decode of the 333.6 MB ``clips_files``
+table took 2.48 s, most of it between tasks; packed by bytes onto 4
+tasks it took 0.97 s.
+
 Trade-off: the payload column must live in a real table (not an ephemeral
 DataFrame), and partition-directory values (bucket_id) are recovered from
 paths. The DataFrame-based ``decode_check`` remains for arbitrary inputs.
@@ -20,6 +31,7 @@ paths. The DataFrame-based ``decode_check`` remains for arbitrary inputs.
 from __future__ import annotations
 
 import glob
+import heapq
 import os
 import re
 import zlib
@@ -78,10 +90,11 @@ def _open_parquet(path: str):
 
 
 def _footer_meta(path: str, cache: Optional[dict]):
-    """(num_row_groups, num_rows) from one parquet footer, or the string
-    ``'unreadable'`` — never raises. ``cache`` (path → result) lets the
-    split listing and the row-integrity audit share ONE footer read per
-    file: without it, every surviving file's footer was read twice per
+    """(num_row_groups, num_rows, per-row-group uncompressed bytes) from
+    one parquet footer, or the string ``'unreadable'`` — never raises.
+    ``cache`` (path → result) lets the split listing, the decode's task
+    packing and the row-integrity audit share ONE footer read per file:
+    without it, every surviving file's footer was read twice per
     partition group in two sequential driver loops (on object storage,
     each a remote round-trip)."""
     if cache is not None and path in cache:
@@ -90,7 +103,9 @@ def _footer_meta(path: str, cache: Optional[dict]):
     import pyarrow.parquet as pq
     try:
         md = _open_parquet(path).metadata
-        res = (md.num_row_groups, md.num_rows)
+        res = (md.num_row_groups, md.num_rows,
+               tuple(md.row_group(i).total_byte_size
+                     for i in range(md.num_row_groups)))
     except (OSError, ValueError, pa.ArrowException):
         res = "unreadable"
     if cache is not None:
@@ -334,20 +349,48 @@ def _corrupt_frame(clip_marker: str, msg: str, pval,
     return pd.DataFrame(out)
 
 
+def pack_splits(sizes: Sequence[int], parallelism: int,
+                max_partition_bytes: int) -> List[int]:
+    """The decode task of each split, given its weight in bytes.
+
+    The task count is ``min(#splits, max(parallelism, ceil(total /
+    max_partition_bytes)))``: one task per core while the payload is
+    small, and tasks of about ``max_partition_bytes`` (Spark's own
+    ``spark.sql.files.maxPartitionBytes``) once it is large, so a failed
+    task never costs a whole partition group. Splits are assigned
+    largest first, each to the least-loaded task (the lower task index
+    on a tie); splits of equal weight keep their given order, so the
+    same input packs the same way on every run. Greedy assignment keeps
+    the largest task load at most the mean load plus the largest
+    split."""
+    n = len(sizes)
+    total = sum(sizes)
+    n_tasks = max(1, min(n, max(parallelism,
+                                -(-total // max_partition_bytes))))
+    loads = [(0, k) for k in range(n_tasks)]
+    tasks = [0] * n
+    for i in sorted(range(n), key=lambda i: -sizes[i]):
+        load, k = heapq.heappop(loads)
+        tasks[i] = k
+        heapq.heappush(loads, (load + sizes[i], k))
+    return tasks
+
+
 def split_frame(spark: SparkSession, splits: Sequence[Tuple],
-                n_tasks: int, partition_col: str, ptype: str) -> DataFrame:
-    """The ``(path, rg, partition value)`` splits as a frame of
-    ``n_tasks`` partitions, task ``k`` holding the ``k``-th contiguous
-    run of ``splits`` (runs differ in length by at most one).
-    ``spark.range`` fixes each split index's task, and a broadcast of the
-    split rows (a ``LocalRelation``) supplies its values: the join keeps
-    the range's partitioning, no Python RDD job runs, and the split list
-    stays out of any task closure."""
+                tasks: Sequence[int], partition_col: str,
+                ptype: str) -> DataFrame:
+    """The ``(path, rg, partition value)`` splits as a frame whose
+    partition ``k`` holds exactly the splits with ``tasks[i] == k``.
+    ``spark.range`` makes one partition per task, and a broadcast of the
+    split rows (a ``LocalRelation``) joined on the task id supplies its
+    splits: the join keeps the range's partitioning, no Python RDD job
+    runs, and the split list stays out of any task closure."""
     rows = local_frame(
-        spark, [(i, *s) for i, s in enumerate(splits)],
-        f"split bigint, path string, rg int, {partition_col} {ptype}")
-    return (spark.range(len(splits), numPartitions=n_tasks)
-            .join(F.broadcast(rows), F.col("id") == F.col("split"))
+        spark, [(k, *s) for k, s in zip(tasks, splits)],
+        f"task bigint, path string, rg int, {partition_col} {ptype}")
+    n_tasks = max(tasks, default=0) + 1
+    return (spark.range(n_tasks, numPartitions=n_tasks)
+            .join(F.broadcast(rows), F.col("id") == F.col("task"))
             .select("path", "rg", partition_col))
 
 
@@ -355,42 +398,59 @@ def decode_check_files(spark: SparkSession, root: str,
                        check_reference: bool = True,
                        snr_threshold=30.0,
                        dur_tolerance_ms: int = 2,
-                       tasks_per_cpu: int = 8,
                        partition_filter: Optional[Sequence] = None,
                        partition_col: str = "bucket_id",
                        on_corrupt: str = "fail",
                        footer_cache: Optional[dict] = None) -> DataFrame:
     """Decode-and-check over a parquet clips table, payload-local.
 
-    Splits are deterministically shuffled (hash order) before they are
-    packed into tasks in contiguous runs (:func:`split_frame`), so
-    file-size skew spreads evenly — the payload-local analog of the salted
-    repartition, without moving a single payload byte.
+    One Python task per core's share of payload bytes
+    (:func:`pack_splits`): each row group weighs its uncompressed bytes
+    from the footer the split listing reads anyway (a corrupt-marker
+    split weighs ``spark.sql.files.openCostInBytes``), and the splits
+    are packed largest first onto ``max(defaultParallelism,
+    ceil(bytes / spark.sql.files.maxPartitionBytes))`` tasks. Before the
+    packing the splits are put in crc32 order of ``path#rg``, which
+    breaks ties between equal weights the same way on every run.
+
+    Why so few tasks: in PySpark 4.1 every Python task pays about
+    0.18 s before its UDF runs (``setup_spark_files`` invalidates the
+    import caches, and each task then re-reads the ``pyspark.zip``
+    directory). The earlier 8 tasks per core (32 on the 3,000-clip,
+    333.6 MB ``clips_files`` table at ``local[4]``) spent most of the
+    decode's 2.5 s wall between tasks; 4 tasks of 82.7–83.7 MB decode it
+    in about 1 s.
 
     ``on_corrupt='violation'``: an unreadable file or row group (damaged
     footer, corrupt data pages) becomes ONE structured decode-violation
     row — ``clip_id='__corrupt__:<relpath>#rg<N>'``, ``error`` carrying
     the reader's message — instead of failing the task and with it the
-    whole job. At 10^12 clips the expected number of damaged files is
-    not zero; pair with ``spark.sql.files.ignoreCorruptFiles`` on the
-    JVM rule-scan side plus the runner's footer-vs-scan ``row_integrity``
-    check, which turns that setting's silent row loss into an explicit
-    metric. Default ``'fail'`` keeps strict semantics."""
+    whole job; the other splits of the same task still decode. At 10^12
+    clips the expected number of damaged files is not zero; pair with
+    ``spark.sql.files.ignoreCorruptFiles`` on the JVM rule-scan side plus
+    the runner's footer-vs-scan ``row_integrity`` check, which turns
+    that setting's silent row loss into an explicit metric. Default
+    ``'fail'`` keeps strict semantics."""
     validate_gates(snr_threshold)
+    # the packing weighs each row group from the listing's footer reads
+    cache = {} if footer_cache is None else footer_cache
     splits = list_row_group_splits(root, partition_filter, partition_col,
                                    on_corrupt=on_corrupt,
-                                   footer_cache=footer_cache)
+                                   footer_cache=cache)
     # crc32, NOT builtin hash(): str hashing is PYTHONHASHSEED-random
-    # per driver process, which would scramble the split→task packing
-    # across runs and break bench comparability ("deterministically
-    # shuffled" must mean it)
+    # per driver process, which would change the split→task packing
+    # across runs and break bench comparability
     splits = sorted(splits, key=lambda s: zlib.crc32(
         f"{s[0]}#{s[1]}".encode()))
-    n_tasks = max(1, min(len(splits),
-                         spark.sparkContext.defaultParallelism
-                         * tasks_per_cpu))
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    tasks = pack_splits(
+        [open_cost if rg < 0 else cache[path][2][rg]
+         for path, rg, _ in splits],
+        spark.sparkContext.defaultParallelism,
+        conf.filesMaxPartitionBytes())
     ptype = _partition_dtype(splits, partition_col)
-    sdf = split_frame(spark, splits, n_tasks, partition_col, ptype)
+    sdf = split_frame(spark, splits, tasks, partition_col, ptype)
 
     # per-codec SNR gates: carry codec into the results so the snr
     # violation's expected text can name that codec's own bound. A table

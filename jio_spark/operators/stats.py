@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import sqltext as sx
+
 DEFAULT_QUANTILES = [0.0, 0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99, 1.0]
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -58,45 +60,42 @@ def stats_exprs(df: DataFrame, columns: Optional[Sequence[str]] = None,
     the north star's "approx-quantile sketches" with exact-merge
     semantics across partition groups."""
     cols = list(columns) if columns is not None else df.columns
-    exprs: List[Column] = [F.count(F.lit(1)).alias("rows")]
+    # SQL text (see ``sqltext``): each aggregate crosses to the JVM in
+    # one parse, not one call per expression node
+    aggs = {"rows": sx.call("count", 1)}
     for c in cols:
         dt = df.schema[c].dataType
-        col = F.col(c)
-        exprs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
+        col = sx.col(c)
+        aggs[f"{c}__nulls"] = sx.call("sum", col.isNull().cast("bigint"))
         if isinstance(dt, T.BinaryType):
-            exprs.append(F.sum(F.octet_length(col)).alias(f"{c}__bytes"))
-            exprs.append(F.avg(F.octet_length(col)).alias(f"{c}__avg_bytes"))
+            aggs[f"{c}__bytes"] = sx.call("sum", sx.octet_length(col))
+            aggs[f"{c}__avg_bytes"] = sx.call("avg", sx.octet_length(col))
         elif hll_sketch and isinstance(dt, (*_INTEGRAL, T.StringType)):
             # the mergeable sketch REPLACES approx_count_distinct for
             # sketchable columns: keeping both would maintain two HLL
             # structures per row on the hot scan for a per-group number
             # strictly dominated by the union-merged estimate
             hcol = col.cast("bigint") if isinstance(dt, _INTEGRAL) else col
-            exprs.append(F.hll_sketch_agg(hcol).alias(f"{c}__hll"))
+            aggs[f"{c}__hll"] = sx.call("hll_sketch_agg", hcol)
         else:
-            exprs.append(F.approx_count_distinct(col)
-                         .alias(f"{c}__distinct"))
+            aggs[f"{c}__distinct"] = sx.call("approx_count_distinct", col)
         if isinstance(dt, _NUMERIC):
-            exprs += [
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-                F.avg(col).alias(f"{c}__mean"),
-            ]
+            for stat, fn in (("min", "min"), ("max", "max"),
+                             ("mean", "avg")):
+                aggs[f"{c}__{stat}"] = sx.call(fn, col)
             if quantiles is not None:
-                exprs.append(
-                    F.percentile_approx(col, list(quantiles), accuracy)
-                     .alias(f"{c}__quantiles"))
+                aggs[f"{c}__quantiles"] = sx.call(
+                    "percentile_approx", col, sx.array(*quantiles),
+                    accuracy)
             if kll_quantiles:
-                exprs.append(
-                    F.kll_sketch_agg_double(col.cast("double"))
-                     .alias(f"{c}__kll"))
+                aggs[f"{c}__kll"] = sx.call("kll_sketch_agg_double",
+                                            col.cast("double"))
         elif isinstance(dt, T.StringType):
-            exprs += [
-                F.min(F.length(col)).alias(f"{c}__min_len"),
-                F.max(F.length(col)).alias(f"{c}__max_len"),
-                F.avg(F.length(col)).alias(f"{c}__mean_len"),
-            ]
-    return exprs
+            for stat, fn in (("min_len", "min"), ("max_len", "max"),
+                             ("mean_len", "avg")):
+                aggs[f"{c}__{stat}"] = sx.call(fn, sx.call("length", col))
+    return [F.expr(f"{e.sql} AS {sx.quote(name)}")
+            for name, e in aggs.items()]
 
 
 def column_profile_exact(df: DataFrame,

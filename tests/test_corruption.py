@@ -92,6 +92,42 @@ def test_corrupt_row_group_becomes_one_violation(spark, tmp_path):
     assert "unreadable row group" in corrupt_v[0]["actual"]
 
 
+def test_bad_splits_spare_good_ones_in_the_same_task(spark, tmp_path,
+                                                   monkeypatch):
+    """One decode task holding a footer marker, an unreadable row group
+    and good row groups (the packing puts several row groups in each
+    task) yields exactly one violation per bad unit, and every good clip
+    of that task is still decoded."""
+    import pyarrow.parquet as pq
+    from jio_spark.audio import files
+    root = str(tmp_path / "t5")
+    paths = _write_clips(spark, root)
+    total = spark.read.parquet(root).count()
+    footer_victim, data_victim = paths[0], paths[1]
+    lost = (pq.ParquetFile(footer_victim).metadata.num_rows
+            + pq.ParquetFile(data_victim).metadata.row_group(0).num_rows)
+    _smash_footer(footer_victim)
+    _smash_data(data_victim)
+    monkeypatch.setattr(files, "pack_splits",
+                        lambda sizes, *_: [0] * len(sizes))
+
+    dec = decode_check_files(spark, root, check_reference=False,
+                             on_corrupt="violation")
+    assert dec.rdd.getNumPartitions() == 1
+    rows = dec.collect()
+    markers = sorted(r["clip_id"].rsplit("#", 1)[1] for r in rows
+                     if r["clip_id"].startswith("__corrupt__:"))
+    good = [r for r in rows if not r["clip_id"].startswith("__corrupt__:")]
+    assert markers == ["footer", "rg0"]
+    assert len(good) == total - lost > 0
+    assert all(r["decode_ok"] for r in good)
+
+    dv = decode_violations(dec, extra_cols=["bucket_id"]).collect()
+    assert sorted(r["clip_id"].rsplit("#", 1)[1] for r in dv) \
+        == ["footer", "rg0"]
+    assert {r["rule_name"] for r in dv} == {"decode"}
+
+
 def test_corrupt_footer_listing_marker_and_job_integrity(spark, tmp_path):
     import pyarrow.parquet as pq
     root = str(tmp_path / "t2")

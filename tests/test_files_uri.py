@@ -154,22 +154,79 @@ def test_uri_root_resume_audits_rerun_group(spark, table, tmp_path):
     assert uri["rows"] == plain["rows"]
 
 
-def test_split_frame_packs_contiguous_runs(spark):
-    """Task k of the decode's split frame holds the k-th contiguous run
-    of the (hash-shuffled) split list, for 1 to 32 splits: one split per
-    task when there are no more splits than tasks, and runs differing in
-    length by at most one when there are."""
+def test_split_frame_places_each_split_on_its_task(spark):
+    """Partition k of the decode's split frame holds exactly the splits
+    packed onto task k, for 1 to 32 splits over 1 to 5 tasks."""
     from jio_spark.audio.files import split_frame
     for n in range(1, 33):
         splits = [(f"/t/bucket_id={i % 16}/f{i}.parquet", i % 3, i % 16)
                   for i in range(n)]
-        for tasks in sorted({n, min(n, 5)}):
+        for n_tasks in sorted({1, min(n, 5)}):
+            tasks = [(i * 7) % n_tasks for i in range(n)]
             rows = split_frame(spark, splits, tasks, "bucket_id", "int") \
                 .select(F.spark_partition_id().alias("task"), "path", "rg",
                         "bucket_id").collect()
             got = sorted((r["task"], r["path"], r["rg"], r["bucket_id"])
                          for r in rows)
-            want = sorted((k, *s) for k in range(tasks)
-                          for s in splits[k * n // tasks:
-                                          (k + 1) * n // tasks])
-            assert got == want, (n, tasks)
+            assert got == sorted((k, *s) for k, s in zip(tasks, splits)), \
+                (n, n_tasks)
+
+
+def test_pack_splits_balances_payload_bytes():
+    """Every split lands on exactly one task; the task count is
+    min(#splits, max(parallelism, ceil(bytes / max_partition_bytes)));
+    the largest task load is at most the mean load plus the largest
+    split; and the same input packs the same way twice."""
+    import math
+    import random
+    from jio_spark.audio.files import pack_splits
+    rnd = random.Random(7)
+    cases = [([10] * 8, 4, 128), ([1], 4, 128), ([5, 5, 5], 8, 128),
+             ([100] * 40, 4, 1000), ([12_600_000, 8_000_000] * 16, 4,
+                                     128 << 20)]
+    for _ in range(200):
+        n = rnd.randint(1, 60)
+        cases.append(([rnd.randint(1, 10_000) for _ in range(n)],
+                      rnd.randint(1, 8), rnd.randint(500, 50_000)))
+    for sizes, par, max_bytes in cases:
+        tasks = pack_splits(sizes, par, max_bytes)
+        n_tasks = min(len(sizes), max(par, math.ceil(sum(sizes)
+                                                     / max_bytes)))
+        assert len(tasks) == len(sizes)
+        assert sorted(set(tasks)) == list(range(n_tasks))
+        loads = [0] * n_tasks
+        for k, size in zip(tasks, sizes):
+            loads[k] += size
+        assert max(loads) <= sum(sizes) / n_tasks + max(sizes)
+        assert pack_splits(sizes, par, max_bytes) == tasks
+    assert pack_splits([], 4, 128) == []
+
+
+def test_files_decode_runs_one_task_per_core(spark, tmp_path):
+    """On a hive table of at least 32 row groups the decode runs no more
+    tasks than the session's default parallelism, and its rows equal
+    those of the DataFrame decode of the same table."""
+    from jio_spark.audio.decode import decode_check
+    from jio_spark.audio.synth import clips_frame
+    root = str(tmp_path / "rgs")
+    clips_frame(spark, 192, clean=True, partitions=4) \
+        .write.partitionBy("bucket_id").parquet(root)
+    assert len(list_row_group_splits(root)) >= 32
+    sc = spark.sparkContext
+    group = "files-decode-task-count"
+    sc.setJobGroup(group, "count the decode's tasks")
+    try:
+        got = sorted(map(tuple, decode_check_files(spark, root).collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s)
+              for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    # two jobs: the JVM-only broadcast of the split rows, then the
+    # mapInPandas stage
+    assert len(stages) == 2 and all(st is not None for st in stages)
+    assert max(st.numTasks for st in stages) <= sc.defaultParallelism
+    want = decode_check(spark.read.parquet(root), passthrough=["bucket_id"])
+    assert got == sorted(map(tuple, want.collect()))
+    assert len(got) == 192
