@@ -6,8 +6,10 @@ checkpoint/resume (BASELINE.json north_rule, SURVEY.md §3.3 lifecycle).
 
     _plan(df, ...) -> RunPlan      reads only: nothing under the output
                                    root changes, so bad input fails first
-    steps: (key, partitions, body) one pool of group_concurrency workers,
-                                   one protocol: skip | run, then mark
+    steps: (key, partitions, body) one pool, one protocol: skip | run,
+                                   then mark; the global steps run
+                                   beside at most group_concurrency
+                                   group steps
     _report(plan, results)         metrics from the step records alone
 
 The plan pays the per-run work once: the rule set is compiled once
@@ -32,22 +34,29 @@ partitions, the resume granularity):
                                                           + record
     manifest.mark(group)        # written LAST → resume-safe
 
-Global steps after the groups (recorded under their own manifest keys):
+Global steps beside the groups (recorded under their own manifest keys):
 uniqueness on clip_id (duplicates span partition groups by construction)
-and the drift snapshot/check. A resumed run skips a global step it finds
-recorded, and its record stands in the report.
+and the drift snapshot/check. They read only the plan's frame and write
+their own output directories, so they start with the first group instead
+of after the last: each Spark query pays a fixed driver-side gap, and
+run one after another those gaps added up to most of a short pass. A
+resumed run skips a global step it finds recorded, and its record stands
+in the report.
 
 Steps submit their Spark jobs concurrently; the sink (``RunSink``)
-serializes its own commits. Every tiny frame the driver builds (the
-codec dim, the sketch merge, the drift snapshot and verdicts) is a JVM
-``LocalRelation`` (``sinks.writers.local_frame``), so reading it back
-runs no Spark job.
+serializes the writes into each output directory. Every tiny frame the
+driver builds (the codec dim, the sketch merge, the drift snapshot and
+verdicts) is a JVM ``LocalRelation`` (``sinks.writers.local_frame``), so
+reading it back runs no Spark job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time
+import urllib.parse
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
@@ -339,11 +348,14 @@ class ClipsJobConfig:
     #: exemplar rows kept per (partition, rule_path, rule_name) group
     violations_exemplars: int = 20
     drift: bool = True
-    #: run at most this many steps (partition groups, then uniqueness,
-    #: then drift) as concurrent Spark jobs — the tail tasks of one group
-    #: overlap the next group's scan instead of idling the cluster at
-    #: each group barrier (resume granularity is unchanged: a group is
-    #: still marked only when fully written)
+    #: run at most this many partition groups as concurrent Spark jobs
+    #: — the tail tasks of one group overlap the next group's scan
+    #: instead of idling the cluster at each group barrier (resume
+    #: granularity is unchanged: a group is still marked only when fully
+    #: written). The global steps (uniqueness, drift) run beside them
+    #: outside this cap: they write their own output directories, and
+    #: the sink serializes writes per directory, so only the groups'
+    #: ``violations/`` writes queue behind each other
     group_concurrency: int = 1
     #: per-column stats riding the rule scan via ``df.observe`` (north
     #: star: "one pass computes per-column stats") — zero extra source
@@ -552,14 +564,16 @@ class ClipsValidationJob:
         if plan.sink:
             plan.sink.write_run_metadata(plan.lineage)
 
-        steps = [(f"group_{_group_key(g)}", g,
-                  partial(self._group_step, plan, g)) for g in plan.groups]
-        steps.append(("_global_uniqueness", [],
-                      partial(self._uniqueness_step, plan)))
+        global_steps = [("_global_uniqueness", [],
+                         partial(self._uniqueness_step, plan))]
         if self.cfg.drift:
-            steps.append(("_global_drift", [],
-                          partial(self._drift_step, plan)))
-        metrics = self._report(plan, self._run_steps(plan, steps))
+            global_steps.append(("_global_drift", [],
+                                 partial(self._drift_step, plan)))
+        group_steps = [(f"group_{_group_key(g)}", g,
+                        partial(self._group_step, plan, g))
+                       for g in plan.groups]
+        metrics = self._report(
+            plan, self._run_steps(plan, global_steps, group_steps))
         if plan.sink:
             # keep the run-start lineage keys — the final write replaces
             # run.json wholesale
@@ -833,65 +847,109 @@ class ClipsValidationJob:
             plan.sink.overwrite(dc, "drift")
         return {"drift": rows}
 
-    def _run_steps(self, plan: RunPlan, steps: Sequence[Tuple]
-                   ) -> Dict[str, Tuple[Dict, float]]:
-        """Every ``(key, partitions, body)`` step through ONE pool, fed
-        in order: at 1 worker this is the serial order, at N workers at
-        most N Spark-submitting steps run at once. Returns
-        ``{key: (record, seconds)}``.
+    def _run_steps(self, plan: RunPlan, global_steps: Sequence[Tuple],
+                   group_steps: Sequence[Tuple]
+                   ) -> Dict[str, Tuple[Dict, float, Optional[int]]]:
+        """Every ``(key, partitions, body)`` step through ONE pool of
+        ``group_concurrency + len(global_steps)`` workers. The global
+        steps are submitted first and each holds a worker of its own, so
+        they run beside the groups from the start; a semaphore of
+        ``group_concurrency`` admits the group bodies, so at most that
+        many groups run at once (at 1, in order). Overlap is safe: the
+        global steps only read ``plan.df`` and write their own output
+        directories, and the sink serializes writes per directory.
+        Returns ``{key: (record, seconds, spark_jobs)}``.
 
         THE step protocol: a global step a resumed run finds recorded is
         skipped, and its recorded results stand in this run's metrics (a
         0 would contradict the written outputs); otherwise its body runs
         and its record is marked LAST, after the body's writes →
-        resume-safe. Once any step has failed, no further step starts."""
-        failed = threading.Event()
+        resume-safe. Once any step has failed, no further step starts; a
+        step already running finishes and marks.
 
-        def run_step(key: str, partitions: Sequence, body: Callable):
-            if failed.is_set():
-                return None
-            t = time.time()
-            try:
-                rec = plan.recorded.get(key)
-                if rec is None:
-                    rec = body()
-                    if plan.manifest:
-                        plan.manifest.mark(key, partitions, {
-                            k: v for k, v in rec.items()
-                            if k != "observed"})
-            except BaseException:
-                failed.set()
-                raise
-            return rec, time.time() - t
+        Each step's thread tags its Spark jobs ``jio_step:<run>:<key>``,
+        and ``spark_jobs`` counts them from the status tracker (no Spark
+        job): under overlap, a diff of the global job-id set would count
+        the neighbours' jobs too. Without pinned threads no Python thread
+        owns a JVM thread to hold the tag, and the count is None."""
+        sc = self.spark.sparkContext
+        failed = threading.Event()
+        group_slots = threading.Semaphore(self.cfg.group_concurrency)
+        run_tag = uuid.uuid4().hex[:12]
+
+        def run_step(key: str, partitions: Sequence, body: Callable,
+                     slot, tag: Optional[str]):
+            with slot:
+                if failed.is_set():
+                    return None
+                t = time.time()
+                if tag:
+                    sc.addJobTag(tag)
+                try:
+                    rec = plan.recorded.get(key)
+                    if rec is None:
+                        rec = body()
+                        if plan.manifest:
+                            plan.manifest.mark(key, partitions, {
+                                k: v for k, v in rec.items()
+                                if k != "observed"})
+                except BaseException:
+                    # set before the slot is released: no group admitted
+                    # after this failure starts
+                    failed.set()
+                    raise
+                finally:
+                    if tag:
+                        sc.removeJobTag(tag)
+                return rec, time.time() - t
 
         futures = []
-        with ThreadPoolExecutor(self.cfg.group_concurrency) as pool:
-            for key, parts, body in steps:
+        tags = {}
+        steps = [(step, contextlib.nullcontext()) for step in global_steps]
+        steps += [(step, group_slots) for step in group_steps]
+        with ThreadPoolExecutor(len(global_steps)
+                                + self.cfg.group_concurrency) as pool:
+            for (key, parts, body), slot in steps:
                 # each step runs with its own copy of the caller's local
                 # properties (job group, scheduler pool) and session
                 # tags: a shared one would hand concurrent steps the
-                # same ``Properties`` object. With pinned threads off,
-                # PySpark returns the session itself, and no Python
-                # thread owns a JVM thread to carry them into
+                # same ``Properties`` object, and one step's job tag to
+                # the others. With pinned threads off, PySpark returns
+                # the session itself, and no Python thread owns a JVM
+                # thread to carry them into
                 wrap = inheritable_thread_target(self.spark)
-                fn = run_step if wrap is self.spark else wrap(run_step)
-                futures.append((key, pool.submit(fn, key, parts, body)))
+                fn, tag = run_step, None
+                if wrap is not self.spark:
+                    fn = wrap(run_step)
+                    # a job tag may not hold a comma; quote() is
+                    # injective and leaves none
+                    tag = tags[key] = \
+                        f"jio_step:{run_tag}:{urllib.parse.quote(key)}"
+                futures.append((key, pool.submit(fn, key, parts, body,
+                                                 slot, tag)))
         # every result read, so every step's failure surfaces
-        return {key: f.result() for key, f in futures}
+        results = {key: f.result() for key, f in futures}
+        tracker = sc._jsc.sc().statusTracker()
+        return {key: (*res, len(tracker.getJobIdsForTag(tags[key]))
+                      if key in tags else None)
+                for key, res in results.items()}
 
     # -- the report ---------------------------------------------------------
 
     def _report(self, plan: RunPlan,
-                results: Mapping[str, Tuple[Dict, float]]) -> Dict:
-        """The run metrics, from the plan and the step records alone. Its
+                results: Mapping[str, Tuple[Dict, float, Optional[int]]]
+                ) -> Dict:
+        """The run metrics, from the plan and the step results alone. Its
         only Spark job is the merge of the groups' stats sketches."""
         cfg = self.cfg
         group_res = [res for key, res in results.items()
                      if key.startswith("group_")]
-        group_recs = [rec for rec, _ in group_res]
-        group_secs = [sec for _, sec in group_res]
-        uniq_rec, uniq_sec = results["_global_uniqueness"]
-        drift_rec, drift_sec = results.get("_global_drift", ({}, 0.0))
+        group_recs = [rec for rec, _, _ in group_res]
+        group_secs = [sec for _, sec, _ in group_res]
+        group_jobs = [jobs for _, _, jobs in group_res]
+        uniq_rec, uniq_sec, uniq_jobs = results["_global_uniqueness"]
+        drift_rec, drift_sec, drift_jobs = results.get(
+            "_global_drift", ({}, 0.0, 0))
         group_stats = [rec["observed"] for rec in group_recs]
         rows_processed = sum(rec["rows"] for rec in group_recs)
         integrity = [rec["row_integrity"] for rec in group_recs
@@ -914,8 +972,9 @@ class ClipsValidationJob:
             "column_stats": col_stats,
             "wall_sec": wall,
             "rows_per_sec": rows_processed / wall if wall > 0 else None,
-            # per-step walls (steps overlap under group_concurrency>1, so
-            # these sum past wall_sec by design): where a slow run went —
+            # per-step walls (the global steps overlap the groups, and
+            # groups overlap under group_concurrency>1, so these sum past
+            # wall_sec by design): where a slow run went —
             # the first question a reader of the run metrics asks
             "phase_sec": {
                 # compile, dim read, prepare + annotate, listing, split
@@ -924,6 +983,13 @@ class ClipsValidationJob:
                 "groups_sum": round(sum(group_secs), 3),
                 "uniqueness": round(uniq_sec, 3),
                 "drift": round(drift_sec, 3),
+            },
+            # the Spark jobs each step ran, counted by its job tag (None
+            # without pinned threads)
+            "phase_jobs": {
+                "groups": None if None in group_jobs else sum(group_jobs),
+                "uniqueness": uniq_jobs,
+                "drift": drift_jobs,
             },
         }
         if cfg.schema_contract:

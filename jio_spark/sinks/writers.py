@@ -416,21 +416,33 @@ def rows_fingerprint(rows: Optional[Sequence]) -> Optional[str]:
 class RunSink:
     """Writers for one validation run.
 
-    Its commits serialize: ``overwrite`` and ``overwrite_partitions``
-    hold the sink's one lock for the whole write, so steps running at
-    once (``group_concurrency``) build and submit their plans
-    concurrently but write one at a time. Concurrent committers sharing
-    one output root (directory listing, ``_SUCCESS`` markers,
-    object-store rename) are not a guaranteed-safe pattern even with
-    disjoint dynamic partitions."""
+    Writes serialize per output directory: ``overwrite`` and
+    ``overwrite_partitions`` hold the lock of the ``name`` they write
+    for the whole write (``df.write…parquet()`` is the whole Spark job,
+    not only its commit). Two writes into one directory never overlap:
+    concurrent committers sharing one output directory (its listing,
+    ``_SUCCESS`` marker, object-store rename) are not a guaranteed-safe
+    pattern even with disjoint dynamic partitions, so the groups'
+    ``violations/`` writes run one at a time. Writes into different
+    directories run at once: each has its own ``_temporary``,
+    ``.spark-staging-<job>`` and ``_SUCCESS``, and no committer of one
+    lists or deletes under another."""
 
     root: str
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
-    _commits: threading.Lock = field(default_factory=threading.Lock,
-                                     init=False, repr=False, compare=False)
+    _locks: Dict[str, threading.Lock] = field(
+        default_factory=dict, init=False, repr=False, compare=False)
+    _locks_guard: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False,
+        compare=False)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _commits(self, name: str) -> threading.Lock:
+        """The lock that serializes writes into output ``name``."""
+        with self._locks_guard:
+            return self._locks.setdefault(name, threading.Lock())
 
     def clear_outputs(self, names: Sequence[str]) -> None:
         """Delete stale step-output dirs. A FRESH run into an existing
@@ -474,14 +486,14 @@ class RunSink:
         is idempotent under crash-resume — an append here would duplicate
         rows when the crash lands between the write and the step's
         manifest mark."""
-        with self._commits:
+        with self._commits(name):
             df.write.mode("overwrite").parquet(self.path(name))
 
     def overwrite_partitions(self, df: DataFrame, name: str,
                              partition_col: str = "bucket_id") -> None:
         """Dynamic partition overwrite: a resumed run can safely rewrite a
         half-written group."""
-        with self._commits:
+        with self._commits(name):
             (df.write.mode("overwrite")
                .option("partitionOverwriteMode", "dynamic")
                .partitionBy(partition_col)

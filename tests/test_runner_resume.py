@@ -219,38 +219,30 @@ def test_uniqueness_step_counts_from_its_write(spark, clips_path, tmp_path,
                                                monkeypatch):
     """With a sink, the uniqueness step takes its violation count from
     the write itself: the step runs exactly the Spark jobs of one write
-    of its frame, not a second whole-table groupBy for a count()."""
+    of its frame, not a second whole-table groupBy for a count(). The
+    step's jobs are counted by its job tag (``phase_jobs``): the groups
+    run beside it, so a diff of the global job-id set would count their
+    jobs too."""
     import jio_spark.runner as runner
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return set(tracker.getJobIdsForGroup(None) or [])
-
     seen = {}
-    orig_check, orig_mark = runner.uniqueness_check, Manifest.mark
+    orig_check = runner.uniqueness_check
 
     def check(*a, **k):
-        seen["call"], seen["start"] = (a, k), jobs()
+        seen["call"] = (a, k)
         return orig_check(*a, **k)
 
-    def mark(self, key, *a, **k):
-        if key == "_global_uniqueness":
-            seen["end"] = jobs()
-        return orig_mark(self, key, *a, **k)
-
     monkeypatch.setattr(runner, "uniqueness_check", check)
-    monkeypatch.setattr(Manifest, "mark", mark)
     out = str(tmp_path / "out")
     cfg = ClipsJobConfig(group_size=16, audio_check=False, drift=False)
     m = ClipsValidationJob(spark, cfg).run(spark.read.parquet(clips_path),
                                            output_root=out)
-    step_jobs = len(seen["end"] - seen["start"])
 
     a, k = seen["call"]
-    before = jobs()
+    before = _job_ids(spark)
     orig_check(*a, **dict(k, certificate={})).write.parquet(
         str(tmp_path / "alone"))
-    assert step_jobs == len(jobs() - before)
+    alone = len(_job_ids(spark) - before)
+    assert m["phase_jobs"]["uniqueness"] == alone > 0
     written = spark.read.parquet(
         os.path.join(out, "uniqueness_violations")).count()
     assert m["uniqueness_violations"] == written > 0
@@ -556,6 +548,7 @@ def test_files_decode_random_partition_layout_fuzz(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_resume_random_killpoint_fuzz(spark, clips_path, tmp_path):
+    import threading
     from collections import Counter
     from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -601,16 +594,24 @@ def test_resume_random_killpoint_fuzz(spark, clips_path, tmp_path):
                                  codec_dim=default_codec_dim(spark))
 
         calls = [0]
+        marked = []                 # (mark call number, key) that landed
+        killed = []                 # the key whose mark crashed
+        lock = threading.Lock()     # steps mark from their own threads
         orig_mark = Manifest.mark
 
         def crashing_mark(self, group_key, partitions, metrics=None):
-            calls[0] += 1
-            if calls[0] == kill_at:
-                if kill_before:
-                    raise RuntimeError("injected crash before mark")
-                orig_mark(self, group_key, partitions, metrics)
-                raise RuntimeError("injected crash after mark")
+            with lock:
+                calls[0] += 1
+                n = calls[0]
+            if n == kill_at:
+                killed.append(group_key)
+            if n == kill_at and kill_before:
+                raise RuntimeError("injected crash before mark")
             orig_mark(self, group_key, partitions, metrics)
+            with lock:
+                marked.append((n, group_key))
+            if n == kill_at:
+                raise RuntimeError("injected crash after mark")
 
         Manifest.mark = crashing_mark
         try:
@@ -619,17 +620,44 @@ def test_resume_random_killpoint_fuzz(spark, clips_path, tmp_path):
         finally:
             Manifest.mark = orig_mark
 
-        # the crashed run marked every group BEFORE the kill point, plus
-        # the kill-point step itself iff the crash landed after its mark
+        # the steps that survived are the keys whose mark landed: every
+        # mark before the kill point, the kill-point step itself iff the
+        # crash landed after its mark, and the one step already running
+        # beside the failing one, which may finish and mark (nothing
+        # starts after the failure): the uniqueness step beside a group,
+        # or the one group (group_concurrency=1) beside the uniqueness
+        # step. The uniqueness step runs beside the groups, so the kill
+        # point's position says nothing about which steps those were
+        late = [k for n, k in marked if n > kill_at]
+        assert len(late) <= 1, marked
+        assert all(k.startswith("group_") != killed[0].startswith("group_")
+                   for k in late), (killed, marked)
+        assert len(marked) == \
+            kill_at - 1 + (0 if kill_before else 1) + len(late)
+        keys = [k for _, k in marked]
+        assert len(set(keys)) == len(keys)
         manifest = Manifest(out)
-        marked_groups = sum(1 for k in manifest.completed()
-                            if k.startswith("group_"))
-        survived = kill_at - 1 + (0 if kill_before else 1)
-        group_survived = min(survived, n_groups)
-        assert marked_groups == group_survived
+        assert set(manifest.completed()) == set(keys)
+        survived_groups = {k for k in keys if k.startswith("group_")}
 
-        m2 = job.run(df, output_root=out, resume=True)
-        assert m2["groups_run"] == n_groups - group_survived
+        resumed = []
+
+        def recording_mark(self, group_key, partitions, metrics=None):
+            resumed.append(group_key)
+            orig_mark(self, group_key, partitions, metrics)
+
+        Manifest.mark = recording_mark
+        try:
+            m2 = job.run(df, output_root=out, resume=True)
+        finally:
+            Manifest.mark = orig_mark
+        # the resume re-runs exactly the unmarked steps
+        all_groups = {k for k in manifest.completed()
+                      if k.startswith("group_")}
+        assert len(all_groups) == n_groups
+        assert m2["groups_run"] == n_groups - len(survived_groups)
+        assert set(resumed) == set(manifest.completed()) - set(keys)
+        assert len(resumed) == len(set(resumed))
 
         got_viols = Counter(
             tuple(r) for r in spark.read.parquet(
@@ -657,29 +685,39 @@ def test_resume_random_killpoint_fuzz(spark, clips_path, tmp_path):
 def test_concurrent_groups_match_serial(spark, clips_path, tmp_path):
     """group_concurrency=4 (the bench/prod setting) must be result-
     identical to the serial path WITH a sink attached: same metrics,
-    same read-back violation multiset, same manifest groups — guards the
-    sink_lock serialization and the per-group Observation threading."""
+    same read-back violation multiset, same manifest groups, same drift
+    verdicts and written snapshot — guards the per-directory sink
+    serialization, the per-group Observation threading and the global
+    steps running beside the groups."""
+    from jio_spark.runner import DRIFT_SPECS
     df = spark.read.parquet(clips_path)
+    baseline = snapshot(clips_frame(spark, 1200, clean=True, partitions=4),
+                        DRIFT_SPECS)
 
     def run(conc, out):
         cfg = ClipsJobConfig(group_size=4, uniqueness_layout="any",
                              group_concurrency=conc)
         job = ClipsValidationJob(spark, cfg,
-                                 codec_dim=default_codec_dim(spark))
+                                 codec_dim=default_codec_dim(spark),
+                                 baseline_snapshot=baseline)
         m = job.run(df, output_root=out, table_root=clips_path)
         viols = sorted(
             (r["clip_id"], r["rule_name"])
             for r in spark.read.parquet(os.path.join(out, "violations"))
             .select("clip_id", "rule_name").collect())
         groups = set(Manifest(out).completed())
-        return m, viols, groups
+        snap = sorted(tuple(r) for r in spark.read.parquet(
+            os.path.join(out, "snapshot")).collect())
+        return m, viols, groups, snap
 
-    m1, v1, g1 = run(1, str(tmp_path / "serial"))
-    m4, v4, g4 = run(4, str(tmp_path / "conc"))
+    m1, v1, g1, s1 = run(1, str(tmp_path / "serial"))
+    m4, v4, g4, s4 = run(4, str(tmp_path / "conc"))
     assert v1 == v4 and len(v1) > 0
     assert g1 == g4
     assert m1["rows"] == m4["rows"]
     assert m1["uniqueness_violations"] == m4["uniqueness_violations"]
+    assert m1["drift"] == m4["drift"] and len(m1["drift"]) == 2
+    assert s1 == s4 and len(s1) == 2
     # the merged sketch outputs are ESTIMATES that wobble run-to-run:
     # HLL's serialized representation shifts the estimate ±1 (observed
     # 1174 vs 1173 on ~1200 distinct transcripts) and KLL compaction is
@@ -1270,32 +1308,40 @@ class _FakeWrite:
 
 
 def test_sink_commits_one_at_a_time(tmp_path):
-    """RunSink serializes its own commits: 16 threads (more than the
-    cores) writing through ``overwrite`` and ``overwrite_partitions`` at
-    once never have two writes in flight."""
+    """RunSink serializes writes per output directory. 16 threads (more
+    than the cores) writing through ``overwrite`` and
+    ``overwrite_partitions`` at once never have two writes into one
+    directory in flight; and a write into one directory does not wait
+    for a write into another (an Event handshake that succeeds only if
+    the two writes overlap)."""
     import sys
     import threading
     import time
     from jio_spark.sinks.writers import RunSink
     sink = RunSink(str(tmp_path))
-    state = {"active": 0, "peak": 0, "done": 0}
+    names = ("violations", "snapshot", "drift")
+    state = {"active": dict.fromkeys(names, 0),
+             "peak": dict.fromkeys(names, 0), "done": 0}
     guard = threading.Lock()
 
-    def probe():
+    def probe(name):
         with guard:
-            state["active"] += 1
-            state["peak"] = max(state["peak"], state["active"])
+            state["active"][name] += 1
+            state["peak"][name] = max(state["peak"][name],
+                                      state["active"][name])
         time.sleep(0.0005)
         with guard:
-            state["active"] -= 1
+            state["active"][name] -= 1
             state["done"] += 1
 
     def writer(i):
         for j in range(20):
-            if (i + j) % 2:
-                sink.overwrite(_FakeWrite(probe), "snapshot")
+            name = names[(i + j) % 3]
+            fake = _FakeWrite(lambda: probe(name))
+            if name == "violations":
+                sink.overwrite_partitions(fake, name)
             else:
-                sink.overwrite_partitions(_FakeWrite(probe), "violations")
+                sink.overwrite(fake, name)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -1310,7 +1356,85 @@ def test_sink_commits_one_at_a_time(tmp_path):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert state["done"] == 16 * 20
-    assert state["peak"] == 1, state
+    assert state["peak"] == dict.fromkeys(names, 1), state
+
+    # two directories: each write waits, inside its commit, for the
+    # other to be inside its own — only overlapping writes both succeed
+    inside = {n: threading.Event() for n in ("violations", "snapshot")}
+    met = {}
+
+    def meet(mine, other):
+        inside[mine].set()
+        met[mine] = inside[other].wait(timeout=10)
+
+    pair = [threading.Thread(target=sink.overwrite_partitions, args=(
+                _FakeWrite(lambda: meet("violations", "snapshot")),
+                "violations")),
+            threading.Thread(target=sink.overwrite, args=(
+                _FakeWrite(lambda: meet("snapshot", "violations")),
+                "snapshot"))]
+    for t in pair:
+        t.start()
+    for t in pair:
+        t.join(timeout=30)
+    assert met == {"violations": True, "snapshot": True}
+
+
+@pytest.mark.parametrize("conc", [1, 2])
+def test_global_steps_start_beside_the_groups(spark, clips_path, conc,
+                                              monkeypatch):
+    """Uniqueness and drift start with the group stream, not after it:
+    each group body waits (bounded) until both global steps have
+    started, which can only succeed if they do not queue behind the
+    groups; so both start before the group after the first
+    ``group_concurrency`` starts. At most ``group_concurrency`` group
+    bodies run at once."""
+    import threading
+    import time
+    from jio_spark.runner import ClipsValidationJob as Job
+    started = {k: threading.Event() for k in ("uniqueness", "drift")}
+    events, lock = [], threading.Lock()
+    state = {"active": 0, "peak": 0}
+    deadline = time.time() + 30     # one bounded wait for the whole run
+    waits = []
+
+    def global_step(name, orig):
+        def step(self, plan):
+            with lock:
+                events.append(name)
+            started[name].set()
+            return orig(self, plan)
+        return step
+
+    orig_group = Job._group_step
+
+    def group_step(self, plan, group):
+        with lock:
+            events.append("group")
+            state["active"] += 1
+            state["peak"] = max(state["peak"], state["active"])
+        try:
+            waits.append(all(e.wait(max(0.0, deadline - time.time()))
+                             for e in started.values()))
+            return orig_group(self, plan, group)
+        finally:
+            with lock:
+                state["active"] -= 1
+
+    monkeypatch.setattr(Job, "_uniqueness_step",
+                        global_step("uniqueness", Job._uniqueness_step))
+    monkeypatch.setattr(Job, "_drift_step",
+                        global_step("drift", Job._drift_step))
+    monkeypatch.setattr(Job, "_group_step", group_step)
+    cfg = ClipsJobConfig(group_size=4, audio_check=False,
+                         group_concurrency=conc)
+    m = Job(spark, cfg).run(spark.read.parquet(clips_path))
+    assert m["groups_run"] == 4 and m["rows"] == 1200
+    assert waits == [True] * 4, events
+    later_group = [i for i, e in enumerate(events) if e == "group"][conc]
+    assert events.index("uniqueness") < later_group
+    assert events.index("drift") < later_group
+    assert 1 <= state["peak"] <= conc
 
 
 def _root_bytes(out) -> dict:
@@ -1389,10 +1513,13 @@ def test_run_without_pinned_threads(spark, clips_path, monkeypatch):
 def test_failed_group_stops_unstarted_steps(spark, clips_path, tmp_path,
                                             monkeypatch):
     """At group_concurrency=2 a group that raises at once stops every
-    step that has not started: only a step already running beside it
-    (plus, at most, one that passed the check in the instant before the
-    failure was recorded) can finish and be marked — not the other
-    fourteen groups, and not the uniqueness step."""
+    group that has not started: only the group admitted beside it can
+    finish and be marked — not the other fourteen. The failure is
+    recorded before the failing group gives up its slot, so no group
+    admitted after it starts. A global step already running beside the
+    groups may finish and mark; a resume then skips it and reports its
+    recorded count."""
+    import jio_spark.runner as runner
     from jio_spark.runner import ClipsValidationJob as Job
     orig = Job.group_violations
     calls = []
@@ -1407,13 +1534,37 @@ def test_failed_group_stops_unstarted_steps(spark, clips_path, tmp_path,
     out = str(tmp_path / "stop")
     cfg = ClipsJobConfig(group_size=1, audio_check=False, drift=False,
                          group_concurrency=2)
+    df = spark.read.parquet(clips_path)
     with pytest.raises(RuntimeError, match="injected group failure"):
-        Job(spark, cfg).run(spark.read.parquet(clips_path),
-                            output_root=out, table_root=clips_path)
+        Job(spark, cfg).run(df, output_root=out, table_root=clips_path)
     done = Manifest(out).completed()
-    assert len(calls) <= 3
-    assert len([k for k in done if k.startswith("group_")]) <= 2
-    assert "_global_uniqueness" not in done
+    assert len(calls) <= 2
+    marked_groups = [k for k in done if k.startswith("group_")]
+    assert len(marked_groups) <= 1
+
+    monkeypatch.setattr(Job, "group_violations", orig)
+    uniq_calls = []
+    orig_check = runner.uniqueness_check
+
+    def check(*a, **k):
+        uniq_calls.append(a)
+        return orig_check(*a, **k)
+
+    monkeypatch.setattr(runner, "uniqueness_check", check)
+    m = Job(spark, cfg).run(df, output_root=out, table_root=clips_path,
+                            resume=True)
+    assert m["groups_run"] == 16 - len(marked_groups)
+    written = spark.read.parquet(
+        os.path.join(out, "uniqueness_violations")).count()
+    assert m["uniqueness_violations"] == written > 0
+    recorded = done.get("_global_uniqueness")
+    if recorded is not None:
+        # finished beside the failure: skipped, its record stands
+        assert uniq_calls == []
+        assert m["uniqueness_violations"] == \
+            recorded["metrics"]["violations"]
+    else:
+        assert len(uniq_calls) == 1
 
 
 def test_resume_reruns_group_whose_key_another_set_recorded(spark,
